@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, Row, SparkSession, GraftColumnBridge => B}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, Cast, EqualTo, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, Cast, CommonExpressionRef, EqualTo, Expression, RuntimeReplaceable, SubqueryExpression, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -163,14 +163,37 @@ class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** Rewrites side attributes to the caller-supplied resolvers and wraps
     * the result as a Column; everything else in the tree is already
-    * resolved and re-analyzes as-is.
+    * resolved and re-analyzes as-is — once runtime-replaceable
+    * expressions are lowered ([[lowered]]).
     */
   private def toColumn(e: Expression, tOut: AttributeSet, t: MergeOps.ColRef,
       s: MergeOps.ColRef, sOut: AttributeSet = AttributeSet.empty): Column =
-    B.column(e.transform {
+    B.column(lowered(e).transform {
       case a: AttributeReference if tOut.contains(a) => B.expression(t(a.name))
       case a: AttributeReference if sOut.contains(a) => B.expression(s(a.name))
     })
+
+  /** Replaces every runtime-replaceable expression by its replacement
+    * (what the optimizer's ReplaceExpressions does) and inlines the
+    * common-expression `With` nodes those replacements use. `BETWEEN`
+    * resolves to a runtime-replaceable `Between` whose replacement shares
+    * its input through a `With`: with the attributes swapped for
+    * unresolved column references, re-analysis of that tree failed with
+    * an UnresolvedException. The lowered form is plain comparisons.
+    * Inlining evaluates a shared input once per reference, so a
+    * non-deterministic one refuses.
+    */
+  private def lowered(e: Expression): Expression =
+    e.transformUp { case r: RuntimeReplaceable => r.replacement }
+      .transformUp { case w: With =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        if (!defs.values.forall(_.deterministic))
+          throw new UnsupportedOperationException(
+            s"non-deterministic shared input in a graft DML expression: ${w.sql}")
+        w.child.transformUp {
+          case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id)
+        }
+      }
 
   private def mkCond(e: Expression, tOut: AttributeSet, sOut: AttributeSet)
       : (MergeOps.ColRef, MergeOps.ColRef) => Column =

@@ -70,7 +70,7 @@ import org.apache.spark.sql.functions._
   *    N-append range costs one plan branch, not N;
   *  - positional reconstruction gathers ALL commits' marks into ONE
   *    frame and joins the needed base files ONCE (the
-  *    [[DvUpdates.amendedOnce]] lesson: per-branch joins cost ~1 s of
+  *    [[DvUpdates.amendedKeyed]] lesson: per-branch joins cost ~1 s of
   *    driver plan-construction each — see `graft.tools.DvBatchProbe`);
   *  - merge classification is one window per merge commit over that
   *    commit's own O(Δ) pre+post rows — no join;
@@ -655,6 +655,9 @@ object ChangeFeed {
 
     // lazily built: only commits that reconstruct by position need it
     lazy val dataIndex = dataFileIndex(spark, t)
+    // live update-batch roots (as dataFileIndex names them) -> schema
+    lazy val liveBatchSchemas = TableSnapshot.of(t).batches.map(b =>
+      DvUpdates.batchDataDir(t.path, b.name) -> b.schema).toMap
 
     def tsOf(c: Long, m: Option[Manifest]): Long =
       hist.get(c).map(_._2).orElse(m.map(_.ts)).getOrElse(0L)
@@ -682,14 +685,17 @@ object ChangeFeed {
           // Under a live/archived type-widening overlay the same span
           // crosses narrow/wide footers (which REFUSE to merge), so the
           // root's recorded reader schema takes over (WideCols scaladoc).
-          // Groups rooted at the LIVE table use the table's (memoized)
-          // base resolution instead — a subset of base files reads
-          // identically under the full merged schema, and the per-group
-          // footer job disappears (guide §6 metadata cost).
+          // Groups rooted at the LIVE table use the base schema of the
+          // table's snapshot instead — a subset of base files reads
+          // identically under the full merged schema — and groups rooted
+          // at a live update batch declare the schema its writer stamped
+          // into the footers, so neither pays a per-group footer job
+          // (guide §6 metadata cost).
           val reader =
             if (root == t.path) t.basePhysicalReader()
               .getOrElse(WideCols.readerAnyLayout(spark, root))
-            else WideCols.readerAnyLayout(spark, root)
+            else liveBatchSchemas.get(root).map(spark.read.schema)
+              .getOrElse(WideCols.readerAnyLayout(spark, root))
           val raw = reader
             .option("basePath", root)
             .parquet(grp.map(_._1).distinct: _*)

@@ -126,92 +126,84 @@ object DeletionVectors {
     * columns before the union, because the metadata struct does not
     * survive one). This is what lets a multi-branch amended read pay ONE
     * anti-join for the whole union instead of one per branch
-    * ([[graft.table.DvUpdates]] `amendedOnce`): B+1 separate anti-joins
+    * ([[graft.table.DvUpdates]] `amendedKeyed`): B+1 separate anti-joins
     * were the dominant plan-construction term DvBatchProbe measured.
     * The helper columns are left in place; the caller drops them.
+    *
+    * The live table's sidecar (`<table>/_graft_meta/dv`) resolves
+    * through the table's [[TableSnapshot]] — marks collected on the
+    * driver once per version, keys from the snapshot's file map — so
+    * building the read launches no Spark job. An archived snapshot's
+    * sidecar is read from disk on each call (time travel is rare).
     */
   private[table] def appliedToKeyed(spark: SparkSession, keyed: DataFrame,
       dvPath: String, rootPath: String,
-      fileCol: String, posCol: String): DataFrame = {
-    val raw = keyed
-    if (!exists(spark, dvPath)) return raw
-    val p = new Path(dvPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // One recursive listing serves the emptiness check, the collect cap,
-    // and the memo fingerprint.
-    // FsWalk census for uniformity (the sidecar dir is small + memoized,
-    // but no site keeps the listFiles(recursive) anti-pattern); hidden
-    // pruning drops only in-flight committer staging, which must not
-    // enter the memo fingerprint anyway
-    val listing = FsWalk.files(fs, p, FsWalk.hiddenName).collect {
-      case (st, _) if st.getPath.getName.endsWith(".parquet") =>
-        (st.getPath.toString, st.getModificationTime, st.getLen)
-    }.sortBy(_._1)
-    // a sidecar dir with no parquet yet (mkdirs from an aborted
-    // update-dv commit) must not break every read with a schema
-    // inference error — no marks, nothing to apply
-    if (listing.isEmpty) return raw
-    val byKey = ShallowClone.scanFiles(spark, rootPath)
-      .groupBy(fileKeyOf).view.mapValues(_.head).toMap
-    // Sidecar size is O(all rows ever vector-deleted): one huge
-    // deleteVectored (a predicate matching half a big table) must not
-    // turn every subsequent read into a driver collect/broadcast OOM.
-    // Above the cap, skip the collect entirely and anti-join the sidecar
-    // DISTRIBUTED (shuffle anti-join, spill-safe); only the files-sized
-    // key→path lookup is broadcast. Below it, the collected broadcast
-    // stays the fast path (DvProbe: per-row key surgery dominated).
-    if (listing.map(_._3).sum > MaxCollectedSidecarBytes) {
-      import spark.implicits._
-      val keys = byKey.toSeq.toDF("__dv_key", "__dv_file")
-      val dv = sidecar(spark, dvPath)
-        .select(col("file").as("__dv_key0"), col("pos").as("__dv_pos"))
-        .join(broadcast(keys), col("__dv_key0") === col("__dv_key"))
-        .select(col("__dv_file"), col("__dv_pos"))
-      return raw
-        .join(dv,
-          col(fileCol) === col("__dv_file") &&
-            col(posCol) === col("__dv_pos"),
-          "left_anti")
+      fileCol: String, posCol: String): DataFrame =
+    if (dvPath.stripSuffix("/").endsWith(LiveSuffix))
+      antiJoin(spark, keyed,
+        TableSnapshot.of(spark, dvPath.stripSuffix("/").stripSuffix(LiveSuffix)),
+        fileCol, posCol)
+    else {
+      val p = new Path(dvPath)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val listing = FsWalk.files(fs, p, FsWalk.hiddenName).collect {
+        case (st, _) if st.getPath.getName.endsWith(".parquet") =>
+          (st.getPath, st.getLen)
+      }
+      // a sidecar dir with no parquet yet (mkdirs from an aborted
+      // update-dv commit) has no marks to apply
+      if (listing.isEmpty) keyed
+      else {
+        val conf = spark.sparkContext.hadoopConfiguration
+        lazy val byKey = ShallowClone.scanFiles(spark, rootPath)
+          .groupBy(fileKeyOf).view.mapValues(_.head).toMap
+        antiJoinMarks(spark, keyed, dvPath, byKey,
+          if (listing.map(_._2).sum > MaxCollectedSidecarBytes) None
+          else Some(listing.flatMap(f => TableSnapshot.readMarks(conf, f._1))),
+          fileCol, posCol)
+      }
     }
-    // Memoize the COLLECTED sidecar per (session, dvPath), fingerprinted
-    // by the file listing (path+mtime+len): a multi-branch read — the
-    // base scan plus one branch per committed amendment batch — calls
-    // applied() B+1 times against the SAME sidecar, and without the memo
-    // each call re-reads every mark file, making the read cost QUADRATIC
-    // in batch count (DvBatchProbe measured 0.23 s → 25.4 s over 16
-    // batches). Writers append/rename mark files, which changes the
-    // fingerprint, so cross-session staleness is structurally impossible.
-    val memoKey = SessionCaches.token(spark) + "|" + dvPath
-    val fp = listing.mkString(";")
-    val marks: Seq[(String, Long)] = sidecarCache.get(memoKey) match {
-      case Some((`fp`, rows)) => rows
-      case _ =>
-        val rows = sidecar(spark, dvPath).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq
-        sidecarCache.put(memoKey, (fp, rows))
-        rows
-    }
-    val dvRows = marks.flatMap { case (k, pos) =>
-      byKey.get(k).map(full => (full, pos))
-    }
-    if (dvRows.isEmpty) return raw
-    val dv = {
-      import spark.implicits._
-      dvRows.toDF("__dv_file", "__dv_pos")
-    }
-    raw
-      .join(broadcast(dv),
-        col(fileCol) === col("__dv_file") &&
-          col(posCol) === col("__dv_pos"),
-        "left_anti")
-  }
 
-  /** (fingerprint, collected (fileKey, pos) rows) per session|dvPath —
-    * see the memo comment in [[applied]]. 64 entries bounds worst-case
-    * footprint at 64 × [[MaxCollectedSidecarBytes]]-capped mark sets.
+  private val LiveSuffix = "/_graft_meta/dv"
+
+  /** The live sidecar of `snap`'s table applied to `keyed`. */
+  private[table] def antiJoin(spark: SparkSession, keyed: DataFrame,
+      snap: TableSnapshot, fileCol: String, posCol: String): DataFrame =
+    if (!snap.hasMarks) keyed
+    else antiJoinMarks(spark, keyed, dir(snap.path), snap.fileKeys,
+      snap.marks, fileCol, posCol)
+
+  /** `marks` None = above the collect cap: sidecar size is O(all rows ever
+    * vector-deleted), and one huge deleteVectored (a predicate matching
+    * half a big table) must not turn every later read into a driver
+    * collect/broadcast OOM — so the sidecar is anti-joined DISTRIBUTED
+    * (shuffle anti-join, spill-safe) and only the files-sized key→path
+    * lookup is broadcast. Below it, the collected marks resolve to full
+    * paths on the driver and join as one broadcast (DvProbe: per-row key
+    * surgery dominated the read overhead otherwise).
     */
-  private val sidecarCache =
-    new BoundedLruCache[(String, Seq[(String, Long)])](64)
+  private def antiJoinMarks(spark: SparkSession, keyed: DataFrame,
+      dvPath: String, byKey: => Map[String, String],
+      marks: Option[Seq[(String, Long)]],
+      fileCol: String, posCol: String): DataFrame = {
+    import spark.implicits._
+    val dv = marks match {
+      case None =>
+        val keys = byKey.toSeq.toDF("__dv_key", "__dv_file")
+        sidecar(spark, dvPath)
+          .select(col("file").as("__dv_key0"), col("pos").as("__dv_pos"))
+          .join(broadcast(keys), col("__dv_key0") === col("__dv_key"))
+          .select(col("__dv_file"), col("__dv_pos"))
+      case Some(ms) =>
+        val m = byKey
+        val rows = ms.flatMap { case (k, pos) => m.get(k).map(full => (full, pos)) }
+        if (rows.isEmpty) return keyed
+        broadcast(rows.toDF("__dv_file", "__dv_pos"))
+    }
+    keyed.join(dv,
+      col(fileCol) === col("__dv_file") && col(posCol) === col("__dv_pos"),
+      "left_anti")
+  }
 
   /** Collect/broadcast cap for the sidecar (compressed bytes on disk).
     * 64 MB of (key, pos) parquet is ≫ any sane soft-delete set and ≪

@@ -120,69 +120,30 @@ object DvUpdates {
   /** Driver-side "does any parquet under `dir` hold a row?" via footer
     * row counts — replaces the `spark.read.parquet(dir).head(1)` job the
     * post-write emptiness probes paid (2 Spark jobs per DV merge/update
-    * commit, on files this writer just created). An unreadable footer
-    * counts as rows (conservative: the commit proceeds and the first
-    * read fails loudly, exactly as the job-based probe would have).
+    * commit, on files this writer just created). It guards a commit, so
+    * it fails closed: an unreadable footer throws and the commit aborts
+    * before its rename, instead of counting as rows and committing a
+    * corrupt batch or marks file.
     */
-  private[table] def anyRows(spark: SparkSession, dir: String): Boolean =
-    ShallowClone.listParquet(spark, dir).exists { f =>
-      try {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(f), spark.sparkContext.hadoopConfiguration))
-        try {
-          var n = 0L
-          r.getFooter.getBlocks.forEach(b => n += b.getRowCount)
-          n > 0
-        } finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => true }
-    }
+  private[table] def anyRows(spark: SparkSession, dir: String): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    ShallowClone.listParquet(spark, dir)
+      .exists(TableSnapshot.footerRows(conf, _) > 0)
+  }
 
-  /** Per-batch scans for the committed batches, paired with the batch
-    * data dir (the DV `rootPath` for per-branch mark resolution). Batches
-    * whose data dir holds no parquet (an update that matched rows but
-    * produced none cannot happen, but a partition-scoped cleanup can
-    * empty one) are skipped. `basePath` anchors hive partition-column
-    * recovery at the batch dir, mirroring the base scan's layout.
+  /** Per-batch scans for the committed batches that hold files, paired
+    * with the batch data dir, from the table's [[TableSnapshot]]: each
+    * declares the schema its writer stamped into the footers (a batch is
+    * written by ONE job, so its files share it; schema evolution BETWEEN
+    * batches is the fold's unionByName(allowMissingColumns)), so no scan
+    * pays a footer-inference job at plan construction. `basePath`
+    * anchors hive partition-column recovery at the batch dir, mirroring
+    * the base scan's layout.
     */
   private[table] def committedScans(spark: SparkSession,
-      tablePath: String): Seq[(String, DataFrame)] =
-    committedBatches(spark, tablePath).flatMap { b =>
-      val bd = batchDataDir(tablePath, b)
-      val files = ShallowClone.listParquet(spark, bd)
-      if (files.isEmpty) None
-      // NO mergeSchema inside one batch: a batch is written by exactly
-      // one job (updateVectored/mergeVectored stage 1, or the batch
-      // compactor), so its files share one schema and the per-branch
-      // footer-MERGE job mergeSchema launches at plan construction is
-      // pure overhead — with B live batches every read paid B such jobs
-      // (the super-linear term DvBatchProbe measured). Schema evolution
-      // BETWEEN batches is the fold's unionByName(allowMissingColumns).
-      // The single-footer inference is ALSO memoized (the mergedParquet
-      // pattern): committed batch files are immutable, so the file list
-      // itself is the staleness key — partition-scoped cleanup deletes
-      // files, changing the list.
-      else {
-        val key = SessionCaches.token(spark) + "|" + bd
-        val fp = files.sorted.mkString(";")
-        val schema = schemaCache.get(key) match {
-          case Some((`fp`, s)) => s
-          case _ =>
-            val s = spark.read.option("basePath", bd).parquet(files: _*).schema
-            schemaCache.put(key, (fp, s))
-            s
-        }
-        Some(bd -> spark.read.schema(schema).option("basePath", bd)
-          .parquet(files: _*))
-      }
-    }
-
-  /** (file-list fingerprint, schema) per session|batchDir — see
-    * [[committedScans]]. Schemas are tiny; 256 entries ≫ any sane live
-    * batch count.
-    */
-  private val schemaCache =
-    new BoundedLruCache[(String, org.apache.spark.sql.types.StructType)](256)
+      snap: TableSnapshot): Seq[(String, DataFrame)] =
+    snap.liveBatches.map(b => b.dir -> spark.read.schema(b.schema)
+      .option("basePath", b.dir).parquet(b.files: _*))
 
   /** Fold the committed batches onto `base`: each branch is prepared by
     * `prep` (position columns, stats keys — anything that needs the
@@ -203,51 +164,50 @@ object DvUpdates {
   private[table] def foldBatchesOpt(spark: SparkSession, tablePath: String,
       base: Option[DataFrame],
       prep: DataFrame => DataFrame = identity): Option[DataFrame] =
-    committedScans(spark, tablePath).foldLeft(base) { case (acc, (bd, scan)) =>
-      val branch = DeletionVectors.applied(spark, prep(scan),
-        DeletionVectors.dir(tablePath), bd)
-      Some(acc.fold(branch)(_.unionByName(branch, allowMissingColumns = true)))
-    }
+    committedScans(spark, TableSnapshot.of(spark, tablePath))
+      .foldLeft(base) { case (acc, (bd, scan)) =>
+        val branch = DeletionVectors.applied(spark, prep(scan),
+          DeletionVectors.dir(tablePath), bd)
+        Some(acc.fold(branch)(_.unionByName(branch, allowMissingColumns = true)))
+      }
+
+  /** Columns [[amendedKeyed]] pins each branch's (full path, row index)
+    * to before the union.
+    */
+  private[table] val FileCol = "__graft_dvu_file"
+  private[table] val PosCol = "__graft_dvu_pos"
 
   /** The ONE-JOIN amended read: base scan plus every committed batch,
     * each branch pinning `_metadata` to plain (full path, row index)
     * columns BEFORE the union (the metadata struct does not survive one),
-    * then a single DV anti-join over the whole union. Replaces the
+    * then a single DV anti-join over the whole union. Replaces a
     * per-branch [[DeletionVectors.applied]] fold on the hot read path:
     * B+1 separate anti-join sub-plans were the dominant plan-construction
     * cost as batches accumulate (DvBatchProbe). The sidecar's key→path
-    * resolution uses the TABLE root's listing, which already folds the
-    * committed batch files in ([[ShallowClone.scanFiles]]), so marks over
-    * base rows and over batch rows resolve through one map.
-    *
-    * `extraPrep` runs per branch BEFORE the union, for callers that need
-    * their own `_metadata`-derived columns (the write path's position
-    * columns). None ⟺ no base AND no committed batch.
+    * resolution uses the snapshot's file map, which already folds the
+    * committed batch files in, so marks over base rows and over batch
+    * rows resolve through one map. The [[FileCol]]/[[PosCol]] columns are
+    * left in place: `read` drops them, the DV writers derive their mark
+    * columns from them. None ⟺ no base AND no committed batch.
     *
     * `batchesInBase`: a shallow clone's base scan is built from
     * [[ShallowClone.scanFiles]], which ALREADY folds this table's own
-    * committed batch files in — unioning [[committedScans]] on top would
+    * committed batch files in — unioning the batch scans on top would
     * read every amended row twice (and a subsequent update would then
     * write duplicate new versions). Callers whose base carries the batch
     * files set this true and the union is skipped; the single anti-join
-    * still hides the old versions (mark file-keys resolve through the
-    * same scanFiles listing).
+    * still hides the old versions.
     */
-  private[table] def amendedOnce(spark: SparkSession, tablePath: String,
+  private[table] def amendedKeyed(spark: SparkSession, snap: TableSnapshot,
       baseRaw: Option[DataFrame],
-      extraPrep: DataFrame => DataFrame = identity,
       batchesInBase: Boolean = false): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
-    val f = "__graft_dvu_file"
-    val x = "__graft_dvu_pos"
-    def keyed(df: DataFrame): DataFrame = extraPrep(df)
-      .withColumn(f, col("_metadata.file_path"))
-      .withColumn(x, col("_metadata.row_index"))
+    def keyed(df: DataFrame): DataFrame = df
+      .withColumn(FileCol, col("_metadata.file_path"))
+      .withColumn(PosCol, col("_metadata.row_index"))
     val branches = baseRaw.map(keyed).toSeq ++
-      (if (batchesInBase) Nil
-       else committedScans(spark, tablePath).map { case (_, scan) => keyed(scan) })
+      (if (batchesInBase) Nil else committedScans(spark, snap).map(b => keyed(b._2)))
     branches.reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map(u => DeletionVectors.appliedToKeyed(spark, u,
-        DeletionVectors.dir(tablePath), tablePath, f, x).drop(f, x))
+      .map(u => DeletionVectors.antiJoin(spark, u, snap, FileCol, PosCol))
   }
 }

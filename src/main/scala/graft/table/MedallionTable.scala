@@ -115,21 +115,20 @@ final class MedallionTable(
   }
 
   def read: DataFrame = {
-    val p = new Path(path)
+    val snap = TableSnapshot.of(this)
     val schemaFile = new Path(path, "_graft_meta/schema.ddl")
     // A table whose rows were all DELETEd has no data files to carry the
     // schema — fall back to the stashed DDL and stay readable (empty).
-    if (ShallowClone.isClone(spark, path))
+    if (snap.isClone)
       SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        DeletionVectors.applied(spark,
+        DvUpdates.amendedKeyed(spark, snap,
           // WideCols.reader: a cloned-from-widened-source table copies the
           // overlay, and the pointed-at files mix narrow/wide footers
-          WideCols.reader(spark, path)
-            .parquet(ShallowClone.scanFiles(spark, path): _*),
-          DeletionVectors.dir(path), path),
+          Some(WideCols.reader(spark, path).parquet(snap.scanFiles: _*)),
+          batchesInBase = true).get.drop(DvUpdates.FileCol, DvUpdates.PosCol),
         ColumnMap.load(spark, path)))
-    else if (fs.exists(p) && !hasDataFiles(p) && fs.exists(schemaFile) &&
-        DvUpdates.committedBatches(spark, path).isEmpty)
+    else if (snap.rootExists && !snap.hasData && snap.batches.isEmpty &&
+        fs.exists(schemaFile))
       // the stashed DDL is maintained by addColumn/dropColumn, so no
       // overlay pass is needed on this branch (batch guard: a partition
       // fast-DELETE can empty the BASE while committed update batches
@@ -140,18 +139,27 @@ final class MedallionTable(
       // base may be absent with batches live (see the guard above):
       // start the union from the batch scans alone in that case.
       // ONE DV anti-join over the whole base∪batches union (see
-      // DvUpdates.amendedOnce) — not one per branch.
-      val base =
-        if (fs.exists(p) && !hasDataFiles(p)) None
-        else Some(mergedParquet())
+      // DvUpdates.amendedKeyed) — not one per branch.
+      val keyed =
+        if (snap.rootExists && !snap.hasData)
+          DvUpdates.amendedKeyed(spark, snap, None)
+            // empty dir without stashed schema and no batches: surface
+            // the same inference error the plain scan always gave
+            .getOrElse(mergedParquet(snap))
+        else liveKeyed(snap)
       SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        DvUpdates.amendedOnce(spark, path, base)
-          // empty dir without stashed schema and no batches: surface the
-          // same inference error the plain scan always gave
-          .getOrElse(mergedParquet()),
+        keyed.drop(DvUpdates.FileCol, DvUpdates.PosCol),
         ColumnMap.load(spark, path)))
     }
   }
+
+  /** The physical base∪batches union of a table WITH base data files,
+    * keyed by (file path, row index) and DV-applied: the one plan [[read]]
+    * and [[dvLiveWithPos]] share, analysed once per snapshot and session.
+    */
+  private def liveKeyed(snap: TableSnapshot): DataFrame =
+    snap.frame(spark, "live")(
+      DvUpdates.amendedKeyed(spark, snap, Some(mergedParquet(snap))).get)
 
   /** [[read]] WITHOUT the committed update batches folded in — the scan
     * [[compactWhere]] materializes from: the partition-scoped overwrite
@@ -160,62 +168,37 @@ final class MedallionTable(
     * double-counts). Assumes a non-clone table with data files (its only
     * caller requires a partitioned table).
     */
-  private def readBase(): DataFrame =
+  private def readBase(): DataFrame = {
+    val snap = TableSnapshot.of(this)
     SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-      DeletionVectors.applied(spark, mergedParquet(),
-        DeletionVectors.dir(path), path),
+      DvUpdates.amendedKeyed(spark, snap, Some(mergedParquet(snap)),
+        batchesInBase = true).get.drop(DvUpdates.FileCol, DvUpdates.PosCol),
       ColumnMap.load(spark, path)))
-
-  /** The raw-files half of [[read]], with the merged schema memoized:
-    * `mergeSchema=true` resolves by reading EVERY footer in a Spark job
-    * at each `DataFrameReader.parquet` call (measured 80–530 ms per read
-    * on bench-scale tables), so repeated reads of an unchanged table —
-    * the standing-index protocols' dominant pattern — each pay a job for
-    * a schema that cannot have changed. Memo key = [[commitStamp]] (one
-    * flat listing of the commit-marker sibling dir — every table-layer
-    * mutation claims a marker BEFORE its data lands, so a new claim
-    * forces re-resolution). The data-lands-after-claim window (a
-    * concurrent reader resolving mid-write caches the pre-write schema
-    * under the claimed stamp) is closed same-JVM for EVERY session by
-    * the writer-side path-wide memo drop at write completion
-    * (`schemaCache.removeWhere` — a racing reader session's stale entry
-    * dies with the writer's own; SchemaMemoCrossSessionSpec pins both
-    * the sequential and the racing case). The residual exposure is a
-    * cross-JVM reader racing a concurrent schema-EVOLVING append, which
-    * no supported workload does (schema DDL is single-writer by the
-    * same argument as the rewrite fence).
-    * A deliberately-recursive file census was measured first and
-    * rejected: walking many-file tables on every read cost more than the
-    * footer jobs it saved (TimeQuery A/B, sim_hybrid_standing ~8.0 →
-    * ~9.0 s).
-    */
-  private def mergedParquet(): DataFrame = {
-    val stamp = commitStamp()
-    val k = schemaCacheKey
-    val carry = MedallionTable.claimCarry.get()
-    MedallionTable.schemaCache.get(k) match {
-      case Some((`stamp`, s)) => spark.read.schema(s).parquet(path)
-      case Some((s0, s)) if carry != null && carry.path == path &&
-          s0 == commitStampExcluding(carry.exclusions) =>
-        // base-file-preserving GLOBAL claim in flight on this table
-        // ([[MedallionTable.baseFilePreservingOps]]): our own claim moved
-        // the stamp but the body cannot change the base footer set, so an
-        // entry stamped to the pre-claim world is still exact — the
-        // re-verification (one flat listing) keeps it conservative
-        spark.read.schema(s).parquet(path)
-      case _ =>
-        // while a type-widening overlay is live, the authoritative reader
-        // schema comes from `_graft_meta/physschema.ddl` — mixed
-        // narrow/wide footers REFUSE to merge, and the explicit schema
-        // also skips the footer job outright (WideCols scaladoc)
-        val df = WideCols.reader(spark, path).parquet(path)
-        MedallionTable.schemaCache.put(k, (stamp, df.schema))
-        df
-    }
   }
 
-  private def schemaCacheKey: String =
-    SessionCaches.token(spark) + "|" + path
+  /** The raw-files half of [[read]], declared with the base schema of
+    * the table's [[TableSnapshot]]: `mergeSchema=true` resolves by
+    * reading EVERY footer in a Spark job at each `DataFrameReader.parquet`
+    * call (measured 80–530 ms per read on bench-scale tables), and the
+    * snapshot holds that resolution for as long as it describes the
+    * table — one version, carried by the committing writer across every
+    * commit that leaves the base footer set's schema intact (see the
+    * [[TableSnapshot]] scaladoc for the invalidation rule). An unresolved
+    * snapshot pays the footer job once and keeps the result. While a
+    * type-widening overlay is live, the authoritative reader schema
+    * comes from `_graft_meta/physschema.ddl` — mixed narrow/wide footers
+    * REFUSE to merge, and the explicit schema also skips the footer job
+    * outright (WideCols scaladoc).
+    */
+  private def mergedParquet(snap: TableSnapshot): DataFrame =
+    snap.baseSchema match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None =>
+        val df = snap.wide.map(spark.read.schema)
+          .getOrElse(spark.read.option("mergeSchema", "true")).parquet(path)
+        snap.resolvedBase(df.schema)
+        df
+    }
 
   /** Order-independent hash of the commit-sibling directory's contents
     * (marker/lock/intent names × mtimes) — changes on every claim, CAS,
@@ -223,28 +206,23 @@ final class MedallionTable(
     * the cost of ONE flat small-directory listing.
     */
   private[table] def commitStamp(excludeName: String = null): Long =
-    commitStampExcluding(
-      if (excludeName == null) Set.empty else Set(excludeName))
-
-  private[table] def commitStampExcluding(names: Set[String]): Long =
     if (!fs.exists(commitsDir)) 0L
     else fs.listStatus(commitsDir).foldLeft(0L) { (h, st) =>
       val n = st.getPath.getName
       // the stats lock and refresh stagings are manifest PLUMBING, not
-      // table mutations: including them would (a) churn the schema memo
-      // for nothing and (b) make commitManifestSwap's stamp re-check
-      // see its OWN staging dir as a foreign commit and always abort.
-      // Append stagings are likewise INVISIBLE state — nothing a reader
-      // can see changes until the publish claims a marker (which IS in
-      // the stamp), and including them would make a staged append's
-      // own file renames read as foreign commits in its stats re-check.
-      // `names` lets a claim HOLDER stamp the world around its own
-      // artifacts: the lock provably vanishes before any post-release
-      // reader lists, and excluding the holder's own fresh marker
-      // recovers the PRE-claim world for the memo-carry check.
+      // table mutations: including them would (a) churn the table
+      // snapshot for nothing and (b) make commitManifestSwap's stamp
+      // re-check see its OWN staging dir as a foreign commit and always
+      // abort. Append stagings are likewise INVISIBLE state — nothing a
+      // reader can see changes until the publish claims a marker (which
+      // IS in the stamp), and including them would make a staged
+      // append's own file renames read as foreign commits in its stats
+      // re-check. `excludeName` lets a claim HOLDER stamp the world
+      // around its own lock, which provably vanishes before any
+      // post-release reader lists ([[TableSnapshot]] publishing).
       if (n == "stats.lock" || n == "journal.lock" ||
           n.startsWith("stats_staging_") ||
-          n.startsWith("append_staging_") || names.contains(n)) h
+          n.startsWith("append_staging_") || n == excludeName) h
       else h + n.hashCode.toLong * 1000003L + st.getModificationTime
     }
 
@@ -945,7 +923,9 @@ final class MedallionTable(
     }
     val lock = acquireWriteLock(op, footprint)
     mark("acquire-lock")
+    var succeeded = false
     try {
+      TableSnapshot.claimStarted(this)
       var claimed = -1L
       var attempts = 0
       def retryOrGiveUp(): Unit = {
@@ -994,26 +974,6 @@ final class MedallionTable(
       }
       MedallionTable.testFailpoint("mid-claim-first")
       mark("claim")
-      // Schema-memo carry for base-file-preserving GLOBAL commits (DV
-      // marks/batches/CDF flags — see [[MedallionTable.baseFilePreservingOps]]):
-      // while we hold the global lock no foreign claim can land, so a memo
-      // entry stamped to the pre-claim world (current listing minus our own
-      // lock + marker) is the table's correct base resolution for the whole
-      // body — in-body reads reuse it instead of re-running the footer job
-      // our own claim would otherwise force, and on success the release
-      // re-keys it (the staged-append reseed contract).
-      val dvCarry: Option[org.apache.spark.sql.types.StructType] =
-        if (footprint.isEmpty &&
-            MedallionTable.baseFilePreservingOps.contains(op)) {
-          val ex = Set(lock.getName, s"v$claimed.commit")
-          val hit = MedallionTable.schemaCache.get(schemaCacheKey).collect {
-            case (s0, sch) if s0 == commitStampExcluding(ex) => sch
-          }
-          if (hit.nonEmpty)
-            MedallionTable.claimCarry.set(
-              MedallionTable.ClaimCarry(path, ex))
-          hit
-        } else None
       val out =
         try write(claimed)
         catch {
@@ -1023,8 +983,7 @@ final class MedallionTable(
             throw t
         }
       mark("body")
-      if (MedallionTable.reseedSchemaAfterCommit.get() == null)
-        dvCarry.foreach(MedallionTable.reseedSchemaAfterCommit.set)
+      succeeded = true
       // change-feed op durability: record the op for commits whose body
       // did not capture (maintenance/DDL read as dataChange=false, DV
       // compaction invalidates, etc. — ChangeFeed classifies by op).
@@ -1044,28 +1003,10 @@ final class MedallionTable(
       mark("journal")
       out
     } finally {
-      MedallionTable.claimCarry.remove()
-      // same-JVM close of the data-lands-after-claim schema-memo window
-      // (see [[mergedParquet]]): drop the memo once this write's files
-      // are final, whether it succeeded or released its claim
-      MedallionTable.schemaCache.removeWhere(_.endsWith("|" + path))
-      // Schema-preserving bodies re-seed THIS session's entry under the
-      // post-commit stamp (computed before the lock release but EXCLUDING
-      // our own lock file — a post-release reader's listing has everything
-      // we see minus that lock, so including it made the seeded stamp
-      // permanently unmatchable, r19's failing WriteShapeSpec pin; a
-      // foreign scoped claim racing the listing is itself
-      // schema-preserving, so either the entry's stamp matches and stays
-      // correct or it mismatches and the next read re-resolves —
-      // conservative both ways). See
-      // [[MedallionTable.reseedSchemaAfterCommit]].
-      val reseed = MedallionTable.reseedSchemaAfterCommit.get()
-      if (reseed != null) {
-        MedallionTable.reseedSchemaAfterCommit.remove()
-        try MedallionTable.schemaCache.put(schemaCacheKey,
-          (commitStamp(excludeName = lock.getName), reseed))
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      // publish the next snapshot from what the body wrote (or drop it
+      // when the body failed) while the lock still stands, stamped to
+      // the post-release world — see [[TableSnapshot]]
+      TableSnapshot.claimReleasing(this, lock.getName, succeeded)
       try fs.delete(lock, false)
       catch { case _: java.io.IOException => () }
       mark("release")
@@ -1940,18 +1881,6 @@ final class MedallionTable(
       tPhase = now
     }
     val fp0 = appendMetaFingerprint()
-    // Schema-memo carry-over (see [[MedallionTable.reseedSchemaAfterCommit]]):
-    // a memo entry valid RIGHT NOW stays the correct read schema through
-    // this commit — the batch introduces no new physical columns
-    // (eligibility + the readerSchema check below), and any foreign
-    // schema DDL between here and our claim trips the fingerprint
-    // re-check into the serial path. Captured before the claim, armed
-    // only after the publish succeeds.
-    val memoSchema0: Option[org.apache.spark.sql.types.StructType] = {
-      val s0 = commitStamp()
-      MedallionTable.schemaCache.get(schemaCacheKey)
-        .collect { case (`s0`, sch) => sch }
-    }
     val cmap = ColumnMap.load(spark, path)
     // same transform chain as [[appendBody]] — identity included: the
     // block is drawn (and the high-water persisted) here, BEFORE the
@@ -1968,21 +1897,6 @@ final class MedallionTable(
       if (!physBatch.schema.fieldNames.forall(n =>
           have.contains(n.toLowerCase)))
         return false
-    }
-    // The memo carry-over is sound only when the staged file leaves the
-    // FOOTER-MERGED schema bit-identical: every batch field must already
-    // exist in the memoized schema with the same type (and introduce no
-    // nullability widening). A batch that materializes an overlay-added
-    // column for the first time passes the reader-schema check above
-    // (the overlay knows the name) but ADDS a physical column the old
-    // footer merge never saw — re-seeding would make the next read drop
-    // that column's real values to overlay NULLs (SchemaOverlaySpec).
-    val memoSchema = memoSchema0.filter { sch =>
-      val byName = sch.fields.map(f => f.name.toLowerCase -> f).toMap
-      physBatch.schema.fields.forall { bf =>
-        byName.get(bf.name.toLowerCase).exists(mf =>
-          mf.dataType == bf.dataType && (mf.nullable || !bf.nullable))
-      }
     }
     val token = java.util.UUID.randomUUID().toString.take(12)
     val staging = new Path(commitsDir, s"append_staging_$token")
@@ -2028,6 +1942,8 @@ final class MedallionTable(
           fs.makeQualified(dst).toString
         }.toSeq
         MedallionTable.testFailpoint("post-append-publish")
+        TableSnapshot.wroteBaseFiles(this, published, org.apache.spark.sql.types
+          .StructType(physBatch.schema.filterNot(f => partitionColumns.contains(f.name))))
         mark("staged:publish")
         if (incremental) {
           // atomic with a concurrent writer's invalidate (both take the
@@ -2054,10 +1970,6 @@ final class MedallionTable(
         if (cdfOn)
           try ChangeFeed.captureFiles(spark, path, claimed, op, published)
           catch { case NonFatal(_) => () } // read fail-stops
-        // LAST step of the successful body: any earlier throw (drift,
-        // publish failure) leaves the thread-local unset and the memo
-        // simply drops as before
-        memoSchema.foreach(MedallionTable.reseedSchemaAfterCommit.set)
       }
       true
     } catch {
@@ -2510,11 +2422,7 @@ final class MedallionTable(
         plan.newVersions(j).unionByName(plan.inserts(j)))
       // stage 1: new versions + inserts — table partition layout, CHECKs
       // enforced, physical column names (same dialect as the base files)
-      val w = WideCols.canonicalize(ColumnMap.toPhysical(enforced(newRows),
-        ColumnMap.load(spark, path)), WideCols.load(spark, path))
-        .write.mode(SaveMode.Overwrite)
-      (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
-       else w).parquet(batchDir)
+      writeBatch(enforced(newRows), batch)
       // stage 2: marks for the consumed matched rows' OLD positions
       plan.marks(j).write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
       // row-based emptiness: an empty frame's write can still leave a
@@ -2560,6 +2468,21 @@ final class MedallionTable(
           catch { case scala.util.control.NonFatal(_) => () } // post-commit
       }
     } finally j.unpersist()
+  }
+
+  /** Stage a DV-update batch's new row versions under
+    * `_graft_meta/dv_updates/<batch>/`: the table's partition layout and
+    * physical column names, the same dialect as the base files. The data
+    * schema written goes to the snapshot the commit publishes.
+    */
+  private def writeBatch(rows: DataFrame, batch: String): Unit = {
+    val staged = WideCols.canonicalize(ColumnMap.toPhysical(rows,
+      ColumnMap.load(spark, path)), WideCols.load(spark, path))
+    val w = staged.write.mode(SaveMode.Overwrite)
+    (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
+     else w).parquet(DvUpdates.batchDataDir(path, batch))
+    TableSnapshot.wroteBatch(this, batch, org.apache.spark.sql.types.StructType(
+      staged.schema.filterNot(f => partitionColumns.contains(f.name))))
   }
 
   /** Type-2 SCD merge (see [[MergeOps.scd2Merge]]): applies an attribute
@@ -2748,9 +2671,9 @@ final class MedallionTable(
         try ChangeFeed.captureAuto(spark, path, expectedVersion + 1, op)
         catch { case scala.util.control.NonFatal(_) => () }
     } finally {
-      // swap renames land AFTER the marker CAS — drop the schema memo so
-      // no reader keeps a pre-swap schema under the post-CAS stamp
-      MedallionTable.schemaCache.removeWhere(_.endsWith("|" + path))
+      // swap renames land AFTER the marker CAS — drop the snapshot so no
+      // reader keeps the pre-swap one under the post-CAS stamp
+      TableSnapshot.drop(spark, path)
       if (!written) fs.delete(tmp, true) // failed write leaves no litter
     }
   }
@@ -2793,6 +2716,7 @@ final class MedallionTable(
             new Path(DvUpdates.batchDataDir(path, b)))
           .foreach(d => fs.delete(new Path(d), true))
       }
+      hideUnlaidBatchRows(cond)
       invalidateStats()
       // Fast path bypasses rewriteVia (which stashes after its swap): a
       // delete that drops every partition must leave the table readable.
@@ -2806,6 +2730,33 @@ final class MedallionTable(
       import org.apache.spark.sql.functions.{coalesce, lit, not}
       rewriteVia(read.filter(not(coalesce(cond, lit(false)))), op = "delete")
     }
+  }
+
+  /** The partition fast-DELETE's second half for update batches whose
+    * files do NOT sit in the table's partition layout: a DV write through
+    * a handle that does not declare the partition columns (the SQL
+    * catalog's, unless created with PARTITIONED BY) stages its batch flat,
+    * so no directory drop reaches the matched partitions' rows in it —
+    * they would outlive the DELETE. Their positions are marked in the
+    * sidecar instead, one scan over just those files.
+    */
+  private def hideUnlaidBatchRows(cond: Column): Unit = {
+    import org.apache.spark.sql.functions.col
+    def laidOut(dir: String, file: String): Boolean = {
+      val segs = file.stripPrefix(dir + "/").split('/').dropRight(1)
+      segs.length == partitionColumns.size &&
+        segs.zip(partitionColumns).forall { case (seg, c) =>
+          seg.startsWith(c + "=") }
+    }
+    TableSnapshot.of(this).liveBatches.flatMap { b =>
+      val flat = b.files.filterNot(laidOut(b.dir, _))
+      if (flat.isEmpty) None
+      else Some(spark.read.schema(b.schema).option("basePath", b.dir)
+        .parquet(flat: _*).filter(cond)
+        .select(DeletionVectors.fileKey(col("_metadata.file_path")).as("file"),
+          col("_metadata.row_index").as("pos")))
+    }.reduceOption(_ unionByName _)
+      .foreach(_.write.mode(SaveMode.Append).parquet(DeletionVectors.dir(path)))
   }
 
   /** DEEP CLONE (Delta `CREATE TABLE t CLONE s` without SHALLOW): a
@@ -3413,19 +3364,17 @@ final class MedallionTable(
     * leave nothing to infer footers from, so the stashed DDL (mapped to
     * physical names) seeds an explicit schema instead.
     */
-  private def basePhysicalScan(): DataFrame = {
+  private def basePhysicalScan(snap: TableSnapshot): DataFrame = {
     val sf = new Path(path, "_graft_meta/schema.ddl")
-    if (WideCols.readerSchema(spark, path).isEmpty &&
-        !hasDataFiles(new Path(path)) && fs.exists(sf)) {
+    if (snap.wide.isEmpty && !snap.hasData && fs.exists(sf)) {
       val cmap = ColumnMap.load(spark, path)
       spark.read.schema(org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructType
           .fromDDL(readMetaText(sf)).fields
           .map(f => f.copy(name = cmap.getOrElse(f.name, f.name)))))
         .parquet(path)
-    } else mergedParquet() // same WideCols-aware resolution, plus the
-      // schema memo and the under-claim carry (a DV op's base scan no
-      // longer pays its own footer job when the memo covers the table)
+    } else mergedParquet(snap) // same WideCols-aware resolution, from
+      // the snapshot (a DV op's base scan pays no footer job)
   }
 
   /** Reader with THIS table's resolved base physical schema declared —
@@ -3440,31 +3389,37 @@ final class MedallionTable(
     * feed group may mix in).
     */
   private[table] def basePhysicalReader()
-      : Option[org.apache.spark.sql.DataFrameReader] =
-    if (ShallowClone.isClone(spark, path)) None
-    else Some(spark.read.schema(basePhysicalScan().schema))
+      : Option[org.apache.spark.sql.DataFrameReader] = {
+    val snap = TableSnapshot.of(this)
+    if (snap.isClone) None
+    else Some(spark.read.schema(basePhysicalScan(snap).schema))
+  }
 
+  /** The live rows in physical names plus the DV position columns the
+    * vectored writers mark by (`__graft_dv_file` = relocation-stable file
+    * key, `__graft_dv_pos` = row index), derived from the same keyed
+    * union [[read]] builds.
+    */
   private def dvLiveWithPos(): DataFrame = {
     import org.apache.spark.sql.functions.col
-    def prep(df: DataFrame): DataFrame = df
-      .withColumn("__graft_dv_file",
-        DeletionVectors.fileKey(col("_metadata.file_path")))
-      .withColumn("__graft_dv_pos", col("_metadata.row_index"))
+    val snap = TableSnapshot.of(this)
     // A clone's scanFiles carries BOTH the source's committed batch files
     // (cloneFrom folds them into the pointer manifest) AND this clone's
     // OWN committed batches (DvUpdates.dataFiles) — so the batch union
-    // inside amendedOnce must be skipped (batchesInBase), or every
+    // inside amendedKeyed must be skipped (batchesInBase), or every
     // amended row reads twice and the next update writes duplicate new
     // versions (ShallowCloneSpec "two vectored updates" regression).
-    val isClone = ShallowClone.isClone(spark, path)
-    val base = if (isClone)
-        WideCols.reader(spark, path)
-          .parquet(ShallowClone.scanFiles(spark, path): _*)
-      else basePhysicalScan()
-    // one DV anti-join over base∪batches, position columns prepped per
-    // branch before the union (DvUpdates.amendedOnce)
-    DvUpdates.amendedOnce(spark, path, Some(base), prep,
-      batchesInBase = isClone).get
+    val keyed =
+      if (snap.isClone)
+        DvUpdates.amendedKeyed(spark, snap, Some(WideCols.reader(spark, path)
+          .parquet(snap.scanFiles: _*)), batchesInBase = true).get
+      else if (snap.hasData) liveKeyed(snap)
+      else DvUpdates.amendedKeyed(spark, snap, Some(basePhysicalScan(snap))).get
+    val data = keyed.columns.toSeq
+      .filterNot(c => c == DvUpdates.FileCol || c == DvUpdates.PosCol)
+    keyed.select(data.map(c => col(s"`$c`")) ++ Seq(
+      DeletionVectors.fileKey(col(DvUpdates.FileCol)).as("__graft_dv_file"),
+      col(DvUpdates.PosCol).as("__graft_dv_pos")): _*)
   }
 
   def deleteVectored(cond: Column): Unit =
@@ -3698,11 +3653,12 @@ final class MedallionTable(
         else Some(spark.read.schema(DeletionVectors.MarkSchema)
           .parquet(oldMarkFiles: _*)
           .select(col("file"), col("pos")))
-      val hideAll = DvUpdates.committedScans(spark, path).map { case (_, scan) =>
-        scan.select(
-          DeletionVectors.fileKey(col("_metadata.file_path")).as("file"),
-          col("_metadata.row_index").as("pos"))
-      }.reduceOption(_ unionByName _)
+      val hideAll = DvUpdates.committedScans(spark, TableSnapshot.of(this))
+        .map { case (_, scan) =>
+          scan.select(
+            DeletionVectors.fileKey(col("_metadata.file_path")).as("file"),
+            col("_metadata.row_index").as("pos"))
+        }.reduceOption(_ unionByName _)
       (oldMarks.toSeq ++ hideAll.toSeq).reduceOption(_ unionByName _)
         // one file: marks are collect-cap-bounded, and every read lists
         // and scans the sidecar — 32 distinct() shards is pure creep
@@ -3766,11 +3722,7 @@ final class MedallionTable(
       // stage 1: new row versions — table partition layout, CHECKs
       // enforced, physical names (batch files must speak the same schema
       // dialect as the base files so mergeSchema unions stay uniform)
-      val w = WideCols.canonicalize(ColumnMap.toPhysical(enforced(newRows),
-        ColumnMap.load(spark, path)), WideCols.load(spark, path))
-        .write.mode(SaveMode.Overwrite)
-      (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
-       else w).parquet(batchDir)
+      writeBatch(enforced(newRows), batch)
       // stage 2: marks for the matched rows' OLD positions
       matched.select(col("__graft_dv_file").as("file"),
           col("__graft_dv_pos").as("pos"))
@@ -4207,7 +4159,8 @@ final class MedallionTable(
           DeletionVectors.fileKey(col("_metadata.file_path")))
         .withColumn("__graft_dv_pos", col("_metadata.row_index"))
       val baseLive = SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        DeletionVectors.applied(spark, prep(basePhysicalScan()),
+        DeletionVectors.applied(spark,
+          prep(basePhysicalScan(TableSnapshot.of(this))),
           DeletionVectors.dir(path), path),
         ColumnMap.load(spark, path)))
       val j = baseLive.persist(
@@ -4244,8 +4197,7 @@ final class MedallionTable(
         // schema FIRST so the table keeps existing (the same contract as
         // delete()'s fast path; read()'s batch guard handles the rest).
         // The logical schema is already in hand on the positioned frame —
-        // a `read.schema` here would pay a fresh footer-resolution job
-        // per pass (the claim invalidated the schema memo)
+        // no second `read` construction needed
         stashSchema(org.apache.spark.sql.types.StructType(j.schema.fields
           .filterNot(f => f.name == "__graft_dv_file" ||
             f.name == "__graft_dv_pos")))
@@ -4973,15 +4925,6 @@ object MedallionTable {
   /** The row-tracking column ([[MedallionTable.enableRowTracking]]). */
   val RowIdCol = "_row_id"
 
-  /** session|path -> (commit stamp, resolved merged parquet schema).
-    * See [[MedallionTable.mergedParquet]]. Session-UUID keyed and
-    * LRU-bounded ([[SessionCaches]]): schemas are tiny, so the bound is
-    * generous, but session churn in a long-lived JVM no longer
-    * accumulates dead-session entries.
-    */
-  private val schemaCache = new BoundedLruCache[
-    (Long, org.apache.spark.sql.types.StructType)](1024)
-
   /** Bounded wait budget for writer coordination: how long a claim-first
     * writer waits on a standing rewrite intent OR on another writer's
     * lock before failing with a conflict. Healthy holders release in
@@ -5046,41 +4989,6 @@ object MedallionTable {
     */
   private[graft] val noopPhase: (String, Long) => Unit = (_, _) => ()
   private[graft] var commitPhaseHook: (String, Long) => Unit = noopPhase
-
-  /** Armed by a commit body that PROVED it preserved the reader schema
-    * (staged appends: eligibility + the under-claim metadata-fingerprint
-    * re-check), as its LAST step. The shared release path then re-seeds
-    * the schema memo for the writer's session under the post-commit
-    * stamp instead of leaving every subsequent read to pay a fresh
-    * footer-resolution job — the standing-index ingest loop paid one
-    * such job per commit (round 19). Thread-local: claim holders are
-    * per-thread by construction.
-    */
-  private[table] val reseedSchemaAfterCommit =
-    new ThreadLocal[org.apache.spark.sql.types.StructType]
-
-  /** Ops whose commit bodies provably never add, delete, or rewrite BASE
-    * data files — their writes live under `_graft_meta` (DV marks, update
-    * batches) or the commits sidecar (CDF flag/manifests) — so the base
-    * footer-merged schema is bit-identical across the commit. Under the
-    * GLOBAL writer lock (no foreign claim can land while it is held), a
-    * schema-memo entry stamped to the pre-claim world therefore stays the
-    * correct base resolution for the whole body AND after release: in-body
-    * reads skip their footer-resolution jobs ([[ClaimCarry]]) and the
-    * release re-keys the entry like a staged append's reseed.
-    */
-  private[table] val baseFilePreservingOps: Set[String] =
-    Set("delete-dv", "update-dv", "merge-dv", "set-cdf",
-      "dv-compact", "dv-batch-compact")
-
-  /** Active base-file-preserving GLOBAL claim on `path`: the memo entry
-    * whose stamp equals `commitStampExcluding(exclusions)` (the pre-claim
-    * world) is valid for every in-body read of that table. Thread-local:
-    * claim holders are per-thread by construction.
-    */
-  private[table] final case class ClaimCarry(path: String,
-      exclusions: Set[String])
-  private[table] val claimCarry = new ThreadLocal[ClaimCarry]
 
   /** Last mergeVectored's derived partition-pruning sets (partition col →
     * source key values), None when no merge key was a partition column —

@@ -3,7 +3,7 @@ package graft.table
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the driver-side metadata caches
-  * ([[SmallSnapshot]], [[MedallionTable]]'s schema memo,
+  * ([[SmallSnapshot]], [[TableSnapshot]]'s per-session frames,
   * [[BloomIndex]]'s snapshot cache).
   *
   * Two hazards the round-11 review called out in the previous
@@ -117,11 +117,5 @@ private[table] final class BoundedLruCache[V](maxEntries: Int) {
   def get(k: String): Option[V] = m.synchronized(Option(m.get(k)))
   def put(k: String, v: V): Unit = m.synchronized { m.put(k, v); () }
   def remove(k: String): Unit = m.synchronized { m.remove(k); () }
-  /** Cross-key invalidation (e.g. every session's entry for one table
-    * path): a writer completing a commit must be able to drop OTHER
-    * sessions' memos, not just its own.
-    */
-  def removeWhere(p: String => Boolean): Unit =
-    m.synchronized { m.keySet.removeIf(k => p(k)); () }
   def clear(): Unit = m.synchronized(m.clear())
 }

@@ -47,6 +47,40 @@ class GraftDmlSpec extends SparkSpec {
     assert(t.read.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
+  test("UPDATE and DELETE accept BETWEEN in WHERE") {
+    val (name, t) = fresh(Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0),
+      (4L, "d", 40.0)))
+    spark.sql(s"UPDATE $name SET v = v + 1 WHERE id BETWEEN 2 AND 3")
+    assert(state(t) == Set((1L, "a", 10.0), (2L, "b", 21.0), (3L, "c", 31.0),
+      (4L, "d", 40.0)))
+    spark.sql(s"DELETE FROM $name WHERE v BETWEEN 30.5 AND 40.0")
+    assert(state(t) == Set((1L, "a", 10.0), (2L, "b", 21.0)))
+    spark.sql(s"DELETE FROM $name WHERE id NOT BETWEEN 2 AND 5")
+    assert(state(t) == Set((2L, "b", 21.0)))
+  }
+
+  test("BETWEEN in UPDATE/DELETE on the deletion-vector path") {
+    val (name, t) = fresh(Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)))
+    val s = spark.newSession()
+    s.conf.set("spark.graft.dvWrites", "true")
+    s.sql(s"UPDATE $name SET name = 'u' WHERE id BETWEEN 1 AND 2")
+    s.sql(s"DELETE FROM $name WHERE v BETWEEN 25.0 AND 35.0")
+    assert(state(t) == Set((1L, "u", 10.0), (2L, "u", 20.0)))
+  }
+
+  test("MERGE WHEN conditions accept BETWEEN") {
+    import spark.implicits._
+    val (name, t) = fresh(Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)))
+    Seq((1L, "x", 1.0), (2L, "y", 2.0), (5L, "z", 5.0), (6L, "w", 6.0))
+      .toDF("id", "name", "v").createOrReplaceTempView("between_src")
+    spark.sql(
+      s"""MERGE INTO $name t USING between_src s ON t.id = s.id
+         |WHEN MATCHED AND t.v BETWEEN 15.0 AND 25.0 THEN UPDATE SET v = s.v
+         |WHEN NOT MATCHED AND s.id BETWEEN 5 AND 5 THEN INSERT *""".stripMargin)
+    assert(state(t) == Set((1L, "a", 10.0), (2L, "b", 2.0), (3L, "c", 30.0),
+      (5L, "z", 5.0)))
+  }
+
   test("UPDATE applies simultaneous assignment (swap)") {
     import spark.implicits._
     n += 1

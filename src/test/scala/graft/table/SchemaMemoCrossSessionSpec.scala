@@ -3,21 +3,19 @@ package graft.table
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The schema memo's multi-session boundary ([[MedallionTable]]
-  * `mergedParquet` scaladoc), pinned as tests instead of prose:
+/** The table snapshot's multi-session boundary ([[TableSnapshot]]
+  * scaladoc), pinned as tests instead of prose:
   *
-  *  - SUPPORTED: sequential cross-session evolution. Session B's memo is
-  *    keyed by the commit stamp, which session A's evolving append
-  *    changes (claim-first), so B re-resolves and sees the new column.
-  *  - SUPPORTED (round-12 hardening): a reader session racing a
-  *    schema-evolving append inside the data-lands-after-claim window.
-  *    B resolves mid-write and memoizes the PRE-write schema under the
-  *    post-claim stamp — the writer's completion now drops EVERY
-  *    session's memo for the path (path-wide removeWhere), so B's next
-  *    read re-resolves and is correct.
-  *  - UNSUPPORTED (documented, untestable in one JVM): the same race
-  *    from a reader in a DIFFERENT JVM, whose memo no writer here can
-  *    reach — schema DDL stays single-writer by contract.
+  *  - SUPPORTED: sequential cross-session evolution. Session B reads the
+  *    snapshot registered under the old commit stamp, which session A's
+  *    evolving append changes (claim-first), so B's next read rebuilds
+  *    and sees the new column.
+  *  - SUPPORTED: a reader session racing a schema-evolving append inside
+  *    the data-lands-after-claim window. B builds mid-write from the
+  *    pre-write files; the writer then publishes the snapshot of what it
+  *    wrote under the post-release stamp, so B's next read is correct.
+  *  - Across JVMs the same race heals by the stamp: a snapshot built
+  *    while a writer's lock stood never matches the post-release listing.
   */
 class SchemaMemoCrossSessionSpec extends SparkSpec {
   import spark.implicits._
@@ -44,8 +42,8 @@ class SchemaMemoCrossSessionSpec extends SparkSpec {
     val t2 = MedallionTable(s2, p)
     assert(t2.read.schema.fieldNames.toSeq == Seq("id", "s"))
     // from INSIDE the writer's claim (post-claim, pre-data): session B
-    // resolves and memoizes the pre-write schema under the new stamp —
-    // the exact data-lands-after-claim window the scaladoc describes
+    // builds from the pre-write files — the exact data-lands-after-claim
+    // window the scaladoc describes
     var racedSchema: Seq[String] = Nil
     MedallionTable.testFailpoint = {
       case "mid-claim-first" =>
@@ -57,7 +55,7 @@ class SchemaMemoCrossSessionSpec extends SparkSpec {
     finally MedallionTable.testFailpoint = _ => ()
     assert(racedSchema == Seq("id", "s"),
       s"mid-write resolve must still see the pre-write schema: $racedSchema")
-    // write completion dropped B's stale memo path-wide: correct at once
+    // write completion published the written snapshot: correct at once
     assert(t2.read.schema.fieldNames.contains("score"),
       "racing reader session must re-resolve after the write completes")
     assert(t2.read.count() == 2L)

@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
   *    instead of `defaultParallelism` shards; an explicit repartition in
   *    the batch plan is the caller's declared layout and passes through;
   *    `spark.graft.smallWriteClusterBytes=0` disables the clustering.
-  *  - [[MedallionTable.reseedSchemaAfterCommit]]: a schema-preserving
-  *    staged append re-seeds the writer session's schema memo, so the
-  *    next `read` constructs with ZERO Spark jobs (no footer-resolution
-  *    job) and still sees the correct schema — while a schema-EVOLVING
-  *    append (serial path) keeps dropping the memo and re-resolves.
+  *  - [[TableSnapshot]] publishing: a schema-preserving staged append
+  *    and the DV commits hand the next snapshot to the next reader, so
+  *    building `read` — and the SQL source's `inferSchema` — after a
+  *    same-JVM commit runs ZERO Spark jobs (no footer-resolution, batch
+  *    schema inference or mark collect) and still equals a cold read
+  *    from disk — while a schema-EVOLVING append (serial path) drops the
+  *    base schema and re-resolves.
   */
 class WriteShapeSpec extends SparkSpec {
   import spark.implicits._
@@ -25,6 +27,12 @@ class WriteShapeSpec extends SparkSpec {
       else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
     walk(new java.io.File(p))
   }
+
+  /** The SQL source's catalog-side schema inference over `p`. */
+  private def inferSchema(p: String) =
+    new graft.sources.GraftSqlSource().inferSchema(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", p)))
 
   test("local-relation micro-batches land as one file per commit") {
     val p = tmpDir("wshape1")
@@ -71,7 +79,7 @@ class WriteShapeSpec extends SparkSpec {
     val p = tmpDir("wreseed1")
     val t = MedallionTable(spark, p)
     t.overwrite(Seq((1L, "a")).toDF("id", "s"))
-    t.read.schema // miss: pays the footer job, seeds the memo
+    t.read.schema // cold: pays the footer job, resolves the snapshot
     t.append(Seq((2L, "b")).toDF("id", "s")) // staged, schema-preserving
     // suites share one SparkContext and may run in parallel: count only
     // jobs submitted under THIS test's job group, not bystanders'
@@ -87,16 +95,18 @@ class WriteShapeSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     spark.sparkContext.setJobGroup(group, group)
     try {
-      val schema = t.read.schema // memo re-seeded by the append: no job
+      val schema = t.read.schema // published by the append: no job
+      assert(inferSchema(p) == schema)
       Thread.sleep(500) // listener bus is async
       assert(jobs.get() == 0,
-        s"post-append read must resolve from the re-seeded memo, " +
+        s"post-append read must build from the published snapshot, " +
           s"ran ${jobs.get()} job(s)")
-      // and the re-seeded schema is the real one: a FRESH session (own
-      // memo namespace) resolves from footers and must agree
+      // and the carried schema is the real one: a cold rebuild in a
+      // FRESH session resolves from footers and must agree
+      TableSnapshot.drop(spark, p)
       val fresh = MedallionTable(spark.newSession(), p).read.schema
       assert(schema == fresh,
-        s"re-seeded schema drifted: memo=$schema footer=$fresh")
+        s"carried schema drifted: snapshot=$schema footer=$fresh")
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(l)
@@ -109,7 +119,7 @@ class WriteShapeSpec extends SparkSpec {
     val p = tmpDir("wreseed3")
     val t = MedallionTable(spark, p)
     t.overwrite((0 until 100).map(i => (i.toLong, s"v$i")).toDF("id", "s"))
-    t.read.schema // seeds the memo
+    t.read.schema // resolves the snapshot's base schema
     t.updateVectored($"id" % 10 === 1, Map("s" -> lit("upd"))) // base-preserving
     t.deleteVectored($"id" % 25 === 3) // likewise
     val group = s"wreseed3-${java.util.UUID.randomUUID()}"
@@ -124,17 +134,19 @@ class WriteShapeSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     spark.sparkContext.setJobGroup(group, group)
     try {
-      // carried through both DV commits: the base footer job and the
-      // sidecar schema-inference job are gone; the one remaining job is
-      // the sidecar mark COLLECT (new marks genuinely must be read)
+      // published by both DV commits: no base footer job, no batch
+      // schema inference, and the new marks were read on the driver by
+      // the writer — no collect job either
       val schema = t.read.schema
+      assert(inferSchema(p) == schema)
       Thread.sleep(500)
-      assert(jobs.get() <= 1,
-        s"post-DV-commit read must resolve schema from the carried memo " +
-          s"(collect job only), ran ${jobs.get()} job(s)")
+      assert(jobs.get() == 0,
+        s"post-DV-commit read must build from the published snapshot, " +
+          s"ran ${jobs.get()} job(s)")
+      TableSnapshot.drop(spark, p)
       val fresh = MedallionTable(spark.newSession(), p).read.schema
       assert(schema == fresh,
-        s"carried schema drifted: memo=$schema footer=$fresh")
+        s"carried schema drifted: snapshot=$schema footer=$fresh")
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(l)
@@ -150,7 +162,7 @@ class WriteShapeSpec extends SparkSpec {
     t.read.schema
     t.append(Seq((2L, "b", 9.5)).toDF("id", "s", "score")) // serial path
     assert(t.read.schema.fieldNames.contains("score"),
-      "evolution must re-resolve, never serve a re-seeded stale schema")
+      "evolution must re-resolve, never serve a carried stale schema")
     assert(t.read.filter($"score".isNotNull).count() == 1L)
   }
 }
