@@ -62,10 +62,11 @@ if over_total:
 # round's persisted per-query map and flag >3x moves. The r17
 # pipeline_curate_standing episode (32.8 s one-off, 6.1 s everywhere
 # else) cost a round of mystery because nothing surfaced the outlier at
-# gate time; a flagged excursion should trigger graft.tools.
-# BenchContextRepro (prefix bisect) BEFORE anyone believes a structural
-# cause. Informational, not fatal: cross-epoch totals legitimately swing
-# +-20%, and a 3x single-query move is a diagnosis trigger, not proof.
+# gate time; a flagged excursion should trigger two traced perfbench runs
+# (parent and change, same seed) compared with scripts/census_diff.py
+# BEFORE anyone believes a structural cause. Informational, not fatal:
+# cross-epoch totals legitimately swing +-20%, and a 3x single-query move
+# is a diagnosis trigger, not proof.
 import glob, re
 EXCURSION_RATIO = 3.0
 NOISE_FLOOR_SEC = 0.5  # sub-noise-floor queries flap on scheduling alone
@@ -91,7 +92,8 @@ if priors:
         direction = "SLOWER" if e["ratio"] > 1 else "faster"
         print(f"EXCURSION {e['query']}: {e['prior_sec']}s -> {e['now_sec']}s "
               f"({e['ratio']}x {direction} vs {os.path.basename(prior_path)})"
-              " — run graft.tools.BenchContextRepro before assuming code")
+              " — compare two traced perfbench runs with"
+              " scripts/census_diff.py before assuming code")
     cmp_out = {"prior": os.path.basename(prior_path),
                "ratio_gate": EXCURSION_RATIO,
                "noise_floor_sec": NOISE_FLOOR_SEC,

@@ -40,8 +40,10 @@ cp target/bench_full.json "$(printf 'bench_full_r%02d.json' "$round")"
 echo "round_end: full per-query bench persisted to bench_full_r$(printf '%02d' "$round").json"
 
 # Persist the excursion comparison benchgate just computed (r18 verdict
-# #5): >3x per-query moves vs the prior round's map, the trigger for a
-# BenchContextRepro bisect instead of a round-long mystery.
+# #5): >3x per-query moves vs the prior round's map, the trigger for two
+# traced perfbench runs (`python3 perfbench/run.py --trace 1`, parent and
+# change) compared with scripts/census_diff.py instead of a round-long
+# mystery.
 if [ -f target/bench_excursions.json ]; then
   cp target/bench_excursions.json \
     "$(printf 'bench_excursions_r%02d.json' "$round")"

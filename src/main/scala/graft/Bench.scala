@@ -53,30 +53,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // engine conf from GraftSession (the one source users, tests and the
+    // oracle share); only harness keys are added here
+    val spark = GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Round 19: let AQE size CACHED-plan shuffles too. Spark's default
-      // (false) pins every shuffle under a persisted frame at the raw
-      // spark.sql.shuffle.partitions count — the protocol caches
-      // (HashedLr features, curate quality frames, DV scans) then fan 32
-      // micro-tasks per downstream stage at ANY data size; scale-adaptive
-      // coalescing is exactly AQE's job (guide §2.2). Scale-independent:
-      // at 100 TB the same flag sizes cached shuffles by bytes instead of
-      // a fixed constant.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Round 20: INT64-micros timestamps instead of Spark's legacy INT96
-      // default. INT96 is deprecated in parquet-format and its chunk
-      // min/max use a comparator readers must ignore (PARQUET-1065), so a
-      // timestamp-covered table could never arm the footer-stats commit
-      // floor or row-group skipping; values are identical either way
-      // (Spark timestamps are micros precision). Delta and Iceberg write
-      // INT64 timestamps for the same reason. Mirrored in graft.Verify so
-      // the oracle validates execution under it.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // Round-8 postmortem: a transient local-mode RPC stall (default ask
       // timeout 120s, but the heartbeat/ask retry loop stalled one query
       // for ~37s × 2 attempts) inflated a2_static_agg14 7.8× and printed a

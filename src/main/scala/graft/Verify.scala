@@ -1,31 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare
+  * (`scripts/selfcheck.py <outDir> <sfDir>`).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query ...]
+  *
+  * Trailing query names restrict the dump and oracle_sql.json to just
+  * those queries — the fast loop for checking a query under development
+  * without the full catalog run, under the same session and dump rules.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir>")
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [query ...]")
     val sfDir = args(0)
     val outDir = args(1)
+    val names = args.drop(2).toSeq
+    val queries = SparkEntry.queries
+    names.filterNot(queries.contains).foreach(n =>
+      sys.error(s"unknown query: $n"))
+    val selected =
+      if (names.isEmpty) queries.toSeq else names.map(n => n -> queries(n))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // engine conf from GraftSession — the oracle validates exactly the
+    // engine Bench times and users build
+    val spark = GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      // AQE on cached-plan shuffles — same setting and rationale as
-      // graft.Bench (round 19): cached frames otherwise run fixed-width
-      // shuffles that defeat adaptive coalescing at every scale
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // INT64-micros timestamps (not legacy INT96) — same setting and
-      // rationale as graft.GraftSession/Bench (round 20): INT96 chunk
-      // stats are deprecated/unreliable (PARQUET-1065) so they can never
-      // arm footer stats or row-group skipping; values are identical
-      // (Spark timestamps are micros precision either way)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LogNoise.silenceExpected()
@@ -36,7 +37,7 @@ object Verify {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val timeout = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "600").toInt
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       val workerThread = new java.util.concurrent.atomic.AtomicReference[Thread]()
       val work = Future {
         // Job-group properties are thread-local: set them on the thread that
@@ -96,6 +97,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => names.isEmpty || names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

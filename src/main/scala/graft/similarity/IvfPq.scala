@@ -109,35 +109,4 @@ object IvfPq {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
   }
-
-  /** Sub-phase wall attribution of the IVFADC pipeline for the round-12
-    * bench investigation (graft.tools.ProfileAnnXcheck) — diagnostic
-    * only; findings recorded in SCALING.md.
-    */
-  private[graft] def profileBreakdown(emb: DataFrame,
-      time: (String, () => Any) => Any): Unit = {
-    val m = 8; val kCent = 16
-    val base = Ivf.prepared(emb)
-    val d = Pq.dimsPerSub(emb, m)
-    var cents: DataFrame = null
-    time("  ivfpq: refineCentroids(2)", () => {
-      cents = Ivf.refineCentroids(base, 16, 2).localCheckpoint()
-    })
-    val cells = Ivf.assignCells(base, cents)
-    val resid = cells.join(broadcast(cents), Seq("cell_id"))
-      .select(col("vec_id"), col("cell_id"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
-    val subs = resid.select(col("vec_id"), col("cell_id"),
-      expr(s"EXPLODE(TRANSFORM(SEQUENCE(0, ${m - 1}), " +
-        s"s -> NAMED_STRUCT('sub_id', s, 'sv', SLICE(v, s * $d + 1, $d))))").as("e"))
-      .select(col("vec_id"), col("cell_id"),
-        col("e.sub_id").as("sub_id"), col("e.sv").as("sv"))
-    time("  ivfpq: subs count", () => subs.count())
-    var books: DataFrame = null
-    time("  ivfpq: trainCodebooks(1)", () => {
-      books = Pq.trainCodebooks(subs, kCent, 1).localCheckpoint()
-    })
-    time("  ivfpq: assignCodes count", () =>
-      Pq.assignCodes(subs, books, carry = Seq("cell_id")).count())
-  }
 }

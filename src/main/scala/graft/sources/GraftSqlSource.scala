@@ -242,7 +242,7 @@ private[sources] final class GraftScanBuilder(path: String, fullSchema: StructTy
         agg.groupByExpressions.nonEmpty) return None
     val spark = SparkSession.active
     if (!TableStats.hasManifest(spark, path)) return None
-    val covered = TableStats.coveredColumns(spark, path)
+    val covered = TableStats.aggregableColumns(spark, path, fullSchema)
     def columnOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames.length == 1 &&

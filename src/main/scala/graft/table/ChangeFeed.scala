@@ -71,7 +71,7 @@ import org.apache.spark.sql.functions._
   *  - positional reconstruction gathers ALL commits' marks into ONE
   *    frame and joins the needed base files ONCE (the
   *    [[DvUpdates.amendedKeyed]] lesson: per-branch joins cost ~1 s of
-  *    driver plan-construction each — see `graft.tools.DvBatchProbe`);
+  *    driver plan-construction each, measured by DvBatchProbe);
   *  - merge classification is one window per merge commit over that
   *    commit's own O(Δ) pre+post rows — no join;
   *  - referenced files are resolved by file key across the live table,
@@ -988,7 +988,7 @@ object ChangeFeed {
         // and the DV merge evaluates its source several times (unique-key
         // check, key-range aggregate, matched pass) — without the cut,
         // each evaluation re-runs the whole feed (measured 10.5 s → the
-        // checkpointed apply in graft.tools.CdfProbe).
+        // checkpointed apply, measured by CdfProbe).
         val last = ch.withColumn("__cf_rn", row_number().over(w))
           .filter(col("__cf_rn") === 1).drop("__cf_rn")
           .drop(CommitVersionCol, CommitTimestampCol)

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * Plain `listStatus` recursion, NOT `fs.listFiles(recursive)`: the
   * located-status iterator resolves block locations PER ENTRY, which on
   * the local (checksum) filesystem measured ~4.3 ms/file
-  * ([[graft.tools.FileCountProbe]], round 17) — a 100k-file table would
+  * (FileCountProbe, round 17) — a 100k-file table would
   * pay ~430 s of driver-side listing before any data work. `listStatus`
   * costs microseconds per entry and block locations are irrelevant to a
   * name/size census. Round 17 fixed one site

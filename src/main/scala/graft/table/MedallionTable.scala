@@ -912,17 +912,7 @@ final class MedallionTable(
     */
   private def withClaimedCommitScoped[T](op: String,
       footprint: Option[Set[String]])(write: Long => T): T = {
-    // commit-floor phasing (CommitFloorProbe): zero-cost no-op hook in
-    // production, same pattern as testFailpoint
-    val phase = MedallionTable.commitPhaseHook
-    var tPhase = System.nanoTime()
-    def mark(name: String): Unit = if (phase ne MedallionTable.noopPhase) {
-      val now = System.nanoTime()
-      phase(name, now - tPhase)
-      tPhase = now
-    }
     val lock = acquireWriteLock(op, footprint)
-    mark("acquire-lock")
     var succeeded = false
     try {
       TableSnapshot.claimStarted(this)
@@ -973,7 +963,6 @@ final class MedallionTable(
         }
       }
       MedallionTable.testFailpoint("mid-claim-first")
-      mark("claim")
       val out =
         try write(claimed)
         catch {
@@ -982,7 +971,6 @@ final class MedallionTable(
             catch { case _: java.io.IOException => () }
             throw t
         }
-      mark("body")
       succeeded = true
       // change-feed op durability: record the op for commits whose body
       // did not capture (maintenance/DDL read as dataChange=false, DV
@@ -992,7 +980,6 @@ final class MedallionTable(
       if (ChangeFeed.isEnabled(spark, path))
         try ChangeFeed.captureAuto(spark, path, claimed, op)
         catch { case scala.util.control.NonFatal(_) => () }
-      mark("cdf-capture")
       // journal upkeep under ANY holder (compactJournal serializes
       // concurrent compactors via its try-lock — staged appends are
       // scoped, and without this the journal would grow unboundedly on
@@ -1000,7 +987,6 @@ final class MedallionTable(
       // uncompacted journal files stay fully readable
       try compactJournal()
       catch { case scala.util.control.NonFatal(_) => () }
-      mark("journal")
       out
     } finally {
       // publish the next snapshot from what the body wrote (or drop it
@@ -1009,7 +995,6 @@ final class MedallionTable(
       TableSnapshot.claimReleasing(this, lock.getName, succeeded)
       try fs.delete(lock, false)
       catch { case _: java.io.IOException => () }
-      mark("release")
     }
   }
 
@@ -1873,13 +1858,6 @@ final class MedallionTable(
     */
   private def appendStaged(df: DataFrame, op: String): Boolean = {
     import scala.util.control.NonFatal
-    val phase = MedallionTable.commitPhaseHook
-    var tPhase = System.nanoTime()
-    def mark(name: String): Unit = if (phase ne MedallionTable.noopPhase) {
-      val now = System.nanoTime()
-      phase(name, now - tPhase)
-      tPhase = now
-    }
     val fp0 = appendMetaFingerprint()
     val cmap = ColumnMap.load(spark, path)
     // same transform chain as [[appendBody]] — identity included: the
@@ -1902,13 +1880,11 @@ final class MedallionTable(
     val staging = new Path(commitsDir, s"append_staging_$token")
     fs.mkdirs(commitsDir)
     try {
-      mark("staged:transform")
       // the expensive distributed write runs OUTSIDE any lock — N
       // appenders stage in parallel; CHECK/NOT NULL gates fire here,
       // before any claim exists to release
       writer(physBatch, SaveMode.Overwrite).parquet(staging.toString)
       MedallionTable.testFailpoint("post-stage-write")
-      mark("staged:stage-write")
       val stagingUri = fs.makeQualified(staging).toUri
       val rels = scala.collection.mutable.ArrayBuffer[String]()
       walkFiles(staging, n => n.startsWith("_") || n.startsWith(".")) { st =>
@@ -1944,7 +1920,6 @@ final class MedallionTable(
         MedallionTable.testFailpoint("post-append-publish")
         TableSnapshot.wroteBaseFiles(this, published, org.apache.spark.sql.types
           .StructType(physBatch.schema.filterNot(f => partitionColumns.contains(f.name))))
-        mark("staged:publish")
         if (incremental) {
           // atomic with a concurrent writer's invalidate (both take the
           // stats mutex): its claim precedes its invalidate, so either
@@ -1966,7 +1941,6 @@ final class MedallionTable(
             fs.delete(new Path(path, "_graft_meta/stats_pending"), true)
           }
         } else invalidateStats()
-        mark("staged:stats")
         if (cdfOn)
           try ChangeFeed.captureFiles(spark, path, claimed, op, published)
           catch { case NonFatal(_) => () } // read fail-stops
@@ -1981,13 +1955,6 @@ final class MedallionTable(
 
   /** The append write itself — runs INSIDE a claimed commit. */
   private def appendBody(df: DataFrame, op: String): Unit = {
-    val phase = MedallionTable.commitPhaseHook
-    var tPhase = System.nanoTime()
-    def mark(name: String): Unit = if (phase ne MedallionTable.noopPhase) {
-      val now = System.nanoTime()
-      phase(name, now - tPhase)
-      tPhase = now
-    }
     // Incremental manifest maintenance (TableStats.beginIncrementalUpdate
     // scaladoc): when a manifest exists, park it as pending, write the
     // data, then stats JUST the new files and commit the manifest back by
@@ -1997,7 +1964,6 @@ final class MedallionTable(
     val incremental = TableStats.beginIncrementalUpdate(spark, path)
     val before =
       if (incremental || cdfOn) dataFileSet() else Set.empty[String]
-    mark("append:pre-walk")
     // appended files must carry the PHYSICAL names the existing files do
     // (mergeSchema would otherwise read a renamed column as two) — and,
     // under a live type-widening overlay, the WIDE types (canonicalize:
@@ -2028,12 +1994,9 @@ final class MedallionTable(
         stashSchema(org.apache.spark.sql.types.StructType(
           stash.fields ++ fresh))
     }
-    mark("append:transform")
     writer(physBatch, SaveMode.Append).parquet(path)
-    mark("append:write-job")
     val added =
       if (incremental || cdfOn) (dataFileSet() -- before).toSeq else Nil
-    mark("append:post-walk")
     if (incremental)
       try TableStats.completeIncrementalUpdate(spark, path, added,
         stashedPhysicalSchema())
@@ -2044,7 +2007,6 @@ final class MedallionTable(
         case scala.util.control.NonFatal(_) => invalidateStats()
       }
     else invalidateStats()
-    mark("append:stats")
     // change-feed capture is metadata-only: the added FILES are the
     // insert rows (ChangeFeed scaladoc) — commitVersion is stable inside
     // the claimed block (writer lock held; a racing rewrite's CAS fails)
@@ -4982,13 +4944,6 @@ object MedallionTable {
   private[graft] var testFailpoint: String => Unit =
     if (haltAt.isEmpty) _ => ()
     else name => if (haltAt.contains(name)) Runtime.getRuntime.halt(137)
-
-  /** Commit-floor phase instrumentation ([[graft.tools.CommitFloorProbe]]):
-    * (phase name, nanos since previous phase). Identity-compared against
-    * [[noopPhase]] so the production path pays one reference check.
-    */
-  private[graft] val noopPhase: (String, Long) => Unit = (_, _) => ()
-  private[graft] var commitPhaseHook: (String, Long) => Unit = noopPhase
 
   /** Last mergeVectored's derived partition-pruning sets (partition col →
     * source key values), None when no merge key was a partition column —

@@ -376,8 +376,9 @@ object TableStats {
         // byte-identically
         val (lo, hi) = (minV.asInstanceOf[Long], maxV.asInstanceOf[Long])
         val fmt = org.apache.spark.sql.catalyst.util.TimestampFormatter
-          .getFractionFormatter(java.time.ZoneId.of(
-            spark.sessionState.conf.sessionLocalTimeZone))
+          .getFractionFormatter(org.apache.spark.sql.catalyst.util
+            .DateTimeUtils.getZoneId(
+              spark.sessionState.conf.sessionLocalTimeZone))
         (fmt.format(lo), fmt.format(hi), null, null,
           Long.box(lo), Long.box(hi))
       case _ => // byte/short/int/long
@@ -719,24 +720,60 @@ object TableStats {
   final case class ColMin(column: String) extends ManifestAgg
   final case class ColMax(column: String) extends ManifestAgg
 
+  /** Covered columns whose MIN/MAX [[aggregateFromManifest]] answers.
+    * TIMESTAMP/DATE columns qualify only when the manifest carries their
+    * canonical-epoch cells (`min_ts__`/`max_ts__`): their string cells
+    * were rendered in the WRITER's session zone, and casting them back in
+    * the reader's zone would shift the result — without the epoch cells
+    * the caller scans instead.
+    */
+  def aggregableColumns(spark: SparkSession, tablePath: String,
+      tableSchema: StructType): Set[String] = {
+    val fields = spark.read.parquet(statsPath(tablePath)).schema.fieldNames.toSet
+    fields.collect { case f if f.startsWith("min_str__") =>
+      f.stripPrefix("min_str__")
+    }.filter { c =>
+      tableSchema.find(_.name == c).forall(f => !isTemporal(f.dataType)) ||
+        (fields(s"min_ts__$c") && fields(s"max_ts__$c"))
+    }
+  }
+
+  private def isTemporal(dt: DataType): Boolean = dt match {
+    case TimestampType | DateType => true
+    case _ => false
+  }
+
   /** One-row result computed purely from the manifest: COUNT(*) sums the
     * per-file row counts; MIN/MAX re-aggregate the per-file bounds AFTER
     * casting back to the column's own type (per-file bounds were written
     * as canonical strings; casting first keeps ordering numeric where the
     * column is numeric — a lexicographic min over "9","10" would be
-    * wrong). String round-trips are exact for every stats-covered type
-    * (longs, shortest-repr doubles, canonical timestamps/dates, strings).
+    * wrong). String round-trips are exact for the zone-free covered
+    * types (longs, shortest-repr doubles, strings); TIMESTAMP/DATE
+    * columns read the canonical-epoch cells instead, so the answer does
+    * not depend on the reader's session zone ([[aggregableColumns]]). A
+    * manifest part predating the epoch cells falls back to its string
+    * cell.
     */
   def aggregateFromManifest(spark: SparkSession, tablePath: String,
       specs: Seq[ManifestAgg], tableSchema: StructType): DataFrame = {
     val stats = spark.read.parquet(statsPath(tablePath))
+    def bound(side: String, c: String): Column = {
+      val dt = tableSchema(c).dataType
+      val fromString = col(s"${side}_str__$c").cast(dt)
+      val epoch = col(s"${side}_ts__$c")
+      dt match {
+        case TimestampType => coalesce(timestamp_micros(epoch), fromString)
+        case DateType =>
+          coalesce(date_from_unix_date(epoch.cast("int")), fromString)
+        case _ => fromString
+      }
+    }
     val aggs = specs.zipWithIndex.map {
       case (RowCount, i) =>
         coalesce(sum(col("row_count")), lit(0L)).as(s"agg_$i")
-      case (ColMin(c), i) =>
-        min(col(s"min_str__$c").cast(tableSchema(c).dataType)).as(s"agg_$i")
-      case (ColMax(c), i) =>
-        max(col(s"max_str__$c").cast(tableSchema(c).dataType)).as(s"agg_$i")
+      case (ColMin(c), i) => min(bound("min", c)).as(s"agg_$i")
+      case (ColMax(c), i) => max(bound("max", c)).as(s"agg_$i")
     }
     stats.agg(aggs.head, aggs.tail: _*)
   }
@@ -772,10 +809,7 @@ object TableStats {
       // Time columns compare on the canonical-epoch integer bounds
       // ([[epochExpr]]/[[toEpochCanonical]]) — pure longs on both sides,
       // no rendering to mismatch. Numeric/string columns as before.
-      val temporal = schema(c).dataType match {
-        case TimestampType | DateType => true
-        case _ => false
-      }
+      val temporal = isTemporal(schema(c).dataType)
       val numeric = isNumeric(schema(c).dataType)
       val (loName, hiName) =
         if (temporal) (s"min_ts__$c", s"max_ts__$c")

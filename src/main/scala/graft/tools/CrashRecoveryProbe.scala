@@ -29,11 +29,8 @@ import graft.table.MedallionTable
 object CrashRecoveryProbe {
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.GraftSession.builder(4)
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

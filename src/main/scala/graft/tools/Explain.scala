@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for the named queries (or a
   * default headline set) so pushdown/broadcast/codegen can be inspected —
   * the SURVEY §4 "is this the plan you'd want" loop.
@@ -14,12 +12,9 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("m0_wide_table", "q1_pricing_summary", "j7_geo_nn_assignment",
         "sim_topk_bruteforce", "dedup_exact_hash")
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder(4)
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

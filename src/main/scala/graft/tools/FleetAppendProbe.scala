@@ -3,10 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import graft.table.MedallionTable
 
-/** FOUR-PROCESS concurrent-append throughput probe (round 18): the
-  * AppendConcurrencyProbe's 2× figure is single-JVM — its writers share
-  * one Spark scheduler and one driver, which both caps the measurable
-  * speedup and hides any cross-process listing-consistency surprise.
+/** FOUR-PROCESS concurrent-append throughput probe (round 18): a
+  * single-JVM concurrency figure has its writers share one Spark
+  * scheduler and one driver, which both caps the measurable speedup and
+  * hides any cross-process listing-consistency surprise.
   * Here each writer is a separate JVM with its own local[8] session (the
   * deployment shape: N ingest processes, one table), appending disjoint
   * partitions. Modes: staged (scoped claims) vs `serialAppends` (global
@@ -20,11 +20,8 @@ import graft.table.MedallionTable
 object FleetAppendProbe {
 
   private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.GraftSession.builder(cores)
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times named registered queries under the bench's noop-sink methodology —
   * the per-query feedback loop for plan work without paying a full bench run.
   *
@@ -12,14 +10,9 @@ object TimeQuery {
     require(args.length >= 2, "usage: TimeQuery <sfDir> <query> [query ...]")
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // match graft.Bench's session (round 19)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()

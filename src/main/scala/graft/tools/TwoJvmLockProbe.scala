@@ -24,11 +24,8 @@ import graft.table.MedallionTable
 object TwoJvmLockProbe {
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.GraftSession.builder(8)
       .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -3,25 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (getOrCreate reuses the one
-  * JVM-wide session across suites in the forked test JVM).
-  */
+/** Shared local SparkSession for all suites ([[TestSession]]). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // INT64-micros timestamps, as every engine session (GraftSession):
-      // legacy INT96 chunk stats can never arm the footer-stats path
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = TestSession.get()
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"

@@ -89,6 +89,42 @@ class ManifestAggPushdownSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet == Set(3L))
   }
 
+  test("MIN/MAX of TIMESTAMP and DATE columns do not depend on the " +
+      "reader's session zone; a manifest without epoch cells scans") {
+    val zoneKey = "spark.sql.session.timeZone"
+    val zone0 = spark.conf.get(zoneKey)
+    val p = tmpDir("agg_push_tz")
+    try {
+      spark.conf.set(zoneKey, "UTC")
+      val t = new MedallionTable(spark, p)
+      t.overwrite(Seq((1L, "2024-03-01 10:20:30.123456", "2024-03-01"),
+        (2L, "1969-12-31 23:59:59", "1969-12-31"),
+        (3L, "2030-06-30 00:00:00", "2030-06-30")).toDF("id", "ts", "d")
+        .selectExpr("id", "CAST(ts AS TIMESTAMP) AS ts", "CAST(d AS DATE) AS d")
+        .repartition(2))
+      t.refreshStats() // stats rendered under UTC
+      spark.sql("DROP TABLE IF EXISTS agg_push_tz")
+      spark.sql(s"CREATE TABLE agg_push_tz USING graft LOCATION '$p'")
+      spark.conf.set(zoneKey, "America/Los_Angeles")
+      val q = "SELECT MIN(ts), MAX(ts), MIN(d), MAX(d) FROM agg_push_tz"
+      val scan = t.read.selectExpr("MIN(ts)", "MAX(ts)", "MIN(d)", "MAX(d)")
+        .head()
+      assert(planOf(q).contains("GraftManifestAggRelation"), planOf(q))
+      assert(spark.sql(q).head() == scan)
+      // strip the canonical-epoch cells, as a manifest predating them
+      val stats = new org.apache.hadoop.fs.Path(s"$p/_graft_meta/stats")
+      val old = new org.apache.hadoop.fs.Path(s"$p/_graft_meta/stats_noepoch")
+      val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val df = spark.read.parquet(stats.toString)
+      df.drop(df.columns.filter(_.contains("_ts__")).toSeq: _*)
+        .write.parquet(old.toString)
+      fs.delete(stats, true)
+      assert(fs.rename(old, stats))
+      assert(!planOf(q).contains("GraftManifestAggRelation"), planOf(q))
+      assert(spark.sql(q).head() == scan)
+    } finally spark.conf.set(zoneKey, zone0)
+  }
+
   test("OPTIMIZE leaves the manifest rebuilt — pruning armed right after") {
     val p = mkTable("agg_push_opt", refresh = false)
     spark.sql("OPTIMIZE agg_push_opt")

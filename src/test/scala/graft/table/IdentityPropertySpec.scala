@@ -14,18 +14,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   */
 object IdentityPropertySpec extends Properties("IdentityColumns") {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = graft.TestSession.get()
 
   private sealed trait Op
   private case class Append(k: Int) extends Op

@@ -10,18 +10,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   */
 object MergePropertiesSpec extends Properties("MergeOps") {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = graft.TestSession.get()
 
   private val rowGen = for {
     id <- Gen.choose(0L, 30L)

@@ -353,6 +353,40 @@ class TableStatsSpec extends SparkSpec {
       t1.read.selectExpr("COUNT(*)", "MIN(ts)", "MAX(ts)").head())
   }
 
+  test("timestamp footer stats accept a short session zone id (PST), " +
+      "as spark.sql.session.timeZone does") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    val zoneKey = "spark.sql.session.timeZone"
+    val zone0 = spark.conf.get(zoneKey)
+    spark.conf.set(zoneKey, "PST")
+    try {
+      def drive(p: String, footer: Boolean): Unit = {
+        spark.conf.set("spark.graft.footerStats", footer.toString)
+        try {
+          val t = MedallionTable(spark, p)
+          t.overwrite(Seq((1L, Timestamp.valueOf("2024-03-01 10:20:30.5")))
+            .toDF("id", "ts").coalesce(1))
+          t.refreshStats()
+          t.append(Seq((2L, Timestamp.valueOf("2030-06-30 00:00:00")))
+            .toDF("id", "ts").coalesce(1))
+        } finally spark.conf.unset("spark.graft.footerStats")
+      }
+      val p1 = tmpDir("fstats_pst_on"); val p2 = tmpDir("fstats_pst_off")
+      drive(p1, footer = true)
+      drive(p2, footer = false)
+      assert(TableStats.hasManifest(spark, p1))
+      assert(manifestRows(p1) == manifestRows(p2),
+        s"footer manifest diverges from the job path under PST:\n" +
+          s"footer=${manifestRows(p1)}\njob=${manifestRows(p2)}")
+      val t1 = MedallionTable(spark, p1)
+      val files = t1.read.inputFiles.filter(_.contains("part-")).toSeq
+      assert(TableStats.footerStatsRows(spark, p1, files.take(1),
+        Some(t1.read.schema), Seq("id", "ts")).nonEmpty,
+        "under PST the timestamp batch fell back to the job path")
+    } finally spark.conf.set(zoneKey, zone0)
+  }
+
   test("footer stats engage on clean types, fall back whole-batch on " +
       "doubles and on hive partition columns they can reconstruct") {
     import spark.implicits._
