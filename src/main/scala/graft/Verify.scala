@@ -11,6 +11,18 @@ import java.nio.file.{Files, Paths}
   * without the full catalog run, under the same session and dump rules.
   */
 object Verify {
+  import org.apache.spark.sql.types._
+
+  private def naiveTs(t: DataType): DataType = t match {
+    case TimestampType => TimestampNTZType
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = naiveTs(f.dataType))))
+    case a: ArrayType => a.copy(elementType = naiveTs(a.elementType))
+    case m: MapType =>
+      m.copy(keyType = naiveTs(m.keyType), valueType = naiveTs(m.valueType))
+    case o => o
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [query ...]")
     val sfDir = args(0)
@@ -50,18 +62,19 @@ object Verify {
           // under the session's INT64-micros timestamp output, exactly as
           // Bench executes it...
           val frame = fn(spark, sfDir)
-          // ...but the RESULT DUMP keeps the legacy INT96 encoding:
-          // DuckDB reads Spark's INT64 instant timestamps (annotated
-          // isAdjustedToUTC=true) as TIMESTAMP WITH TIME ZONE, which the
-          // oracle's naive-TIMESTAMP compare mis-flags on every ts column
-          // (measured: 17 spurious FAILs). Queries run sequentially on
-          // this one worker, so the scoped flip cannot leak into another
-          // query's internal writes.
-          val k = "spark.sql.parquet.outputTimestampType"
-          spark.conf.set(k, "INT96")
-          try frame.coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          finally spark.conf.set(k, "TIMESTAMP_MICROS")
+          // ...but the RESULT DUMP re-types every TIMESTAMP, nested ones
+          // included, as TIMESTAMP_NTZ (wall clock in the UTC session
+          // zone): DuckDB reads Spark's instant timestamps as TIMESTAMP
+          // WITH TIME ZONE, which the oracle's naive-TIMESTAMP compare
+          // mis-flags on every ts column (measured: 17 spurious FAILs),
+          // and NTZ ones as naive TIMESTAMP. Re-typing the dump instead
+          // of flipping the session's outputTimestampType keeps a query
+          // that outlives its timeout from writing under the flip.
+          frame.select(frame.schema.fields.toIndexedSeq.map(f =>
+            org.apache.spark.sql.functions.col(
+              "`" + f.name.replace("`", "``") + "`")
+              .cast(naiveTs(f.dataType)).as(f.name)): _*)
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } finally spark.sparkContext.clearJobGroup()
       }
       try Await.result(work, timeout.seconds)

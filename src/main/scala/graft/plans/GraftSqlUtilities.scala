@@ -528,15 +528,16 @@ final case class GraftDescribeDetailCommand(target: String)
     }
     val snapshots = mt.reconstructibleOrdinals
       .filterNot(_ == mt.commitVersion)
+    val m = mt.meta
     Seq(Row("graft/parquet", path, nFiles, bytes,
       partCols(root, Nil).mkString(","), mt.commitVersion,
       snapshots.size.toLong,
-      mt.checkConstraints.keys.toSeq.sorted.mkString(","),
-      mt.generatedColumns.keys.toSeq.sorted.mkString(","),
-      mt.notNullColumns.toSeq.sorted.mkString(","),
-      mt.identityColumns.keys.toSeq.sorted.mkString(","),
-      mt.rowTrackingEnabled,
-      mt.columnDefaults.toSeq.sortBy(_._1)
+      m.checks.keys.toSeq.sorted.mkString(","),
+      m.generated.keys.toSeq.sorted.mkString(","),
+      m.notNull.toSeq.sorted.mkString(","),
+      m.identity.keys.toSeq.sorted.mkString(","),
+      m.rowTracking,
+      m.defaults.toSeq.sortBy(_._1)
         .map { case (n, (_, e)) => s"$n=$e" }.mkString(","),
       mt.widenedColumns.toSeq.sortBy(_._1)
         .map { case (n, t) => s"$n:${t.sql}" }.mkString(","),

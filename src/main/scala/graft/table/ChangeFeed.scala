@@ -52,8 +52,8 @@ import org.apache.spark.sql.functions._
   *    row from an untouched one, so this surface is the coarser but
   *    still exactly-consistent delete+insert form.)
   *  - maintenance (OPTIMIZE*, DV compaction) and metadata DDL
-  *    (ADD/DROP/RENAME COLUMN, convert): `dataChange = false` — no rows,
-  *    matching Delta.
+  *    (ADD/DROP/RENAME COLUMN, column declarations, convert):
+  *    `dataChange = false` — no rows, matching Delta.
   *
   * Manifests are written as the LAST action inside the claimed commit
   * (temp + rename, so readers never see a partial one). A crash between
@@ -106,7 +106,9 @@ object ChangeFeed {
   /** Ops that change no logical rows: safe to skip with no manifest. */
   private val NoChangeOps: Set[String] = Set(
     "convert", "add-column", "drop-column", "rename-column", "set-cdf",
-    "widen-column", "set-default", "drop-default",
+    "widen-column", "set-default", "drop-default", "add-constraint",
+    "drop-constraint", "set-not-null", "drop-not-null", "set-generated",
+    "drop-generated", "set-identity", "drop-identity",
     "optimize", "optimize-where", "optimize-zorder", "cluster-incremental",
     "reorg-purge",
     "dv-compact", "dv-batch-compact", "analyze", "sync-delta-log",

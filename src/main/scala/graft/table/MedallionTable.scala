@@ -1019,53 +1019,31 @@ final class MedallionTable(
       } catch { case _: java.io.IOException => None }
     }
 
-  // ---- CHECK constraints (Delta-style quality gates) --------------------
+  // ---- column declarations (one TableMeta record) -----------------------
 
-  private def constraintsFile = new Path(path, "_graft_meta/constraints.tsv")
+  /** The table's column declarations ([[TableMeta]]): absent file = none. */
+  def meta: TableMeta = {
+    val f = TableMeta.file(path)
+    try TableMeta.decode(readMetaText(f), f.toString)
+    catch { case _: java.io.FileNotFoundException => TableMeta.Empty }
+  }
+
+  private def persistMeta(m: TableMeta, base: String = path): Unit = {
+    val f = TableMeta.file(base)
+    if (m.isEmpty) fs.delete(f, false) else writeMetaText(f, m.encode)
+  }
+
+  /** Changes the declarations as one claimed commit recorded as `op`.
+    * `f` sees the record as of the claim and runs its validation scans
+    * there, so no writer lands between a check and the persist; a
+    * rewrite staged across it fails its CAS instead of swapping in the
+    * record it read earlier.
+    */
+  private def updateMeta(op: String)(f: TableMeta => TableMeta): Unit =
+    withClaimedCommit(op) { persistMeta(f(meta)) }
 
   /** Registered CHECK constraints: name → SQL boolean expression. */
-  def checkConstraints: Map[String, String] =
-    if (!fs.exists(constraintsFile)) Map.empty
-    else readMetaText(constraintsFile).split('\n').filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('\t')
-      if (i < 0) throw new IllegalStateException(
-        s"constraint registry corrupt at $constraintsFile: line without tab")
-      line.substring(0, i) -> line.substring(i + 1)
-    }.toMap
-
-  private def persistConstraints(cs: Map[String, String],
-      base: Path = new Path(path)): Unit = {
-    val file = new Path(base, "_graft_meta/constraints.tsv")
-    if (cs.isEmpty) { if (fs.exists(file)) fs.delete(file, false) }
-    else writeMetaText(file,
-      cs.map { case (n, e) => s"$n\t$e" }.mkString("\n"))
-  }
-
-  /** Adds a CHECK constraint after validating the EXISTING data satisfies
-    * it (Delta `ALTER TABLE ADD CONSTRAINT` semantics — one scan; SQL
-    * CHECK semantics: only FALSE violates, NULL passes). Every subsequent
-    * write path enforces it on the incoming rows in-pass. Constraint
-    * names must not contain tab/newline; expressions must not contain
-    * newline (the tsv layout).
-    */
-  def addCheckConstraint(name: String, sqlExpr: String): Unit = {
-    require(!name.exists(c => c == '\t' || c == '\n') && !sqlExpr.contains('\n'),
-      "constraint name/expression must be tab/newline-free")
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    if (exists) {
-      val bad = read.filter(not(coalesce(expr(sqlExpr), lit(true)))).limit(1).count()
-      require(bad == 0,
-        s"cannot add CHECK constraint $name: existing rows violate ($sqlExpr)")
-    }
-    persistConstraints(checkConstraints + (name -> sqlExpr))
-  }
-
-  def dropCheckConstraint(name: String): Unit =
-    persistConstraints(checkConstraints - name)
-
-  // ---- NOT NULL constraints (ALTER COLUMN … SET/DROP NOT NULL) ----------
-
-  private def notNullFile = new Path(path, "_graft_meta/notnull.tsv")
+  def checkConstraints: Map[String, String] = meta.checks
 
   /** Columns under a NOT NULL constraint (Delta's `ALTER COLUMN … SET
     * NOT NULL`). Enforced on every write pass through the same
@@ -1073,16 +1051,80 @@ final class MedallionTable(
     * a batch that OMITS the column entirely (it would read back as NULL,
     * so it violates; Delta's nullable=false contract).
     */
-  def notNullColumns: Set[String] =
-    if (!fs.exists(notNullFile)) Set.empty
-    else readMetaText(notNullFile).split('\n').filter(_.nonEmpty).toSet
+  def notNullColumns: Set[String] = meta.notNull
 
-  private def persistNotNull(ns: Set[String],
-      base: Path = new Path(path)): Unit = {
-    val file = new Path(base, "_graft_meta/notnull.tsv")
-    if (ns.isEmpty) { if (fs.exists(file)) fs.delete(file, false) }
-    else writeMetaText(file, ns.toSeq.sorted.mkString("\n"))
+  /** Registered column defaults: name → (column type DDL at declare
+    * time, SQL expression). A batch that OMITS the column gets the
+    * default evaluated at write time; a provided column — including
+    * explicit NULLs — is never touched, and existing rows never change
+    * (Delta's `ALTER COLUMN … SET DEFAULT` contract: future inserts
+    * only). Scope: the insert-class writes (append/COPY INTO/create/
+    * overwrite) fill omitted columns, and MERGE INSERT clauses fill
+    * columns no clause assigns ([[TableMeta.defaultColumns]]) — Delta's
+    * allowColumnDefaults surface, complete.
+    */
+  def columnDefaults: Map[String, (String, String)] = meta.defaults
+
+  /** Registered generated columns: name → SQL expression. On every write
+    * path, a missing generated column is COMPUTED from its expression
+    * in-pass, and a provided one is VALIDATED to null-safe-equal it
+    * (riding the same [[graft.functions.CheckInvariant]] as CHECK
+    * constraints — no extra scan either way). The canonical use is a
+    * derived partition key: `o_year = year(o_orderdate)` with
+    * `partitionColumns = Seq("o_year")` gives hive partition pruning on
+    * a column no writer has to remember to supply — Delta's generated-
+    * column partitioning (the reference partitions every table on such a
+    * derived batch key, `bronze_table_creation.py:26`).
+    */
+  def generatedColumns: Map[String, String] = meta.generated
+
+  /** Registered identity columns: name → (start, step). On the
+    * append/create paths a registered column must be ABSENT from the
+    * incoming frame (GENERATED ALWAYS — a provided value refuses) and is
+    * assigned `highWater + step, …` densely; merge-inserted rows arrive
+    * with a NULL identity (the insert clause may not assign it) and are
+    * filled the same way. Values are BIGINT, monotonic per column,
+    * collision-free across concurrent writers (allocation is serialized
+    * by a create-exclusive lock in the commits sidecar), and may have
+    * GAPS after a crashed write — the high-water advances before the
+    * rows land, Delta identity's exact contract.
+    */
+  def identityColumns: Map[String, (Long, Long)] = meta.identity
+
+  /** Whether [[enableRowTracking]] is in force. */
+  def rowTrackingEnabled: Boolean = meta.rowTracking
+
+  // ---- CHECK constraints (Delta-style quality gates) --------------------
+
+  /** Adds a CHECK constraint after validating the EXISTING data satisfies
+    * it (Delta `ALTER TABLE ADD CONSTRAINT` semantics — one scan; SQL
+    * CHECK semantics: only FALSE violates, NULL passes). Every subsequent
+    * write path enforces it on the incoming rows in-pass. Constraint
+    * names must not contain tab/newline; expressions must not contain
+    * newline (the record's line layout).
+    */
+  def addCheckConstraint(name: String, sqlExpr: String): Unit = {
+    require(!name.exists(c => c == '\t' || c == '\n') && !sqlExpr.contains('\n'),
+      "constraint name/expression must be tab/newline-free")
+    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+    updateMeta("add-constraint") { m =>
+      if (exists) {
+        val bad = read.filter(not(coalesce(expr(sqlExpr), lit(true)))).limit(1).count()
+        require(bad == 0,
+          s"cannot add CHECK constraint $name: existing rows violate ($sqlExpr)")
+      }
+      m.copy(checks = m.checks + (name -> sqlExpr))
+    }
   }
+
+  /** Drops a CHECK constraint; dropping an unregistered one claims no
+    * commit (as for every declaration drop below).
+    */
+  def dropCheckConstraint(name: String): Unit =
+    if (checkConstraints.contains(name))
+      updateMeta("drop-constraint")(m => m.copy(checks = m.checks - name))
+
+  // ---- NOT NULL constraints (ALTER COLUMN … SET/DROP NOT NULL) ----------
 
   /** `ALTER TABLE … ALTER COLUMN name SET NOT NULL`: validates the
     * EXISTING rows first (one short-circuiting scan, like
@@ -1093,65 +1135,29 @@ final class MedallionTable(
   def setNotNull(name: String): Unit = {
     require(!name.exists(c => c == '\t' || c == '\n'),
       "column name must be tab/newline-free")
-    if (exists) {
-      val schema = read.schema
-      require(schema.fieldNames.contains(name),
-        s"SET NOT NULL: column '$name' not in " +
-          schema.fieldNames.mkString("[", ",", "]"))
-      val bad = read.filter(
-        org.apache.spark.sql.functions.col(
-          "`" + name.replace("`", "``") + "`").isNull).limit(1).count()
-      require(bad == 0,
-        s"cannot SET NOT NULL on $name: existing rows carry NULLs — " +
-          "backfill them first (e.g. UPDATE … SET with a default)")
+    updateMeta("set-not-null") { m =>
+      if (exists) {
+        val schema = read.schema
+        require(schema.fieldNames.contains(name),
+          s"SET NOT NULL: column '$name' not in " +
+            schema.fieldNames.mkString("[", ",", "]"))
+        val bad = read.filter(
+          org.apache.spark.sql.functions.col(
+            "`" + name.replace("`", "``") + "`").isNull).limit(1).count()
+        require(bad == 0,
+          s"cannot SET NOT NULL on $name: existing rows carry NULLs — " +
+            "backfill them first (e.g. UPDATE … SET with a default)")
+      }
+      m.copy(notNull = m.notNull + name)
     }
-    persistNotNull(notNullColumns + name)
   }
 
   /** `ALTER COLUMN name DROP NOT NULL` — re-opens the column. */
   def dropNotNull(name: String): Unit =
-    persistNotNull(notNullColumns - name)
-
-  /** Synthetic write-pass invariants for the registered NOT NULL columns
-    * — fed into [[enforced]] alongside the CHECKs (never persisted into
-    * constraints.tsv). `IS NOT NULL` is FALSE exactly on a NULL, so SQL
-    * CHECK semantics enforce it; a column the batch lacks is widened to
-    * NULL by enforceChecks and violates, as it must.
-    */
-  private def notNullInvariants(ns: Set[String] = notNullColumns)
-      : Map[String, String] =
-    ns.map(c =>
-      s"__notnull_$c" -> s"`${c.replace("`", "``")}` IS NOT NULL").toMap
+    if (notNullColumns.contains(name))
+      updateMeta("drop-not-null")(m => m.copy(notNull = m.notNull - name))
 
   // ---- column defaults (Delta allowColumnDefaults parity) ----------------
-
-  private def defaultsFile = new Path(path, "_graft_meta/defaults.tsv")
-
-  /** Registered column defaults: name → (column type DDL at declare
-    * time, SQL expression). A batch that OMITS the column gets the
-    * default evaluated at write time; a provided column — including
-    * explicit NULLs — is never touched, and existing rows never change
-    * (Delta's `ALTER COLUMN … SET DEFAULT` contract: future inserts
-    * only). Scope: the insert-class writes (append/COPY INTO/create/
-    * overwrite) fill omitted columns, and MERGE INSERT clauses fill
-    * columns no clause assigns ([[insertDefaultColumns]]) — Delta's
-    * allowColumnDefaults surface, complete.
-    */
-  def columnDefaults: Map[String, (String, String)] =
-    if (!fs.exists(defaultsFile)) Map.empty
-    else readMetaText(defaultsFile).split('\n').filter(_.contains('\t'))
-      .map { l =>
-        val parts = l.split('\t')
-        parts(0) -> (parts(1), parts(2))
-      }.toMap
-
-  private def persistDefaults(ds: Map[String, (String, String)],
-      base: Path = new Path(path)): Unit = {
-    val file = new Path(base, "_graft_meta/defaults.tsv")
-    if (ds.isEmpty) { if (fs.exists(file)) fs.delete(file, false) }
-    else writeMetaText(file, ds.toSeq.sortBy(_._1)
-      .map { case (n, (t, e)) => s"$n\t$t\t$e" }.mkString("\n"))
-  }
 
   /** `ALTER TABLE … ALTER COLUMN name SET DEFAULT <expr>`: the
     * expression must be constant-foldable (no column references —
@@ -1167,110 +1173,52 @@ final class MedallionTable(
       "column name and default expression must be tab/newline-free")
     require(exists, s"SET DEFAULT: no table at $path yet — defaults " +
       "attach to an existing column (create the table first)")
-    val schema = read.schema
-    require(schema.fieldNames.contains(name),
-      s"SET DEFAULT: column '$name' not in " +
-        schema.fieldNames.mkString("[", ",", "]"))
-    require(!identityColumns.keys.exists(_.equalsIgnoreCase(name)),
-      s"SET DEFAULT: '$name' is GENERATED ALWAYS AS IDENTITY — " +
-        "engine-assigned; a default cannot apply")
-    require(!generatedColumns.keys.exists(_.equalsIgnoreCase(name)),
-      s"SET DEFAULT: '$name' is a generated column — computed from its " +
-        "expression; a default cannot apply")
-    val refs = spark.sessionState.sqlParser.parseExpression(exprSql).collect {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        a.name
-    }
-    require(refs.isEmpty,
-      s"SET DEFAULT: expression references column(s) ${refs.mkString(", ")}" +
-        " — defaults must be constant-foldable (literals and " +
-        "deterministic-free functions only), Delta's rule")
-    val dt = schema(name).dataType
-    // evaluability + castability probe: one local row, fails loudly now
-    spark.range(1).select(
-      org.apache.spark.sql.functions.expr(exprSql).cast(dt)).head()
-    // Claimed commit (alterColumnType's pattern): a bare registry write
-    // races concurrent rewrites — rewriteVia snapshots columnDefaults
-    // up front and re-persists that snapshot into its swap, so a default
-    // set in between would be silently discarded. Under the claim, the
-    // rewrite either sees the new registry at its snapshot or aborts at
-    // its CAS/re-check; the registry re-read inside the block picks up
-    // any default DDL that committed while this one waited on the lock.
-    withClaimedCommit("set-default") {
-      persistDefaults(columnDefaults + (name -> (dt.sql, exprSql)))
+    updateMeta("set-default") { m =>
+      val schema = read.schema
+      require(schema.fieldNames.contains(name),
+        s"SET DEFAULT: column '$name' not in " +
+          schema.fieldNames.mkString("[", ",", "]"))
+      require(!m.isIdentity(name),
+        s"SET DEFAULT: '$name' is GENERATED ALWAYS AS IDENTITY — " +
+          "engine-assigned; a default cannot apply")
+      require(!m.isGenerated(name),
+        s"SET DEFAULT: '$name' is a generated column — computed from its " +
+          "expression; a default cannot apply")
+      val refs = spark.sessionState.sqlParser.parseExpression(exprSql).collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          a.name
+      }
+      require(refs.isEmpty,
+        s"SET DEFAULT: expression references column(s) ${refs.mkString(", ")}" +
+          " — defaults must be constant-foldable (literals and " +
+          "deterministic-free functions only), Delta's rule")
+      val dt = schema(name).dataType
+      // evaluability + castability probe: one local row, fails loudly now
+      spark.range(1).select(
+        org.apache.spark.sql.functions.expr(exprSql).cast(dt)).head()
+      m.copy(defaults = m.defaults + (name -> ((dt.sql, exprSql))))
     }
   }
 
   /** `ALTER COLUMN name DROP DEFAULT` — omitted columns read back as
     * NULL again (rows already written with the default keep it).
-    * Claimed commit for the same rewrite-serialization reason as
-    * [[setColumnDefault]]; a drop of an unregistered default is a pure
-    * no-op (no commit claimed).
     */
   def dropColumnDefault(name: String): Unit =
-    if (columnDefaults.contains(name)) withClaimedCommit("drop-default") {
-      persistDefaults(columnDefaults - name)
-    }
-
-  /** The registry as MERGE insert-clause fills ([[MergeOps.mergeClauses]]
-    * / [[MergeOps.mergeVectoredPlan]] `insertDefaults`): a column no
-    * INSERT clause assigns takes its default, exactly Delta's
-    * allowColumnDefaults MERGE behavior.
-    */
-  private def insertDefaultColumns(): Map[String, org.apache.spark.sql.Column] =
-    columnDefaults.map { case (n, (tddl, e)) =>
-      n -> org.apache.spark.sql.functions.expr(e)
-        .cast(org.apache.spark.sql.types.DataType.fromDDL(tddl))
-    }
+    if (columnDefaults.contains(name))
+      updateMeta("drop-default")(m => m.copy(defaults = m.defaults - name))
 
   /** Insert-class write-pass fill: a registered default column the batch
-    * OMITS is computed in-pass (cast to the column type recorded at
-    * declare time — widening later only upcasts further). Provided
-    * columns, explicit NULLs included, pass through untouched.
+    * OMITS is computed in-pass. Provided columns, explicit NULLs
+    * included, pass through untouched.
     */
-  private def applyDefaults(df: DataFrame,
-      ds: Map[String, (String, String)] = columnDefaults): DataFrame =
-    if (ds.isEmpty) df
-    else {
-      val present = df.columns.map(_.toLowerCase).toSet
-      ds.foldLeft(df) { case (d, (n, (tddl, e))) =>
-        if (present.contains(n.toLowerCase)) d
-        else d.withColumn(n, org.apache.spark.sql.functions.expr(e)
-          .cast(org.apache.spark.sql.types.DataType.fromDDL(tddl)))
-      }
+  private def applyDefaults(df: DataFrame, m: TableMeta): DataFrame = {
+    val present = df.columns.map(_.toLowerCase).toSet
+    m.defaultColumns.foldLeft(df) { case (d, (n, c)) =>
+      if (present.contains(n.toLowerCase)) d else d.withColumn(n, c)
     }
+  }
 
   // ---- generated columns (Delta GENERATED ALWAYS AS parity) --------------
-
-  private def generatedFile = new Path(path, "_graft_meta/generated.tsv")
-
-  /** Registered generated columns: name → SQL expression. On every write
-    * path, a missing generated column is COMPUTED from its expression
-    * in-pass, and a provided one is VALIDATED to null-safe-equal it
-    * (riding the same [[graft.functions.CheckInvariant]] as CHECK
-    * constraints — no extra scan either way). The canonical use is a
-    * derived partition key: `o_year = year(o_orderdate)` with
-    * `partitionColumns = Seq("o_year")` gives hive partition pruning on
-    * a column no writer has to remember to supply — Delta's generated-
-    * column partitioning (the reference partitions every table on such a
-    * derived batch key, `bronze_table_creation.py:26`).
-    */
-  def generatedColumns: Map[String, String] =
-    if (!fs.exists(generatedFile)) Map.empty
-    else readMetaText(generatedFile).split('\n').filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('\t')
-      if (i < 0) throw new IllegalStateException(
-        s"generated-column registry corrupt at $generatedFile")
-      line.substring(0, i) -> line.substring(i + 1)
-    }.toMap
-
-  private def persistGenerated(gs: Map[String, String],
-      base: Path = new Path(path)): Unit = {
-    val file = new Path(base, "_graft_meta/generated.tsv")
-    if (gs.isEmpty) { if (fs.exists(file)) fs.delete(file, false) }
-    else writeMetaText(file,
-      gs.map { case (n, e) => s"$n\t$e" }.mkString("\n"))
-  }
 
   /** Declare `name` as GENERATED ALWAYS AS (`exprSql`). Delta defines
     * generated columns at table creation; the equivalent here is
@@ -1283,96 +1231,66 @@ final class MedallionTable(
   def setGeneratedColumn(name: String, exprSql: String): Unit = {
     require(!name.exists(c => c == '\t' || c == '\n') && !exprSql.contains('\n'),
       "generated column name/expression must be tab/newline-free")
-    // converse of setIdentityColumn's guard: one column cannot be both
-    // engine-assigned (IDENTITY) and expression-generated
-    require(!identityColumns.keys.exists(_.equalsIgnoreCase(name)),
-      s"$name is GENERATED ALWAYS AS IDENTITY — dropIdentityColumn() " +
-        "first to declare it as an expression-generated column")
-    // converse of setColumnDefault's guard: a default would fill an
-    // omitted generated column BEFORE the generation invariant runs and
-    // every such batch would then refuse on the mismatch
-    require(!columnDefaults.keys.exists(_.equalsIgnoreCase(name)),
-      s"$name has a column DEFAULT — dropColumnDefault() first " +
-        "(a generated column is computed, not defaulted)")
-    // Delta's rule: a generation expression may not reference another
-    // generated column (or itself). Without this, [[enforced]]'s fold
-    // over the registry Map would resolve chained generations
-    // nondeterministically by hash iteration order.
-    val referenced = spark.sessionState.sqlParser.parseExpression(exprSql)
-      .collect {
+    def refsOf(e: String): Set[String] =
+      spark.sessionState.sqlParser.parseExpression(e).collect {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
           a.name
       }.map(_.toLowerCase).toSet
-    val genNames = generatedColumns.keys.map(_.toLowerCase).toSet + name.toLowerCase
-    val chained = referenced.intersect(genNames)
-    require(chained.isEmpty,
-      s"cannot declare generated column $name: its expression references " +
-        s"generated column(s) ${chained.toSeq.sorted.mkString(", ")} — " +
-        "generation expressions may reference only non-generated columns " +
-        "(inline the referenced expression instead)")
-    // the converse chain: an EXISTING generation expression referencing
-    // the column being declared would become a chain the moment this
-    // declaration lands
-    generatedColumns.foreach { case (n, e) =>
-      val refs = spark.sessionState.sqlParser.parseExpression(e).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.name
-      }.map(_.toLowerCase).toSet
-      require(!refs.contains(name.toLowerCase),
-        s"cannot declare generated column $name: existing generated " +
-          s"column $n references it — drop $n first or inline")
+    updateMeta("set-generated") { m =>
+      // converse of setIdentityColumn's guard: one column cannot be both
+      // engine-assigned (IDENTITY) and expression-generated
+      require(!m.isIdentity(name),
+        s"$name is GENERATED ALWAYS AS IDENTITY — dropIdentityColumn() " +
+          "first to declare it as an expression-generated column")
+      // converse of setColumnDefault's guard: a default would fill an
+      // omitted generated column BEFORE the generation invariant runs and
+      // every such batch would then refuse on the mismatch
+      require(!m.defaults.keys.exists(_.equalsIgnoreCase(name)),
+        s"$name has a column DEFAULT — dropColumnDefault() first " +
+          "(a generated column is computed, not defaulted)")
+      // Delta's rule: a generation expression may not reference another
+      // generated column (or itself). Without this, [[enforced]]'s fold
+      // over the record's Map would resolve chained generations
+      // nondeterministically by hash iteration order.
+      val genNames = m.generated.keys.map(_.toLowerCase).toSet + name.toLowerCase
+      val chained = refsOf(exprSql).intersect(genNames)
+      require(chained.isEmpty,
+        s"cannot declare generated column $name: its expression references " +
+          s"generated column(s) ${chained.toSeq.sorted.mkString(", ")} — " +
+          "generation expressions may reference only non-generated columns " +
+          "(inline the referenced expression instead)")
+      // the converse chain: an EXISTING generation expression referencing
+      // the column being declared would become a chain the moment this
+      // declaration lands
+      m.generated.foreach { case (n, e) =>
+        require(!refsOf(e).contains(name.toLowerCase),
+          s"cannot declare generated column $name: existing generated " +
+            s"column $n references it — drop $n first or inline")
+      }
+      import org.apache.spark.sql.functions.{col, expr, not}
+      if (exists && !read.isEmpty) {
+        val d = read
+        require(d.columns.exists(_.equalsIgnoreCase(name)),
+          s"cannot declare generated column $name on a non-empty table " +
+            s"that lacks it — backfill first (e.g. updateVectored), " +
+            "then declare")
+        val bad = d.filter(not(col(name) <=> expr(exprSql))).limit(1).count()
+        require(bad == 0,
+          s"cannot declare generated column $name: existing rows violate " +
+            s"$name <=> ($exprSql)")
+      }
+      m.copy(generated = m.generated + (name -> exprSql))
     }
-    import org.apache.spark.sql.functions.{col, expr, lit, not}
-    if (exists && !read.isEmpty) {
-      val d = read
-      require(d.columns.exists(_.equalsIgnoreCase(name)),
-        s"cannot declare generated column $name on a non-empty table " +
-          s"that lacks it — backfill first (e.g. updateVectored), " +
-          "then declare")
-      val bad = d.filter(not(col(name) <=> expr(exprSql))).limit(1).count()
-      require(bad == 0,
-        s"cannot declare generated column $name: existing rows violate " +
-          s"$name <=> ($exprSql)")
-    }
-    persistGenerated(generatedColumns + (name -> exprSql))
   }
 
   def dropGeneratedColumn(name: String): Unit =
-    persistGenerated(generatedColumns - name)
+    if (generatedColumns.contains(name))
+      updateMeta("drop-generated")(m => m.copy(generated = m.generated - name))
 
   // ---- identity columns (Delta GENERATED ALWAYS AS IDENTITY parity) ------
 
-  private def identityFile = new Path(path, "_graft_meta/identity.tsv")
   private def identityHwFile = new Path(commitsDir, "identity_hw")
   private[table] def identityLockFile = new Path(commitsDir, "identity.lock")
-
-  /** Registered identity columns: name → (start, step). On the
-    * append/create paths a registered column must be ABSENT from the
-    * incoming frame (GENERATED ALWAYS — a provided value refuses) and is
-    * assigned `highWater + step, …` densely; merge-inserted rows arrive
-    * with a NULL identity (the insert clause may not assign it) and are
-    * filled the same way. Values are BIGINT, monotonic per column,
-    * collision-free across concurrent writers (allocation is serialized
-    * by a create-exclusive lock in the commits sidecar), and may have
-    * GAPS after a crashed write — the high-water advances before the
-    * rows land, Delta identity's exact contract.
-    */
-  def identityColumns: Map[String, (Long, Long)] =
-    if (!fs.exists(identityFile)) Map.empty
-    else readMetaText(identityFile).split('\n').filter(_.nonEmpty).map { line =>
-      val p = line.split('\t')
-      if (p.length != 3) throw new IllegalStateException(
-        s"identity registry corrupt at $identityFile")
-      p(0) -> ((p(1).toLong, p(2).toLong))
-    }.toMap
-
-  private def persistIdentityCols(m: Map[String, (Long, Long)],
-      base: Path = new Path(path)): Unit = {
-    val file = new Path(base, "_graft_meta/identity.tsv")
-    if (m.isEmpty) { if (fs.exists(file)) fs.delete(file, false) }
-    else writeMetaText(file,
-      m.map { case (n, (st, sp)) => s"$n\t$st\t$sp" }.mkString("\n"))
-  }
 
   /** Declare `name` GENERATED ALWAYS AS IDENTITY (START WITH `start`
     * STEP `step`). On a table with data the column must already exist as
@@ -1385,28 +1303,29 @@ final class MedallionTable(
     require(step != 0L, "identity step must be nonzero")
     require(!name.exists(c => c == '\t' || c == '\n'),
       "identity column name must be tab/newline-free")
-    require(!generatedColumns.keys.exists(_.equalsIgnoreCase(name)),
-      s"$name is already a generated column")
-    if (exists && !read.isEmpty) {
-      val schema = read.schema
-      val actual = schema.fieldNames.find(_.equalsIgnoreCase(name))
-        .getOrElse(throw new IllegalArgumentException(
-          s"cannot declare identity column $name on a non-empty table " +
-            "that lacks it — backfill first, then declare"))
-      require(schema(actual).dataType ==
-        org.apache.spark.sql.types.LongType,
-        s"identity columns are BIGINT; $actual is ${schema(actual).dataType}")
-      // NULLs would break the NULL⟺merge-insert induction: the next
-      // data-preserving rewrite (compact/delete) would silently assign
-      // them fresh ids through fillIdentityNulls
-      val nNull = read.filter(
-        org.apache.spark.sql.functions.col(actual).isNull).limit(1).count()
-      require(nNull == 0L,
-        s"cannot declare identity column $actual: existing rows carry " +
-          "NULLs — backfill them first")
+    updateMeta("set-identity") { m =>
+      require(!m.isGenerated(name), s"$name is already a generated column")
+      if (exists && !read.isEmpty) {
+        val schema = read.schema
+        val actual = schema.fieldNames.find(_.equalsIgnoreCase(name))
+          .getOrElse(throw new IllegalArgumentException(
+            s"cannot declare identity column $name on a non-empty table " +
+              "that lacks it — backfill first, then declare"))
+        require(schema(actual).dataType ==
+          org.apache.spark.sql.types.LongType,
+          s"identity columns are BIGINT; $actual is ${schema(actual).dataType}")
+        // NULLs would break the NULL⟺merge-insert induction: the next
+        // data-preserving rewrite (compact/delete) would silently assign
+        // them fresh ids through fillIdentityNulls
+        val nNull = read.filter(
+          org.apache.spark.sql.functions.col(actual).isNull).limit(1).count()
+        require(nNull == 0L,
+          s"cannot declare identity column $actual: existing rows carry " +
+            "NULLs — backfill them first")
+        syncIdentityHw(name, start, step)
+      }
+      m.copy(identity = m.identity + (name -> ((start, step))))
     }
-    persistIdentityCols(identityColumns + (name -> ((start, step))))
-    if (exists && !read.isEmpty) syncIdentityHw(name)
   }
 
   /** Row tracking — Delta's row IDs: a stable BIGINT `_row_id` assigned
@@ -1419,45 +1338,36 @@ final class MedallionTable(
     * may not supply or SET it, and the NULL⟺inserted induction fills
     * merge inserts. On a table with data, enablement BACKFILLS in one
     * rewrite (ids 1..n); on an empty/unborn table ids start at first
-    * write. A failed backfill rolls the registration back — the registry
+    * write. A failed backfill rolls the registration back — the record
     * never points at rows without ids.
     */
   def enableRowTracking(): Unit = {
     val col = MedallionTable.RowIdCol
-    require(!identityColumns.keys.exists(_.equalsIgnoreCase(col)),
-      s"row tracking is already enabled on $path")
+    require(!rowTrackingEnabled, s"row tracking is already enabled on $path")
     if (!exists || read.isEmpty) setIdentityColumn(col)
     else {
       require(!read.columns.exists(_.equalsIgnoreCase(col)),
         s"cannot enable row tracking: $path already has a $col column " +
           "not managed by the engine — rename or drop it first")
-      persistIdentityCols(identityColumns + (col -> ((1L, 1L))))
+      updateMeta("set-identity")(m =>
+        m.copy(identity = m.identity + (col -> ((1L, 1L)))))
       try
-        rewriteVia(read.withColumn(col,
+        rewriteVia(_ => read.withColumn(col,
           org.apache.spark.sql.functions.lit(null).cast("long")),
           op = "enable-row-tracking")
       catch { case t: Throwable => dropIdentityColumn(col); throw t }
     }
   }
 
-  /** Whether [[enableRowTracking]] is in force. */
-  def rowTrackingEnabled: Boolean =
-    identityColumns.keys.exists(_.equalsIgnoreCase(MedallionTable.RowIdCol))
-
-  def dropIdentityColumn(name: String): Unit = {
-    persistIdentityCols(identityColumns - name)
-    // drop the high-water entry too: a later re-declare must honor its
-    // own START WITH (or re-sync from data), not continue from a stale
-    // counter that may describe a table that no longer exists
-    withIdentityLock {
-      val hw = readIdentityHw() - name
-      if (fs.exists(identityHwFile)) {
-        if (hw.isEmpty) fs.delete(identityHwFile, false)
-        else writeMetaText(identityHwFile,
-          hw.map { case (k, v) => s"$k\t$v" }.mkString("\n"))
+  def dropIdentityColumn(name: String): Unit =
+    if (identityColumns.contains(name))
+      updateMeta("drop-identity") { m =>
+        // drop the high-water entry too: a later re-declare must honor its
+        // own START WITH (or re-sync from data), not continue from a stale
+        // counter that may describe a table that no longer exists
+        withIdentityLock { writeIdentityHw(readIdentityHw() - name) }
+        m.copy(identity = m.identity - name)
       }
-    }
-  }
 
   private def readIdentityHw(): Map[String, Long] =
     if (!fs.exists(identityHwFile)) Map.empty
@@ -1465,6 +1375,11 @@ final class MedallionTable(
       val i = l.indexOf('\t')
       l.substring(0, i) -> l.substring(i + 1).trim.toLong
     }.toMap
+
+  private def writeIdentityHw(hw: Map[String, Long]): Unit =
+    if (hw.isEmpty) fs.delete(identityHwFile, false)
+    else writeMetaText(identityHwFile,
+      hw.toSeq.sorted.map { case (k, v) => s"$k\t$v" }.mkString("\n"))
 
   /** Serialize identity allocation: appends hold the writer lock but
     * rewrites do not, so allocation gets its own create-exclusive lock
@@ -1507,26 +1422,22 @@ final class MedallionTable(
     }
   }
 
-  private def syncIdentityHw(name: String): Unit = withIdentityLock {
-    val (start, step) = identityColumns(name)
-    val last = bootstrapIdentityLast(name, start, step)
-    val hw = readIdentityHw()
-    writeMetaText(identityHwFile,
-      (hw + (name -> last)).map { case (k, v) => s"$k\t$v" }.mkString("\n"))
+  private def syncIdentityHw(name: String, start: Long,
+      step: Long): Unit = withIdentityLock {
+    writeIdentityHw(
+      readIdentityHw() + (name -> bootstrapIdentityLast(name, start, step)))
   }
 
   /** Allocate `n` consecutive ids for `name`, returning the FIRST. The
     * high-water lands BEFORE the rows do: a failed write leaks a gap,
     * never a collision.
     */
-  private def allocateIdentity(name: String, n: Long): Long =
+  private def allocateIdentity(name: String, start: Long, step: Long,
+      n: Long): Long =
     withIdentityLock {
-      val (start, step) = identityColumns(name)
       val hw = readIdentityHw()
       val last = hw.getOrElse(name, bootstrapIdentityLast(name, start, step))
-      writeMetaText(identityHwFile,
-        (hw + (name -> (last + n * step)))
-          .map { case (k, v) => s"$k\t$v" }.mkString("\n"))
+      writeIdentityHw(hw + (name -> (last + n * step)))
       last + step
     }
 
@@ -1536,8 +1447,8 @@ final class MedallionTable(
     * materialization (and the assignment cannot shift under a
     * recomputed nondeterministic source).
     */
-  private def applyIdentityAppend(df: DataFrame): DataFrame = {
-    val ids = identityColumns
+  private def applyIdentityAppend(df: DataFrame, m: TableMeta): DataFrame = {
+    val ids = m.identity
     if (ids.isEmpty) return df
     val present = df.columns.map(_.toLowerCase).toSet
     val provided = ids.keys.filter(k => present.contains(k.toLowerCase))
@@ -1579,8 +1490,8 @@ final class MedallionTable(
           org.apache.spark.sql.functions.lit(null).cast("long"))
       }
     val offsets = sizes.scanLeft(0L)(_ + _)
-    val firsts = names.map { case (nm, (_, step)) =>
-      (allocateIdentity(nm, n), step)
+    val firsts = names.map { case (nm, (start, step)) =>
+      (allocateIdentity(nm, start, step, n), step)
     }
     val schema2 = names.foldLeft(cached.schema)((s, f) =>
       s.add(f._1, org.apache.spark.sql.types.LongType, nullable = false))
@@ -1600,9 +1511,9 @@ final class MedallionTable(
     * identity (the insert clause may not assign it — ALWAYS); base rows
     * are never NULL by the append-path induction, so NULL ⟺ insert.
     */
-  private def fillIdentityNulls(df: DataFrame): DataFrame = {
+  private def fillIdentityNulls(df: DataFrame, m: TableMeta): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val ids = identityColumns
+    val ids = m.identity
     val names = ids.keys.toSeq.sorted
       .filter(n => df.columns.exists(_.equalsIgnoreCase(n)))
     if (names.isEmpty) return df
@@ -1632,18 +1543,16 @@ final class MedallionTable(
   }
 
   /** Refuse clause/SET assignments to identity columns (ALWAYS). */
-  private def refuseIdentitySet(assigned: Iterable[String],
-      what: String): Unit = {
-    val ids = identityColumns
-    if (ids.isEmpty) return
-    val hit = assigned.filter(a => ids.keys.exists(_.equalsIgnoreCase(a)))
+  private def refuseIdentitySet(assigned: Iterable[String], what: String,
+      m: TableMeta): Unit = {
+    val hit = assigned.filter(m.isIdentity)
     if (hit.nonEmpty) throw new IllegalStateException(
       s"$what assigns identity column(s) ${hit.mkString(", ")} of $path " +
         "— GENERATED ALWAYS AS IDENTITY columns are engine-assigned; " +
         "drop the assignment, or dropIdentityColumn() to hand-manage")
   }
 
-  /** Enforces the given constraints on incoming rows IN the write pass:
+  /** Enforces the declarations on incoming rows IN the write pass:
     * a [[graft.functions.CheckInvariant]] fused onto the first output
     * column throws inside the task on the first violating row, so no
     * extra scan is paid. SQL CHECK semantics — only a FALSE result
@@ -1661,9 +1570,7 @@ final class MedallionTable(
     * check to the final per-row output: projections don't push through
     * joins, and the column can't be pruned because it IS written.
     */
-  private def enforced(df: DataFrame,
-      cs0: Map[String, String] = checkConstraints ++ notNullInvariants(),
-      gens: Map[String, String] = generatedColumns): DataFrame = {
+  private def enforced(df: DataFrame, m: TableMeta): DataFrame = {
     // Generated columns first (constraints may reference them): a column
     // the incoming frame lacks is COMPUTED in-pass; a provided one turns
     // into a null-safe-equality invariant riding the same guard as the
@@ -1671,15 +1578,22 @@ final class MedallionTable(
     import org.apache.spark.sql.functions.expr
     val present0 = df.columns.map(_.toLowerCase).toSet
     val (toCompute, toValidate) =
-      gens.partition { case (n, _) => !present0.contains(n.toLowerCase) }
+      m.generated.partition { case (n, _) => !present0.contains(n.toLowerCase) }
     val withGen = toCompute.foldLeft(df) { case (d, (n, e)) =>
       d.withColumn(n, expr(e))
     }
-    val cs = cs0 ++ toValidate.map { case (n, e) =>
+    val cs = m.invariants ++ toValidate.map { case (n, e) =>
       s"__generated_$n" -> s"`${n.replace("`", "``")}` <=> ($e)"
     }
     enforceChecks(withGen, cs)
   }
+
+  /** The insert-class write pass (append, COPY INTO, create, overwrite):
+    * defaults fill omitted columns, identities are assigned, then every
+    * declaration is enforced.
+    */
+  private def insertBatch(df: DataFrame, m: TableMeta): DataFrame =
+    enforced(applyIdentityAppend(applyDefaults(df, m), m), m)
 
   /** The CHECK-invariant guard itself — see [[enforced]] for the write-
     * path composition (generated columns are folded in there).
@@ -1778,7 +1692,7 @@ final class MedallionTable(
     }
 
   /** Fingerprint of every metadata input the staged-append transform
-    * consumes (registries, column map, widening overlay, stashed schema,
+    * consumes (declarations, column map, widening overlay, stashed schema,
     * CDF arming) — (length × mtime) per tracked `_graft_meta` file off
     * ONE flat listing. Metadata mutations only happen under the GLOBAL
     * writer lock, which excludes scoped holders, so equal fingerprints
@@ -1787,8 +1701,7 @@ final class MedallionTable(
     */
   private def appendMetaFingerprint(): Long = {
     val tracked = Set("schema.ddl", "colmap.tsv", "physschema.ddl",
-      "widecols.tsv", "constraints.tsv", "defaults.tsv", "generated.tsv",
-      "identity.tsv", "notnull.tsv", "addcols.tsv", "dropcols.tsv")
+      "widecols.tsv", TableMeta.FileName, "addcols.tsv", "dropcols.tsv")
     val md = new Path(path, "_graft_meta")
     val base = if (ChangeFeed.isEnabled(spark, path)) 1L else 0L
     if (!fs.exists(md)) base
@@ -1864,8 +1777,7 @@ final class MedallionTable(
     // block is drawn (and the high-water persisted) here, BEFORE the
     // lock-free staging write, so concurrent stagers never collide
     val physBatch = upcastBatch(WideCols.canonicalize(
-      ColumnMap.toPhysical(enforced(applyIdentityAppend(applyDefaults(df))),
-        cmap),
+      ColumnMap.toPhysical(insertBatch(df, meta), cmap),
       WideCols.load(spark, path)), cmap)
     // post-transform physical-name check: a staged column missing from
     // the recorded reader schema means extendReaderSchema would have to
@@ -1972,8 +1884,7 @@ final class MedallionTable(
     // two degrades the evolving append to a metadata-only ADD COLUMN).
     val cmap = ColumnMap.load(spark, path)
     val physBatch = upcastBatch(WideCols.canonicalize(
-      ColumnMap.toPhysical(enforced(applyIdentityAppend(applyDefaults(df))),
-        cmap),
+      ColumnMap.toPhysical(insertBatch(df, meta), cmap),
       WideCols.load(spark, path)), cmap)
     WideCols.extendReaderSchema(spark, path, physBatch.schema)
     // schema-evolving append: keep the stashed DDL (the authority for
@@ -2094,62 +2005,36 @@ final class MedallionTable(
     // refuse, missing → assign) — without this, a second overwrite
     // accepted caller ids without advancing the high-water (review
     // finding, round 14)
-    if (exists) rewriteVia(applyIdentityAppend(applyDefaults(df)))
-    else {
-      val cs = checkConstraints
-      val gs = generatedColumns
-      val ics = identityColumns
-      val nns = notNullColumns
-      val dfts = columnDefaults
-      withClaimedCommit("create-overwrite") {
-        // SaveMode.Overwrite deletes the dir (registries included) BEFORE
-        // the job runs — restore the pre-create registries even when the
-        // write fails, or a rejected/failed first batch silently disarms
-        // the gate (and forgets the generated columns). Identity
-        // assignment runs during argument evaluation, before the delete.
-        try writer(enforced(applyIdentityAppend(applyDefaults(df, dfts)),
-            cs ++ notNullInvariants(nns), gs),
-          SaveMode.Overwrite).parquet(path)
-        finally { persistConstraints(cs); persistGenerated(gs)
-          persistIdentityCols(ics); persistNotNull(nns)
-          persistDefaults(dfts) }
-        stashSchema(df.schema)
-        // same NonFatal guard as appendBody: a capture IO failure must
-        // not unwind withClaimedCommit (which would delete the claimed
-        // marker AFTER the data and registries landed, leaving a
-        // populated table at commit 0) — the feed read fail-stops instead
-        if (ChangeFeed.isEnabled(spark, path))
-          try ChangeFeed.captureFiles(spark, path, commitVersion,
-            "create-overwrite", dataFileSet().toSeq)
-          catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
+    if (exists) rewriteVia(m => applyIdentityAppend(applyDefaults(df, m), m))
+    else create(df, "create-overwrite")
 
   /** K3 — first-run create, error if the table already exists. */
   def createOrError(df: DataFrame): Unit = {
     if (exists)
       throw new IllegalStateException(s"table already exists at $path")
-    val cs = checkConstraints
-    val gs = generatedColumns
-    val ics = identityColumns
-    val nns = notNullColumns
-    val dfts = columnDefaults
-    withClaimedCommit("create") {
-      try writer(enforced(applyIdentityAppend(applyDefaults(df, dfts)),
-          cs ++ notNullInvariants(nns), gs),
-        SaveMode.Overwrite).parquet(path)
-      finally { persistConstraints(cs); persistGenerated(gs)
-        persistIdentityCols(ics); persistNotNull(nns)
-        persistDefaults(dfts) }
+    create(df, "create")
+  }
+
+  private def create(df: DataFrame, op: String): Unit =
+    withClaimedCommit(op) {
+      // SaveMode.Overwrite deletes the dir (declarations included) BEFORE
+      // the job runs — restore the pre-create record even when the write
+      // fails, or a rejected/failed first batch silently disarms the gate
+      // (and forgets the generated columns). Identity assignment runs
+      // during argument evaluation, before the delete.
+      val m = meta
+      try writer(insertBatch(df, m), SaveMode.Overwrite).parquet(path)
+      finally persistMeta(m)
       stashSchema(df.schema)
-      // NonFatal-guarded for the same reason as appendBody / overwrite:
-      // the commit landed; a capture failure degrades to a feed refusal
+      // same NonFatal guard as appendBody: a capture IO failure must not
+      // unwind withClaimedCommit (which would delete the claimed marker
+      // AFTER the data and declarations landed, leaving a populated table
+      // at commit 0) — the feed read fail-stops instead
       if (ChangeFeed.isEnabled(spark, path))
-        try ChangeFeed.captureFiles(spark, path, commitVersion, "create",
+        try ChangeFeed.captureFiles(spark, path, commitVersion, op,
           dataFileSet().toSeq)
         catch { case scala.util.control.NonFatal(_) => () }
     }
-  }
 
   /** K4 — 3-clause merge (see [[MergeOps.merge3Clause]]): materializes the
     * merged result next to the table, then swaps directories with the
@@ -2169,11 +2054,11 @@ final class MedallionTable(
     // identity column would write caller ids on inserts without
     // advancing the high-water — ALWAYS refuses it (hand-manage via
     // dropIdentityColumn, as on the other paths)
-    refuseIdentitySet(source.columns.filter(c =>
-      identityColumns.keys.exists(_.equalsIgnoreCase(c))), "merge source")
-    rewriteVia(
-      MergeOps.merge3Clause(read, source, keys, updateCondition, deleteNotMatchedBySource),
-      op = "merge")
+    rewriteVia({ m =>
+      refuseIdentitySet(source.columns, "merge source", m)
+      MergeOps.merge3Clause(read, source, keys, updateCondition,
+        deleteNotMatchedBySource)
+    }, op = "merge")
   }
 
   /** General ordered-clause merge (see [[MergeOps.mergeClauses]]) — the
@@ -2223,19 +2108,17 @@ final class MedallionTable(
         MergeOps.refuseEvolvedAssignments(read.columns.toSeq, clauses, path)
         Nil
       }
-    refuseIdentitySet(MergeOps.assignedColumns(clauses), "MERGE clause")
-    rewriteVia(
-      {
-        // target widened with source-typed NULL columns INSIDE the
-        // by-name rewrite product (the fence contract): the rewrite then
-        // materializes the evolved schema physically in one pass
-        val target = evolved.foldLeft(read) { case (d, (n, dt)) =>
-          d.withColumn(n, org.apache.spark.sql.functions.lit(null).cast(dt))
-        }
-        MergeOps.mergeClauses(target, source, keys, matched, notMatched,
-          notMatchedBySource, insertDefaultColumns())
-      },
-      op = "merge")
+    rewriteVia({ m =>
+      refuseIdentitySet(MergeOps.assignedColumns(clauses), "MERGE clause", m)
+      // target widened with source-typed NULL columns INSIDE the
+      // post-fence rewrite product: the rewrite then materializes the
+      // evolved schema physically in one pass
+      val target = evolved.foldLeft(read) { case (d, (n, dt)) =>
+        d.withColumn(n, org.apache.spark.sql.functions.lit(null).cast(dt))
+      }
+      MergeOps.mergeClauses(target, source, keys, matched, notMatched,
+        notMatchedBySource, m.defaultColumns)
+    }, op = "merge")
   }
 
   /** Deletion-vector MERGE — the [[DvUpdates]] write path for
@@ -2293,7 +2176,8 @@ final class MedallionTable(
     if (checkUniqueKeys)
       MergeOps.requireUniqueKeys(source, keys.map(_._2))
     val allClauses = matched ++ notMatched ++ notMatchedBySource
-    refuseIdentitySet(MergeOps.assignedColumns(allClauses), "MERGE clause")
+    val m = meta
+    refuseIdentitySet(MergeOps.assignedColumns(allClauses), "MERGE clause", m)
     if (evolveSchema || autoMergeSchemaConf)
       // Schema evolution on the DV path is METADATA-ONLY, recorded inside
       // this merge's own claimed commit: each new column lands as a
@@ -2370,7 +2254,7 @@ final class MedallionTable(
     }
     val plan = MergeOps.mergeVectoredPlan(live, source, keys, matched,
       notMatched, logical.columns.toSeq, logical.schema,
-      Seq("__graft_dv_file", "__graft_dv_pos"), insertDefaultColumns(),
+      Seq("__graft_dv_file", "__graft_dv_pos"), m.defaultColumns,
       notMatchedBySource)
     val j = plan.matchedPairs.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2381,10 +2265,10 @@ final class MedallionTable(
       // merge-inserted rows carry a NULL identity — fill (no-op when
       // none registered; updates keep their base row's id)
       val newRows = fillIdentityNulls(
-        plan.newVersions(j).unionByName(plan.inserts(j)))
+        plan.newVersions(j).unionByName(plan.inserts(j)), m)
       // stage 1: new versions + inserts — table partition layout, CHECKs
       // enforced, physical column names (same dialect as the base files)
-      writeBatch(enforced(newRows), batch)
+      writeBatch(enforced(newRows, m), batch)
       // stage 2: marks for the consumed matched rows' OLD positions
       plan.marks(j).write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
       // row-based emptiness: an empty frame's write can still leave a
@@ -2458,17 +2342,16 @@ final class MedallionTable(
       keys: Seq[String],
       effective: Column,
       changeCondition: Option[(MergeOps.ColRef, MergeOps.ColRef) => Column] = None): Unit = {
-    // same ALWAYS refusal as merge(): an SCD2 snapshot carrying an
-    // identity column would open new versions with caller-supplied ids
-    refuseIdentitySet(source.columns.filter(c =>
-      identityColumns.keys.exists(_.equalsIgnoreCase(c))), "SCD2 source")
     // A duplicate-keyed snapshot would fan out the SCD2 full-outer join and
     // break the one-current-row-per-key invariant (MergeOps.scd2Merge's
     // documented contract) — enforce it here, where an action is fine.
     MergeOps.requireUniqueKeys(source, keys)
-    rewriteVia(
-      MergeOps.scd2Merge(read, source, keys, effective, changeCondition),
-      op = "scd2-merge")
+    rewriteVia({ m =>
+      // same ALWAYS refusal as merge(): an SCD2 snapshot carrying an
+      // identity column would open new versions with caller-supplied ids
+      refuseIdentitySet(source.columns, "SCD2 source", m)
+      MergeOps.scd2Merge(read, source, keys, effective, changeCondition)
+    }, op = "scd2-merge")
   }
 
   /** Full-table rewrite through a tmp dir + backup swap: never a moment
@@ -2497,24 +2380,18 @@ final class MedallionTable(
     * and THEN checks the writer lock, retrying until clean: the lock is
     * acquired before every claim and held past its data job, so a clean
     * check proves every claim counted in `expectedVersion` has landed
-    * its data. `newData0` is BY-NAME and evaluated after the fence, so the
-    * table scan's file listing (eager at `read`) also sees that landed
-    * data — callers must construct the rewrite product (including their
-    * `read`) inside the argument expression.
+    * its data. `newData0` is applied after the fence, so the table scan's
+    * file listing (eager at `read`) also sees that landed data — callers
+    * must construct the rewrite product (including their `read`) inside
+    * the function. It receives the table's declarations, read after the
+    * fence too: the record the product is enforced against is the one
+    * the swap carries, and a declaration commit landing later fails the
+    * CAS.
     */
-  private def rewriteVia(newData0: => DataFrame,
+  private def rewriteVia(newData0: TableMeta => DataFrame,
       writerTweak: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =>
         org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = identity,
       op: String = "rewrite"): Unit = {
-    // Enforce CHECK constraints (and generated-column invariants) on
-    // every rewrite product (merge results, updates, restores) and carry
-    // both registries across the swap, which replaces the _graft_meta
-    // directory. One registry read serves both.
-    val constraints = checkConstraints
-    val gens = generatedColumns
-    val idCols = identityColumns
-    val notNulls = notNullColumns
-    val defaults = columnDefaults
     // Snapshot fence: ordinal BEFORE the lock check, retry until the
     // lock is free — see the scaladoc. Fail-stop on a persistently-held
     // lock (crashed writer): vacuum() clears it.
@@ -2531,10 +2408,12 @@ final class MedallionTable(
         Thread.sleep(25)
       }
     }
-    // merge-inserted rows carry a NULL identity (the clause may not
-    // assign it) — fill before enforcement; untouched when none registered
-    val newData = enforced(fillIdentityNulls(newData0),
-      constraints ++ notNullInvariants(notNulls), gens)
+    // every rewrite product (merge results, updates, restores) is
+    // enforced, and the record rides the swap, which replaces the
+    // _graft_meta directory; merge-inserted rows carry a NULL identity
+    // (the clause may not assign it) — filled before enforcement
+    val m = meta
+    val newData = enforced(fillIdentityNulls(newData0(m), m), m)
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(s"${path}__graft_tmp_$suffix")
     val dst = new Path(path)
@@ -2553,21 +2432,17 @@ final class MedallionTable(
       (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w)
         .parquet(tmp.toString)
       // Metadata goes into the TMP directory BEFORE the swap, so the
-      // rename atomically carries schema + constraint registry with the
+      // rename atomically carries schema + declarations with the
       // data. Writing them after the swap left a crash window where the
       // backup was already deleted but the new dir had neither schema.ddl
       // (a rewrite that legally empties the table would then read as
       // nonexistent — and a later vacuum() would "restore" the superseded
-      // backup over a committed delete) nor the CHECK registry (silently
-      // disarming the gate). Any rewrite can legally produce zero rows
-      // (merge with delete-not-matched, row-level DELETE), and an empty
-      // parquet dir carries no schema of its own.
+      // backup over a committed delete) nor the declarations (silently
+      // disarming the CHECK gate). Any rewrite can legally produce zero
+      // rows (merge with delete-not-matched, row-level DELETE), and an
+      // empty parquet dir carries no schema of its own.
       stashSchema(newData.schema, tmp)
-      persistConstraints(constraints, tmp)
-      persistGenerated(gens, tmp)
-      persistIdentityCols(idCols, tmp)
-      persistNotNull(notNulls, tmp)
-      persistDefaults(defaults, tmp)
+      persistMeta(m, tmp.toString)
       MedallionTable.testFailpoint("pre-commit")
       if (!tryClaimCommit(expectedVersion, op))
         throw new java.util.ConcurrentModificationException(
@@ -2687,10 +2562,11 @@ final class MedallionTable(
     } else {
       // DELETE removes rows where cond is TRUE; FALSE and NULL survive
       // (a bare `!cond` filter would also drop the NULL rows). Re-read
-      // inside the by-name argument: rewriteVia's fence must precede the
+      // inside the rewrite product: rewriteVia's fence must precede the
       // scan's file listing (the outer `df` listed files pre-fence).
       import org.apache.spark.sql.functions.{coalesce, lit, not}
-      rewriteVia(read.filter(not(coalesce(cond, lit(false)))), op = "delete")
+      rewriteVia(_ => read.filter(not(coalesce(cond, lit(false)))),
+        op = "delete")
     }
   }
 
@@ -2728,11 +2604,10 @@ final class MedallionTable(
     * applied-and-materialized in the copy rather than referenced
     * (decoupled from source rewrites BY CONSTRUCTION: zero pointer
     * entries, the cross-storage copy [[cloneFrom]] cannot give). The
-    * registries that survive rewrites travel — CHECK constraints,
-    * generated/identity/NOT NULL/default columns, plus the identity
-    * HIGH-WATER so inserts on the clone never re-allocate the source's
-    * ids. Partitioned sources keep their hive layout. Cost is O(data) —
-    * this is the OPTIMIZE write path pointed at a fresh location.
+    * declarations ([[TableMeta]]) travel, plus the identity HIGH-WATER
+    * so inserts on the clone never re-allocate the source's ids.
+    * Partitioned sources keep their hive layout. Cost is O(data) — this
+    * is the OPTIMIZE write path pointed at a fresh location.
     */
   def deepCloneFrom(source: MedallionTable): Unit = {
     require(!exists, s"clone target $path must not exist")
@@ -2752,7 +2627,7 @@ final class MedallionTable(
       // standing before the read (every claim-first writer holds its
       // lock past its data job), then verify the source file census is
       // UNCHANGED after the copy; a census drift means a writer landed
-      // mid-copy — redo against the settled source. Registries re-read
+      // mid-copy — redo against the settled source. Declarations re-read
       // inside the loop so they describe the same snapshot as the data.
       var attempts = 0
       var done = false
@@ -2774,11 +2649,7 @@ final class MedallionTable(
           Thread.sleep(25)
         }
         val census0 = source.metaCensusHash()
-        val cs = source.checkConstraints
-        val gens = source.generatedColumns
-        val ics = source.identityColumns
-        val nns = source.notNullColumns
-        val dfts = source.columnDefaults
+        val m = source.meta
         val hw = source.readIdentityHw()
         MedallionTable.retryOnVanishedFiles() {
           val df = source.read
@@ -2794,14 +2665,8 @@ final class MedallionTable(
                 "settle")
           // the next Overwrite replaces the torn copy wholesale
         } else {
-          persistConstraints(cs)
-          persistGenerated(gens)
-          persistIdentityCols(ics)
-          persistNotNull(nns)
-          persistDefaults(dfts)
-          if (hw.nonEmpty)
-            writeMetaText(identityHwFile, hw.toSeq.sortBy(_._1)
-              .map { case (n, v) => s"$n\t$v" }.mkString("\n"))
+          persistMeta(m)
+          writeIdentityHw(hw)
           done = true
         }
       }
@@ -2811,7 +2676,7 @@ final class MedallionTable(
   /** SHALLOW CLONE ([[ShallowClone]]): make THIS (empty) table a
     * zero-copy clone of `source` — pointer manifest to the source's
     * current data files plus copies of its read-state metadata (deletion
-    * vector, column map, schema overlay, CHECK registry, schema stash),
+    * vector, column map, schema overlay, declarations, schema stash),
     * all O(files)
     * driver work and zero data bytes. Writes land locally; the first
     * rewrite (OPTIMIZE being the canonical one) materializes and
@@ -2847,9 +2712,11 @@ final class MedallionTable(
       // column resurrects and an unmaterialized ADD vanishes; widecols/
       // physschema: a widened source's files mix narrow/wide footers the
       // clone could not otherwise resolve
-      Seq("dv", "colmap.tsv", "constraints.tsv", "generated.tsv",
-        "notnull.tsv", "addcols.tsv", "dropcols.tsv", "widecols.tsv",
+      Seq("dv", "colmap.tsv", "addcols.tsv", "dropcols.tsv", "widecols.tsv",
         "physschema.ddl").foreach(copyMeta)
+      // every declaration travels; identity ids continue above the
+      // source's, the clone's high-water bootstrapping from its own data
+      persistMeta(source.meta)
       stashSchema(source.read.schema)
     }
   }
@@ -2857,10 +2724,12 @@ final class MedallionTable(
   /** RENAME COLUMN as metadata ([[ColumnMap]]): no data file changes —
     * the rename is visible to every read surface immediately and costs
     * O(1). Refuses the cases whose stored artifacts still speak the old
-    * name: partition columns (physical directory layout), CHECK
-    * constraints (stored as expression text), and tables with a live
-    * Delta-log export (external readers can't see the map — OPTIMIZE
-    * first to materialize). Stale skipping artifacts are handled, not
+    * name: partition columns (physical directory layout), identity
+    * columns and CHECK/generation expressions naming the column
+    * ([[TableMeta.columnChanged]]), and tables with a live Delta-log
+    * export (external readers can't see the map — OPTIMIZE first to
+    * materialize). NOT NULL, default and generated declarations follow
+    * the new name. Stale skipping artifacts are handled, not
     * trusted: the stats manifest is invalidated (its columns are keyed
     * by name) and any bloom index on the old name is dropped.
     */
@@ -2886,40 +2755,19 @@ final class MedallionTable(
     require(!partitionColumns.contains(oldName),
       s"rename: '$oldName' is a partition column — its directory layout " +
         "is physical; rewrite the table to rename it")
-    // identity registry is keyed by NAME (identity.tsv + the high-water
-    // entry): renaming a registered column would leave the registry
-    // pointing at the old name, and the next append's applyIdentityAppend
-    // would silently re-create it — mirror the CHECK-constraint refusal
-    require(!identityColumns.keys.exists(_.equalsIgnoreCase(oldName)),
-      s"rename: '$oldName' is GENERATED ALWAYS AS IDENTITY — the registry " +
-        "is keyed by name; dropIdentityColumn() first, rename, then " +
-        "re-declare (setIdentityColumn syncs the high-water from data)")
-    require(!identityColumns.keys.exists(_.equalsIgnoreCase(newName)),
-      s"rename: '$newName' is a registered identity column's name — the " +
-        "renamed data would collide with the engine-assigned slot; " +
-        "dropIdentityColumn() first")
-    val offending = checkConstraints.filter { case (_, expr) =>
-      s"\\b${java.util.regex.Pattern.quote(oldName)}\\b".r
-        .findFirstIn(expr).isDefined
-    }
-    require(offending.isEmpty,
-      s"rename: CHECK constraint(s) ${offending.keys.mkString(", ")} " +
-        s"reference '$oldName' — drop them first")
     require(!fs.exists(new Path(path, "_delta_log")),
       "rename: table has a Delta-log export; external readers cannot " +
         "see the column map — OPTIMIZE to materialize, then re-sync")
     withClaimedCommit("rename-column") {
+      val m = meta
+      val renamed = m.columnChanged(oldName, Some(newName))
       // an unmaterialized ADDed column renames inside the overlay (no
       // physical column exists to map); everything else through the map
       if (!SchemaOverlay.renameAdd(spark, path, oldName, newName))
         ColumnMap.rename(spark, path, oldName, newName)
       invalidateStats()
       fs.delete(new Path(path, s"_graft_meta/bloom/$oldName"), true)
-      // the defaults registry is keyed by LOGICAL name — retarget it, or
-      // the next omitted-column append resurrects the OLD name
-      val dmap = columnDefaults
-      dmap.get(oldName).foreach(v =>
-        persistDefaults(dmap - oldName + (newName -> v)))
+      if (renamed != m) persistMeta(renamed)
       stashSchema(org.apache.spark.sql.types.StructType(schema.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f)))
     }
@@ -2957,8 +2805,9 @@ final class MedallionTable(
   /** Metadata-only `ALTER TABLE DROP COLUMN` ([[SchemaOverlay]]): the
     * column's PHYSICAL name is tombstoned; reads exclude it, the bytes
     * stay until the next full rewrite sheds them. Same boundaries as
-    * [[renameColumn]] (partition columns, CHECK references, live
-    * Delta-log export), each refused loudly.
+    * [[renameColumn]] (partition columns, identity columns, CHECK and
+    * generation references, live Delta-log export), each refused
+    * loudly; NOT NULL, default and generated declarations retire.
     */
   def dropColumn(name: String): Unit = {
     val schema = read.schema
@@ -2967,24 +2816,12 @@ final class MedallionTable(
     require(!partitionColumns.contains(name),
       s"drop column: '$name' is a partition column — its directory layout " +
         "is physical; rewrite the table to drop it")
-    // same registry-keyed-by-name hazard as rename: a dropped identity
-    // column's registry entry would survive and the next append would
-    // silently resurrect the (tombstoned) physical slot with fresh ids
-    require(!identityColumns.keys.exists(_.equalsIgnoreCase(name)),
-      s"drop column: '$name' is GENERATED ALWAYS AS IDENTITY — " +
-        "dropIdentityColumn() first (it also retires the high-water " +
-        "entry), then drop the column")
-    val offending = checkConstraints.filter { case (_, expr) =>
-      s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
-        .findFirstIn(expr).isDefined
-    }
-    require(offending.isEmpty,
-      s"drop column: CHECK constraint(s) ${offending.keys.mkString(", ")} " +
-        s"reference '$name' — drop them first")
     require(!fs.exists(new Path(path, "_delta_log")),
       "drop column: table has a Delta-log export; external readers cannot " +
         "see the overlay — OPTIMIZE to materialize, then re-sync")
     withClaimedCommit("drop-column") {
+      val m = meta
+      val dropped = m.columnChanged(name, None)
       // the rename chain ends here: the tombstone carries the PHYSICAL
       // name the files use, and the map entry (if any) is retired
       val physical = ColumnMap.load(spark, path).getOrElse(name, name)
@@ -3011,7 +2848,7 @@ final class MedallionTable(
         rawSchema.fieldNames.contains(physical))
       invalidateStats()
       fs.delete(new Path(path, s"_graft_meta/bloom/$name"), true)
-      persistDefaults(columnDefaults - name) // a default keyed to the name dies with it
+      if (dropped != m) persistMeta(dropped)
       stashSchema(org.apache.spark.sql.types.StructType(
         schema.fields.filterNot(_.name == name)))
     }
@@ -3064,10 +2901,11 @@ final class MedallionTable(
     require(!partitionColumns.contains(name),
       s"ALTER COLUMN TYPE: '$name' is a partition column — its directory " +
         "values are physical; rewrite the table to retype it")
-    require(!identityColumns.keys.exists(_.equalsIgnoreCase(name)),
+    val m = meta
+    require(!m.isIdentity(name),
       s"ALTER COLUMN TYPE: '$name' is GENERATED ALWAYS AS IDENTITY — the " +
         "allocator is BIGINT-fixed; dropIdentityColumn() to hand-manage")
-    val genHit = generatedColumns.filter { case (g, e) =>
+    val genHit = m.generated.filter { case (g, e) =>
       g.equalsIgnoreCase(name) ||
         s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
           .findFirstIn(e).isDefined
@@ -3663,7 +3501,8 @@ final class MedallionTable(
     withClaimedCommit("update-dv") {
       import org.apache.spark.sql.functions.{coalesce, col, lit}
       requireNoDeltaLogForDv()
-      refuseIdentitySet(set.keys, "UPDATE")
+      val m = meta
+      refuseIdentitySet(set.keys, "UPDATE", m)
       val logical = read
       val byLower = logical.columns.map(c => c.toLowerCase -> c).toMap
       val resolved = set.map { case (k, v) =>
@@ -3684,7 +3523,7 @@ final class MedallionTable(
       // stage 1: new row versions — table partition layout, CHECKs
       // enforced, physical names (batch files must speak the same schema
       // dialect as the base files so mergeSchema unions stay uniform)
-      writeBatch(enforced(newRows), batch)
+      writeBatch(enforced(newRows, m), batch)
       // stage 2: marks for the matched rows' OLD positions
       matched.select(col("__graft_dv_file").as("file"),
           col("__graft_dv_pos").as("pos"))
@@ -3731,7 +3570,6 @@ final class MedallionTable(
     */
   def update(cond: Column, set: Map[String, Column]): Unit = {
     import org.apache.spark.sql.functions.{col, when}
-    refuseIdentitySet(set.keys, "UPDATE")
     val df = read
     // Resolve SET keys case-insensitively (Spark's default resolution),
     // and FAIL on an unknown key — a typo'd column must not become a
@@ -3743,10 +3581,11 @@ final class MedallionTable(
     }
     // ONE projection: every SET expression reads the pre-update row by
     // construction (no staging columns, no reserved names). The frame is
-    // re-read inside the by-name argument (post-fence listing); the
+    // re-read inside the rewrite product (post-fence listing); the
     // projection list comes from the pre-validated schema, which is
     // stable under the supported concurrency.
-    rewriteVia({
+    rewriteVia({ m =>
+      refuseIdentitySet(set.keys, "UPDATE", m)
       val d = read
       d.select(df.columns.map { c =>
         resolved.get(c).map(v => when(cond, v).otherwise(col(c)).as(c))
@@ -3790,7 +3629,8 @@ final class MedallionTable(
   }
 
   /** Rewrite the live table back to snapshot `n` (itself versioned). */
-  def restoreVersion(n: Int): Unit = rewriteVia(readVersion(n), op = s"restore-v$n")
+  def restoreVersion(n: Int): Unit =
+    rewriteVia(_ => readVersion(n), op = s"restore-v$n")
 
   /** Change-data-feed between snapshot `n` and the live table: the row
     * changes (`_change_type` insert / update_preimage / update_postimage /
@@ -3952,8 +3792,8 @@ final class MedallionTable(
   def compact(clusterBy: Seq[String] = Nil, nFiles: Int = 0): Unit = {
     val n = if (nFiles > 0) nFiles
       else math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
-    // read inside the by-name argument: post-fence listing (see rewriteVia)
-    rewriteVia({
+    // read inside the product: post-fence listing (see rewriteVia)
+    rewriteVia({ _ =>
       val df = read
       if (clusterBy.nonEmpty) {
         val cols = clusterBy.map(org.apache.spark.sql.functions.col)
@@ -3984,7 +3824,7 @@ final class MedallionTable(
     require(clusterBy.nonEmpty && clusterBy.size <= 4, "1-4 z-order columns")
     // The whole construction — read, quantile sketch jobs, bucketing —
     // runs inside the by-name argument so it happens after the fence.
-    rewriteVia(zShape(read, clusterBy, nFiles), op = "optimize-zorder")
+    rewriteVia(_ => zShape(read, clusterBy, nFiles), op = "optimize-zorder")
     refreshStats() // same rationale as compact: leave pruning armed
   }
 
@@ -4804,7 +4644,7 @@ final class MedallionTable(
       // it reads through the overlay — but source-provided inserts can
       // still carry the narrow spelling)
       val prunedBatch = WideCols.canonicalize(
-        ColumnMap.toPhysical(enforced(merged), ColumnMap.load(spark, path)),
+        ColumnMap.toPhysical(enforced(merged, meta), ColumnMap.load(spark, path)),
         WideCols.load(spark, path))
       WideCols.extendReaderSchema(spark, path, prunedBatch.schema)
       prunedBatch.write

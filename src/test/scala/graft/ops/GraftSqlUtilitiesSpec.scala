@@ -73,7 +73,8 @@ class GraftSqlUtilitiesSpec extends SparkSpec {
     assert(r.getString(0) == "graft/parquet")
     assert(r.getLong(2) > 0 && r.getLong(3) > 0, "files and bytes counted")
     assert(r.getString(4) == "blk", s"partition columns: ${r.getString(4)}")
-    assert(r.getLong(5) == 2L, "overwrite + merge = commit ordinal 2")
+    assert(r.getLong(5) == 3L,
+      "overwrite + add-constraint + merge = commit ordinal 3")
     assert(r.getLong(6) == 1L, "one retained pre-merge snapshot")
     assert(r.getString(7) == "pos_id")
     assert(r.getString(8) == "", "no generated columns declared")
