@@ -389,7 +389,7 @@ private[sources] final class GraftV1Scan(path: String, required: StructType,
                   .option("mergeSchema", "true").option("basePath", path)
                   .parquet(files: _*),
                 s"$path/_graft_meta/dv", path),
-              graft.table.ColumnMap.load(context.sparkSession, path))
+              mt.meta.colMap)
             required.fields.foldLeft(sub) { (df, f) =>
               if (df.columns.contains(f.name)) df
               else df.withColumn(f.name,

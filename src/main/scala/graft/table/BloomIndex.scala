@@ -57,7 +57,7 @@ object BloomIndex {
     // logical view: `column` is the user-facing name (ColumnMap), and a
     // rename drops the old index dir rather than remapping it
     val df = ColumnMap.toLogical(spark.read.parquet(tablePath),
-      ColumnMap.load(spark, tablePath))
+      new MedallionTable(spark, tablePath).meta.colMap)
     val items =
       if (expectedItemsPerFile > 0L) expectedItemsPerFile
       else math.max(1000L,
@@ -105,32 +105,13 @@ object BloomIndex {
       new XxHash64(Seq(casted)).eval(null).asInstanceOf[Long]
     }
     if (hashes.isEmpty) return None
-    val tA = System.nanoTime()
-    val live = liveDataFiles(spark, tablePath)
-    val tB = System.nanoTime()
-    val out = live.flatMap { f =>
+    Some(liveDataFiles(spark, tablePath).flatMap { f =>
       loaded.get(normalize(f)) match {
         case Some((indexedName, bloom)) =>
           if (hashes.exists(bloom.mightContainLong)) Some(indexedName) else None
         case None => Some(f) // not covered by the index: keep
       }
-    }
-    val tC = System.nanoTime()
-    if (sys.env.contains("GRAFT_BLOOM_TRACE")) {
-      println(f"[bloom] live=${(tB - tA) / 1e6}%.0f ms " +
-        f"loop=${(tC - tB) / 1e6}%.0f ms n=${live.size}")
-      val t1 = System.nanoTime()
-      ShallowClone.listParquet(spark, tablePath)
-      val t2 = System.nanoTime()
-      DvUpdates.dataFiles(spark, tablePath)
-      val t3 = System.nanoTime()
-      ShallowClone.sources(spark, ShallowClone.file(tablePath))
-      val t4 = System.nanoTime()
-      println(f"[bloom] listParquet=${(t2 - t1) / 1e6}%.0f ms " +
-        f"dvDataFiles=${(t3 - t2) / 1e6}%.0f ms " +
-        f"sources=${(t4 - t3) / 1e6}%.0f ms")
-    }
-    Some(out)
+    })
   }
 
   /** Deserialized index snapshot keyed by normalized file path, cached

@@ -431,27 +431,20 @@ object ChangeFeed {
 
   // ---- file resolution ----------------------------------------------------
 
-  /** A group of files readable in one scan: same `basePath` root (so
-    * hive partition values parse) and same column map.
-    */
-  private final case class RootGroup(basePath: String,
-      colMap: Map[String, String], files: Seq[String])
-
   /** Index every resolvable data file by its relative-tail key: live
     * table files (root = table path), committed update-batch files
     * (root = the batch dir), and archived snapshot files (root = the
-    * snapshot dir, column map = the archived one). First hit wins
-    * (live before archived; archive MOVES files, so keys are unique in
-    * practice).
+    * snapshot dir, record = the archived one — its column map and reader
+    * schema). First hit wins (live before archived; archive MOVES files,
+    * so keys are unique in practice).
     */
   private def dataFileIndex(spark: SparkSession, t: MedallionTable)
-      : Map[String, (String, String, Map[String, String])] = {
+      : Map[String, (String, String, TableMeta)] = {
     val fs = fsOf(spark, t.path)
-    val liveMap = ColumnMap.load(spark, t.path)
+    val liveMeta = t.meta
     val out = scala.collection.mutable.Map
-      .empty[String, (String, String, Map[String, String])]
-    def put(key: String, file: String, root: String,
-        m: Map[String, String]): Unit =
+      .empty[String, (String, String, TableMeta)]
+    def put(key: String, file: String, root: String, m: TableMeta): Unit =
       if (!out.contains(key)) out(key) = (file, root, m)
     // FsWalk's pruned listStatus census, not fs.listFiles(recursive) —
     // this runs on the FEED-READ path over the table root, so the
@@ -467,25 +460,25 @@ object ChangeFeed {
       // file's parent works as its basePath.
       ShallowClone.scanFiles(spark, t.path).foreach(f =>
         put(DeletionVectors.fileKeyOf(f), f,
-          new Path(f).getParent.toString, liveMap))
+          new Path(f).getParent.toString, liveMeta))
     else {
       // live base files
       listDataFiles(new Path(t.path)).foreach(f =>
-        put(DeletionVectors.fileKeyOf(f), f, t.path, liveMap))
+        put(DeletionVectors.fileKeyOf(f), f, t.path, liveMeta))
       // live committed update batches (their own basePath roots)
       DvUpdates.committedBatches(spark, t.path).foreach { b =>
         val bd = DvUpdates.batchDataDir(t.path, b)
         ShallowClone.listParquet(spark, bd).foreach(f =>
-          put(DeletionVectors.fileKeyOf(f), f, bd, liveMap))
+          put(DeletionVectors.fileKeyOf(f), f, bd, liveMeta))
       }
     }
     // archived snapshots (batch files were relocated into the snapshot's
     // own layout, so one recursive listing covers them)
     t.listVersions().sorted.reverse.foreach { v =>
       val vdir = new Path(t.path, s"_graft_meta/versions/v$v")
-      val vmap = ColumnMap.loadFrom(spark, ColumnMap.archivedFile(vdir))
+      val vmeta = t.versionMeta(vdir)
       listDataFiles(vdir).foreach(f =>
-        put(DeletionVectors.fileKeyOf(f), f, vdir.toString, vmap))
+        put(DeletionVectors.fileKeyOf(f), f, vdir.toString, vmeta))
     }
     out.toMap
   }
@@ -679,14 +672,14 @@ object ChangeFeed {
             "read, or raise retainVersions"))
       }
       val dfs = resolved.groupBy(r => (r._2, r._3)).toSeq
-        .sortBy(_._1._1).map { case ((root, cmap), grp) =>
+        .sortBy(_._1._1).map { case ((root, tm), grp) =>
           // mergeSchema: one consolidated scan may span files written on
           // both sides of a schema evolution (the per-op-class fold) —
           // without it the scan schema is first-file order luck and an
           // evolved column can vanish from older rows' branch entirely.
-          // Under a live/archived type-widening overlay the same span
-          // crosses narrow/wide footers (which REFUSE to merge), so the
-          // root's recorded reader schema takes over (WideCols scaladoc).
+          // Under a live/archived type widening the same span crosses
+          // narrow/wide footers (which REFUSE to merge), so the root's
+          // record's reader schema takes over (WideCols scaladoc).
           // Groups rooted at the LIVE table use the base schema of the
           // table's snapshot instead — a subset of base files reads
           // identically under the full merged schema — and groups rooted
@@ -695,9 +688,9 @@ object ChangeFeed {
           // (guide §6 metadata cost).
           val reader =
             if (root == t.path) t.basePhysicalReader()
-              .getOrElse(WideCols.readerAnyLayout(spark, root))
+              .getOrElse(tm.reader(spark))
             else liveBatchSchemas.get(root).map(spark.read.schema)
-              .getOrElse(WideCols.readerAnyLayout(spark, root))
+              .getOrElse(tm.reader(spark))
           val raw = reader
             .option("basePath", root)
             .parquet(grp.map(_._1).distinct: _*)
@@ -707,7 +700,7 @@ object ChangeFeed {
                 DeletionVectors.fileKey(col("_metadata.file_path")))
               .withColumn("__cf_pos", col("_metadata.row_index"))
             else raw
-          ColumnMap.toLogical(keyed, cmap)
+          ColumnMap.toLogical(keyed, tm.colMap)
         }
       Some(dfs.reduce(_.unionByName(_, allowMissingColumns = true)))
     }

@@ -1,24 +1,23 @@
 package graft.table
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Column mapping — RENAME COLUMN as a metadata operation, Delta's
   * column-mapping story for [[MedallionTable]].
   *
   * A rename-by-rewrite costs O(table); at 100 TB renaming a column in a
-  * fact table is as unrunnable as a small delete via rewrite. The map
-  * instead records logical→physical name pairs in
-  * `_graft_meta/colmap.tsv`: data files keep their PHYSICAL (at-write)
-  * names forever, reads project physical→logical, and every
-  * append-class write translates logical→physical so the file schemas
-  * stay uniform under `mergeSchema`. Any full REWRITE (merge, update,
-  * OPTIMIZE, overwrite) materializes logical names physically and the
-  * swap drops the map with the rest of `_graft_meta` — the same
-  * self-clearing lifecycle as [[DeletionVectors]]. Delta implements
-  * this with per-column IDs in parquet footers; a name-pair table is
-  * the same contract at this layout's granularity (names here are
-  * unique per table the way IDs are in Delta).
+  * fact table is as unrunnable as a small delete via rewrite. The table
+  * record ([[TableMeta.colMap]]) instead holds logical→physical name
+  * pairs: data files keep their PHYSICAL (at-write) names forever, reads
+  * project physical→logical, and every append-class write translates
+  * logical→physical so the file schemas stay uniform under
+  * `mergeSchema`. Any full REWRITE (merge, update, OPTIMIZE, overwrite)
+  * materializes logical names physically and writes a record without
+  * the map ([[TableMeta.rewritten]]) — the same self-clearing lifecycle
+  * as [[DeletionVectors]]. Delta implements this with per-column IDs in
+  * parquet footers; a name-pair map is the same contract at this
+  * layout's granularity (names here are unique per table the way IDs are
+  * in Delta).
   *
   * Boundaries (each refused loudly, not silently wrong): partition
   * columns (directory names are physical), columns referenced by CHECK
@@ -27,56 +26,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * map — materialize via OPTIMIZE first).
   */
 object ColumnMap {
-
-  private def file(tablePath: String) = new Path(tablePath, "_graft_meta/colmap.tsv")
-
-  /** Snapshot-relocated map ([[MedallionTable.readVersion]]). */
-  private[table] def archivedFile(versionDir: Path): Path =
-    new Path(versionDir, "_graft_colmap.tsv")
-
-  /** logical → physical; empty when no renames are live. */
-  def load(spark: SparkSession, tablePath: String): Map[String, String] =
-    loadFrom(spark, file(tablePath))
-
-  private[table] def loadFrom(spark: SparkSession, p: Path): Map[String, String] = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.split('\n').filter(_.contains('\t')).map { line =>
-      val Array(l, ph) = line.split('\t')
-      l -> ph
-    }.toMap
-  }
-
-  private def save(spark: SparkSession, tablePath: String,
-      map: Map[String, String]): Unit = {
-    val p = file(tablePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (map.isEmpty) { fs.delete(p, false); return }
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(map.toSeq.sorted.map { case (l, ph) => s"$l\t$ph" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"column map write failed: $p")
-  }
-
-  /** Record `oldName` → `newName`; the physical name chains through
-    * repeated renames (a→b→c keeps pointing at the original file
-    * column). A rename back to the physical name clears the entry.
-    */
-  private[table] def rename(spark: SparkSession, tablePath: String,
-      oldName: String, newName: String): Unit = {
-    val m = load(spark, tablePath)
-    val physical = m.getOrElse(oldName, oldName)
-    val next = (m - oldName) ++
-      (if (newName == physical) Map.empty else Map(newName -> physical))
-    save(spark, tablePath, next)
-  }
 
   /** Physical-file frame → user-facing names. */
   def toLogical(df: DataFrame, map: Map[String, String]): DataFrame =

@@ -105,7 +105,7 @@ object DeltaLogExport {
     if (materialize) {
       val root = new Path(tablePath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val soft = ColumnMap.load(spark, tablePath).nonEmpty ||
+      val soft = new MedallionTable(spark, tablePath).meta.colMap.nonEmpty ||
         ShallowClone.isClone(spark, tablePath) ||
         DeletionVectors.exists(spark, DeletionVectors.dir(tablePath))
       if (soft)
@@ -142,15 +142,16 @@ object DeltaLogExport {
     // an external log reader sees the files' PHYSICAL column names and
     // has no access to the column map — exporting would publish a schema
     // the data files contradict. Materialize (OPTIMIZE) first.
-    require(ColumnMap.load(spark, tablePath).isEmpty,
+    val tm = new MedallionTable(spark, tablePath).meta
+    require(tm.colMap.isEmpty,
       s"delta-log export refused: $tablePath has live column renames " +
         "(ColumnMap); run OPTIMIZE to materialize them — or " +
         "sync(materialize = true) / SYNC DELTA LOG FOR t MATERIALIZED " +
         "to do both in one step")
     // same class of blindness for type widening: an external Delta
     // reader would resolve the mixed narrow/wide footers itself (and
-    // refuse, or worse) — the overlay schema is graft-local metadata
-    require(WideCols.load(spark, tablePath).isEmpty,
+    // refuse, or worse) — the reader schema is graft-local metadata
+    require(tm.widened.isEmpty,
       s"delta-log export refused: $tablePath has live type widenings " +
         "(WideCols); run OPTIMIZE to materialize them — or " +
         "sync(materialize = true) / SYNC DELTA LOG FOR t MATERIALIZED")

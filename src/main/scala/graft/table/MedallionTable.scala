@@ -66,12 +66,11 @@ final class MedallionTable(
     */
   def exists: Boolean = {
     val p = new Path(path)
-    // A deliberately-emptied table (all rows DELETEd, schema stash in
-    // place) still EXISTS: createOrError must refuse it, createOrMerge
-    // must merge into it, and vacuum must not mistake it for a mid-swap
-    // crash and resurrect a stale backup over it.
-    fs.exists(p) &&
-      (hasDataFiles(p) || fs.exists(new Path(p, "_graft_meta/schema.ddl")))
+    // A deliberately-emptied table (all rows DELETEd, schema recorded)
+    // still EXISTS: createOrError must refuse it, createOrMerge must merge
+    // into it, and vacuum must not mistake it for a mid-swap crash and
+    // resurrect a stale backup over it.
+    fs.exists(p) && (hasDataFiles(p) || meta.schema.isDefined)
   }
 
   /** Recursive file walk that PRUNES skipped subtrees up front instead
@@ -116,25 +115,23 @@ final class MedallionTable(
 
   def read: DataFrame = {
     val snap = TableSnapshot.of(this)
-    val schemaFile = new Path(path, "_graft_meta/schema.ddl")
+    val tm = snap.meta
     // A table whose rows were all DELETEd has no data files to carry the
-    // schema — fall back to the stashed DDL and stay readable (empty).
+    // schema — fall back to the recorded one and stay readable (empty).
     if (snap.isClone)
-      SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
+      tm.logical(
         DvUpdates.amendedKeyed(spark, snap,
-          // WideCols.reader: a cloned-from-widened-source table copies the
-          // overlay, and the pointed-at files mix narrow/wide footers
-          Some(WideCols.reader(spark, path).parquet(snap.scanFiles: _*)),
-          batchesInBase = true).get.drop(DvUpdates.FileCol, DvUpdates.PosCol),
-        ColumnMap.load(spark, path)))
+          // a clone of a widened source copies its record, and the
+          // pointed-at files mix narrow/wide footers
+          Some(tm.reader(spark).parquet(snap.scanFiles: _*)),
+          batchesInBase = true).get.drop(DvUpdates.FileCol, DvUpdates.PosCol))
     else if (snap.rootExists && !snap.hasData && snap.batches.isEmpty &&
-        fs.exists(schemaFile))
-      // the stashed DDL is maintained by addColumn/dropColumn, so no
-      // overlay pass is needed on this branch (batch guard: a partition
+        tm.schema.isDefined)
+      // the recorded schema follows addColumn/dropColumn, so no overlay
+      // pass is needed on this branch (batch guard: a partition
       // fast-DELETE can empty the BASE while committed update batches
       // still hold live rows — those must keep reading)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL(readMetaText(schemaFile)))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tm.schema.get)
     else {
       // base may be absent with batches live (see the guard above):
       // start the union from the batch scans alone in that case.
@@ -143,19 +140,17 @@ final class MedallionTable(
       val keyed =
         if (snap.rootExists && !snap.hasData)
           DvUpdates.amendedKeyed(spark, snap, None)
-            // empty dir without stashed schema and no batches: surface
+            // empty dir without recorded schema and no batches: surface
             // the same inference error the plain scan always gave
             .getOrElse(mergedParquet(snap))
         else liveKeyed(snap)
-      SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        keyed.drop(DvUpdates.FileCol, DvUpdates.PosCol),
-        ColumnMap.load(spark, path)))
+      tm.logical(keyed.drop(DvUpdates.FileCol, DvUpdates.PosCol))
     }
   }
 
   /** The physical base∪batches union of a table WITH base data files,
     * keyed by (file path, row index) and DV-applied: the one plan [[read]]
-    * and [[dvLiveWithPos]] share, analysed once per snapshot and session.
+    * and [[dvLive]] share, analysed once per snapshot and session.
     */
   private def liveKeyed(snap: TableSnapshot): DataFrame =
     snap.frame(spark, "live")(
@@ -170,10 +165,9 @@ final class MedallionTable(
     */
   private def readBase(): DataFrame = {
     val snap = TableSnapshot.of(this)
-    SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
+    snap.meta.logical(
       DvUpdates.amendedKeyed(spark, snap, Some(mergedParquet(snap)),
-        batchesInBase = true).get.drop(DvUpdates.FileCol, DvUpdates.PosCol),
-      ColumnMap.load(spark, path)))
+        batchesInBase = true).get.drop(DvUpdates.FileCol, DvUpdates.PosCol))
   }
 
   /** The raw-files half of [[read]], declared with the base schema of
@@ -185,17 +179,16 @@ final class MedallionTable(
     * commit that leaves the base footer set's schema intact (see the
     * [[TableSnapshot]] scaladoc for the invalidation rule). An unresolved
     * snapshot pays the footer job once and keeps the result. While a
-    * type-widening overlay is live, the authoritative reader schema
-    * comes from `_graft_meta/physschema.ddl` — mixed narrow/wide footers
-    * REFUSE to merge, and the explicit schema also skips the footer job
-    * outright (WideCols scaladoc).
+    * type widening is live, the authoritative reader schema comes from
+    * the table record — mixed narrow/wide footers REFUSE to merge, and
+    * the explicit schema also skips the footer job outright (WideCols
+    * scaladoc).
     */
   private def mergedParquet(snap: TableSnapshot): DataFrame =
     snap.baseSchema match {
       case Some(s) => spark.read.schema(s).parquet(path)
       case None =>
-        val df = snap.wide.map(spark.read.schema)
-          .getOrElse(spark.read.option("mergeSchema", "true")).parquet(path)
+        val df = snap.meta.reader(spark).parquet(path)
         snap.resolvedBase(df.schema)
         df
     }
@@ -249,11 +242,6 @@ final class MedallionTable(
       h
     }
   }
-
-  /** Persist the schema beside the data (see [[read]]'s empty fallback). */
-  private def stashSchema(schema: org.apache.spark.sql.types.StructType,
-      base: Path = new Path(path)): Unit =
-    writeMetaText(new Path(base, "_graft_meta/schema.ddl"), schema.toDDL)
 
   private def writer(df: DataFrame, mode: SaveMode) = {
     val w = clusterSmallWrite(df).write.mode(mode)
@@ -1019,21 +1007,27 @@ final class MedallionTable(
       } catch { case _: java.io.IOException => None }
     }
 
-  // ---- column declarations (one TableMeta record) -----------------------
+  // ---- the table record (one TableMeta) ----------------------------------
 
-  /** The table's column declarations ([[TableMeta]]): absent file = none. */
-  def meta: TableMeta = {
-    val f = TableMeta.file(path)
+  /** The table's record ([[TableMeta]]): declarations, schema and layout
+    * in one read; an absent file is the empty record.
+    */
+  def meta: TableMeta = metaAt(TableMeta.file(path))
+
+  /** The record archived with retained version `vdir`. */
+  private[table] def versionMeta(vdir: Path): TableMeta =
+    metaAt(TableMeta.archivedFile(vdir))
+
+  private def metaAt(f: Path): TableMeta =
     try TableMeta.decode(readMetaText(f), f.toString)
     catch { case _: java.io.FileNotFoundException => TableMeta.Empty }
-  }
 
   private def persistMeta(m: TableMeta, base: String = path): Unit = {
     val f = TableMeta.file(base)
     if (m.isEmpty) fs.delete(f, false) else writeMetaText(f, m.encode)
   }
 
-  /** Changes the declarations as one claimed commit recorded as `op`.
+  /** Changes the record as one claimed commit recorded as `op`.
     * `f` sees the record as of the claim and runs its validation scans
     * there, so no writer lands between a check and the persist; a
     * rewrite staged across it fails its CAS instead of swapping in the
@@ -1652,7 +1646,7 @@ final class MedallionTable(
     * global-lock path, which is always correct.
     */
   private[table] def appendOp(df: DataFrame, op: String): Unit =
-    if (serialAppendsConf || !appendStageEligible(df) || !appendStaged(df, op))
+    if (serialAppendsConf || !appendStaged(df, op))
       withClaimedCommit(op) { appendBody(df, op) }
 
   /** `spark.graft.serialAppends=true` forces every append onto the
@@ -1664,11 +1658,10 @@ final class MedallionTable(
     spark.conf.getOption("spark.graft.serialAppends").exists(_.toBoolean)
 
   /** Staged-append eligibility — the serial path owns everything else:
-    *   - table must exist with a stashed schema (append-created tables
+    *   - table must exist with a recorded schema (append-created tables
     *     keep the legacy evolving contract);
-    *   - no schema evolution: a batch column outside the declared schema
-    *     needs the stash/reader-schema updates only a global writer may
-    *     make.
+    *   - no schema evolution: a batch column outside the recorded schema
+    *     needs a record change only a global writer may make.
     *
     * Identity/row-tracking batches ARE eligible (round 18): allocation
     * was never global-writer-lock work — [[allocateIdentity]] reserves a
@@ -1681,62 +1674,19 @@ final class MedallionTable(
     * this, enabling row tracking silently re-serialized the whole
     * ingest.
     */
-  private def appendStageEligible(df: DataFrame): Boolean =
-    exists && {
-      val sf = new Path(path, "_graft_meta/schema.ddl")
-      fs.exists(sf) && {
-        val have = org.apache.spark.sql.types.StructType
-          .fromDDL(readMetaText(sf)).fieldNames.map(_.toLowerCase).toSet
-        df.columns.forall(c => have.contains(c.toLowerCase))
-      }
+  private def appendStageEligible(df: DataFrame, tm: TableMeta): Boolean =
+    tm.schema.exists { s =>
+      val have = s.fieldNames.map(_.toLowerCase).toSet
+      df.columns.forall(c => have.contains(c.toLowerCase))
     }
-
-  /** Fingerprint of every metadata input the staged-append transform
-    * consumes (declarations, column map, widening overlay, stashed schema,
-    * CDF arming) — (length × mtime) per tracked `_graft_meta` file off
-    * ONE flat listing. Metadata mutations only happen under the GLOBAL
-    * writer lock, which excludes scoped holders, so equal fingerprints
-    * before staging and under the claim prove the transform's inputs
-    * still describe the table; drift falls back to the serial path.
-    */
-  private def appendMetaFingerprint(): Long = {
-    val tracked = Set("schema.ddl", "colmap.tsv", "physschema.ddl",
-      "widecols.tsv", TableMeta.FileName, "addcols.tsv", "dropcols.tsv")
-    val md = new Path(path, "_graft_meta")
-    val base = if (ChangeFeed.isEnabled(spark, path)) 1L else 0L
-    if (!fs.exists(md)) base
-    else fs.listStatus(md).foldLeft(base) { (h, st) =>
-      val n = st.getPath.getName
-      if (!tracked.contains(n)) h
-      else h + n.hashCode.toLong * 1000003L + st.getLen * 31L +
-        st.getModificationTime
-    }
-  }
 
   private case class AppendMetaDrift() extends RuntimeException
 
-  /** PHYSICAL-name read schema for an append batch's freshly-landed
-    * files, off the stashed DDL (zero jobs, zero footer reads) — what
-    * [[TableStats.completeIncrementalUpdate]] uses to skip its
-    * mergeSchema footer job. None when no stash exists (append-created
-    * tables), where the legacy mergeSchema read stays.
-    */
-  private def stashedPhysicalSchema()
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val sf = new Path(path, "_graft_meta/schema.ddl")
-    if (!fs.exists(sf)) None
-    else {
-      val cmap = ColumnMap.load(spark, path)
-      Some(org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructType.fromDDL(readMetaText(sf))
-          .fields.map(f => f.copy(name = cmap.getOrElse(f.name, f.name)))))
-    }
-  }
-
-  /** Stage-then-publish append. Returns false when the batch turns out
-    * ineligible mid-flight (fresh physical column under a widening
-    * overlay, empty staged set, metadata drift under the claim) — the
-    * caller retries on the serial path.
+  /** Stage-then-publish append. Returns false when the batch is
+    * ineligible ([[appendStageEligible]]) or turns out so mid-flight
+    * (fresh physical column under a widening, empty staged set, a
+    * changed record under the claim) — the caller retries on the serial
+    * path.
     *
     * Protocol:
     *  1. NO LOCK: transform the batch (same chain as [[appendBody]],
@@ -1749,7 +1699,10 @@ final class MedallionTable(
     *     land in (`p:<relative dir>` — the spelling every other scoped
     *     writer declares, so overlap detection matches exactly; root
     *     files collide on the bare `p:`).
-    *  3. Under the claim: re-check the metadata fingerprint, park the
+    *  3. Under the claim: re-check that the table record and the
+    *     change-feed flag are the ones the batch was staged against (the
+    *     record changes only under a claim, so equal records prove the
+    *     transform's inputs still describe the table), park the
     *     stats manifest (same reader-visibility contract as
     *     [[appendBody]] — manifest ABSENT while files appear), then
     *     PUBLISH by renaming staged files in: O(files) driver fs ops,
@@ -1771,23 +1724,17 @@ final class MedallionTable(
     */
   private def appendStaged(df: DataFrame, op: String): Boolean = {
     import scala.util.control.NonFatal
-    val fp0 = appendMetaFingerprint()
-    val cmap = ColumnMap.load(spark, path)
+    val tm = meta
+    if (!appendStageEligible(df, tm)) return false
+    val cdf0 = ChangeFeed.isEnabled(spark, path)
     // same transform chain as [[appendBody]] — identity included: the
     // block is drawn (and the high-water persisted) here, BEFORE the
     // lock-free staging write, so concurrent stagers never collide
-    val physBatch = upcastBatch(WideCols.canonicalize(
-      ColumnMap.toPhysical(insertBatch(df, meta), cmap),
-      WideCols.load(spark, path)), cmap)
+    val physBatch = upcastBatch(tm.physical(insertBatch(df, tm)), tm)
     // post-transform physical-name check: a staged column missing from
-    // the recorded reader schema means extendReaderSchema would have to
-    // WRITE (a global-lock read-modify-write) — serial path's job
-    WideCols.readerSchema(spark, path).foreach { cur =>
-      val have = cur.fieldNames.map(_.toLowerCase).toSet
-      if (!physBatch.schema.fieldNames.forall(n =>
-          have.contains(n.toLowerCase)))
-        return false
-    }
+    // the recorded reader schema means the record would have to change
+    // (a global-lock read-modify-write) — serial path's job
+    if (tm.evolvedBy(None, physBatch.schema) != tm) return false
     val token = java.util.UUID.randomUUID().toString.take(12)
     val staging = new Path(commitsDir, s"append_staging_$token")
     fs.mkdirs(commitsDir)
@@ -1811,8 +1758,8 @@ final class MedallionTable(
         "p:" + (if (i < 0) "" else r.substring(0, i))
       }.toSet
       withClaimedCommitScoped(op, Some(footprint)) { claimed =>
-        if (appendMetaFingerprint() != fp0) throw AppendMetaDrift()
         val cdfOn = ChangeFeed.isEnabled(spark, path)
+        if (cdfOn != cdf0 || meta != tm) throw AppendMetaDrift()
         // stamp AFTER our own claim: any LATER foreign claim aborts the
         // incremental manifest commit below (absent, never stale)
         val stamp1 = commitStamp()
@@ -1843,7 +1790,7 @@ final class MedallionTable(
             commitStamp() == stamp1 && {
               try {
                 TableStats.completeIncrementalUpdate(spark, path, published,
-                  stashedPhysicalSchema())
+                  tm)
                 true
               } catch { case NonFatal(_) => false }
             }
@@ -1878,39 +1825,21 @@ final class MedallionTable(
       if (incremental || cdfOn) dataFileSet() else Set.empty[String]
     // appended files must carry the PHYSICAL names the existing files do
     // (mergeSchema would otherwise read a renamed column as two) — and,
-    // under a live type-widening overlay, the WIDE types (canonicalize:
-    // new files never reintroduce a narrow spelling). extendReaderSchema
-    // runs BEFORE the data lands (WideCols scaladoc: a crash between the
-    // two degrades the evolving append to a metadata-only ADD COLUMN).
-    val cmap = ColumnMap.load(spark, path)
-    val physBatch = upcastBatch(WideCols.canonicalize(
-      ColumnMap.toPhysical(insertBatch(df, meta), cmap),
-      WideCols.load(spark, path)), cmap)
-    WideCols.extendReaderSchema(spark, path, physBatch.schema)
-    // schema-evolving append: keep the stashed DDL (the authority for
-    // the emptied-table read fallback and for upcastBatch's declared
-    // types) in step with the union the footers now carry — otherwise a
-    // column added by append evolution stays invisible to both until
-    // the next rewrite re-stashes. Logical names; BEFORE the data write
-    // (the crash window then reads as a metadata-only declaration,
-    // matching extendReaderSchema's contract above).
-    val sfStash = new Path(path, "_graft_meta/schema.ddl")
-    if (fs.exists(sfStash)) {
-      val stash = org.apache.spark.sql.types.StructType
-        .fromDDL(readMetaText(sfStash))
-      val have = stash.fieldNames.map(_.toLowerCase).toSet
-      val fresh = df.schema.fields.filterNot(f =>
-        have.contains(f.name.toLowerCase))
-      if (fresh.nonEmpty)
-        stashSchema(org.apache.spark.sql.types.StructType(
-          stash.fields ++ fresh))
-    }
+    // under a live type widening, the WIDE types (canonicalize: new files
+    // never reintroduce a narrow spelling). A schema-evolving append
+    // extends the record's schema (the authority for the emptied-table
+    // read and for upcastBatch's declared types) and reader schema BEFORE
+    // the data lands ([[TableMeta.evolvedBy]]: a crash between the two
+    // reads as a metadata-only ADD COLUMN).
+    val tm = meta
+    val physBatch = upcastBatch(tm.physical(insertBatch(df, tm)), tm)
+    val next = tm.evolvedBy(Some(df.schema), physBatch.schema)
+    if (next != tm) persistMeta(next)
     writer(physBatch, SaveMode.Append).parquet(path)
     val added =
       if (incremental || cdfOn) (dataFileSet() -- before).toSeq else Nil
     if (incremental)
-      try TableStats.completeIncrementalUpdate(spark, path, added,
-        stashedPhysicalSchema())
+      try TableStats.completeIncrementalUpdate(spark, path, added, next)
       catch {
         // pending = junk; the explicit invalidate guards the corner
         // where a concurrent refresh landed a manifest that predates
@@ -1933,21 +1862,16 @@ final class MedallionTable(
     * as-is it would land a third footer spelling `mergeSchema` refuses
     * to merge). A batch column WIDER than the table refuses loudly with
     * the ALTER COLUMN TYPE hatch — silently landing it would break every
-    * future read the same way. Types come from the stashed schema DDL
+    * future read the same way. Types come from the recorded schema
     * (logical names → mapped physical; absent on append-only-created
     * tables, where this is a no-op — the legacy contract). Non-widening
     * type differences pass through untouched (struct evolution etc. keep
     * their existing `mergeSchema` semantics).
     */
-  private def upcastBatch(physBatch: DataFrame,
-      cmap: Map[String, String]): DataFrame = {
-    val sf = new Path(path, "_graft_meta/schema.ddl")
-    if (!fs.exists(sf)) return physBatch
-    val stash = org.apache.spark.sql.types.StructType
-      .fromDDL(readMetaText(sf))
-    val physTypes = stash.fields
-      .map(f => cmap.getOrElse(f.name, f.name).toLowerCase -> f.dataType)
-      .toMap
+  private def upcastBatch(physBatch: DataFrame, tm: TableMeta): DataFrame = {
+    val physTypes = tm.physicalSchema.fold(
+      Map.empty[String, org.apache.spark.sql.types.DataType])(
+      _.fields.map(f => f.name.toLowerCase -> f.dataType).toMap)
     // partition columns are OUT of scope either way: their values are
     // directory names, not footer pages — no narrow/wide footer conflict
     // exists for them, and the standing-index tables legitimately append
@@ -2023,9 +1947,11 @@ final class MedallionTable(
       // (and forgets the generated columns). Identity assignment runs
       // during argument evaluation, before the delete.
       val m = meta
-      try writer(insertBatch(df, m), SaveMode.Overwrite).parquet(path)
-      finally persistMeta(m)
-      stashSchema(df.schema)
+      var next = m
+      try {
+        writer(insertBatch(df, m), SaveMode.Overwrite).parquet(path)
+        next = m.rewritten(df.schema)
+      } finally persistMeta(next)
       // same NonFatal guard as appendBody: a capture IO failure must not
       // unwind withClaimedCommit (which would delete the claimed marker
       // AFTER the data and declarations landed, leaving a populated table
@@ -2190,8 +2116,7 @@ final class MedallionTable(
     val logical = read // post-evolution: includes any just-added columns
     MergeOps.refuseEvolvedAssignments(logical.columns.toSeq,
       allClauses, path)
-    val liveAll = SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-      dvLiveWithPos(), ColumnMap.load(spark, path)))
+    val liveAll = dvLive()
     // Partition-pruned table pass: when a partition column is among the
     // merge keys, only its source-side key values can match — derive an
     // isin filter from the (broadcast-sized by contract) source, and
@@ -2268,7 +2193,7 @@ final class MedallionTable(
         plan.newVersions(j).unionByName(plan.inserts(j)), m)
       // stage 1: new versions + inserts — table partition layout, CHECKs
       // enforced, physical column names (same dialect as the base files)
-      writeBatch(enforced(newRows, m), batch)
+      writeBatch(enforced(newRows, m), batch, m)
       // stage 2: marks for the consumed matched rows' OLD positions
       plan.marks(j).write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
       // row-based emptiness: an empty frame's write can still leave a
@@ -2321,9 +2246,9 @@ final class MedallionTable(
     * physical column names, the same dialect as the base files. The data
     * schema written goes to the snapshot the commit publishes.
     */
-  private def writeBatch(rows: DataFrame, batch: String): Unit = {
-    val staged = WideCols.canonicalize(ColumnMap.toPhysical(rows,
-      ColumnMap.load(spark, path)), WideCols.load(spark, path))
+  private def writeBatch(rows: DataFrame, batch: String,
+      m: TableMeta): Unit = {
+    val staged = m.physical(rows)
     val w = staged.write.mode(SaveMode.Overwrite)
     (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
      else w).parquet(DvUpdates.batchDataDir(path, batch))
@@ -2431,18 +2356,18 @@ final class MedallionTable(
       val w = writerTweak(newData.write.mode(SaveMode.Overwrite))
       (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w)
         .parquet(tmp.toString)
-      // Metadata goes into the TMP directory BEFORE the swap, so the
-      // rename atomically carries schema + declarations with the
-      // data. Writing them after the swap left a crash window where the
-      // backup was already deleted but the new dir had neither schema.ddl
-      // (a rewrite that legally empties the table would then read as
-      // nonexistent — and a later vacuum() would "restore" the superseded
-      // backup over a committed delete) nor the declarations (silently
-      // disarming the CHECK gate). Any rewrite can legally produce zero
-      // rows (merge with delete-not-matched, row-level DELETE), and an
-      // empty parquet dir carries no schema of its own.
-      stashSchema(newData.schema, tmp)
-      persistMeta(m, tmp.toString)
+      // The record goes into the TMP directory BEFORE the swap, so the
+      // rename atomically carries schema + declarations with the data.
+      // Writing it after the swap left a crash window where the backup
+      // was already deleted but the new dir had no schema (a rewrite that
+      // legally empties the table would then read as nonexistent — and a
+      // later vacuum() would "restore" the superseded backup over a
+      // committed delete) and no declarations (silently disarming the
+      // CHECK gate). Any rewrite can legally produce zero rows (merge with
+      // delete-not-matched, row-level DELETE), and an empty parquet dir
+      // carries no schema of its own. The product is materialized, so the
+      // record's layout resets ([[TableMeta.rewritten]]).
+      persistMeta(m.rewritten(newData.schema), tmp.toString)
       MedallionTable.testFailpoint("pre-commit")
       if (!tryClaimCommit(expectedVersion, op))
         throw new java.util.ConcurrentModificationException(
@@ -2525,10 +2450,10 @@ final class MedallionTable(
     * directory (idempotent under retry, like [[mergePruned]]'s
     * per-partition commit — re-run after a crash to finish).
     *
-    * The table schema is stashed in `_graft_meta/schema.ddl` first, so a
-    * delete that empties the table leaves it readable (empty, schema
-    * intact) instead of an unreadable bare directory — the parquet-dir
-    * analog of Delta keeping schema in its log.
+    * The table schema is recorded in the table record, so a delete that
+    * empties the table leaves it readable (empty, schema intact) instead
+    * of an unreadable bare directory — the parquet-dir analog of Delta
+    * keeping schema in its log.
     */
   def delete(cond: Column): Unit = {
     val df = read // ONE relation: schema, refs analysis, and rewrite share it
@@ -2555,9 +2480,11 @@ final class MedallionTable(
       }
       hideUnlaidBatchRows(cond)
       invalidateStats()
-      // Fast path bypasses rewriteVia (which stashes after its swap): a
-      // delete that drops every partition must leave the table readable.
-      stashSchema(schema)
+      // Fast path bypasses rewriteVia (which records the schema with its
+      // swap): a delete that drops every partition must leave the table
+      // readable.
+      val m = meta
+      if (!m.schema.contains(schema)) persistMeta(m.copy(schema = Some(schema)))
       }
     } else {
       // DELETE removes rows where cond is TRUE; FALSE and NULL survive
@@ -2651,11 +2578,11 @@ final class MedallionTable(
         val census0 = source.metaCensusHash()
         val m = source.meta
         val hw = source.readIdentityHw()
-        MedallionTable.retryOnVanishedFiles() {
+        val schema = MedallionTable.retryOnVanishedFiles() {
           val df = source.read
           val w = df.write.mode(SaveMode.Overwrite)
           (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
-          stashSchema(df.schema)
+          df.schema
         }
         if (source.writeLockHeld() || source.metaCensusHash() != census0) {
           if (attempts >= 4)
@@ -2665,7 +2592,7 @@ final class MedallionTable(
                 "settle")
           // the next Overwrite replaces the torn copy wholesale
         } else {
-          persistMeta(m)
+          persistMeta(m.rewritten(schema))
           writeIdentityHw(hw)
           done = true
         }
@@ -2675,8 +2602,8 @@ final class MedallionTable(
 
   /** SHALLOW CLONE ([[ShallowClone]]): make THIS (empty) table a
     * zero-copy clone of `source` — pointer manifest to the source's
-    * current data files plus copies of its read-state metadata (deletion
-    * vector, column map, schema overlay, declarations, schema stash),
+    * current data files plus copies of its read state (deletion vector
+    * and the whole table record: declarations, schema and layout),
     * all O(files)
     * driver work and zero data bytes. Writes land locally; the first
     * rewrite (OPTIMIZE being the canonical one) materializes and
@@ -2699,25 +2626,21 @@ final class MedallionTable(
     require(files.nonEmpty, s"clone source ${source.path} has no data files")
     withClaimedCommit("clone") {
       ShallowClone.write(spark, path, files)
-      def copyMeta(name: String): Unit = {
-        val src = new Path(source.path, s"_graft_meta/$name")
-        val sfs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (sfs.exists(src))
-          org.apache.hadoop.fs.FileUtil.copy(sfs, src, fs,
-            new Path(path, s"_graft_meta/$name"), false, true,
-            spark.sparkContext.hadoopConfiguration)
-      }
-      // addcols/dropcols: the clone's reads apply the CLONE's overlay
-      // over the pointed-at files — without copies, a source's dropped
-      // column resurrects and an unmaterialized ADD vanishes; widecols/
-      // physschema: a widened source's files mix narrow/wide footers the
-      // clone could not otherwise resolve
-      Seq("dv", "colmap.tsv", "addcols.tsv", "dropcols.tsv", "widecols.tsv",
-        "physschema.ddl").foreach(copyMeta)
-      // every declaration travels; identity ids continue above the
-      // source's, the clone's high-water bootstrapping from its own data
-      persistMeta(source.meta)
-      stashSchema(source.read.schema)
+      val dv = new Path(source.path, "_graft_meta/dv")
+      val sfs = dv.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (sfs.exists(dv))
+        org.apache.hadoop.fs.FileUtil.copy(sfs, dv, fs,
+          new Path(path, "_graft_meta/dv"), false, true,
+          spark.sparkContext.hadoopConfiguration)
+      // the whole record travels: the clone's reads apply the source's
+      // layout over the pointed-at files (without it a dropped column
+      // resurrects, an unmaterialized ADD vanishes, and a widened
+      // source's mixed narrow/wide footers cannot be resolved); identity
+      // ids continue above the source's, the clone's high-water
+      // bootstrapping from its own data
+      val m = source.meta
+      persistMeta(
+        if (m.schema.isDefined) m else m.copy(schema = Some(source.read.schema)))
     }
   }
 
@@ -2739,19 +2662,6 @@ final class MedallionTable(
       s"rename: column '$oldName' not in ${schema.fieldNames.mkString("[", ",", "]")}")
     require(!schema.fieldNames.contains(newName),
       s"rename: column '$newName' already exists")
-    require(!SchemaOverlay.drops(spark, path).contains(newName),
-      s"rename: '$newName' is a dropped column's physical slot — the read " +
-        "projection would collide with the tombstoned bytes; OPTIMIZE to " +
-        "shed them first")
-    // mirror of addColumn's guard: after rename x→z, the PHYSICAL slot x
-    // still lives in every data file. A later rename y→x passes the
-    // logical-schema checks, but the map {z→x, x→y} then renames through
-    // a colliding name on both the read (toLogical) and write
-    // (toPhysical) fold — duplicate columns on every read surface.
-    require(!ColumnMap.load(spark, path).values.toSet.contains(newName),
-      s"rename: '$newName' is the physical slot of a renamed column — " +
-        "reads would surface two columns with that name; OPTIMIZE to " +
-        "materialize the earlier rename first")
     require(!partitionColumns.contains(oldName),
       s"rename: '$oldName' is a partition column — its directory layout " +
         "is physical; rewrite the table to rename it")
@@ -2760,16 +2670,27 @@ final class MedallionTable(
         "see the column map — OPTIMIZE to materialize, then re-sync")
     withClaimedCommit("rename-column") {
       val m = meta
-      val renamed = m.columnChanged(oldName, Some(newName))
-      // an unmaterialized ADDed column renames inside the overlay (no
-      // physical column exists to map); everything else through the map
-      if (!SchemaOverlay.renameAdd(spark, path, oldName, newName))
-        ColumnMap.rename(spark, path, oldName, newName)
+      require(!m.drops.contains(newName),
+        s"rename: '$newName' is a dropped column's physical slot — the " +
+          "read projection would collide with the tombstoned bytes; " +
+          "OPTIMIZE to shed them first")
+      // mirror of addColumn's guard: after rename x→z, the PHYSICAL slot x
+      // still lives in every data file. A later rename y→x passes the
+      // logical-schema checks, but the map {z→x, x→y} then renames through
+      // a colliding name on both the read (toLogical) and write
+      // (toPhysical) fold — duplicate columns on every read surface.
+      require(!m.colMap.values.toSet.contains(newName),
+        s"rename: '$newName' is the physical slot of a renamed column — " +
+          "reads would surface two columns with that name; OPTIMIZE to " +
+          "materialize the earlier rename first")
+      val next = m.columnChanged(oldName, Some(newName))
+        .renamedColumn(oldName, newName)
+        .copy(schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.map(f =>
+            if (f.name == oldName) f.copy(name = newName) else f))))
       invalidateStats()
       fs.delete(new Path(path, s"_graft_meta/bloom/$oldName"), true)
-      if (renamed != m) persistMeta(renamed)
-      stashSchema(org.apache.spark.sql.types.StructType(schema.fields.map(f =>
-        if (f.name == oldName) f.copy(name = newName) else f)))
+      persistMeta(next)
     }
   }
 
@@ -2789,17 +2710,18 @@ final class MedallionTable(
     val schema = read.schema
     require(!schema.fieldNames.contains(name),
       s"add column: '$name' already exists")
-    require(!SchemaOverlay.drops(spark, path).contains(name),
+    val m = meta
+    require(!m.drops.contains(name),
       s"add column: '$name' is a dropped column's physical slot — its old " +
         "bytes would resurrect under the new column; OPTIMIZE to shed them " +
         "first")
-    require(!ColumnMap.load(spark, path).values.toSet.contains(name),
+    require(!m.colMap.values.toSet.contains(name),
       s"add column: '$name' is the physical slot of a renamed column — " +
         "new files would collide with the old bytes; OPTIMIZE to " +
         "materialize the rename first")
-    SchemaOverlay.recordAdd(spark, path, name, typeDdl)
-    stashSchema(org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(name, dt)))
+    persistMeta(m.copy(adds = m.adds :+ (name -> dt),
+      schema = Some(org.apache.spark.sql.types.StructType(
+        schema.fields :+ org.apache.spark.sql.types.StructField(name, dt)))))
   }
 
   /** Metadata-only `ALTER TABLE DROP COLUMN` ([[SchemaOverlay]]): the
@@ -2824,8 +2746,7 @@ final class MedallionTable(
       val dropped = m.columnChanged(name, None)
       // the rename chain ends here: the tombstone carries the PHYSICAL
       // name the files use, and the map entry (if any) is retired
-      val physical = ColumnMap.load(spark, path).getOrElse(name, name)
-      if (physical != name) ColumnMap.rename(spark, path, name, physical)
+      val physical = m.colMap.getOrElse(name, name)
       // tombstone ⟺ some file physically carries the column (an ADD
       // entry alone proves nothing: appends may have materialized it).
       // Clone-aware: a shallow clone's columns live in the POINTED-AT
@@ -2838,19 +2759,18 @@ final class MedallionTable(
         // here — partition columns were refused above
         val files = ShallowClone.scanFiles(spark, path)
         if (files.nonEmpty)
-          // WideCols.reader: post-widen footers refuse to merge; the
-          // overlay schema is exactly the materialization census anyway
+          // the record's reader: post-widen footers refuse to merge; the
+          // reader schema is exactly the materialization census anyway
           // (seeded from footers, extended by every materializing append)
-          WideCols.reader(spark, path).parquet(files: _*).schema
+          m.reader(spark).parquet(files: _*).schema
         else new org.apache.spark.sql.types.StructType()
       }
-      SchemaOverlay.recordDrop(spark, path, physical,
-        rawSchema.fieldNames.contains(physical))
       invalidateStats()
       fs.delete(new Path(path, s"_graft_meta/bloom/$name"), true)
-      if (dropped != m) persistMeta(dropped)
-      stashSchema(org.apache.spark.sql.types.StructType(
-        schema.fields.filterNot(_.name == name)))
+      persistMeta(dropped
+        .droppedColumn(name, rawSchema.fieldNames.contains(physical))
+        .copy(schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.filterNot(_.name == name)))))
     }
   }
 
@@ -2883,29 +2803,18 @@ final class MedallionTable(
       s"ALTER COLUMN TYPE: column '$name' not in " +
         schema.fieldNames.mkString("[", ",", "]"))
     val from = schema(name).dataType
-    // heal case: a crash between record()'s two writes leaves the reader
-    // schema wide with no widecols entry (WideCols.record scaladoc) — the
-    // logical type then ALREADY reads as `target`, so the user's retried
-    // ALTER arrives as a same-type declaration; accept it and complete
-    // the overlay instead of refusing it as a no-op
-    val physical0 = ColumnMap.load(spark, path).getOrElse(name, name)
-    val healing = from == target &&
-      WideCols.readerSchema(spark, path).exists(s =>
-        s.fieldNames.contains(physical0) &&
-          s(physical0).dataType == target) &&
-      !WideCols.load(spark, path).contains(physical0)
-    require(healing || WideCols.supported(from, target),
+    require(WideCols.supported(from, target),
       s"ALTER COLUMN TYPE: ${from.sql} -> ${target.sql} on '$name' is " +
         s"not a supported widening (${WideCols.describeSupported}); " +
         "rewrite the table (read + cast + overwrite) for any other change")
     require(!partitionColumns.contains(name),
       s"ALTER COLUMN TYPE: '$name' is a partition column — its directory " +
         "values are physical; rewrite the table to retype it")
-    val m = meta
-    require(!m.isIdentity(name),
+    val declared = meta
+    require(!declared.isIdentity(name),
       s"ALTER COLUMN TYPE: '$name' is GENERATED ALWAYS AS IDENTITY — the " +
         "allocator is BIGINT-fixed; dropIdentityColumn() to hand-manage")
-    val genHit = m.generated.filter { case (g, e) =>
+    val genHit = declared.generated.filter { case (g, e) =>
       g.equalsIgnoreCase(name) ||
         s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
           .findFirstIn(e).isDefined
@@ -2922,25 +2831,19 @@ final class MedallionTable(
         "cannot see the widening overlay — OPTIMIZE to materialize, " +
         "then re-sync")
     withClaimedCommit("widen-column") {
-      val physical = ColumnMap.load(spark, path).getOrElse(name, name)
-      // current reader schema in PHYSICAL names: the live overlay schema
-      // when present (re-widen chains), else the LAST footer merge this
-      // table will ever run (explicit schemas take over from here).
-      // Legally-emptied table (all rows deleted; only schema.ddl keeps it
-      // existing): there are no footers to merge, so Spark's inference
-      // would throw unable-to-infer inside the claimed commit — seed from
-      // the stashed DDL instead (authoritative on the empty branch, see
-      // [[read]]), mapped to physical names so the overlay records the
-      // on-disk spelling.
-      val cmapSeed = ColumnMap.load(spark, path)
-      val ddlFile = new Path(path, "_graft_meta/schema.ddl")
-      val current = WideCols.readerSchema(spark, path).getOrElse(
-        if (!hasDataFiles(new Path(path)) && fs.exists(ddlFile))
-          org.apache.spark.sql.types.StructType(
-            org.apache.spark.sql.types.StructType
-              .fromDDL(readMetaText(ddlFile)).fields
-              .map(f => f.copy(name = cmapSeed.getOrElse(f.name, f.name))))
-        else spark.read.option("mergeSchema", "true").parquet(path).schema)
+      val snap = TableSnapshot.of(this)
+      val m = snap.meta
+      val physical = m.colMap.getOrElse(name, name)
+      // current reader schema in PHYSICAL names: the record's when a
+      // widening is live (re-widen chains), else the snapshot's resolved
+      // base schema — the last footer-merge resolution this table runs
+      // (explicit schemas take over from here), already in hand after
+      // the `read` above. Legally-emptied table (all rows deleted; only
+      // the recorded schema keeps it existing): there are no footers to
+      // merge, so seed from the recorded schema in physical names.
+      val current = m.readerSchema.getOrElse(
+        if (!snap.hasData && m.physicalSchema.isDefined) m.physicalSchema.get
+        else mergedParquet(snap).schema)
       require(current.fieldNames.contains(physical),
         s"ALTER COLUMN TYPE: '$name' is declared by a not-yet-" +
           "materialized ADD COLUMN — dropColumn() the declaration and " +
@@ -2948,25 +2851,20 @@ final class MedallionTable(
       val resolved = org.apache.spark.sql.types.StructType(
         current.fields.map(f =>
           if (f.name == physical) f.copy(dataType = target) else f))
-      WideCols.record(spark, path, physical, target, resolved)
       invalidateStats()
       fs.delete(new Path(path, s"_graft_meta/bloom/$name"), true)
-      stashSchema(org.apache.spark.sql.types.StructType(schema.fields.map(
-        f => if (f.name == name) f.copy(dataType = target) else f)))
+      persistMeta(m.widenedColumn(physical, target, resolved)
+        .copy(schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.map(f =>
+            if (f.name == name) f.copy(dataType = target) else f)))))
     }
   }
 
   /** Live widened columns (LOGICAL name → wide type); empty when no
-    * type-widening overlay is live.
+    * type widening is live.
     */
-  def widenedColumns: Map[String, org.apache.spark.sql.types.DataType] = {
-    val phys = WideCols.load(spark, path)
-    if (phys.isEmpty) phys
-    else {
-      val toLogical = ColumnMap.load(spark, path).map(_.swap)
-      phys.map { case (p, t) => toLogical.getOrElse(p, p) -> t }
-    }
-  }
+  def widenedColumns: Map[String, org.apache.spark.sql.types.DataType] =
+    meta.widenedLogical
 
   // ---- Idempotent writes (Delta txnAppId/txnVersion parity) ------------
 
@@ -3119,35 +3017,9 @@ final class MedallionTable(
     * matches the other in-place mutations: a manifest must never
     * describe rows a reader won't see.
     */
-  /** Physical live view carrying `(__graft_dv_file, __graft_dv_pos)` —
-    * the shared mark-computation base for [[deleteVectored]],
-    * [[deleteVectoredKeys]] and [[updateVectored]]: base scan ∪ committed
-    * update batches, position columns captured PER BRANCH (`_metadata`
-    * does not survive a union), DV applied per branch. Rows already
-    * amended by an earlier update batch are positioned by their batch
-    * file, so marks over them hide the amended version — chains compose.
-    */
-  /** The LOGICAL schema from the stashed DDL alone — one tiny metadata
-    * read, NO footer-resolution job. For footprint/predicate-analysis
-    * work that runs BEFORE the writer lock on every scoped op, paying
-    * `read`'s schema resolution there measurably taxed commit-heavy
-    * workloads (within-epoch A/B: +13-15% on the DV/CDF bench queries).
-    * Partition columns can neither rename nor widen (both refuse), so
-    * the stash is authoritative for exactly the columns footprint
-    * analysis needs; callers fall back to the full `read` when the
-    * stash is absent (append-only legacy tables).
-    */
-  private def cheapLogicalSchema(): Option[org.apache.spark.sql.types.StructType] =
-    try {
-      val sf = new Path(path, "_graft_meta/schema.ddl")
-      if (fs.exists(sf))
-        Some(org.apache.spark.sql.types.StructType.fromDDL(readMetaText(sf)))
-      else None
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Column names a predicate references, resolved against `schema` by a
     * LOCAL empty relation (analysis only — no files listed, no job).
-    * None when analysis fails (stale stash naming: fall back to the
+    * None when analysis fails (stale recorded naming: fall back to the
     * conservative global path).
     */
   private def predicateRefs(cond: Column,
@@ -3161,21 +3033,17 @@ final class MedallionTable(
   /** Physical-name base-dir scan that stays schema-resolvable when the
     * base holds NO data files — incremental clustering's steady state
     * (the data lives in batch dirs) and the legally-emptied table both
-    * leave nothing to infer footers from, so the stashed DDL (mapped to
-    * physical names) seeds an explicit schema instead.
+    * leave nothing to infer footers from, so the recorded schema in
+    * physical names seeds an explicit schema instead.
     */
-  private def basePhysicalScan(snap: TableSnapshot): DataFrame = {
-    val sf = new Path(path, "_graft_meta/schema.ddl")
-    if (snap.wide.isEmpty && !snap.hasData && fs.exists(sf)) {
-      val cmap = ColumnMap.load(spark, path)
-      spark.read.schema(org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructType
-          .fromDDL(readMetaText(sf)).fields
-          .map(f => f.copy(name = cmap.getOrElse(f.name, f.name)))))
-        .parquet(path)
-    } else mergedParquet(snap) // same WideCols-aware resolution, from
-      // the snapshot (a DV op's base scan pays no footer job)
-  }
+  private def basePhysicalScan(snap: TableSnapshot): DataFrame =
+    snap.meta.physicalSchema match {
+      case Some(s) if snap.meta.readerSchema.isEmpty && !snap.hasData =>
+        spark.read.schema(s).parquet(path)
+      // same widening-aware resolution, from the snapshot (a DV op's base
+      // scan pays no footer job)
+      case _ => mergedParquet(snap)
+    }
 
   /** Reader with THIS table's resolved base physical schema declared —
     * for change-feed scans over groups of LIVE base files, where a
@@ -3195,12 +3063,21 @@ final class MedallionTable(
     else Some(spark.read.schema(basePhysicalScan(snap).schema))
   }
 
-  /** The live rows in physical names plus the DV position columns the
-    * vectored writers mark by (`__graft_dv_file` = relocation-stable file
-    * key, `__graft_dv_pos` = row index), derived from the same keyed
-    * union [[read]] builds.
+  /** The live rows as [[read]] shows them plus the DV position columns
+    * the vectored writers mark by (`__graft_dv_file` = relocation-stable
+    * file key, `__graft_dv_pos` = row index) — the shared
+    * mark-computation base for [[deleteVectored]],
+    * [[deleteVectoredKeys]], [[updateVectored]] and [[mergeVectored]],
+    * derived from the same keyed union [[read]] builds: base scan ∪
+    * committed update batches, positions captured PER BRANCH
+    * (`_metadata` does not survive a union), DV applied per branch. Rows
+    * already amended by an earlier update batch are positioned by their
+    * batch file, so marks over them hide the amended version — chains
+    * compose. The record's layout applies over the positioned rows, so a
+    * predicate resolves against the logical schema (unmaterialized ADDs
+    * as typed NULLs, dropped columns invisible).
     */
-  private def dvLiveWithPos(): DataFrame = {
+  private def dvLive(): DataFrame = {
     import org.apache.spark.sql.functions.col
     val snap = TableSnapshot.of(this)
     // A clone's scanFiles carries BOTH the source's committed batch files
@@ -3211,15 +3088,15 @@ final class MedallionTable(
     // versions (ShallowCloneSpec "two vectored updates" regression).
     val keyed =
       if (snap.isClone)
-        DvUpdates.amendedKeyed(spark, snap, Some(WideCols.reader(spark, path)
+        DvUpdates.amendedKeyed(spark, snap, Some(snap.meta.reader(spark)
           .parquet(snap.scanFiles: _*)), batchesInBase = true).get
       else if (snap.hasData) liveKeyed(snap)
       else DvUpdates.amendedKeyed(spark, snap, Some(basePhysicalScan(snap))).get
     val data = keyed.columns.toSeq
       .filterNot(c => c == DvUpdates.FileCol || c == DvUpdates.PosCol)
-    keyed.select(data.map(c => col(s"`$c`")) ++ Seq(
+    snap.meta.logical(keyed.select(data.map(c => col(s"`$c`")) ++ Seq(
       DeletionVectors.fileKey(col(DvUpdates.FileCol)).as("__graft_dv_file"),
-      col(DvUpdates.PosCol).as("__graft_dv_pos")): _*)
+      col(DvUpdates.PosCol).as("__graft_dv_pos")): _*))
   }
 
   def deleteVectored(cond: Column): Unit =
@@ -3236,18 +3113,22 @@ final class MedallionTable(
     // with EACH OTHER), letting a disjoint OPTIMIZE … WHERE run
     // concurrently. Row-level predicates keep the global lock: their
     // scan and marks can touch any partition.
-    // cheap pre-lock analysis (stash schema + local relation — no footer
-    // job): the full `read` here taxed every DV delete ~13-15% on
-    // commit-heavy workloads (within-epoch A/B, SCALING.md round 16)
+    // cheap pre-lock analysis (recorded schema + local relation — no
+    // footer job): the full `read` here taxed every DV delete ~13-15% on
+    // commit-heavy workloads (within-epoch A/B, SCALING.md round 16).
+    // Partition columns can neither rename nor widen (both refuse), so
+    // the recorded schema is authoritative for exactly the columns
+    // footprint analysis needs; None (no schema recorded: append-created
+    // tables) keeps the global lock. A corrupt record throws.
     val cheapSchema =
-      if (partitionColumns.isEmpty || !exists) None else cheapLogicalSchema()
+      if (partitionColumns.isEmpty) None else meta.schema
     val footprint: Option[Set[String]] = cheapSchema.flatMap { schema =>
       predicateRefs(cond, schema) match {
         case Some(refs)
             if refs.nonEmpty && refs.subsetOf(partitionColumns.toSet) =>
           Some(matchingPartitionDirs(cond, schema)
             .map(d => "p:" + relativePartitionDir(d)).toSet + "dv-stage")
-        case _ => None // row-level predicate, or stale stash: global
+        case _ => None // row-level predicate, or stale record: global
       }
     }
     withClaimedCommitScoped("delete-dv", footprint) { claimed =>
@@ -3270,8 +3151,7 @@ final class MedallionTable(
       // overlay applied so the predicate resolves against the SAME logical
       // schema delete() sees (unmaterialized ADDs evaluate as typed NULLs,
       // tombstoned columns are invisible) — the result-identical contract
-      val live = SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        dvLiveWithPos(), ColumnMap.load(spark, path)))
+      val live = dvLive()
       invalidateStats()
       live.filter(coalesce(cond, lit(false)))
         .select(org.apache.spark.sql.functions.col("__graft_dv_file").as("file"),
@@ -3319,8 +3199,7 @@ final class MedallionTable(
       val dvPath = DeletionVectors.dir(path)
       val cdfOn = ChangeFeed.isEnabled(spark, path)
       val marksBefore = if (cdfOn) dvMarkFiles(dvPath) else Set.empty[String]
-      val live = SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        dvLiveWithPos(), ColumnMap.load(spark, path)))
+      val live = dvLive()
       invalidateStats()
       live.join(broadcast(keys.select(keyCols.map(
             org.apache.spark.sql.functions.col): _*).distinct()),
@@ -3415,7 +3294,7 @@ final class MedallionTable(
     */
   def compactDvBatches(): Int = withClaimedCommit("dv-batch-compact") {
     import org.apache.spark.sql.functions.col
-    require(ColumnMap.load(spark, path).isEmpty,
+    require(meta.colMap.isEmpty,
       "dv-batch-compact: table has renamed columns (column map); run " +
         "OPTIMIZE to materialize the map and the batches together")
     val old = DvUpdates.committedBatches(spark, path)
@@ -3511,8 +3390,7 @@ final class MedallionTable(
             logical.columns.mkString("[", ",", "]"))) -> v
       }
       val batch = java.util.UUID.randomUUID().toString.take(12)
-      val live = SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        dvLiveWithPos(), ColumnMap.load(spark, path)))
+      val live = dvLive()
       val matched = live.filter(coalesce(cond, lit(false)))
       // ONE projection = simultaneous-assignment semantics, exactly as
       // update(); the position columns drop out of the projection
@@ -3523,7 +3401,7 @@ final class MedallionTable(
       // stage 1: new row versions — table partition layout, CHECKs
       // enforced, physical names (batch files must speak the same schema
       // dialect as the base files so mergeSchema unions stay uniform)
-      writeBatch(enforced(newRows, m), batch)
+      writeBatch(enforced(newRows, m), batch, m)
       // stage 2: marks for the matched rows' OLD positions
       matched.select(col("__graft_dv_file").as("file"),
           col("__graft_dv_pos").as("pos"))
@@ -3609,23 +3487,17 @@ final class MedallionTable(
     */
   def readVersion(n: Int): DataFrame = {
     val vdir = new Path(versionsDir, s"v$n")
-    // a snapshot taken while a type-widening overlay was live carries its
-    // archived reader schema (mixed narrow/wide footers refuse to merge)
-    val vreader = WideCols
-      .readerSchemaFrom(spark, WideCols.archivedSchemaFile(vdir))
-      .map(spark.read.schema)
-      .getOrElse(spark.read.option("mergeSchema", "true"))
+    // the version's own record: a snapshot taken while a widening was
+    // live reads under its reader schema (mixed narrow/wide footers
+    // refuse to merge), and its column map and overlay render it with
+    // the schema it had
+    val vm = versionMeta(vdir)
     val base =
       if (ShallowClone.isClone(spark, vdir.toString))
-        vreader.parquet(ShallowClone.scanFiles(spark, vdir.toString): _*)
-      else vreader.parquet(vdir.toString)
-    SchemaOverlay.applyTo(
-      ColumnMap.toLogical(
-        DeletionVectors.applied(spark, base,
-          DeletionVectors.archivedDir(vdir).toString, vdir.toString),
-        ColumnMap.loadFrom(spark, ColumnMap.archivedFile(vdir))),
-      SchemaOverlay.addsFrom(spark, SchemaOverlay.archivedAddFile(vdir)),
-      SchemaOverlay.dropsFrom(spark, SchemaOverlay.archivedDropFile(vdir)))
+        vm.reader(spark).parquet(ShallowClone.scanFiles(spark, vdir.toString): _*)
+      else vm.reader(spark).parquet(vdir.toString)
+    vm.logical(DeletionVectors.applied(spark, base,
+      DeletionVectors.archivedDir(vdir).toString, vdir.toString))
   }
 
   /** Rewrite the live table back to snapshot `n` (itself versioned). */
@@ -3739,14 +3611,14 @@ final class MedallionTable(
             s"version archive failed: update batch file $fp -> $dest")
       }
     }
-    val backupMap = new Path(backup, "_graft_meta/colmap.tsv")
-    if (fs.exists(backupMap))
-      fs.rename(backupMap, ColumnMap.archivedFile(backup))
+    // the record (column map, overlay, reader schema) renders the
+    // archived state with the schema and types it had
+    val backupMeta = TableMeta.file(backup.toString)
+    if (fs.exists(backupMeta))
+      fs.rename(backupMeta, TableMeta.archivedFile(backup))
     val backupClone = ShallowClone.file(backup.toString)
     if (fs.exists(backupClone))
       fs.rename(backupClone, ShallowClone.archivedFile(backup))
-    SchemaOverlay.archive(spark, backup) // add/drop overlay = archived schema
-    WideCols.archive(spark, backup) // widened types = archived reader schema
     fs.delete(new Path(backup, "_graft_meta"), true)
     val next = (listVersions() :+ 0).max + 1 // after carry-forward, so ids continue
     if (!fs.rename(backup, new Path(versionsDir, s"v$next")))
@@ -3960,11 +3832,9 @@ final class MedallionTable(
         .withColumn("__graft_dv_file",
           DeletionVectors.fileKey(col("_metadata.file_path")))
         .withColumn("__graft_dv_pos", col("_metadata.row_index"))
-      val baseLive = SchemaOverlay.applied(spark, path, ColumnMap.toLogical(
-        DeletionVectors.applied(spark,
-          prep(basePhysicalScan(TableSnapshot.of(this))),
-          DeletionVectors.dir(path), path),
-        ColumnMap.load(spark, path)))
+      val snap = TableSnapshot.of(this)
+      val baseLive = snap.meta.logical(DeletionVectors.applied(spark,
+        prep(basePhysicalScan(snap)), DeletionVectors.dir(path), path))
       val j = baseLive.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -3976,9 +3846,7 @@ final class MedallionTable(
           // table partition layout (rows unchanged: no CHECK re-run)
           val shaped = zShape(
             j.drop("__graft_dv_file", "__graft_dv_pos"), clusterBy, nFiles)
-          val w = WideCols.canonicalize(ColumnMap.toPhysical(shaped,
-            ColumnMap.load(spark, path)), WideCols.load(spark, path))
-            .write.mode(SaveMode.Overwrite)
+          val w = snap.meta.physical(shaped).write.mode(SaveMode.Overwrite)
           (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
            else w).parquet(batchDir)
           // stage 2: marks for every absorbed live row's old position
@@ -3995,14 +3863,16 @@ final class MedallionTable(
               s"cluster-incremental commit rename failed: $marksStaging " +
                 s"-> ${DvUpdates.marksDir(path, batch)}")
         }
-        // absorbing every base file can empty the base dir — stash the
+        // absorbing every base file can empty the base dir — record the
         // schema FIRST so the table keeps existing (the same contract as
         // delete()'s fast path; read()'s batch guard handles the rest).
         // The logical schema is already in hand on the positioned frame —
         // no second `read` construction needed
-        stashSchema(org.apache.spark.sql.types.StructType(j.schema.fields
+        val schema = org.apache.spark.sql.types.StructType(j.schema.fields
           .filterNot(f => f.name == "__graft_dv_file" ||
-            f.name == "__graft_dv_pos")))
+            f.name == "__graft_dv_pos"))
+        if (!snap.meta.schema.contains(schema))
+          persistMeta(snap.meta.copy(schema = Some(schema)))
         // absorb: every base row is now masked (or was already) — drop
         // the files. Best-effort and idempotent: a leftover contributes
         // zero live rows and is re-dropped by the next pass; readers
@@ -4140,7 +4010,7 @@ final class MedallionTable(
         // batch files are cleared atomically by the next full rewrite.
         val shaped = readBase().filter(cond).repartition(n,
           partitionColumns.map(org.apache.spark.sql.functions.col): _*)
-        ColumnMap.toPhysical(shaped, ColumnMap.load(spark, path)).write
+        ColumnMap.toPhysical(shaped, meta.colMap).write
           .mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partitionColumns: _*)
@@ -4220,7 +4090,7 @@ final class MedallionTable(
           compactDv(); 1
         } else 0) +
         (if (DvUpdates.committedBatches(spark, path).size > maxFiles &&
-            ColumnMap.load(spark, path).isEmpty) {
+            meta.colMap.isEmpty) {
           compactDvBatches(); 1
         } else 0)
       expireFeedByConf()
@@ -4484,7 +4354,7 @@ final class MedallionTable(
     * directory as a graft table IN PLACE — metadata only, zero data bytes
     * moved or rewritten (the 100 TB adoption story: a petabyte lake
     * directory becomes a governed table in O(1) data work). Stamps commit
-    * v1 (`convert`) so history/CDC have a baseline ordinal, stashes the
+    * v1 (`convert`) so history/CDC have a baseline ordinal, records the
     * schema (an all-rows-deleted table stays readable), and optionally
     * builds the stats manifest so file skipping and metadata aggregates
     * are armed from the first query (`withStats = false` defers that one
@@ -4496,7 +4366,9 @@ final class MedallionTable(
     require(exists, s"convert: no parquet data at $path")
     require(commitVersion == 0L,
       s"convert: $path already has graft commit history (v$commitVersion)")
-    withClaimedCommit("convert") { stashSchema(read.schema) }
+    withClaimedCommit("convert") {
+      persistMeta(meta.copy(schema = Some(read.schema)))
+    }
     if (withStats) refreshStats()
   }
 
@@ -4560,6 +4432,11 @@ final class MedallionTable(
     * dirs the authoritative dir-derived spelling is declared as well, so
     * cross-op conflicts with OPTIMIZE/DV-delete always match exactly).
     */
+  /** The footprint resource a scoped writer declares when it may
+    * rewrite the table record.
+    */
+  private val MetaResource = "meta"
+
   private def renderedPartitionDir(row: Row): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     partitionColumns.zipWithIndex.map { case (c, i) =>
@@ -4592,15 +4469,17 @@ final class MedallionTable(
     // merge racing a scoped compaction is caught by the compaction's
     // relist ⊆ declared assertion). Disjoint daily-ingest merges — the
     // dominant multi-job pattern at 100 TB — now commit concurrently.
-    // Widened tables add the shared physschema resource: two merges'
-    // extendReaderSchema calls are read-modify-write on one file.
+    // A merge that may rewrite the table record (a live widening: its
+    // product's new columns extend the reader schema) adds the shared
+    // record resource, so two scoped read-modify-writes of the record
+    // serialize.
     val existingDirs =
       if (exists) matchingPartitionDirs(prunePred, schema)
         .map(relativePartitionDir).toSet
       else Set.empty[String]
     val footprint = (existingDirs ++ touched.map(renderedPartitionDir))
       .map("p:" + _) ++
-      (if (WideCols.load(spark, path).nonEmpty) Set("physschema")
+      (if (meta.readerSchema.isDefined) Set(MetaResource)
        else Set.empty[String])
     // Dynamic partition overwrite replaces exactly the partitions present in
     // `merged`; all other partition directories are untouched on disk.
@@ -4624,6 +4503,10 @@ final class MedallionTable(
       // against it would dynamic-overwrite the predecessor's rows away
       // (latent under the old global lock too; surfaced by the
       // same-new-partition concurrency spec)
+      val m = meta
+      // as merge(): every source column is assigned, so a source carrying
+      // an identity column would write caller ids — ALWAYS refuses it
+      refuseIdentitySet(source.columns, "merge source", m)
       val prunedTarget = read.filter(prunePred) // partition-pruned scan
       val merged = MergeOps.merge3Clause(prunedTarget, source, keys,
         updateCondition, deleteNotMatchedBySource)
@@ -4641,12 +4524,20 @@ final class MedallionTable(
       }
       // canonicalize: this claim-first path writes into the LIVE dir, so
       // a widened column must land wide (the merged frame usually is —
-      // it reads through the overlay — but source-provided inserts can
-      // still carry the narrow spelling)
-      val prunedBatch = WideCols.canonicalize(
-        ColumnMap.toPhysical(enforced(merged, meta), ColumnMap.load(spark, path)),
-        WideCols.load(spark, path))
-      WideCols.extendReaderSchema(spark, path, prunedBatch.schema)
+      // it reads through the widening — but source-provided inserts can
+      // still carry the narrow spelling). Merge-inserted rows carry a
+      // NULL identity (the source may not assign it) — filled first, as
+      // on every rewrite path.
+      val prunedBatch = m.physical(enforced(fillIdentityNulls(merged, m), m))
+      val next = m.evolvedBy(None, prunedBatch.schema)
+      if (next != m) {
+        // the record changes only under its resource (see the footprint)
+        if (!footprint.contains(MetaResource))
+          throw new java.util.ConcurrentModificationException(
+            s"mergePruned: a type widening landed on $path after this " +
+              "merge declared its footprint; retry")
+        persistMeta(next)
+      }
       prunedBatch.write
         .mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")

@@ -1,7 +1,6 @@
 package graft.table
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.DataType
 
@@ -10,20 +9,19 @@ import org.apache.spark.sql.types.DataType
   * rename half.
   *
   * At 100 TB neither adding nor dropping a column may touch data files:
-  *   - ADD records (name, type) in `_graft_meta/addcols.tsv`; reads
-  *     surface the column as a typed NULL until some write materializes
-  *     it (then `mergeSchema` takes over and the overlay entry is a
+  *   - ADD records (name, type) in the table record ([[TableMeta.adds]]);
+  *     reads surface the column as a typed NULL until some write
+  *     materializes it (then `mergeSchema` takes over and the entry is a
   *     no-op).
-  *   - DROP records the column's PHYSICAL name in
-  *     `_graft_meta/dropcols.tsv` (a tombstone); the bytes stay in the
-  *     files, reads exclude the column, and the next full rewrite
-  *     (OPTIMIZE / merge / row-level DELETE) physically sheds it — the
-  *     swap drops the overlay with the rest of `_graft_meta`, the same
-  *     self-clearing lifecycle as [[ColumnMap]] and [[DeletionVectors]].
+  *   - DROP records the column's PHYSICAL name ([[TableMeta.drops]], a
+  *     tombstone); the bytes stay in the files, reads exclude the column,
+  *     and the next full rewrite (OPTIMIZE / merge / row-level DELETE)
+  *     physically sheds it and writes a record without the overlay — the
+  *     same self-clearing lifecycle as [[ColumnMap]] and
+  *     [[DeletionVectors]].
   *
-  * Both files ride to version snapshots at rewrite time (mirroring the
-  * archived column map), so time travel renders each snapshot with the
-  * schema it had.
+  * Each archived version keeps the record it had, so time travel renders
+  * every snapshot with the schema it had.
   *
   * Boundary (refused, not guessed): re-adding a name whose physical slot
   * is tombstoned, or whose physical slot is occupied through a rename —
@@ -32,101 +30,6 @@ import org.apache.spark.sql.types.DataType
   * rewrite sheds the tombstoned bytes.
   */
 object SchemaOverlay {
-
-  private def addFile(tablePath: String) =
-    new Path(tablePath, "_graft_meta/addcols.tsv")
-  private def dropFile(tablePath: String) =
-    new Path(tablePath, "_graft_meta/dropcols.tsv")
-
-  /** Snapshot-relocated overlay ([[MedallionTable.readVersion]]). */
-  private[table] def archivedAddFile(versionDir: Path): Path =
-    new Path(versionDir, "_graft_addcols.tsv")
-  private[table] def archivedDropFile(versionDir: Path): Path =
-    new Path(versionDir, "_graft_dropcols.tsv")
-
-  private def readLines(spark: SparkSession, p: Path): Seq[String] = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  private def writeLines(spark: SparkSession, p: Path,
-      lines: Seq[String]): Unit = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (lines.isEmpty) { fs.delete(p, false); return }
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"schema overlay write failed: $p")
-  }
-
-  /** Declared-but-unmaterialized columns, in declaration order. */
-  def adds(spark: SparkSession, tablePath: String): Seq[(String, DataType)] =
-    addsFrom(spark, addFile(tablePath))
-
-  private[table] def addsFrom(spark: SparkSession, p: Path): Seq[(String, DataType)] =
-    readLines(spark, p).map { line =>
-      val i = line.indexOf('\t')
-      line.substring(0, i) -> DataType.fromDDL(line.substring(i + 1))
-    }
-
-  /** Tombstoned PHYSICAL column names. */
-  def drops(spark: SparkSession, tablePath: String): Seq[String] =
-    dropsFrom(spark, dropFile(tablePath))
-
-  private[table] def dropsFrom(spark: SparkSession, p: Path): Seq[String] =
-    readLines(spark, p)
-
-  private[table] def recordAdd(spark: SparkSession, tablePath: String,
-      name: String, typeDdl: String): Unit =
-    writeLines(spark, addFile(tablePath),
-      readLines(spark, addFile(tablePath)) :+ s"$name\t$typeDdl")
-
-  /** Tombstone `physical`. Any ADD entry for the name is retracted in
-    * either case; the tombstone itself is written only when some data
-    * file actually carries the column (`materialized`) — an ADD that was
-    * never written to needs no tombstone, and skipping it keeps the name
-    * immediately reusable. The CALLER decides materialization from the
-    * raw file schema: an ADD entry's presence proves nothing, since the
-    * entry stays (as an inert no-op) after appends materialize the
-    * column.
-    */
-  private[table] def recordDrop(spark: SparkSession, tablePath: String,
-      physical: String, materialized: Boolean): Unit = {
-    val af = addFile(tablePath)
-    val addLines = readLines(spark, af)
-    val (retracted, kept) = addLines.partition(_.takeWhile(_ != '\t') == physical)
-    if (retracted.nonEmpty) writeLines(spark, af, kept)
-    if (materialized)
-      writeLines(spark, dropFile(tablePath),
-        readLines(spark, dropFile(tablePath)) :+ physical)
-  }
-
-  /** A rename of a still-unmaterialized ADD is a rewrite of its overlay
-    * entry, not a [[ColumnMap]] pair (there is no physical column to map
-    * to). Returns true when `oldName` was such an ADD and was renamed
-    * here.
-    */
-  private[table] def renameAdd(spark: SparkSession, tablePath: String,
-      oldName: String, newName: String): Boolean = {
-    val af = addFile(tablePath)
-    val lines = readLines(spark, af)
-    if (!lines.exists(_.takeWhile(_ != '\t') == oldName)) false
-    else {
-      writeLines(spark, af, lines.map { l =>
-        if (l.takeWhile(_ != '\t') == oldName)
-          newName + l.dropWhile(_ != '\t')
-        else l
-      })
-      true
-    }
-  }
 
   /** Apply an overlay to a LOGICAL-named frame: tombstoned columns out
     * (post-drop, no [[ColumnMap]] entry maps them, so their logical name
@@ -142,21 +45,5 @@ object SchemaOverlay {
       if (d.columns.contains(name)) d
       else d.withColumn(name, lit(null).cast(dt))
     }
-  }
-
-  /** Live-table overlay application (read-path chokepoint). */
-  def applied(spark: SparkSession, tablePath: String, df: DataFrame): DataFrame =
-    applyTo(df, adds(spark, tablePath), drops(spark, tablePath))
-
-  /** Carry the overlay files into an archived snapshot dir (rewrite-time,
-    * [[MedallionTable]].archiveBackup) so time travel keeps each
-    * snapshot's schema.
-    */
-  private[table] def archive(spark: SparkSession, backup: Path): Unit = {
-    val fs = backup.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val a = new Path(backup, "_graft_meta/addcols.tsv")
-    if (fs.exists(a)) fs.rename(a, archivedAddFile(backup))
-    val d = new Path(backup, "_graft_meta/dropcols.tsv")
-    if (fs.exists(d)) fs.rename(d, archivedDropFile(backup))
   }
 }

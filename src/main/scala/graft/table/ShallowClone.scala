@@ -13,9 +13,10 @@ import org.apache.spark.sql.SparkSession
   * self-clearing lifecycle as [[DeletionVectors]] and [[ColumnMap]].
   *
   * The clone snapshots the source's READ STATE, not just its file list:
-  * the source's deletion vector, column map, CHECK registry and schema
-  * stash are copied in (positions and renames are basename-keyed /
-  * name-keyed, so they hold against the pointed-at files verbatim).
+  * the source's deletion vector and its whole table record
+  * ([[TableMeta]]: declarations, schema, column map, overlay, widening)
+  * are copied in (positions and renames are basename-keyed / name-keyed,
+  * so they hold against the pointed-at files verbatim).
   * Later source WRITES never affect the clone's rows — with one honest
   * caveat, stronger than Delta's vacuum-retention one: a source REWRITE
   * swaps its directory, which RELOCATES the pointed-at files, breaking

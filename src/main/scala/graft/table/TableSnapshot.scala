@@ -11,8 +11,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *
   *  - the base data files (relocation-stable keys, length, mtime) and
   *    whether the root holds any data at all;
+  *  - the table record ([[TableMeta]]: declarations, schema and the
+  *    column map / overlay / widening layout), read once per snapshot;
   *  - the resolved base schema (the footer-merged `mergeSchema` result,
-  *    or the type-widening overlay's reader schema);
+  *    or the record's reader schema while a widening is live);
   *  - the committed DV-update batches ([[DvUpdates]]), each with its
   *    files and the Spark schema its writer stamped into the footers;
   *  - the DV sidecar's mark files with their collected `(fileKey, pos)`
@@ -55,7 +57,7 @@ private[table] final class TableSnapshot private (
     val rootExists: Boolean,
     val hasData: Boolean,
     val baseFiles: Seq[TableSnapshot.DataFile],
-    val wide: Option[StructType],
+    val meta: TableMeta,
     val batches: Seq[TableSnapshot.Batch],
     val markFiles: Seq[TableSnapshot.MarkFile],
     val cloneSources: Seq[String],
@@ -109,12 +111,12 @@ private[table] final class TableSnapshot private (
 
   private[table] def sameContent(o: TableSnapshot): Boolean =
     rootExists == o.rootExists && hasData == o.hasData &&
-      baseFiles == o.baseFiles && wide == o.wide && batches == o.batches &&
+      baseFiles == o.baseFiles && meta == o.meta && batches == o.batches &&
       markFiles.map(_.id) == o.markFiles.map(_.id) &&
       cloneSources == o.cloneSources
 
   private def withStamp(s: Stamp): TableSnapshot =
-    new TableSnapshot(path, s, rootExists, hasData, baseFiles, wide, batches,
+    new TableSnapshot(path, s, rootExists, hasData, baseFiles, meta, batches,
       markFiles, cloneSources, baseSchema, frames)
 }
 
@@ -285,7 +287,7 @@ private[table] object TableSnapshot {
         DataFile(fs.makeQualified(st.getPath).toString, st.getLen,
           st.getModificationTime)
     }
-    val wide = WideCols.readerSchema(spark, t.path)
+    val meta = t.meta
     val cloneSources = ShallowClone.sources(spark, ShallowClone.file(key)) ++
       ShallowClone.sources(spark, ShallowClone.archivedFile(root))
 
@@ -318,21 +320,21 @@ private[table] object TableSnapshot {
     }
 
     val fresh = new TableSnapshot(key, stamp, rootExists, hasData, baseFiles,
-      wide, batches, markFiles, cloneSources, None, new Frames)
+      meta, batches, markFiles, cloneSources, None, new Frames)
     prev match {
       case Some(p) if p.sameContent(fresh) => p.withStamp(stamp)
       case _ =>
         val carried = prev.flatMap(p => carryBase(conf, p, fresh, wrote.files))
-        new TableSnapshot(key, stamp, rootExists, hasData, baseFiles, wide,
+        new TableSnapshot(key, stamp, rootExists, hasData, baseFiles, meta,
           batches, markFiles, cloneSources, carried, new Frames)
     }
   }
 
-  /** The previous base schema still holds when the overlay is unchanged
-    * and the base only GAINED files whose columns it already carries with
-    * the same types — taken from `wrote` for the files the committing
-    * body wrote itself, from the footer otherwise — under partition
-    * values its partition columns parse. A removed file may have been
+  /** The previous base schema still holds when the record's reader
+    * schema is unchanged and the base only GAINED files whose columns it
+    * already carries with the same types — taken from `wrote` for the
+    * files the committing body wrote itself, from the footer otherwise —
+    * under partition values its partition columns parse. A removed file may have been
     * the last to carry a column, so removals re-resolve.
     */
   private def carryBase(conf: Configuration, prev: TableSnapshot,
@@ -345,7 +347,8 @@ private[table] object TableSnapshot {
       val covered = scala.collection.mutable.Map.empty[StructType, Boolean]
       def fits(schema: StructType): Boolean = covered.getOrElseUpdate(schema,
         schema.fields.forall(x => byName.get(x.name).contains(x.dataType)))
-      now.wide == prev.wide && before.subsetOf(now.baseFiles.toSet) &&
+      now.meta.readerSchema == prev.meta.readerSchema &&
+        before.subsetOf(now.baseFiles.toSet) &&
         added.forall { f =>
           wrote.get(f.path).orElse(footerSchema(conf, f.path)).exists(fits) &&
             partitionValues(f.path).forall { case (k, v) =>

@@ -112,40 +112,28 @@ object TableStats {
     // project renamed physical columns back before any stats run; a
     // shallow clone's manifest covers pointer files too
     val isClone = ShallowClone.isClone(spark, tablePath)
+    val mt = new MedallionTable(spark, tablePath)
+    val tm = mt.meta
     val rawBase =
       if (isClone)
         // a shallow clone's scanFiles covers the source's pointed-at
         // batch files AND the clone's OWN committed batches — so no
         // batch fold may run below, or batch rows aggregate twice and
         // the manifest row_count (the metadata COUNT(*) path) inflates
-        WideCols.reader(spark, tablePath)
-          .parquet(ShallowClone.scanFiles(spark, tablePath): _*)
-      else WideCols.readerSchema(spark, tablePath) match {
+        tm.reader(spark).parquet(ShallowClone.scanFiles(spark, tablePath): _*)
+      else (tm.readerSchema, tm.physicalSchema) match {
         // mixed narrow/wide footers: the single-footer schema pick (and
-        // mergeSchema alike) break under a live widening overlay — the
-        // recorded wide schema is authoritative
-        case Some(s) => spark.read.schema(s).parquet(tablePath)
-        case None =>
-          // base emptied while batches hold the data (incremental
-          // clustering's steady state, or a fully-deleted table): no
-          // footers to infer from — seed from the stashed DDL, mapped to
-          // physical names, exactly like the table read's empty branch
-          val mt = new MedallionTable(spark, tablePath)
-          val sf = new org.apache.hadoop.fs.Path(tablePath,
-            "_graft_meta/schema.ddl")
-          val fs = sf.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!mt.hasDataFiles(new org.apache.hadoop.fs.Path(tablePath)) &&
-              fs.exists(sf)) {
-            val cmap = ColumnMap.load(spark, tablePath)
-            val in = fs.open(sf)
-            val ddl =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            spark.read.schema(org.apache.spark.sql.types.StructType(
-              org.apache.spark.sql.types.StructType.fromDDL(ddl).fields
-                .map(f => f.copy(name = cmap.getOrElse(f.name, f.name)))))
-              .parquet(tablePath)
-          } else spark.read.parquet(tablePath)
+        // mergeSchema alike) break under a live widening — the recorded
+        // wide schema is authoritative
+        case (Some(s), _) => spark.read.schema(s).parquet(tablePath)
+        // base emptied while batches hold the data (incremental
+        // clustering's steady state, or a fully-deleted table): no
+        // footers to infer from — seed from the recorded schema in
+        // physical names, exactly like the table read's empty branch
+        case (None, Some(s))
+            if !mt.hasDataFiles(new org.apache.hadoop.fs.Path(tablePath)) =>
+          spark.read.schema(s).parquet(tablePath)
+        case _ => spark.read.parquet(tablePath)
       }
     // a deletion vector changes what readers SEE without touching files:
     // stats (row counts above all — the metadata COUNT(*) path) must
@@ -158,7 +146,7 @@ object TableStats {
       DvUpdates.committedBatches(spark, tablePath).nonEmpty
     val (df, fileKey) =
       if (!DeletionVectors.exists(spark, dvPath) && !hasBatches)
-        (ColumnMap.toLogical(rawBase, ColumnMap.load(spark, tablePath)), None)
+        (ColumnMap.toLogical(rawBase, tm.colMap), None)
       else {
         def prep(d: org.apache.spark.sql.DataFrame) =
           d.withColumn("__stats_file", col("_metadata.file_path"))
@@ -171,8 +159,7 @@ object TableStats {
         val folded =
           if (isClone) baseApplied
           else DvUpdates.foldBatches(spark, tablePath, baseApplied, prep)
-        (ColumnMap.toLogical(folded, ColumnMap.load(spark, tablePath)),
-          Some(col("__stats_file")))
+        (ColumnMap.toLogical(folded, tm.colMap), Some(col("__stats_file")))
       }
     val cols = (if (columns.nonEmpty) columns else df.columns.toSeq)
       .filter(c => c != "__stats_file" && statsWorthy(df.schema(c).dataType))
@@ -272,7 +259,8 @@ object TableStats {
     */
   private[table] def footerStatsRows(spark: SparkSession, tablePath: String,
       newFiles: Seq[String], readSchema: Option[StructType],
-      covered: Seq[String]): Option[(StructType, Seq[org.apache.spark.sql.Row])] = {
+      covered: Seq[String], colMap: Map[String, String] = Map.empty)
+      : Option[(StructType, Seq[org.apache.spark.sql.Row])] = {
     import org.apache.hadoop.fs.Path
     if (!spark.conf.getOption("spark.graft.footerStats").forall(_.toBoolean))
       return None
@@ -285,8 +273,7 @@ object TableStats {
       .flatMap(_.toIntOption).getOrElse(256)
     if (newFiles.size > maxFiles) return None
     val schema = readSchema.getOrElse(return None)
-    val cmap = ColumnMap.load(spark, tablePath) // logical -> physical
-    val reverse = cmap.map(_.swap)
+    val reverse = colMap.map(_.swap) // physical -> logical
     def logicalOf(p: String) = reverse.getOrElse(p, p)
     // Resolve covered -> schema columns with the SESSION's resolver, the
     // same way footer fields and hive path segments are matched below.
@@ -301,7 +288,7 @@ object TableStats {
     val (present, missing) =
       covered.partition(c => logicalCols.exists(resolver(_, c)))
     val presentFields: Seq[(String, String, DataType)] = present.map { c =>
-      val phys = cmap.collectFirst {
+      val phys = colMap.collectFirst {
         case (l, p) if resolver(l, c) => p
       }.getOrElse(c)
       (c, phys, schema.fields.find(f => resolver(f.name, phys))
@@ -607,18 +594,18 @@ object TableStats {
     fs.exists(sp) && fs.rename(sp, pp)
   }
 
-  /** `readSchema`: the caller's authoritative PHYSICAL schema for the new
-    * files (the appends pass the stashed DDL mapped through the column
-    * map) — an explicit schema skips the `mergeSchema` footer-resolution
-    * JOB, the single largest term in the measured per-commit floor
-    * (CommitFloorProbe: ~350 ms of a ~500 ms stats-armed commit sat in
-    * this method). Any type the explicit schema cannot decode fails the
-    * read, which both callers already catch into invalidate — manifest
-    * absent, never wrong.
+  /** `meta`: the table record the new files were written under. Its
+    * schema in physical names ([[TableMeta.physicalSchema]]) is the
+    * authoritative read schema for the new files — an explicit schema
+    * skips the `mergeSchema` footer-resolution JOB, the single largest
+    * term in the measured per-commit floor (CommitFloorProbe: ~350 ms of
+    * a ~500 ms stats-armed commit sat in this method). Any type the
+    * explicit schema cannot decode fails the read, which both callers
+    * already catch into invalidate — manifest absent, never wrong.
     */
   def completeIncrementalUpdate(spark: SparkSession, tablePath: String,
-      newFiles: Seq[String],
-      readSchema: Option[StructType] = None): Unit = {
+      newFiles: Seq[String], meta: TableMeta): Unit = {
+    val readSchema = meta.physicalSchema
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pp = new org.apache.hadoop.fs.Path(pendingPath(tablePath))
@@ -638,7 +625,8 @@ object TableStats {
       // into two scheduled JOBS (exchange future + result), doubling the
       // fixed per-commit latency for a query over a handful of rows
       val s1 = SessionCaches.noAqeSession(spark)
-      footerStatsRows(spark, tablePath, newFiles, readSchema, covered) match {
+      footerStatsRows(spark, tablePath, newFiles, readSchema, covered,
+          meta.colMap) match {
         case Some((rowSchema, rows)) =>
           // footer fast path: stats came off the batch files' own
           // parquet metadata driver-side, and the manifest part is
@@ -653,7 +641,7 @@ object TableStats {
           }
           val df = ColumnMap.toLogical(
             reader.option("basePath", tablePath).parquet(newFiles: _*),
-            ColumnMap.load(spark, tablePath))
+            meta.colMap)
           val (present, missing) = covered.partition(df.columns.contains)
           val stats = missing.foldLeft(perFileStats(df, present)) { (s, c) =>
             s.withColumn(s"min_str__$c", lit(null).cast("string"))
@@ -873,12 +861,11 @@ object TableStats {
       def norm(s: String): String = s.replaceFirst("^[A-Za-z0-9+.-]+:/+", "/")
       val batchDirs = DvUpdates.committedBatches(spark, tablePath)
         .map(b => DvUpdates.batchDataDir(tablePath, b))
-      val cmap = ColumnMap.load(spark, tablePath)
-      val wide = WideCols.readerSchema(spark, tablePath)
+      val tm = mt.meta
       val f = "__graft_dvr_file"
       val x = "__graft_dvr_pos"
       def branch(baseDir: String, subset: Seq[String]) = {
-        val r = wide.map(spark.read.schema).getOrElse(spark.read)
+        val r = tm.readerSchema.map(spark.read.schema).getOrElse(spark.read)
         r.option("basePath", baseDir).parquet(subset: _*)
           .withColumn(f, col("_metadata.file_path"))
           .withColumn(x, col("_metadata.row_index"))
@@ -896,22 +883,20 @@ object TableStats {
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val appliedDf = DeletionVectors.appliedToKeyed(spark, unioned,
         DeletionVectors.dir(tablePath), tablePath, f, x).drop(f, x)
-      return SchemaOverlay.applied(spark, tablePath,
-        ColumnMap.toLogical(appliedDf, cmap)).filter(residual0)
+      return tm.logical(appliedDf).filter(residual0)
     }
     // raw scans carry PHYSICAL names and (under a live widening overlay)
     // mixed narrow/wide footers: project to logical names and the wide
     // reader schema, or a renamed/widened column's range read breaks —
     // the manifest itself is already keyed by logical names
-    val cmap = ColumnMap.load(spark, tablePath)
-    val wide = WideCols.readerSchema(spark, tablePath)
+    val tm = new MedallionTable(spark, tablePath).meta
     def scan(paths: Seq[String]): org.apache.spark.sql.DataFrame = {
-      val r = wide.map(spark.read.schema).getOrElse(spark.read)
+      val r = tm.readerSchema.map(spark.read.schema).getOrElse(spark.read)
       // basePath keeps hive partition columns recoverable from file paths
       ColumnMap.toLogical(
         if (paths.isEmpty) r.parquet(tablePath)
         else r.option("basePath", tablePath).parquet(paths: _*),
-        cmap)
+        tm.colMap)
     }
     val full = scan(Nil)
     val residual = col(column) >= lit(lower) && col(column) <= lit(upper)

@@ -1,7 +1,6 @@
 package graft.table
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -10,34 +9,33 @@ import org.apache.spark.sql.types._
   * column-mapping story after [[ColumnMap]] (rename) and
   * [[SchemaOverlay]] (add/drop).
   *
-  * At 100 TB a type change must not rewrite data files. The overlay
-  * records the widened columns in `_graft_meta/widecols.tsv`
-  * (`physicalName\twideTypeDdl`); existing files keep their narrow
-  * physical type, and reads resolve through Spark 4's parquet widening
-  * promotion — an explicit READER schema with the wide type decodes
-  * narrow pages in place (int32 → long, int32 → double, float → double,
-  * int32/int64 → decimal, decimal → wider decimal, date → timestamp_ntz;
-  * probed on this exact Spark build, `TypeWideningSpec`).
+  * At 100 TB a type change must not rewrite data files. The table record
+  * holds the widened columns ([[TableMeta.widened]], physical name → wide
+  * type); existing files keep their narrow physical type, and reads
+  * resolve through Spark 4's parquet widening promotion — an explicit
+  * READER schema with the wide type decodes narrow pages in place
+  * (int32 → long, int32 → double, float → double, int32/int64 → decimal,
+  * decimal → wider decimal, date → timestamp_ntz; probed on this exact
+  * Spark build, `TypeWideningSpec`).
   *
   * The catch: `mergeSchema=true` REFUSES footer sets that mix a narrow
   * and a wide spelling of one column (`CANNOT_MERGE_SCHEMAS`), so the
   * moment a post-widen append lands a wide file, footer-merge resolution
-  * is gone for good. While the overlay is live, the authoritative reader
-  * schema therefore lives beside it in `_graft_meta/physschema.ddl`
-  * (physical names, wide types, partition columns included): seeded from
-  * the last footer merge at widen time, extended add-only by every
-  * append that introduces new columns (the K1 `mergeSchema` evolution
-  * contract), and consulted by every scan that would otherwise
-  * footer-merge — table reads, DV scans, stats refresh, change-feed
-  * reconstruction, snapshot reads. A side benefit at scale: while the
-  * overlay is live, reads skip the footer-merge job entirely (one small
-  * metadata file instead of a Spark job over every footer).
+  * is gone for good. While a widening is live, the authoritative reader
+  * schema therefore lives in the same record ([[TableMeta.readerSchema]]:
+  * physical names, wide types, partition columns included): seeded from
+  * the table snapshot's resolved base schema at widen time, extended
+  * add-only by every append that introduces new columns (the K1
+  * `mergeSchema` evolution contract), and declared by every scan that
+  * would otherwise footer-merge — table reads, DV scans, stats refresh,
+  * change-feed reconstruction, snapshot reads. A side benefit at scale:
+  * while a widening is live, reads skip the footer-merge job entirely.
   *
   * Lifecycle mirrors [[ColumnMap]]: any full rewrite (OPTIMIZE, merge,
   * update, overwrite) materializes the wide type physically — the
-  * rewrite product comes off the widened read — and the swap drops
-  * `_graft_meta` wholesale, retiring both files. Snapshots archive them
-  * ([[archive]]) so time travel renders each version with the types it
+  * rewrite product comes off the widened read — and writes a record
+  * without the widening ([[TableMeta.rewritten]]). Archived versions keep
+  * their record, so time travel renders each version with the types it
   * had.
   *
   * The supported matrix is Delta's (and exactly what the parquet reader
@@ -51,120 +49,6 @@ import org.apache.spark.sql.types._
   * chain may have left in files also fits.
   */
 object WideCols {
-
-  private def wideFile(tablePath: String) =
-    new Path(tablePath, "_graft_meta/widecols.tsv")
-  private def schemaFile(tablePath: String) =
-    new Path(tablePath, "_graft_meta/physschema.ddl")
-
-  /** Snapshot-relocated overlay ([[MedallionTable.readVersion]]). */
-  private[table] def archivedWideFile(versionDir: Path): Path =
-    new Path(versionDir, "_graft_widecols.tsv")
-  private[table] def archivedSchemaFile(versionDir: Path): Path =
-    new Path(versionDir, "_graft_physschema.ddl")
-
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readText(spark: SparkSession, p: Path): Option[String] = {
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
-  private def writeText(spark: SparkSession, p: Path, text: String): Unit = {
-    val fs = fsOf(spark, p)
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"wide-cols metadata write failed: $p")
-  }
-
-  /** Widened columns: PHYSICAL name → wide type. Empty when none live. */
-  def load(spark: SparkSession, tablePath: String): Map[String, DataType] =
-    readText(spark, wideFile(tablePath)).map(_.split('\n').toSeq)
-      .getOrElse(Nil).filter(_.contains('\t')).map { line =>
-        val i = line.indexOf('\t')
-        line.substring(0, i) -> DataType.fromDDL(line.substring(i + 1))
-      }.toMap
-
-  /** The authoritative reader schema while the overlay is live (None
-    * otherwise — callers fall back to `mergeSchema` footer resolution).
-    */
-  def readerSchema(spark: SparkSession, tablePath: String): Option[StructType] =
-    readerSchemaFrom(spark, schemaFile(tablePath))
-
-  private[table] def readerSchemaFrom(spark: SparkSession,
-      p: Path): Option[StructType] =
-    readText(spark, p).map(d => StructType.fromDDL(d))
-
-  /** A [[DataFrameReader]] resolved the way the live overlay demands:
-    * explicit wide schema when present, footer merge otherwise. The
-    * chokepoint every would-be `mergeSchema` scan of a graft table goes
-    * through (mixed narrow/wide footers refuse to merge — scaladoc).
-    */
-  def reader(spark: SparkSession, tablePath: String): DataFrameReader =
-    readerSchema(spark, tablePath) match {
-      case Some(s) => spark.read.schema(s)
-      case None => spark.read.option("mergeSchema", "true")
-    }
-
-  /** [[reader]] for a directory that may be EITHER a live table root or
-    * an archived snapshot (whose overlay files are relocated by
-    * [[archive]]) — the change feed resolves recorded files against
-    * both layouts.
-    */
-  private[table] def readerAnyLayout(spark: SparkSession,
-      root: String): DataFrameReader =
-    readerSchema(spark, root)
-      .orElse(readerSchemaFrom(spark, archivedSchemaFile(new Path(root))))
-      .map(spark.read.schema)
-      .getOrElse(spark.read.option("mergeSchema", "true"))
-
-  /** Record a widened column and (re)write the authoritative reader
-    * schema. `resolved` is the CURRENT physical-name reader schema
-    * (footer-merged on first widen, `physschema.ddl` after) with the
-    * widened field already overridden by the caller.
-    */
-  private[table] def record(spark: SparkSession, tablePath: String,
-      physName: String, wide: DataType, resolved: StructType): Unit = {
-    // ORDER MATTERS for the crash window between the two writes. Reader
-    // schema FIRST: alone it is benign — reads flip to the wide type
-    // (narrow files decode under it) while appends, seeing no widecols
-    // entry yet, keep landing narrow-but-decodable files. The reverse
-    // order would let a canonicalizing append land a WIDE file while
-    // resolution still footer-merges — mixed footers, reads broken until
-    // a rewrite. (A repeated ALTER heals the half-state either way.)
-    writeText(spark, schemaFile(tablePath), resolved.toDDL)
-    val entries = load(spark, tablePath) + (physName -> wide)
-    writeText(spark, wideFile(tablePath), entries.toSeq.sortBy(_._1)
-      .map { case (n, t) => s"$n\t${t.sql}" }.mkString("\n"))
-  }
-
-  /** Append-time reader-schema maintenance: columns the batch introduces
-    * join the schema (add-only — an existing entry's type is never
-    * changed here; [[MedallionTable]] casts widened columns up before
-    * the write, so batch types can only echo or narrow existing ones).
-    * Runs BEFORE the data lands: a crash between the two degrades the
-    * evolving append to a metadata-only ADD COLUMN (typed-NULL reads,
-    * exactly [[SchemaOverlay]]'s contract) instead of silently losing
-    * the column from every future explicit-schema scan.
-    */
-  private[table] def extendReaderSchema(spark: SparkSession,
-      tablePath: String, batch: StructType): Unit =
-    readerSchema(spark, tablePath).foreach { cur =>
-      val have = cur.fieldNames.map(_.toLowerCase).toSet
-      val fresh = batch.fields.filterNot(f => have.contains(f.name.toLowerCase))
-      if (fresh.nonEmpty)
-        writeText(spark, schemaFile(tablePath),
-          StructType(cur.fields ++ fresh).toDDL)
-    }
 
   /** Cast widened columns up to their declared wide type (PHYSICAL
     * names) so every post-widen file lands wide — new files never
@@ -203,16 +87,4 @@ object WideCols {
       "int->long/double, long->decimal(>=20,s), float->double, " +
       "integral->decimal(p-s>=10), decimal->wider decimal, " +
       "date->timestamp_ntz"
-
-  /** Relocate the overlay files into an archived snapshot dir
-    * (rewrite-time, [[MedallionTable]].archiveBackup) so time travel
-    * keeps each snapshot's types.
-    */
-  private[table] def archive(spark: SparkSession, backup: Path): Unit = {
-    val fs = fsOf(spark, backup)
-    val w = new Path(backup, "_graft_meta/widecols.tsv")
-    if (fs.exists(w)) fs.rename(w, archivedWideFile(backup))
-    val s = new Path(backup, "_graft_meta/physschema.ddl")
-    if (fs.exists(s)) fs.rename(s, archivedSchemaFile(backup))
-  }
 }

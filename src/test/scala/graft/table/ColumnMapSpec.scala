@@ -46,7 +46,7 @@ class ColumnMapSpec extends SparkSpec {
     val (t, p) = mk()
     t.renameColumn("v", "score")
     t.compact(nFiles = 1)
-    assert(ColumnMap.load(spark, p).isEmpty)
+    assert(MedallionTable(spark, p).meta.colMap.isEmpty)
     // raw parquet now carries the logical name physically
     assert(spark.read.parquet(p).columns.contains("score"))
     assert(t.read.columns.toSeq == Seq("id", "s", "score"))

@@ -55,7 +55,7 @@ class DeepCloneSpec extends SparkSpec {
     assert(t.read.orderBy("id").collect().toSeq == expect)
     // materialized: no DV soft state, no column map, no widening overlay
     assert(!t.hasDvState, "clone carried DV soft state instead of materializing")
-    assert(ColumnMap.load(spark, t.path).isEmpty)
+    assert(t.meta.colMap.isEmpty)
     assert(t.widenedColumns.isEmpty)
     // decoupled: rewrite + delete on the source do not move the clone...
     src.compact()

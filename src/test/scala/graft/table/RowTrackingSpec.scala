@@ -51,6 +51,27 @@ class RowTrackingSpec extends SparkSpec {
     assert(b1.values.toSeq.distinct.size == b1.size, "ids unique")
   }
 
+  test("mergePruned inserts get fresh row ids; a source carrying " +
+      "_row_id is refused") {
+    val t = MedallionTable(spark, tmpDir("rt_pruned"), Seq("blk"))
+    t.overwrite(Seq((1L, 0, "a"), (2L, 1, "b")).toDF("id", "blk", "s"))
+    t.enableRowTracking()
+    val before = t.read.agg(max("_row_id")).head.getLong(0)
+    t.mergePruned(Seq((3L, 1, "c"), (2L, 1, "bb")).toDF("id", "blk", "s"),
+      Seq("id", "blk"))
+    val ids = t.read.select("id", "_row_id").collect()
+      .map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(ids.keySet == Set(1L, 2L, 3L))
+    assert(ids.values.forall(_ != null), s"NULL row id after mergePruned: $ids")
+    assert(ids(3L).asInstanceOf[Long] > before,
+      s"inserted row id ${ids(3L)} must be above the previous max $before")
+    assert(ids.values.toSeq.distinct.size == 3, "ids unique")
+    intercept[IllegalStateException](t.mergePruned(
+      Seq((4L, 0, "d", 99L)).toDF("id", "blk", "s", "_row_id"),
+      Seq("id", "blk")))
+    assert(t.read.count() == 3, "the refused merge landed nothing")
+  }
+
   test("enable on an empty/unborn table assigns from first write; " +
       "refuses a pre-existing unmanaged _row_id; failed backfill rolls " +
       "the registration back") {

@@ -65,7 +65,7 @@ class SchemaOverlaySpec extends SparkSpec {
 
     t.compact() // rewrite materializes: files shed the column, overlay clears
     assert(!spark.read.parquet(t.path).columns.contains("x"))
-    assert(SchemaOverlay.drops(spark, t.path).isEmpty, "overlay self-clears at rewrite")
+    assert(t.meta.drops.isEmpty, "overlay self-clears at rewrite")
     t.addColumn("x", "INT") // name free again
     assert(t.read.schema("x").dataType == org.apache.spark.sql.types.IntegerType)
   }
@@ -87,14 +87,14 @@ class SchemaOverlaySpec extends SparkSpec {
     t.renameColumn("x", "y")
     t.dropColumn("y")
     assert(t.read.columns.toSeq == Seq("id"), "neither name visible post-drop")
-    assert(SchemaOverlay.drops(spark, t.path) == Seq("x"),
+    assert(t.meta.drops == Seq("x"),
       "the tombstone must carry the name the FILES use")
-    assert(ColumnMap.load(spark, t.path).isEmpty, "map entry retired with the drop")
+    assert(t.meta.colMap.isEmpty, "map entry retired with the drop")
 
     t.addColumn("c", "STRING")
     t.renameColumn("c", "d")
     assert(t.read.columns.contains("d") && !t.read.columns.contains("c"))
-    assert(ColumnMap.load(spark, t.path).isEmpty,
+    assert(t.meta.colMap.isEmpty,
       "renaming an unmaterialized ADD must not mint a phantom map pair")
     t.append(Seq((2L, "v")).toDF("id", "d"))
     assert(t.read.filter($"d" === "v").count() == 1)
@@ -107,7 +107,7 @@ class SchemaOverlaySpec extends SparkSpec {
     t.addColumn("tmp", "BIGINT")
     t.dropColumn("tmp")
     assert(!t.read.columns.contains("tmp"))
-    assert(SchemaOverlay.drops(spark, t.path).isEmpty, "no tombstone for a retraction")
+    assert(t.meta.drops.isEmpty, "no tombstone for a retraction")
     t.addColumn("tmp", "STRING") // reusable at once — no bytes to resurrect
     assert(t.read.schema("tmp").dataType == org.apache.spark.sql.types.StringType)
   }
@@ -143,7 +143,7 @@ class SchemaOverlaySpec extends SparkSpec {
     clone.dropColumn("x")
     assert(clone.read.columns.toSeq == Seq("id", "s"),
       "the dropped column lives only in SOURCE files; it must still hide")
-    assert(SchemaOverlay.drops(spark, clone.path) == Seq("x"),
+    assert(clone.meta.drops == Seq("x"),
       "clone-aware materialization check must write the tombstone")
     intercept[IllegalArgumentException] { clone.addColumn("x", "INT") }
     assert(srcT.read.columns.toSeq == Seq("id", "s", "x"),

@@ -3,23 +3,37 @@ package graft.table
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The column declarations as one record ([[TableMeta]]): its one codec
-  * and file, declarations as claimed commits that a staged rewrite
-  * cannot discard, a shallow clone carrying the whole record, and
-  * rename/drop keeping name-keyed declarations consistent.
+/** The table record ([[TableMeta]]): its one codec and file for the
+  * declarations and the schema layout, declarations as claimed commits
+  * that a staged rewrite cannot discard, a shallow clone carrying the
+  * whole record, and rename/drop keeping name-keyed declarations
+  * consistent.
   */
 class TableMetaSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.types._
 
-  test("codec round-trips all five kinds; tabs survive inside CHECK and " +
-      "generation expressions") {
+  test("codec round-trips every declaration and layout kind; tabs, " +
+      "newlines survive") {
+    val odd = "a\tb\nc" // a column name holding a tab and a newline
     val m = TableMeta(
       checks = Map("pos" -> "id > 0", "tabbed" -> "s <> '\t'"),
       notNull = Set("id", "s"),
       defaults = Map("s" -> (("STRING", "'D'")),
         "d" -> (("DECIMAL(10,2)", "1.5"))),
       generated = Map("g" -> "id * 2", "h" -> "concat(s, '\t')"),
-      identity = Map("rid" -> ((1L, 1L)), "down" -> ((-5L, -2L))))
+      identity = Map("rid" -> ((1L, 1L)), "down" -> ((-5L, -2L))),
+      schema = Some(StructType(Seq(StructField("id", LongType, false),
+        StructField(odd, StringType), StructField("amt", DecimalType(20, 2)),
+        StructField("k2", IntegerType)))),
+      colMap = Map("k2" -> "k", odd -> "x y+%z"),
+      adds = Seq("new" -> StringType, "b" -> DoubleType),
+      drops = Seq("gone", "gone\ttoo"),
+      widened = Map("amt" -> DecimalType(20, 2)),
+      readerSchema = Some(StructType(Seq(StructField("id", LongType),
+        StructField("x y+%z", StringType),
+        StructField("amt", DecimalType(20, 2)), StructField("k", IntegerType)))))
+    assert(m.encode.split('\n').length == 19, "one line per entry")
     assert(TableMeta.decode(m.encode, "test") == m)
     assert(TableMeta.decode(TableMeta.Empty.encode, "test").isEmpty)
   }
@@ -27,7 +41,10 @@ class TableMetaSpec extends SparkSpec {
   test("a malformed line throws") {
     Seq("check\tonly-a-name", "notnull\ta\tb", "default\ts\tSTRING",
         "generated\tg", "identity\trid\t1", "identity\trid\tx\t1",
-        "unknown\tx\ty", "no tab at all").foreach { line =>
+        "unknown\tx\ty", "no tab at all", "schema\t{not json",
+        "schema\t\"long\"", "colmap\tonly-logical", "add\tc\tnot-a-type",
+        "drop", "widened\tx\t\"long\"\textra", "reader\t%ZZ",
+        "colmap\t%ZZ\tx").foreach { line =>
       val e = intercept[IllegalStateException](
         TableMeta.decode(s"notnull\tid\n$line", "f"))
       assert(e.getMessage.contains("corrupt"), line)
@@ -49,7 +66,10 @@ class TableMetaSpec extends SparkSpec {
     assert(sources.filter(_._2.contains(TableMeta.FileName)).map(_._1) ==
       Seq("TableMeta.scala"))
     val old = Seq("constraints", "notnull", "defaults", "generated",
-      "identity").map(_ + ".tsv")
+      "identity", "colmap", "addcols", "dropcols", "widecols").map(_ + ".tsv") ++
+      Seq("physschema.ddl", "_graft_meta/schema.ddl", "_graft_colmap.tsv",
+        "_graft_addcols.tsv", "_graft_dropcols.tsv", "_graft_widecols.tsv",
+        "_graft_physschema.ddl")
     val hits = for ((n, text) <- sources; o <- old if text.contains(o))
       yield s"$n: $o"
     assert(hits.isEmpty, hits.mkString(", "))

@@ -31,31 +31,6 @@ class TableSnapshotSpec extends SparkSpec {
     MedallionTable(spark.newSession(), path).read
   }
 
-  /** Spark jobs `body` launches on this thread (its own job group, so
-    * suites running in parallel on the shared context do not count).
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val group = s"snap-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, group)
-    try {
-      val out = body
-      Thread.sleep(500) // listener bus is async
-      (out, jobs.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
-  }
-
   test("partition fast-DELETE drops rows that vectored writes moved into " +
       "update batches (retainVersions = 0)") {
     val p = tmpDir("snap_fastdel")

@@ -40,7 +40,7 @@ class TypeWideningSpec extends SparkSpec {
     // rewrite (OPTIMIZE) materializes: overlay gone, files all wide
     t.compact()
     assert(t.widenedColumns.isEmpty)
-    assert(WideCols.readerSchema(spark, p).isEmpty)
+    assert(t.meta.readerSchema.isEmpty)
     assert(footerType(p, "x") == Set("bigint"))
     assert(t.read.schema("x").dataType == LongType)
     assert(t.read.select(sum($"x")).head.getLong(0) == 30000000007L)
@@ -227,60 +227,46 @@ class TypeWideningSpec extends SparkSpec {
     intercept[Exception](t.append(Seq((2L, null: String)).toDF("x", "s")))
   }
 
-  test("crash between the two widen metadata writes is benign: reader " +
-      "schema alone flips the type, appends stay decodable, re-ALTER " +
-      "heals; a crashed evolving append degrades to a metadata-only ADD") {
+  test("a crash after an evolving append's record write reads as a " +
+      "typed-NULL column") {
     val p = tmpDir("tw14")
     val t = MedallionTable(spark, p)
     t.overwrite(Seq((1, "a")).toDF("x", "s"))
-    // simulate the record() crash window: physschema.ddl written (wide),
-    // widecols.tsv not yet (WideCols.record writes in exactly this order)
-    val pre = spark.read.parquet(p).schema
-    val wide = org.apache.spark.sql.types.StructType(pre.fields.map(f =>
-      if (f.name == "x") f.copy(dataType = LongType) else f))
+    t.alterColumnType("x", "BIGINT")
+    // an evolving append persists the record (the new column in the
+    // schema and the reader schema) before its data lands: write that
+    // record through the codec and stop there
+    val phantom = StructType(Seq(StructField("phantom", DoubleType)))
+    val crashed = t.meta.evolvedBy(Some(phantom), phantom)
+    assert(crashed.readerSchema.exists(_.fieldNames.contains("phantom")))
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(
-      p, "_graft_meta/physschema.ddl"), true)
-    out.write(wide.toDDL.getBytes("UTF-8")); out.close()
-    // a real crash happens inside a CLAIMED commit, so the schema-memo
-    // stamp has changed — mimic that (the memo keys on the commits-dir
-    // census, which any claim perturbs)
-    def bustStamp(tag: String): Unit = {
-      val cd = new org.apache.hadoop.fs.Path(p + "__graft_commits")
-      fs.mkdirs(cd)
-      fs.create(new org.apache.hadoop.fs.Path(cd, tag), true).close()
-    }
-    bustStamp("crash1")
-    // reads flip to wide (explicit schema decodes the narrow page)...
-    assert(t.read.schema("x").dataType == LongType)
-    assert(t.read.select(sum($"x")).head.getLong(0) == 1L)
-    // ...appends land NARROW (no widecols entry -> canonicalize no-ops)
-    // but stay decodable under the wide reader schema
-    t.append(Seq((2, "b")).toDF("x", "s"))
-    assert(t.read.select(sum($"x")).head.getLong(0) == 3L)
-    // re-running the ALTER heals the half-state into the full overlay
-    t.alterColumnType("x", "BIGINT")
-    assert(t.widenedColumns == Map("x" -> LongType))
-    t.append(Seq((30000000000L, "c")).toDF("x", "s"))
-    assert(t.read.select(max($"x")).head.getLong(0) == 30000000000L)
-    // the OTHER window: extendReaderSchema runs before an evolving
-    // append's data lands — a crash there reads as a typed-NULL column
-    // (exactly the metadata-only ADD COLUMN contract)
-    val withPhantom = org.apache.spark.sql.types.StructType(
-      WideCols.readerSchema(spark, p).get.fields :+
-        org.apache.spark.sql.types.StructField("phantom",
-          org.apache.spark.sql.types.DoubleType))
-    val out2 = fs.create(new org.apache.hadoop.fs.Path(
-      p, "_graft_meta/physschema.ddl"), true)
-    out2.write(withPhantom.toDDL.getBytes("UTF-8")); out2.close()
-    bustStamp("crash2")
-    assert(t.read.schema("phantom").dataType ==
-      org.apache.spark.sql.types.DoubleType)
+    val out = fs.create(TableMeta.file(p), true)
+    out.write(crashed.encode.getBytes("UTF-8"))
+    out.close()
+    // a real crash happens inside a CLAIMED commit, so the snapshot
+    // stamp has changed — mimic that (the stamp is the commits-dir
+    // listing, which any claim perturbs)
+    val cd = new org.apache.hadoop.fs.Path(p + "__graft_commits")
+    fs.mkdirs(cd)
+    fs.create(new org.apache.hadoop.fs.Path(cd, "crash"), true).close()
+    assert(t.read.schema("phantom").dataType == DoubleType)
     assert(t.read.filter($"phantom".isNotNull).count() == 0)
     // the retried evolving append then materializes it
     t.append(Seq((4L, "d", 1.5)).toDF("x", "s", "phantom"))
     assert(t.read.filter($"phantom".isNotNull).count() == 1)
+  }
+
+  test("ALTER COLUMN TYPE right after a read runs no Spark job") {
+    val t = MedallionTable(spark, tmpDir("tw_jobs"))
+    t.overwrite(Seq((1, "a"), (2, "b")).toDF("x", "s"))
+    t.read.collect()
+    // the reader schema seeds from the snapshot's resolved base schema,
+    // not from a footer-merge job inside the claim
+    val (_, jobs) = jobsOf(t.alterColumnType("x", "BIGINT"))
+    assert(jobs == 0, s"ALTER COLUMN TYPE ran $jobs job(s)")
+    assert(t.read.schema("x").dataType == LongType)
+    assert(t.read.select(sum($"x")).head.getLong(0) == 3L)
   }
 
   test("widen races concurrent appends safely: the claim-first writer " +
