@@ -13,6 +13,19 @@ class TableMetaSpec extends SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.types._
 
+  test("codec round-trips all five kinds; tabs survive inside CHECK and " +
+      "generation expressions") {
+    val m = TableMeta(
+      checks = Map("pos" -> "id > 0", "tabbed" -> "s <> '\t'"),
+      notNull = Set("id", "s"),
+      defaults = Map("s" -> (("STRING", "'D'")),
+        "d" -> (("DECIMAL(10,2)", "1.5"))),
+      generated = Map("g" -> "id * 2", "h" -> "concat(s, '\t')"),
+      identity = Map("rid" -> ((1L, 1L)), "down" -> ((-5L, -2L))))
+    assert(TableMeta.decode(m.encode, "test") == m)
+    assert(TableMeta.decode(TableMeta.Empty.encode, "test").isEmpty)
+  }
+
   test("codec round-trips every declaration and layout kind; tabs, " +
       "newlines survive") {
     val odd = "a\tb\nc" // a column name holding a tab and a newline
