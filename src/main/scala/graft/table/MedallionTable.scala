@@ -408,19 +408,6 @@ final class MedallionTable(
     */
   def commitVersion: Long = commitMarkers.lastOption.getOrElse(0L)
 
-  /** CAS: atomically create the `v{expected+1}.commit` marker
-    * (create-exclusive — atomic on HDFS/object stores with conditional
-    * create; on the local fs, Hadoop's `create(overwrite=false)` is
-    * check-then-create, so the claim goes through
-    * `java.io.File.createNewFile`, which the JDK documents as atomic —
-    * the guarantee holds uniformly in the environment the specs and
-    * bench actually run in). Returns false when another writer already
-    * claimed that ordinal, i.e. the table advanced since `expected` was
-    * read. Keeps the newest [[MedallionTable.HistoryDepth]] markers. The
-    * marker body records the operation name — existence is the CAS, the
-    * body is DESCRIBE HISTORY-style metadata (an empty body read between
-    * creation and the body write renders as "unknown" in [[history]]).
-    */
   /** Atomic create-exclusive file creation with a body — the CAS
     * primitive under commit markers AND the writer lock. Atomic on
     * HDFS/object stores with conditional create; on the local fs,
@@ -454,6 +441,19 @@ final class MedallionTable(
         }
       } catch { case _: java.io.IOException => false }
 
+  /** CAS: atomically create the `v{expected+1}.commit` marker
+    * (create-exclusive — atomic on HDFS/object stores with conditional
+    * create; on the local fs, Hadoop's `create(overwrite=false)` is
+    * check-then-create, so the claim goes through
+    * `java.io.File.createNewFile`, which the JDK documents as atomic —
+    * the guarantee holds uniformly in the environment the specs and
+    * bench actually run in). Returns false when another writer already
+    * claimed that ordinal, i.e. the table advanced since `expected` was
+    * read. Keeps the newest [[MedallionTable.HistoryDepth]] markers. The
+    * marker body records the operation name — existence is the CAS, the
+    * body is DESCRIBE HISTORY-style metadata (an empty body read between
+    * creation and the body write renders as "unknown" in [[history]]).
+    */
   private def tryClaimCommit(expected: Long, op: String): Boolean = {
     fs.mkdirs(commitsDir)
     // In-commit timestamp (Delta ICT parity): the commit instant rides in
@@ -1983,9 +1983,27 @@ final class MedallionTable(
     rewriteVia({ m =>
       refuseIdentitySet(source.columns, "merge source", m)
       MergeOps.merge3Clause(read, source, keys, updateCondition,
-        deleteNotMatchedBySource)
+        deleteNotMatchedBySource, m.defaultColumns)
     }, op = "merge")
   }
+
+  /** Session flag making every library-path merge schema-evolving —
+    * Delta's `schema.autoMerge.enabled` analog. (SQL merges evolve via
+    * the `WITH SCHEMA EVOLUTION` clause, which Spark's analyzer gates.)
+    */
+  private def autoMergeSchemaConf: Boolean =
+    spark.conf.getOption("spark.graft.autoMergeSchema").exists(_.toBoolean)
+
+  /** The columns a clause merge adds to the table, typed from the source
+    * — under `evolveSchema` or the session flag; otherwise an assignment
+    * to a column the table lacks refuses.
+    */
+  private def mergeEvolution(cols: Seq[String],
+      clauses: Seq[MergeOps.WhenClause], source: DataFrame,
+      evolveSchema: Boolean): Seq[(String, org.apache.spark.sql.types.DataType)] =
+    if (evolveSchema || autoMergeSchemaConf)
+      MergeOps.resolveEvolvedFromSource(cols, clauses, source, path)
+    else { MergeOps.refuseEvolvedAssignments(cols, clauses, path); Nil }
 
   /** General ordered-clause merge (see [[MergeOps.mergeClauses]]) — the
     * full `MERGE INTO … WHEN …` surface, through the SAME rewrite commit
@@ -2000,15 +2018,7 @@ final class MedallionTable(
     *        rewrite would otherwise FAN OUT a matched target row once per
     *        duplicate source row and silently duplicate it in the
     *        rewritten table (review finding, round 10).
-    */
-  /** Session flag making every library-path merge schema-evolving —
-    * Delta's `schema.autoMerge.enabled` analog. (SQL merges evolve via
-    * the `WITH SCHEMA EVOLUTION` clause, which Spark's analyzer gates.)
-    */
-  private def autoMergeSchemaConf: Boolean =
-    spark.conf.getOption("spark.graft.autoMergeSchema").exists(_.toBoolean)
-
-  /** @param evolveSchema `MERGE … WITH SCHEMA EVOLUTION` / the
+    * @param evolveSchema `MERGE … WITH SCHEMA EVOLUTION` / the
     *        `spark.graft.autoMergeSchema` session flag: assignments to
     *        columns the target lacks WIDEN the table — each new column is
     *        typed from the like-named SOURCE column, old rows read it as
@@ -2026,24 +2036,13 @@ final class MedallionTable(
     if (checkUniqueKeys)
       MergeOps.requireUniqueKeys(source, keys.map(_._2))
     val clauses = matched ++ notMatched ++ notMatchedBySource
-    val evolved =
-      if (evolveSchema || autoMergeSchemaConf)
-        MergeOps.resolveEvolvedFromSource(read.columns.toSeq, clauses,
-          source, path)
-      else {
-        MergeOps.refuseEvolvedAssignments(read.columns.toSeq, clauses, path)
-        Nil
-      }
+    val evolved = mergeEvolution(read.columns.toSeq, clauses, source, evolveSchema)
     rewriteVia({ m =>
       refuseIdentitySet(MergeOps.assignedColumns(clauses), "MERGE clause", m)
-      // target widened with source-typed NULL columns INSIDE the
-      // post-fence rewrite product: the rewrite then materializes the
-      // evolved schema physically in one pass
-      val target = evolved.foldLeft(read) { case (d, (n, dt)) =>
-        d.withColumn(n, org.apache.spark.sql.functions.lit(null).cast(dt))
-      }
-      MergeOps.mergeClauses(target, source, keys, matched, notMatched,
-        notMatchedBySource, m.defaultColumns)
+      // evolved columns join INSIDE the post-fence rewrite product: the
+      // rewrite then materializes the evolved schema physically in one pass
+      MergeOps.mergeClauses(read, source, keys, matched, notMatched,
+        notMatchedBySource, m.defaultColumns, evolved)
     }, op = "merge")
   }
 
@@ -2096,155 +2095,98 @@ final class MedallionTable(
       notMatched: Seq[MergeOps.WhenNotMatchedInsert],
       notMatchedBySource: Seq[MergeOps.WhenClause] = Nil,
       checkUniqueKeys: Boolean = true,
-      evolveSchema: Boolean = false): Unit = withClaimedCommit("merge-dv") {
-    import org.apache.spark.sql.functions.col
-    requireNoDeltaLogForDv()
-    if (checkUniqueKeys)
-      MergeOps.requireUniqueKeys(source, keys.map(_._2))
-    val allClauses = matched ++ notMatched ++ notMatchedBySource
-    val m = meta
-    refuseIdentitySet(MergeOps.assignedColumns(allClauses), "MERGE clause", m)
-    if (evolveSchema || autoMergeSchemaConf)
+      evolveSchema: Boolean = false): Unit =
+    withClaimedCommitScoped("merge-dv", None) { claimed =>
+      requireNoDeltaLogForDv()
+      if (checkUniqueKeys)
+        MergeOps.requireUniqueKeys(source, keys.map(_._2))
+      val allClauses = matched ++ notMatched ++ notMatchedBySource
+      val m = meta
+      refuseIdentitySet(MergeOps.assignedColumns(allClauses), "MERGE clause", m)
       // Schema evolution on the DV path is METADATA-ONLY, recorded inside
       // this merge's own claimed commit: each new column lands as a
       // SchemaOverlay ADD (typed from the source), so base files read it
       // as typed NULL while the staged batch materializes real values —
       // zero base-file rewrites, the same cost shape as the merge itself.
-      MergeOps.resolveEvolvedFromSource(read.columns.toSeq,
-        allClauses, source, path)
-        .foreach { case (n, dt) => recordAddColumn(n, dt.sql) }
-    val logical = read // post-evolution: includes any just-added columns
-    MergeOps.refuseEvolvedAssignments(logical.columns.toSeq,
-      allClauses, path)
-    val liveAll = dvLive()
-    // Partition-pruned table pass: when a partition column is among the
-    // merge keys, only its source-side key values can match — derive an
-    // isin filter from the (broadcast-sized by contract) source, and
-    // Catalyst's partition pruning drops every other directory from the
-    // scan. A merge keyed on the partition column that touches 3 of 1000
-    // partitions scans 3. Null key values never equi-match, so dropping
-    // them from the filter set is exact; inserts are unaffected (the
-    // anti-join runs against the matched keys, which the pruning cannot
-    // shrink below the true matched set).
-    // By-source merges act on the UNMATCHED target rows — the exact row
-    // class partition/key-range pushdown would prune away — so both
-    // pushdowns are off for them (a by-source sync merge must see every
-    // target row to decide what disappeared).
-    val partKeys =
-      if (notMatchedBySource.nonEmpty) Nil
-      else keys.filter { case (tk, _) => partitionColumns.contains(tk) }
-    MedallionTable.lastMergeDvPartitionFilter =
-      if (partKeys.isEmpty) None
-      else Some(partKeys.map { case (tk, sk) =>
-        val vals = source.select(col(sk)).distinct().collect()
-          .map(_.get(0)).filter(_ != null).toSeq
-        tk -> vals
+      val target = read
+      val evolved = mergeEvolution(target.columns.toSeq, allClauses, source,
+        evolveSchema)
+      evolved.foreach { case (n, dt) => recordAddColumn(n, dt.sql) }
+      // post-evolution: includes any just-added columns
+      val logical = if (evolved.isEmpty) target else read
+      val live = mergeCandidates(dvLive(), source,
+        if (notMatchedBySource.nonEmpty) Nil else keys)
+      val plan = MergeOps.mergeVectoredPlan(live, source, keys, matched,
+        notMatched, logical.columns.toSeq, logical.schema,
+        Seq("__graft_dv_file", "__graft_dv_pos"), m.defaultColumns,
+        notMatchedBySource)
+      val j = plan.matchedPairs.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val batch = java.util.UUID.randomUUID().toString.take(12)
+        // new versions + inserts; merge-inserted rows carry a NULL identity
+        // — filled (no-op when none registered; updates keep their base
+        // row's id)
+        writeBatch(enforced(fillIdentityNulls(
+          plan.newVersions(j).unionByName(plan.inserts(j)), m), m), batch, m)
+        // the recorded target KEY columns let the feed read classify
+        // postimages (has a same-key preimage in this commit ⇒
+        // update_postimage, else insert) and preimages (has a postimage ⇒
+        // update_preimage, else delete) — exact for key-stable merges; a
+        // key-changing update renders as delete+insert (same net change
+        // set, Delta's rendering for re-keyed rows)
+        commitBatch(batch, plan.marks(j), claimed, "merge-dv",
+          "pre-merge-dv-commit", Some(keys.map(_._1)), inserts = true)
+      } finally j.unpersist()
+    }
+
+  /** The rows of `live` a merge on `keys` can match, computed from the
+    * (broadcast-sized by contract) source. A partition column among the
+    * keys narrows the scan to the source's values of it: Catalyst's
+    * partition pruning drops every other directory, so a merge touching 3
+    * of 1000 partitions scans 3. Null key values never equi-match, so
+    * dropping them from the value set is exact. Every other key narrows
+    * the scan to the source's [min, max] (Delta's merge file skipping from
+    * source stats, in predicate form): pushed to the parquet scan it arms
+    * row-group skipping, plus the manifest's per-file pruning when the
+    * table is clustered on the key. Inserts are unaffected: their
+    * anti-join runs against the matched keys, which pruning cannot shrink
+    * below the true matched set. By-source merges pass no keys — they act
+    * on exactly the unmatched target rows this pruning would drop.
+    */
+  private def mergeCandidates(live: DataFrame, source: DataFrame,
+      keys: Seq[(String, String)]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, max, min}
+    val (partKeys, rangeKeys) =
+      keys.partition { case (tk, _) => partitionColumns.contains(tk) }
+    val values = if (partKeys.isEmpty) None else Some(partKeys.map {
+      case (tk, sk) => tk -> source.select(col(sk)).distinct().collect()
+        .map(_.get(0)).filter(_ != null).toSeq
+    }.toMap)
+    // one aggregation over the source covers every range key
+    val ranges = if (rangeKeys.isEmpty) None else {
+      val aggs = rangeKeys.flatMap { case (_, sk) =>
+        Seq(min(col(sk)).as(s"__min_$sk"), max(col(sk)).as(s"__max_$sk")) }
+      val r = source.agg(aggs.head, aggs.tail: _*).head()
+      Some(rangeKeys.zipWithIndex.flatMap { case ((tk, _), i) =>
+        val (lo, hi) = (r.get(2 * i), r.get(2 * i + 1))
+        if (lo == null || hi == null) None else Some(tk -> ((lo, hi)))
       }.toMap)
-    val livePart = MedallionTable.lastMergeDvPartitionFilter match {
-      case Some(f) => f.foldLeft(liveAll) { case (df, (tk, vals)) =>
-        df.filter(col(tk).isInCollection(vals))
-      }
-      case None => liveAll
     }
-    // Key-range pushdown for the non-partition merge keys (Delta's merge
-    // file skipping from source stats, in predicate form): a matched row's
-    // key is necessarily within the source's [min, max], so the range
-    // conjunct is exact — and pushed to the parquet scan it arms row-group
-    // skipping plus the manifest's per-file pruning when the table is
-    // clustered on the key. One aggregation over the broadcast-sized
-    // source covers all keys; null-keyed target rows drop (they cannot
-    // equi-match). Unclustered tables pay one codegen'd compare per row.
-    val rangeKeys =
-      if (notMatchedBySource.nonEmpty) Nil
-      else keys.filterNot { case (tk, _) => partitionColumns.contains(tk) }
-    MedallionTable.lastMergeDvRangeFilter =
-      if (rangeKeys.isEmpty) None
-      else {
-        import org.apache.spark.sql.functions.{max, min}
-        val aggs = rangeKeys.flatMap { case (_, sk) =>
-          Seq(min(col(sk)).as(s"__min_$sk"), max(col(sk)).as(s"__max_$sk")) }
-        val r = source.agg(aggs.head, aggs.tail: _*).head()
-        Some(rangeKeys.zipWithIndex.flatMap { case ((tk, _), i) =>
-          val (lo, hi) = (r.get(2 * i), r.get(2 * i + 1))
-          if (lo == null || hi == null) None else Some(tk -> ((lo, hi)))
-        }.toMap)
-      }
-    val live = MedallionTable.lastMergeDvRangeFilter match {
-      case Some(f) if f.nonEmpty => f.foldLeft(livePart) {
-        case (df, (tk, (lo, hi))) =>
-          df.filter(col(tk) >= org.apache.spark.sql.functions.lit(lo) &&
-            col(tk) <= org.apache.spark.sql.functions.lit(hi))
-      }
-      case _ => livePart
+    MedallionTable.lastMergeDvPartitionFilter = values
+    MedallionTable.lastMergeDvRangeFilter = ranges
+    val byValue = values.getOrElse(Map.empty).foldLeft(live) {
+      case (df, (tk, vs)) => df.filter(col(tk).isInCollection(vs))
     }
-    val plan = MergeOps.mergeVectoredPlan(live, source, keys, matched,
-      notMatched, logical.columns.toSeq, logical.schema,
-      Seq("__graft_dv_file", "__graft_dv_pos"), m.defaultColumns,
-      notMatchedBySource)
-    val j = plan.matchedPairs.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val batch = java.util.UUID.randomUUID().toString.take(12)
-      val batchDir = DvUpdates.batchDataDir(path, batch)
-      val marksStaging = DvUpdates.marksStagingDir(path, batch)
-      // merge-inserted rows carry a NULL identity — fill (no-op when
-      // none registered; updates keep their base row's id)
-      val newRows = fillIdentityNulls(
-        plan.newVersions(j).unionByName(plan.inserts(j)), m)
-      // stage 1: new versions + inserts — table partition layout, CHECKs
-      // enforced, physical column names (same dialect as the base files)
-      writeBatch(enforced(newRows, m), batch, m)
-      // stage 2: marks for the consumed matched rows' OLD positions
-      plan.marks(j).write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
-      // row-based emptiness: an empty frame's write can still leave a
-      // zero-row part file, which must not become a committed batch —
-      // answered from the just-written footers driver-side (no Spark job)
-      val batchHasRows = DvUpdates.anyRows(spark, batchDir)
-      val marksHaveRows = DvUpdates.anyRows(spark, marksStaging.toString)
-      if (!batchHasRows && !marksHaveRows) {
-        // no clause consumed anything: leave no witness, clear the litter
-        fs.delete(new Path(batchDir), true)
-        fs.delete(marksStaging, true)
-        if (ChangeFeed.isEnabled(spark, path))
-          try ChangeFeed.captureEmpty(spark, path, commitVersion, "merge-dv")
-          catch { case scala.util.control.NonFatal(_) => () }
-      } else {
-        // An insert-only merge commits zero marks; a delete-only merge
-        // commits an empty batch. The WITNESS is the marks DIRECTORY
-        // existing (DvUpdates.committedBatches), so materialize both dirs
-        // even when their side is empty — an empty marks dir hides
-        // nothing and an empty batch dir contributes no scan, but the
-        // commit rename still flips visibility atomically.
-        fs.mkdirs(new Path(batchDir))
-        if (!fs.exists(marksStaging)) fs.mkdirs(marksStaging)
-        invalidateStats()
-        fs.mkdirs(new Path(DeletionVectors.dir(path)))
-        MedallionTable.testFailpoint("pre-merge-dv-commit")
-        // COMMIT POINT: one atomic rename — marks hide the old versions
-        // AND witness the staged batch into reads (DvUpdates contract)
-        if (!fs.rename(marksStaging, DvUpdates.marksDir(path, batch)))
-          throw new java.io.IOException(
-            s"merge-dv commit rename failed: $marksStaging -> " +
-              DvUpdates.marksDir(path, batch))
-        // feed capture: the recorded target KEY columns let the read
-        // classify postimages (has a same-key preimage in this commit ⇒
-        // update_postimage, else insert) and preimages (has a postimage
-        // ⇒ update_preimage, else delete) — exact for key-stable merges;
-        // a key-changing update renders as delete+insert (same net
-        // change set, Delta's rendering for re-keyed rows)
-        if (ChangeFeed.isEnabled(spark, path))
-          try ChangeFeed.captureBatch(spark, path, commitVersion, "merge-dv",
-            batch, ShallowClone.listParquet(spark, batchDir),
-            keys.map(_._1))
-          catch { case scala.util.control.NonFatal(_) => () } // post-commit
-      }
-    } finally j.unpersist()
+    ranges.getOrElse(Map.empty).foldLeft(byValue) {
+      case (df, (tk, (lo, hi))) => df.filter(col(tk) >= lit(lo) && col(tk) <= lit(hi))
+    }
   }
 
-  /** Stage a DV-update batch's new row versions under
-    * `_graft_meta/dv_updates/<batch>/`: the table's partition layout and
-    * physical column names, the same dialect as the base files. The data
-    * schema written goes to the snapshot the commit publishes.
+  /** Stage a DV batch's rows under `_graft_meta/dv_updates/<batch>/`:
+    * the table's partition layout and physical column names, the same
+    * dialect as the base files. The data schema written goes to the
+    * snapshot the commit publishes.
     */
   private def writeBatch(rows: DataFrame, batch: String,
       m: TableMeta): Unit = {
@@ -2254,6 +2196,64 @@ final class MedallionTable(
      else w).parquet(DvUpdates.batchDataDir(path, batch))
     TableSnapshot.wroteBatch(this, batch, org.apache.spark.sql.types.StructType(
       staged.schema.filterNot(f => partitionColumns.contains(f.name))))
+  }
+
+  /** The staged-batch commit every DV batch writer shares: stages `marks`
+    * (`file`/`pos` of the rows the batch hides) beside the batch the
+    * caller staged; ONE atomic rename of the marks directory is the
+    * commit point — the marks hide the old rows AND witness the batch
+    * into reads ([[DvUpdates]] contract), so an insert-only merge commits
+    * zero marks and a delete-only merge an empty batch. Emptiness comes
+    * from the just-written footers (no Spark job): a batch with nothing
+    * on either side is cleared, never committed — it would be a
+    * permanent dead read-union branch.
+    *
+    * @param inserts the batch may hold rows with no marks (merge
+    *        inserts); otherwise rows without marks abort before the commit
+    *        could duplicate them
+    * @param feedKeys Some(target key columns) captures the batch into the
+    *        change feed at the `claimed` ordinal (Nil: every postimage is
+    *        an update); None leaves the feed to the commit's op record
+    * @return whether a batch committed
+    */
+  private def commitBatch(batch: String, marks: DataFrame, claimed: Long,
+      op: String, failpoint: String, feedKeys: Option[Seq[String]],
+      inserts: Boolean = false): Boolean = {
+    val batchDir = DvUpdates.batchDataDir(path, batch)
+    val marksStaging = DvUpdates.marksStagingDir(path, batch)
+    marks.write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
+    val hasRows = DvUpdates.anyRows(spark, batchDir)
+    // rows that may be inserts need no marks check
+    val hasMarks = !(hasRows && inserts) &&
+      DvUpdates.anyRows(spark, marksStaging.toString)
+    // feed capture is best-effort in both branches: the commit already
+    // happened (a failure fail-stops the feed read instead)
+    val feed = feedKeys.filter(_ => ChangeFeed.isEnabled(spark, path))
+    if (!hasRows && !hasMarks) {
+      fs.delete(new Path(batchDir), true)
+      fs.delete(marksStaging, true)
+      feed.foreach { _ =>
+        try ChangeFeed.captureEmpty(spark, path, claimed, op)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
+      false
+    } else {
+      require(hasMarks || inserts,
+        s"$op: staged batch has data but no marks ($marksStaging) — " +
+          "aborting before the commit could duplicate rows")
+      invalidateStats()
+      fs.mkdirs(new Path(DeletionVectors.dir(path)))
+      MedallionTable.testFailpoint(failpoint)
+      if (!fs.rename(marksStaging, DvUpdates.marksDir(path, batch)))
+        throw new java.io.IOException(s"$op commit rename failed: " +
+          s"$marksStaging -> ${DvUpdates.marksDir(path, batch)}")
+      feed.foreach { k =>
+        try ChangeFeed.captureBatch(spark, path, claimed, op, batch,
+          ShallowClone.listParquet(spark, batchDir), k)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
+      true
+    }
   }
 
   /** Type-2 SCD merge (see [[MergeOps.scd2Merge]]): applies an attribute
@@ -2456,16 +2456,8 @@ final class MedallionTable(
     * keeping schema in its log.
     */
   def delete(cond: Column): Unit = {
-    val df = read // ONE relation: schema, refs analysis, and rewrite share it
-    val schema = df.schema
-    // Resolve the predicate against the table schema to learn which
-    // columns it references (the raw Column is an opaque unresolved node
-    // with empty `.references`). Analysis only — no job runs.
-    val refs = df.select(cond.as("__graft_cond"))
-      .queryExecution.analyzed.expressions
-      .flatMap(_.references.map(_.name)).toSet
-    if (retainVersions == 0 && partitionColumns.nonEmpty && refs.nonEmpty &&
-        refs.subsetOf(partitionColumns.toSet)) {
+    val schema = read.schema
+    if (retainVersions == 0 && partitionOnly(cond, schema)) {
       withClaimedCommit("delete-partitions") {
       matchingPartitionDirs(cond, schema)
         .foreach(d => fs.delete(new Path(d), true))
@@ -3007,28 +2999,21 @@ final class MedallionTable(
         "see the deletion-vector sidecar — use delete() (rewrite), or " +
         "OPTIMIZE then re-sync the export")
 
-  /** DELETE as a deletion vector ([[DeletionVectors]]): records matching
-    * rows' positions in the `_graft_meta/dv` sidecar instead of
-    * rewriting files — O(matched) write cost, zero data files touched,
-    * result-identical to [[delete]] (TRUE deletes; FALSE and NULL
-    * survive). The positions are computed on the DV-APPLIED view, so
-    * re-marking already-deleted rows is impossible by construction (and
-    * duplicates would be inert anyway). Invalidate-then-mark ordering
-    * matches the other in-place mutations: a manifest must never
-    * describe rows a reader won't see.
+  /** Whether `cond` references partition columns only (at least one) —
+    * the predicates a partition-scoped write can serve by directory.
+    * Resolved against `schema` by a LOCAL empty relation (analysis only —
+    * no files listed, no job); a predicate that fails analysis (stale
+    * recorded naming) is not, so callers fall back to the conservative
+    * global path.
     */
-  /** Column names a predicate references, resolved against `schema` by a
-    * LOCAL empty relation (analysis only — no files listed, no job).
-    * None when analysis fails (stale recorded naming: fall back to the
-    * conservative global path).
-    */
-  private def predicateRefs(cond: Column,
-      schema: org.apache.spark.sql.types.StructType): Option[Set[String]] =
-    try Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      .select(cond.as("__graft_cond"))
-      .queryExecution.analyzed.expressions
-      .flatMap(_.references.map(_.name)).toSet)
-    catch { case scala.util.control.NonFatal(_) => None }
+  private def partitionOnly(cond: Column,
+      schema: org.apache.spark.sql.types.StructType): Boolean =
+    partitionColumns.nonEmpty && (try {
+      val refs = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .select(cond.as("__graft_cond")).queryExecution.analyzed.expressions
+        .flatMap(_.references.map(_.name)).toSet
+      refs.nonEmpty && refs.subsetOf(partitionColumns.toSet)
+    } catch { case scala.util.control.NonFatal(_) => false })
 
   /** Physical-name base-dir scan that stays schema-resolvable when the
     * base holds NO data files — incremental clustering's steady state
@@ -3099,6 +3084,16 @@ final class MedallionTable(
       col(DvUpdates.PosCol).as("__graft_dv_pos")): _*))
   }
 
+  /** DELETE as a deletion vector ([[DeletionVectors]]): records matching
+    * rows' positions in the `_graft_meta/dv` sidecar instead of
+    * rewriting files — O(matched) write cost, zero data files touched,
+    * result-identical to [[delete]] (TRUE deletes; FALSE and NULL
+    * survive). The positions are computed on the DV-APPLIED view, so
+    * re-marking already-deleted rows is impossible by construction (and
+    * duplicates would be inert anyway). Invalidate-then-mark ordering
+    * matches the other in-place mutations: a manifest must never
+    * describe rows a reader won't see.
+    */
   def deleteVectored(cond: Column): Unit =
     // vanished-files retry: the scan/listing can catch a concurrent
     // disjoint rewrite's dir-replacement gap (retryOnVanishedFiles)
@@ -3120,58 +3115,46 @@ final class MedallionTable(
     // the recorded schema is authoritative for exactly the columns
     // footprint analysis needs; None (no schema recorded: append-created
     // tables) keeps the global lock. A corrupt record throws.
-    val cheapSchema =
-      if (partitionColumns.isEmpty) None else meta.schema
-    val footprint: Option[Set[String]] = cheapSchema.flatMap { schema =>
-      predicateRefs(cond, schema) match {
-        case Some(refs)
-            if refs.nonEmpty && refs.subsetOf(partitionColumns.toSet) =>
-          Some(matchingPartitionDirs(cond, schema)
-            .map(d => "p:" + relativePartitionDir(d)).toSet + "dv-stage")
-        case _ => None // row-level predicate, or stale record: global
-      }
+    val scope = (if (partitionColumns.isEmpty) None else meta.schema)
+      .filter(partitionOnly(cond, _))
+      .map(PartitionScope(cond, _, Set("dv-stage")))
+    // overlay applied so the predicate resolves against the SAME logical
+    // schema delete() sees (unmaterialized ADDs evaluate as typed NULLs,
+    // tombstoned columns are invisible) — the result-identical contract
+    withPartitionClaim("delete-dv", scope) { (claimed, _) =>
+      deleteMarks(claimed, _.filter(coalesce(cond, lit(false))))
     }
-    withClaimedCommitScoped("delete-dv", footprint) { claimed =>
-      requireNoDeltaLogForDv()
-      // scoped path: the matched set must not have grown since the
-      // footprint was declared (dir-creating writers are global and thus
-      // excluded — asserted like compactWhere, never assumed), or the
-      // marks could dangle under a concurrent disjoint rewrite
-      footprint.foreach { declared =>
-        val inside = matchingPartitionDirs(cond, cheapSchema.get)
-          .map(d => "p:" + relativePartitionDir(d)).toSet
-        require(inside.subsetOf(declared),
-          s"DELETE (DV): partitions ${(inside -- declared).mkString(", ")} " +
-            "appeared after the footprint was declared — aborting before " +
-            "marks could dangle under a concurrent rewrite")
-      }
-      val dvPath = DeletionVectors.dir(path)
-      val cdfOn = ChangeFeed.isEnabled(spark, path)
-      val marksBefore = if (cdfOn) dvMarkFiles(dvPath) else Set.empty[String]
-      // overlay applied so the predicate resolves against the SAME logical
-      // schema delete() sees (unmaterialized ADDs evaluate as typed NULLs,
-      // tombstoned columns are invisible) — the result-identical contract
-      val live = dvLive()
-      invalidateStats()
-      live.filter(coalesce(cond, lit(false)))
-        .select(org.apache.spark.sql.functions.col("__graft_dv_file").as("file"),
-          org.apache.spark.sql.functions.col("__graft_dv_pos").as("pos"))
-        .write.mode(SaveMode.Append).parquet(dvPath)
-      // second invalidate AFTER the marks land: a refresh that started
-      // mid-flight (stamp taken after our claim) could otherwise commit
-      // a manifest built before the marks — see commitManifestSwap
-      invalidateStats()
-      // feed capture = the mark FILES this commit appended; the deleted
-      // row images reconstruct by position at read (ChangeFeed scaladoc).
-      // Non-fatal: the delete's data effect has landed — a capture failure
-      // must not release the marker (the feed read fail-stops instead).
-      // `claimed`, not commitVersion: a concurrent disjoint writer can
-      // advance the counter while this body runs.
-      if (cdfOn)
-        try ChangeFeed.captureMarks(spark, path, claimed,
-          "delete-dv", (dvMarkFiles(dvPath) -- marksBefore).toSeq)
-        catch { case scala.util.control.NonFatal(_) => () }
-    }
+  }
+
+  /** The flat-mark DELETE body both DV deletes share: appends the
+    * positions of the rows `victims` keeps from the live positioned view
+    * to the sidecar, and captures the appended mark FILES as the feed's
+    * change unit at the `claimed` ordinal (a concurrent disjoint writer
+    * can advance the counter while this body runs); the deleted row
+    * images reconstruct by position at read (ChangeFeed scaladoc). Stats
+    * are invalidated before the marks land and again after: a refresh
+    * that started mid-flight could otherwise commit a manifest built
+    * before them (see commitManifestSwap).
+    */
+  private def deleteMarks(claimed: Long,
+      victims: DataFrame => DataFrame): Unit = {
+    import org.apache.spark.sql.functions.col
+    requireNoDeltaLogForDv()
+    val dvPath = DeletionVectors.dir(path)
+    val cdfOn = ChangeFeed.isEnabled(spark, path)
+    val marksBefore = if (cdfOn) dvMarkFiles(dvPath) else Set.empty[String]
+    val live = dvLive()
+    invalidateStats()
+    victims(live)
+      .select(col("__graft_dv_file").as("file"), col("__graft_dv_pos").as("pos"))
+      .write.mode(SaveMode.Append).parquet(dvPath)
+    invalidateStats()
+    // non-fatal: the delete's data effect has landed — a capture failure
+    // must not release the marker (the feed read fail-stops instead)
+    if (cdfOn)
+      try ChangeFeed.captureMarks(spark, path, claimed,
+        "delete-dv", (dvMarkFiles(dvPath) -- marksBefore).toSeq)
+      catch { case scala.util.control.NonFatal(_) => () }
   }
 
   /** Top-level mark files of the DV sidecar (update_* batch-marks dirs
@@ -3193,25 +3176,10 @@ final class MedallionTable(
     * `deleteVectored(keys-tuple IN keySet)`.
     */
   def deleteVectoredKeys(keys: DataFrame, keyCols: Seq[String]): Unit =
-    withClaimedCommit("delete-dv") {
-      import org.apache.spark.sql.functions.broadcast
-      requireNoDeltaLogForDv()
-      val dvPath = DeletionVectors.dir(path)
-      val cdfOn = ChangeFeed.isEnabled(spark, path)
-      val marksBefore = if (cdfOn) dvMarkFiles(dvPath) else Set.empty[String]
-      val live = dvLive()
-      invalidateStats()
-      live.join(broadcast(keys.select(keyCols.map(
-            org.apache.spark.sql.functions.col): _*).distinct()),
-          keyCols, "left_semi")
-        .select(org.apache.spark.sql.functions.col("__graft_dv_file").as("file"),
-          org.apache.spark.sql.functions.col("__graft_dv_pos").as("pos"))
-        .write.mode(SaveMode.Append).parquet(dvPath)
-      invalidateStats() // post-write: see deleteVectored
-      if (cdfOn)
-        try ChangeFeed.captureMarks(spark, path, commitVersion,
-          "delete-dv", (dvMarkFiles(dvPath) -- marksBefore).toSeq)
-        catch { case scala.util.control.NonFatal(_) => () } // read fail-stops
+    withClaimedCommitScoped("delete-dv", None) { claimed =>
+      import org.apache.spark.sql.functions.{broadcast, col}
+      deleteMarks(claimed, _.join(broadcast(
+        keys.select(keyCols.map(col): _*).distinct()), keyCols, "left_semi"))
     }
 
   /** Whether any deletion-vector soft state is live — delete marks in
@@ -3292,74 +3260,67 @@ final class MedallionTable(
     * Refused on a column-mapped table (the batch files speak the physical
     * dialect; OPTIMIZE materializes the map and the batches together).
     */
-  def compactDvBatches(): Int = withClaimedCommit("dv-batch-compact") {
-    import org.apache.spark.sql.functions.col
-    require(meta.colMap.isEmpty,
-      "dv-batch-compact: table has renamed columns (column map); run " +
-        "OPTIMIZE to materialize the map and the batches together")
-    val old = DvUpdates.committedBatches(spark, path)
-    if (old.size < 2) 0
-    else {
-      val newBatch = java.util.UUID.randomUUID().toString.take(12)
-      val newDataDir = DvUpdates.batchDataDir(path, newBatch)
-      val marksStaging = DvUpdates.marksStagingDir(path, newBatch)
-      // current VISIBLE amended rows: every batch branch, DV-applied
-      // (None ⟺ no old batch holds any file — delete-only batches).
-      // Clustered to few files: the fold inherits one shard per task per
-      // branch (tiny files × many), and every read lists and plans the
-      // batch's files — amendment volume between OPTIMIZE runs is the
-      // bound, so one file per partition value (or a handful total) is
-      // the right shape.
-      DvUpdates.foldBatchesOpt(spark, path, None).foreach { combined =>
-        val shaped =
-          if (partitionColumns.nonEmpty)
-            combined.repartition(partitionColumns.map(
-              org.apache.spark.sql.functions.col): _*)
-          else combined.coalesce(
-            math.max(1, spark.sessionState.conf.numShufflePartitions / 8))
-        val w = shaped.write.mode(SaveMode.Overwrite)
-        (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
-         else w).parquet(newDataDir)
+  def compactDvBatches(): Int =
+    withClaimedCommitScoped("dv-batch-compact", None) { claimed =>
+      import org.apache.spark.sql.functions.col
+      require(meta.colMap.isEmpty,
+        "dv-batch-compact: table has renamed columns (column map); run " +
+          "OPTIMIZE to materialize the map and the batches together")
+      val old = DvUpdates.committedBatches(spark, path)
+      if (old.size < 2) 0
+      else {
+        val newBatch = java.util.UUID.randomUUID().toString.take(12)
+        // current VISIBLE amended rows: every batch branch, DV-applied
+        // (None ⟺ no old batch holds any file — delete-only batches).
+        // Clustered to few files: the fold inherits one shard per task per
+        // branch (tiny files × many), and every read lists and plans the
+        // batch's files — amendment volume between OPTIMIZE runs is the
+        // bound, so one file per partition value (or a handful total) is
+        // the right shape.
+        DvUpdates.foldBatchesOpt(spark, path, None) match {
+          case Some(combined) => writeBatch(
+            if (partitionColumns.nonEmpty)
+              combined.repartition(partitionColumns.map(col): _*)
+            else combined.coalesce(
+              math.max(1, spark.sessionState.conf.numShufflePartitions / 8)),
+            newBatch, meta)
+          case None => fs.mkdirs(new Path(DvUpdates.batchDataDir(path, newBatch)))
+        }
+        // marks: old batches' marks (replicated — their dirs are deleted
+        // after commit) + hide-all for every old batch file's rows. Either
+        // side can be empty (insert-only merges commit no marks; delete-only
+        // merges commit no files).
+        val oldMarkFiles = old.flatMap(b => ShallowClone.listParquet(
+          spark, DvUpdates.marksDir(path, b).toString))
+        val oldMarks =
+          if (oldMarkFiles.isEmpty) None
+          else Some(spark.read.schema(DeletionVectors.MarkSchema)
+            .parquet(oldMarkFiles: _*)
+            .select(col("file"), col("pos")))
+        val hideAll = DvUpdates.committedScans(spark, TableSnapshot.of(this))
+          .map { case (_, scan) =>
+            scan.select(
+              DeletionVectors.fileKey(col("_metadata.file_path")).as("file"),
+              col("_metadata.row_index").as("pos"))
+          }.reduceOption(_ unionByName _)
+        val marks = (oldMarks.toSeq ++ hideAll.toSeq).reduceOption(_ unionByName _)
+          .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+            DeletionVectors.MarkSchema))
+        // one marks file: marks are collect-cap-bounded, and every read
+        // lists and scans the sidecar — 32 distinct() shards is pure creep
+        if (!commitBatch(newBatch, marks.distinct().coalesce(1), claimed,
+            "dv-batch-compact", "pre-dv-batch-compact-commit", None)) 0
+        else {
+          MedallionTable.testFailpoint("post-dv-batch-compact-commit")
+          // dead weight: marks are replicated, rows are hidden — any order
+          old.foreach { b =>
+            fs.delete(DvUpdates.marksDir(path, b), true)
+            fs.delete(new Path(DvUpdates.batchDataDir(path, b)), true)
+          }
+          old.size
+        }
       }
-      // marks: old batches' marks (replicated — their dirs are deleted
-      // after commit) + hide-all for every old batch file's rows. Either
-      // side can be empty (insert-only merges commit no marks; delete-only
-      // merges commit no files) — the witness is the DIRECTORY.
-      val oldMarkFiles = old.flatMap(b => ShallowClone.listParquet(
-        spark, DvUpdates.marksDir(path, b).toString))
-      val oldMarks =
-        if (oldMarkFiles.isEmpty) None
-        else Some(spark.read.schema(DeletionVectors.MarkSchema)
-          .parquet(oldMarkFiles: _*)
-          .select(col("file"), col("pos")))
-      val hideAll = DvUpdates.committedScans(spark, TableSnapshot.of(this))
-        .map { case (_, scan) =>
-          scan.select(
-            DeletionVectors.fileKey(col("_metadata.file_path")).as("file"),
-            col("_metadata.row_index").as("pos"))
-        }.reduceOption(_ unionByName _)
-      (oldMarks.toSeq ++ hideAll.toSeq).reduceOption(_ unionByName _)
-        // one file: marks are collect-cap-bounded, and every read lists
-        // and scans the sidecar — 32 distinct() shards is pure creep
-        .foreach(_.distinct().coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(marksStaging.toString))
-      if (!fs.exists(marksStaging)) fs.mkdirs(marksStaging)
-      fs.mkdirs(new Path(newDataDir))
-      invalidateStats()
-      MedallionTable.testFailpoint("pre-dv-batch-compact-commit")
-      // COMMIT POINT — as updateVectored/mergeVectored
-      if (!fs.rename(marksStaging, DvUpdates.marksDir(path, newBatch)))
-        throw new java.io.IOException(
-          s"dv-batch-compact commit rename failed: $marksStaging")
-      MedallionTable.testFailpoint("post-dv-batch-compact-commit")
-      // dead weight: marks are replicated, rows are hidden — any order
-      old.foreach { b =>
-        fs.delete(DvUpdates.marksDir(path, b), true)
-        fs.delete(new Path(DvUpdates.batchDataDir(path, b)), true)
-      }
-      old.size
     }
-  }
 
   /** `UPDATE SET … WHERE` via the deletion-vector extension
     * ([[DvUpdates]]): O(matched) instead of [[update]]'s O(table)
@@ -3377,68 +3338,21 @@ final class MedallionTable(
     * (external readers cannot see the sidecar or the batch).
     */
   def updateVectored(cond: Column, set: Map[String, Column]): Unit =
-    withClaimedCommit("update-dv") {
+    withClaimedCommitScoped("update-dv", None) { claimed =>
       import org.apache.spark.sql.functions.{coalesce, col, lit}
       requireNoDeltaLogForDv()
       val m = meta
-      refuseIdentitySet(set.keys, "UPDATE", m)
-      val logical = read
-      val byLower = logical.columns.map(c => c.toLowerCase -> c).toMap
-      val resolved = set.map { case (k, v) =>
-        byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
-          s"update-dv: column '$k' not in table schema " +
-            logical.columns.mkString("[", ",", "]"))) -> v
-      }
+      val newRow = updatedRow(set, read.schema, m, "update-dv", None)
       val batch = java.util.UUID.randomUUID().toString.take(12)
-      val live = dvLive()
-      val matched = live.filter(coalesce(cond, lit(false)))
-      // ONE projection = simultaneous-assignment semantics, exactly as
-      // update(); the position columns drop out of the projection
-      val newRows = matched.select(logical.columns.toIndexedSeq.map(c =>
-        resolved.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-      val batchDir = DvUpdates.batchDataDir(path, batch)
-      val marksStaging = DvUpdates.marksStagingDir(path, batch)
-      // stage 1: new row versions — table partition layout, CHECKs
-      // enforced, physical names (batch files must speak the same schema
-      // dialect as the base files so mergeSchema unions stay uniform)
-      writeBatch(enforced(newRows, m), batch, m)
-      // stage 2: marks for the matched rows' OLD positions
-      matched.select(col("__graft_dv_file").as("file"),
-          col("__graft_dv_pos").as("pos"))
-        .write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
-      // row-based emptiness (as mergeVectored): an empty frame's write
-      // can still leave a zero-row part file, and committing it would
-      // leave a permanent dead read-union branch per no-match update —
-      // answered from the just-written footers driver-side (no Spark job)
-      val batchHasRows = DvUpdates.anyRows(spark, batchDir)
-      if (!batchHasRows) {
-        // nothing matched: leave no witness, clear the invisible litter
-        fs.delete(new Path(batchDir), true)
-        fs.delete(marksStaging, true)
-        if (ChangeFeed.isEnabled(spark, path))
-          try ChangeFeed.captureEmpty(spark, path, commitVersion, "update-dv")
-          catch { case scala.util.control.NonFatal(_) => () }
-      } else {
-        require(DvUpdates.anyRows(spark, marksStaging.toString),
-          s"update-dv: staged batch has data but no marks ($marksStaging) — " +
-            "aborting before the commit could duplicate rows")
-        invalidateStats()
-        fs.mkdirs(new Path(DeletionVectors.dir(path)))
-        MedallionTable.testFailpoint("pre-update-dv-commit")
-        // COMMIT POINT: one atomic rename flips both effects — the marks
-        // hide the old versions AND witness the staged batch into reads
-        if (!fs.rename(marksStaging, DvUpdates.marksDir(path, batch)))
-          throw new java.io.IOException(
-            s"update-dv commit rename failed: $marksStaging -> " +
-              DvUpdates.marksDir(path, batch))
-        // feed capture (post-commit; a crash in between fail-stops the
-        // read): postimages = the batch files, preimages reconstruct
-        // from the marks — keys empty ⟺ all postimages update_postimage
-        if (ChangeFeed.isEnabled(spark, path))
-          try ChangeFeed.captureBatch(spark, path, commitVersion, "update-dv",
-            batch, ShallowClone.listParquet(spark, batchDir), Nil)
-          catch { case scala.util.control.NonFatal(_) => () } // post-commit
-      }
+      val matched = dvLive().filter(coalesce(cond, lit(false)))
+      // the position columns drop out of the projection
+      writeBatch(enforced(matched.select(newRow: _*), m), batch, m)
+      // the marks hide the matched rows' OLD positions; feed postimages
+      // are the batch files, preimages reconstruct from the marks — no
+      // keys ⟺ every postimage is an update_postimage
+      commitBatch(batch, matched.select(col("__graft_dv_file").as("file"),
+          col("__graft_dv_pos").as("pos")), claimed, "update-dv",
+        "pre-update-dv-commit", Some(Nil))
     }
 
   /** Delta-style `UPDATE SET ... WHERE`: every SET expression is
@@ -3446,30 +3360,36 @@ final class MedallionTable(
     * `SET a = b, b = a` swaps), then the table is rewritten through the
     * backup swap.
     */
-  def update(cond: Column, set: Map[String, Column]): Unit = {
-    import org.apache.spark.sql.functions.{col, when}
-    val df = read
-    // Resolve SET keys case-insensitively (Spark's default resolution),
-    // and FAIL on an unknown key — a typo'd column must not become a
-    // silent no-op rewrite.
-    val byLower = df.columns.map(c => c.toLowerCase -> c).toMap
-    val resolved = set.map { case (k, v) =>
-      byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
-        s"update: column '$k' not in table schema ${df.columns.mkString("[", ",", "]")}")) -> v
-    }
-    // ONE projection: every SET expression reads the pre-update row by
-    // construction (no staging columns, no reserved names). The frame is
-    // re-read inside the rewrite product (post-fence listing); the
-    // projection list comes from the pre-validated schema, which is
-    // stable under the supported concurrency.
+  def update(cond: Column, set: Map[String, Column]): Unit =
+    // the projection runs over the post-fence scan
     rewriteVia({ m =>
-      refuseIdentitySet(set.keys, "UPDATE", m)
       val d = read
-      d.select(df.columns.map { c =>
-        resolved.get(c).map(v => when(cond, v).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
-      }: _*)
+      d.select(updatedRow(set, d.schema, m, "update", Some(cond)): _*)
     }, op = "update")
+
+  /** The one SET resolver of [[update]] and [[updateVectored]]: the row
+    * an UPDATE writes, as ONE projection over `schema`, so every SET
+    * expression reads the pre-update row (simultaneous assignment — no
+    * staging columns, no reserved names). Names match case-insensitively
+    * (Spark's default resolution); an unknown name refuses — a typo'd
+    * column must not become a silent no-op — as does an identity column;
+    * each value is cast to its column's type, as a MERGE assignment is,
+    * so an UPDATE never changes a column's type. `guard` (the rewrite's
+    * predicate) keeps the old value on the rows it does not hold for.
+    */
+  private def updatedRow(set: Map[String, Column],
+      schema: org.apache.spark.sql.types.StructType, m: TableMeta,
+      op: String, guard: Option[Column]): Seq[Column] = {
+    import org.apache.spark.sql.functions.{col, when}
+    refuseIdentitySet(set.keys, "UPDATE", m)
+    val resolved = set.map { case (k, v) =>
+      val f = schema.fields.find(_.name.equalsIgnoreCase(k)).getOrElse(
+        throw new IllegalArgumentException(s"$op: column '$k' not in " +
+          s"table schema ${schema.fieldNames.mkString("[", ",", "]")}"))
+      f.name -> v.cast(f.dataType)
+    }
+    schema.fieldNames.toSeq.map(c => resolved.get(c).map(v =>
+      guard.fold(v)(when(_, v).otherwise(col(c))).as(c)).getOrElse(col(c)))
   }
 
   // ---- time travel ------------------------------------------------------
@@ -3816,7 +3736,8 @@ final class MedallionTable(
   }
 
   private def clusterIncrementalOnce(clusterBy: Seq[String],
-      nFiles: Int): Int = withClaimedCommit("cluster-incremental") {
+      nFiles: Int): Int = withClaimedCommitScoped("cluster-incremental",
+      None) { claimed =>
     import org.apache.spark.sql.functions.col
     requireNoDeltaLogForDv()
     require(!ShallowClone.isClone(spark, path),
@@ -3840,28 +3761,15 @@ final class MedallionTable(
       try {
         if (j.head(1).nonEmpty) {
           val batch = java.util.UUID.randomUUID().toString.take(12)
-          val batchDir = DvUpdates.batchDataDir(path, batch)
-          val marksStaging = DvUpdates.marksStagingDir(path, batch)
-          // stage 1: the clustered copy — physical names, wide types,
-          // table partition layout (rows unchanged: no CHECK re-run)
-          val shaped = zShape(
-            j.drop("__graft_dv_file", "__graft_dv_pos"), clusterBy, nFiles)
-          val w = snap.meta.physical(shaped).write.mode(SaveMode.Overwrite)
-          (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
-           else w).parquet(batchDir)
-          // stage 2: marks for every absorbed live row's old position
-          j.select(col("__graft_dv_file").as("file"),
-              col("__graft_dv_pos").as("pos"))
-            .write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
-          invalidateStats()
-          fs.mkdirs(new Path(DeletionVectors.dir(path)))
-          MedallionTable.testFailpoint("pre-cluster-commit")
-          // COMMIT POINT: marks hide the base originals AND witness the
-          // clustered batch into reads, atomically (DvUpdates contract)
-          if (!fs.rename(marksStaging, DvUpdates.marksDir(path, batch)))
-            throw new java.io.IOException(
-              s"cluster-incremental commit rename failed: $marksStaging " +
-                s"-> ${DvUpdates.marksDir(path, batch)}")
+          // the clustered copy (rows unchanged: no CHECK re-run)
+          writeBatch(zShape(j.drop("__graft_dv_file", "__graft_dv_pos"),
+            clusterBy, nFiles), batch, snap.meta)
+          // the marks hide every absorbed live row's base original; the
+          // base files are dropped below only once the batch committed
+          val committed = commitBatch(batch, j.select(
+              col("__graft_dv_file").as("file"), col("__graft_dv_pos").as("pos")),
+            claimed, "cluster-incremental", "pre-cluster-commit", None)
+          require(committed, s"cluster-incremental: staged batch $batch is empty")
         }
         // absorbing every base file can empty the base dir — record the
         // schema FIRST so the table keeps existing (the same contract as
@@ -3888,13 +3796,6 @@ final class MedallionTable(
     }
   }
 
-  /** VACUUM-style cleanup: remove sibling `__graft_tmp_*` / `__graft_old_*`
-    * directories left by rewrites that crashed mid-swap. If the crash
-    * happened BETWEEN the two swap renames, the live directory is gone and
-    * the only committed copy lives in the backup — vacuum must RESTORE it,
-    * never delete it. Safe under the documented single-writer assumption
-    * (no rewrite in flight during maintenance). Returns directories removed.
-    */
   /** Partition directories whose k=v tuple satisfies `cond`. Partition
     * tuples come from the DIRECTORY NAMES (the values Spark itself
     * wrote — reconstructing them from typed values would have to
@@ -3971,32 +3872,15 @@ final class MedallionTable(
   }
 
   private def compactWhereOnce(cond: Column, nFiles: Int): Unit = {
-    val df = read
-    val schema = df.schema
-    val refs = df.select(cond.as("__graft_cond"))
-      .queryExecution.analyzed.expressions
-      .flatMap(_.references.map(_.name)).toSet
-    require(refs.nonEmpty && refs.subsetOf(partitionColumns.toSet),
+    val schema = read.schema
+    require(partitionOnly(cond, schema),
       "OPTIMIZE ... WHERE predicate may reference partition columns only (" +
-        s"${partitionColumns.mkString(", ")}); got: ${refs.mkString(", ")}")
-    // Footprint declared from a PRE-lock listing: it only arbitrates
-    // concurrency; the authoritative matched set is re-listed inside
-    // the claim. The relist ⊆ declared invariant holds because every
-    // writer able to CREATE a matching partition directory (append,
-    // overwrite, rewrite) carries the global footprint and is excluded
-    // while our scoped lock stands — asserted anyway, never assumed.
-    val declared = matchingPartitionDirs(cond, schema)
-      .map(d => "p:" + relativePartitionDir(d)).toSet
-    withClaimedCommitScoped("optimize-where", Some(declared)) { _ =>
-      // listing inside the claim: the matched set must reflect the
-      // claimed ordinal's directory state
-      val dirs = matchingPartitionDirs(cond, schema)
-      val inside = dirs.map(d => "p:" + relativePartitionDir(d)).toSet
-      require(inside.subsetOf(declared),
-        s"OPTIMIZE ... WHERE: partitions ${(inside -- declared).mkString(", ")} " +
-          "appeared after the footprint was declared (concurrent " +
-          "dir-creating writer leaked past the lock protocol) — aborting " +
-          "before an undeclared partition could be overwritten")
+        s"${partitionColumns.mkString(", ")}); got: $cond")
+    // The footprint only arbitrates concurrency; the authoritative
+    // matched set is the listing inside the claim (it must reflect the
+    // claimed ordinal's directory state).
+    withPartitionClaim("optimize-where",
+        Some(PartitionScope(cond, schema, Set.empty))) { (_, dirs) =>
       if (dirs.nonEmpty) {
         val n = if (nFiles > 0) nFiles else dirs.size
         // hash-distribute on the partition tuple with one slot per
@@ -4030,6 +3914,44 @@ final class MedallionTable(
     fs.makeQualified(new Path(path)).toUri
       .relativize(fs.makeQualified(new Path(dir)).toUri).getPath
       .stripSuffix("/")
+
+  /** A scoped writer's candidate partitions: those `cond` matches on
+    * disk, declared as footprint resources before the claim, plus
+    * `extra` resources.
+    */
+  private case class PartitionScope(cond: Column,
+      schema: org.apache.spark.sql.types.StructType, extra: Set[String])
+
+  private def partitionResources(dirs: Seq[String]): Set[String] =
+    dirs.map(d => "p:" + relativePartitionDir(d)).toSet
+
+  /** The candidate step of the scoped writers ([[deleteVectored]],
+    * [[compactWhere]], [[mergePruned]]): claims a commit under the
+    * `scope`'s footprint (None: the global lock) from a PRE-lock listing,
+    * then re-lists the matching partitions inside the claim. The relist
+    * ⊆ declared invariant holds because every writer able to CREATE a
+    * matching partition directory carries the global footprint or a
+    * colliding one and is excluded while the scoped lock stands —
+    * asserted anyway, never assumed, before an undeclared partition could
+    * be written or marks could dangle under a concurrent rewrite. The
+    * body gets the claimed ordinal and the in-claim matched directories.
+    */
+  private def withPartitionClaim[T](op: String, scope: Option[PartitionScope])(
+      body: (Long, Seq[String]) => T): T = {
+    val declared = scope.map(sc =>
+      partitionResources(matchingPartitionDirs(sc.cond, sc.schema)) ++ sc.extra)
+    withClaimedCommitScoped(op, declared) { claimed =>
+      val dirs = scope.fold(Seq.empty[String]) { sc =>
+        val dirs = matchingPartitionDirs(sc.cond, sc.schema)
+        val grown = partitionResources(dirs) -- declared.get
+        require(grown.isEmpty, s"$op: partitions ${grown.mkString(", ")} " +
+          "appeared after the footprint was declared — aborting before an " +
+          "undeclared partition could be written")
+        dirs
+      }
+      body(claimed, dirs)
+    }
+  }
 
   /** Typed predicate selecting exactly the given partition directories —
     * the inverse of [[matchingPartitionDirs]], built with the same
@@ -4112,15 +4034,6 @@ final class MedallionTable(
     }
   }
 
-  /** `VACUUM ... DRY RUN`: what [[vacuum]] WOULD do, touching nothing —
-    * neither litter, nor the crashed-writer lock/intent files, nor the
-    * mid-swap restore. Rows are (path, action): `delete` for rewrite
-    * litter, `restore` for the backup a real vacuum would rename back
-    * over a mid-swap husk, `defer` for rewrite litter vacuum stands down
-    * from while a young intent/lock says a live rewriter may own the
-    * absent-dir swap window, `refuse` for tmp litter that might be the
-    * only copy of the data.
-    */
   /** Rewrite litter beside the table dir (tmp + backup siblings) —
     * shared by [[vacuum]] and [[vacuumDryRun]] so the dry run can never
     * desynchronize from what vacuum actually touches.
@@ -4173,6 +4086,15 @@ final class MedallionTable(
     if (fs.exists(st)) Seq(st) else Nil
   }
 
+  /** `VACUUM ... DRY RUN`: what [[vacuum]] WOULD do, touching nothing —
+    * neither litter, nor the crashed-writer lock/intent files, nor the
+    * mid-swap restore. Rows are (path, action): `delete` for rewrite
+    * litter, `restore` for the backup a real vacuum would rename back
+    * over a mid-swap husk, `defer` for rewrite litter vacuum stands down
+    * from while a young intent/lock says a live rewriter may own the
+    * absent-dir swap window, `refuse` for tmp litter that might be the
+    * only copy of the data.
+    */
   def vacuumDryRun(): Seq[(String, String)] = {
     val litter = rewriteLitter() ++ DvUpdates.orphans(spark, path) ++
       dvCompactLitter()
@@ -4255,6 +4177,13 @@ final class MedallionTable(
       (fs.exists(writeLock) && !reapable(writeLock)) ||
       scopedLockFiles().exists(p => !reapable(p))
 
+  /** VACUUM-style cleanup: remove sibling `__graft_tmp_*` / `__graft_old_*`
+    * directories left by rewrites that crashed mid-swap. If the crash
+    * happened BETWEEN the two swap renames, the live directory is gone and
+    * the only committed copy lives in the backup — vacuum must RESTORE it,
+    * never delete it. Safe under the documented single-writer assumption
+    * (no rewrite in flight during maintenance). Returns directories removed.
+    */
   def vacuum(): Int = {
     val dst = fs.makeQualified(new Path(path))
     if (rewriteLitter().isEmpty && !fs.exists(commitsDir)) return 0
@@ -4425,6 +4354,11 @@ final class MedallionTable(
     }
   }
 
+  /** The footprint resource a scoped writer declares when it may
+    * rewrite the table record.
+    */
+  private val MetaResource = "meta"
+
   /** A touched partition tuple rendered as a footprint resource string —
     * the spelling two CONCURRENT mergePruned calls agree on for a
     * partition that does not exist on disk yet (both rendering the same
@@ -4432,11 +4366,6 @@ final class MedallionTable(
     * dirs the authoritative dir-derived spelling is declared as well, so
     * cross-op conflicts with OPTIMIZE/DV-delete always match exactly).
     */
-  /** The footprint resource a scoped writer declares when it may
-    * rewrite the table record.
-    */
-  private val MetaResource = "meta"
-
   private def renderedPartitionDir(row: Row): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     partitionColumns.zipWithIndex.map { case (c, i) =>
@@ -4459,7 +4388,6 @@ final class MedallionTable(
         .reduce(_ && _)
     }.reduceOption(_ || _).getOrElse(org.apache.spark.sql.functions.lit(false))
 
-    val schema = read.schema
     // Footprint-scoped concurrency (round 16): the touched partitions
     // are declared in BOTH spellings — the on-disk dir names for
     // existing partitions (exact match against OPTIMIZE…WHERE /
@@ -4473,30 +4401,16 @@ final class MedallionTable(
     // product's new columns extend the reader schema) adds the shared
     // record resource, so two scoped read-modify-writes of the record
     // serialize.
-    val existingDirs =
-      if (exists) matchingPartitionDirs(prunePred, schema)
-        .map(relativePartitionDir).toSet
-      else Set.empty[String]
-    val footprint = (existingDirs ++ touched.map(renderedPartitionDir))
-      .map("p:" + _) ++
-      (if (meta.readerSchema.isDefined) Set(MetaResource)
-       else Set.empty[String])
+    val scope = PartitionScope(prunePred, read.schema,
+      touched.map(r => "p:" + renderedPartitionDir(r)).toSet ++
+        Set(MetaResource).filter(_ => meta.readerSchema.isDefined))
     // Dynamic partition overwrite replaces exactly the partitions present in
     // `merged`; all other partition directories are untouched on disk.
     // CHECK constraints gate this path too — it is createOrMerge's (and so
     // the pipeline's) canonical upsert route. Claim-first concurrency like
     // append (no staged state to CAS; per-partition commit is the
     // documented weaker atomicity of this path).
-    withClaimedCommitScoped("merge-pruned", Some(footprint)) { _ =>
-      // the matched set must not have grown since the footprint was
-      // declared (dir creators are global or footprint-colliding —
-      // asserted, never assumed, like compactWhere)
-      val inside = matchingPartitionDirs(prunePred, schema)
-        .map(d => "p:" + relativePartitionDir(d)).toSet
-      require(inside.subsetOf(footprint),
-        s"mergePruned: partitions ${(inside -- footprint).mkString(", ")} " +
-          "appeared after the footprint was declared — aborting before an " +
-          "undeclared partition could be overwritten")
+    withPartitionClaim("merge-pruned", Some(scope)) { (_, _) =>
       // scan + merge constructed UNDER the lock: the file listing must
       // reflect the locked state — a pre-lock listing is stale whenever
       // this merge waited out a same-footprint predecessor, and merging
@@ -4509,7 +4423,7 @@ final class MedallionTable(
       refuseIdentitySet(source.columns, "merge source", m)
       val prunedTarget = read.filter(prunePred) // partition-pruned scan
       val merged = MergeOps.merge3Clause(prunedTarget, source, keys,
-        updateCondition, deleteNotMatchedBySource)
+        updateCondition, deleteNotMatchedBySource, m.defaultColumns)
       // Touched partitions carrying live DV-update amendments would need
       // a delete-after-overwrite here (the merged frame reads the
       // amended rows, so their batch files must go once the overwrite
@@ -4522,17 +4436,14 @@ final class MedallionTable(
           "mergePruned: touched partitions have live DV-update amendments " +
             s"(batch $b) — OPTIMIZE (compact) to materialize them first")
       }
-      // canonicalize: this claim-first path writes into the LIVE dir, so
-      // a widened column must land wide (the merged frame usually is —
-      // it reads through the widening — but source-provided inserts can
-      // still carry the narrow spelling). Merge-inserted rows carry a
-      // NULL identity (the source may not assign it) — filled first, as
-      // on every rewrite path.
+      // this claim-first path writes into the LIVE dir, in the physical
+      // dialect. Merge-inserted rows carry a NULL identity (the source
+      // may not assign it) — filled first, as on every rewrite path.
       val prunedBatch = m.physical(enforced(fillIdentityNulls(merged, m), m))
       val next = m.evolvedBy(None, prunedBatch.schema)
       if (next != m) {
         // the record changes only under its resource (see the footprint)
-        if (!footprint.contains(MetaResource))
+        if (!scope.extra.contains(MetaResource))
           throw new java.util.ConcurrentModificationException(
             s"mergePruned: a type widening landed on $path after this " +
               "merge declared its footprint; retry")
@@ -4678,13 +4589,16 @@ object MedallionTable {
 
   /** Last mergeVectored's derived partition-pruning sets (partition col →
     * source key values), None when no merge key was a partition column —
-    * observability seam for specs asserting the pruned table pass.
+    * a write-only witness for specs asserting the pruned table pass. The
+    * engine never reads it back: concurrent merges on other tables
+    * overwrite it.
     */
   private[graft] var lastMergeDvPartitionFilter:
     Option[Map[String, Seq[Any]]] = None
 
   /** Last mergeVectored's derived key-range pushdown (non-partition merge
     * key → source [min, max]); None when every key was a partition column.
+    * Write-only, like the partition witness above.
     */
   private[graft] var lastMergeDvRangeFilter:
     Option[Map[String, (Any, Any)]] = None

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *   whenNotMatchedInsert(values = all source cols)
   *   whenNotMatchedBySourceDelete()
   *
-  * Spark-first design: a single full-outer shuffle join on the merge keys,
+  * Spark-first design ([[mergeClauses]], which [[merge3Clause]] states the
+  * three clauses to): a single full-outer shuffle join on the merge keys,
   * column resolution with `when(...)`, and a row filter for the delete
   * clause. At 100 TB this is one shuffle of each side keyed on the merge
   * keys — the same cost profile as Delta's join-based merge — and it stays
@@ -29,7 +30,8 @@ import org.apache.spark.sql.functions._
   *     columns keep their target value on matched rows.
   *   - Columns only in source are added to the output schema with the
   *     target side null-padded *and typed* (cast to the source datatype so
-  *     no NullType ever reaches a parquet writer).
+  *     no NullType ever reaches a parquet writer); shared columns keep the
+  *     target's type.
   *   - Duplicate merge-key values in the source make Delta fail with
   *     "multiple source rows matched"; callers that need that guarantee use
   *     [[requireUniqueKeys]] (an action, so kept out of this pure builder).
@@ -45,6 +47,8 @@ object MergeOps {
   private val SPrefix = "__graft_s_"
   private val SrcMark = s"${SPrefix}present__"
   private val TgtMark = s"${TPrefix}present__"
+  private val tc: ColRef = c => col(TPrefix + c)
+  private val sc: ColRef = c => col(SPrefix + c)
 
   /** Replicates the reference's dynamic change-condition synthesis
     * (`silver_table_creation.py:50-54` et al., SURVEY.md §2.2 K5): OR over
@@ -53,13 +57,8 @@ object MergeOps {
     * (SURVEY.md §7.4).
     */
   def anyColumnDiffers(
-      target: DataFrame, source: DataFrame, keys: Seq[String]): (ColRef, ColRef) => Column = {
-    val shared =
-      target.columns.toSeq.filterNot(keys.contains).filter(source.columns.contains)
-    (t, s) =>
-      if (shared.isEmpty) lit(false)
-      else shared.map(c => t(c) =!= s(c)).reduce(_ || _)
-  }
+      target: DataFrame, source: DataFrame, keys: Seq[String]): (ColRef, ColRef) => Column =
+    anyShared(target, source, keys)(_ =!= _)
 
   /** Null-SAFE variant of [[anyColumnDiffers]]: `NOT (t <=> s)` treats a
     * value↔NULL transition as a change instead of an unknown. This is the
@@ -71,12 +70,15 @@ object MergeOps {
     * and the reference guarantees no nulls via dropna.
     */
   def anyColumnDiffersNullSafe(
-      target: DataFrame, source: DataFrame, keys: Seq[String]): (ColRef, ColRef) => Column = {
+      target: DataFrame, source: DataFrame, keys: Seq[String]): (ColRef, ColRef) => Column =
+    anyShared(target, source, keys)((t, s) => !(t <=> s))
+
+  /** OR of `differs` over the shared non-key columns; false when none. */
+  private def anyShared(target: DataFrame, source: DataFrame, keys: Seq[String])(
+      differs: (Column, Column) => Column): (ColRef, ColRef) => Column = {
     val shared =
       target.columns.toSeq.filterNot(keys.contains).filter(source.columns.contains)
-    (t, s) =>
-      if (shared.isEmpty) lit(false)
-      else shared.map(c => !(t(c) <=> s(c))).reduce(_ || _)
+    (t, s) => shared.map(c => differs(t(c), s(c))).reduceOption(_ || _).getOrElse(lit(false))
   }
 
   /** Delta fails a MERGE when one target row matches multiple source rows.
@@ -92,7 +94,12 @@ object MergeOps {
           "Delta MERGE semantics forbid multiple source rows matching one target row")
   }
 
-  /** 3-clause merge of `source` into `target` keyed on `keys`.
+  /** 3-clause merge of `source` into `target` keyed on `keys`: the
+    * reference's three clauses as [[WhenClause]]s — UPDATE SET every
+    * source column on matched rows, INSERT every source column, DELETE
+    * not matched by source — through [[mergeClauses]]. Source-only
+    * columns evolve the output schema with the source's type; shared
+    * columns keep the target's type.
     *
     * @param updateCondition matched-row update gate, given (targetRef,
     *        sourceRef) column resolvers (e.g. [[anyColumnDiffers]]);
@@ -100,58 +107,27 @@ object MergeOps {
     *        clause).
     * @param deleteNotMatchedBySource reference merges always pass true
     *        (full target↔source sync); false gives plain upsert.
+    * @param insertDefaults column DEFAULTs for target columns the source
+    *        lacks, as [[mergeClauses]].
     */
   def merge3Clause(
       target: DataFrame,
       source: DataFrame,
       keys: Seq[String],
       updateCondition: Option[(ColRef, ColRef) => Column] = None,
-      deleteNotMatchedBySource: Boolean = true): DataFrame = {
+      deleteNotMatchedBySource: Boolean = true,
+      insertDefaults: Map[String, Column] = Map.empty): DataFrame = {
     require(keys.nonEmpty, "merge requires at least one key column")
-
-    val targetCols = target.columns.toSeq
-    val sourceCols = source.columns.toSet
-    val allCols: Seq[String] =
-      targetCols ++ source.columns.toSeq.filterNot(targetCols.contains)
-
-    // Null-pad missing columns with the *other* side's datatype so schema
-    // evolution never produces NullType (which parquet cannot write), then
-    // prefix-rename every column so the two sides can never collide.
-    def prep(df: DataFrame, other: DataFrame, prefix: String, mark: String): DataFrame = {
-      val padded = allCols.map { c =>
-        (if (df.columns.contains(c)) col(c)
-         else lit(null).cast(other.schema(c).dataType)).as(prefix + c)
-      }
-      df.select(padded :+ lit(true).as(mark): _*)
-    }
-
-    val t = prep(target, source, TPrefix, TgtMark)
-    val s = prep(source, target, SPrefix, SrcMark)
-
-    val tc: ColRef = c => col(TPrefix + c)
-    val sc: ColRef = c => col(SPrefix + c)
-
-    val joined = t.join(s, keys.map(k => tc(k) === sc(k)).reduce(_ && _), "full_outer")
-
-    val srcPresent = col(SrcMark).isNotNull
-    val tgtPresent = col(TgtMark).isNotNull
-    val updCond = updateCondition.map(f => f(tc, sc)).getOrElse(lit(true))
-
-    val resolved = allCols.map { c =>
-      // UPDATE SET spans only real source columns: a target-only column
-      // keeps its target value on matched rows (Delta parity).
-      val updated = if (sourceCols.contains(c)) sc(c) else tc(c)
-      when(srcPresent && tgtPresent, when(updCond, updated).otherwise(tc(c)))
-        .when(srcPresent && !tgtPresent, sc(c))   // whenNotMatchedInsert
-        .otherwise(tc(c))                         // not matched by source
-        .as(c)
-    }
-
-    val kept =
-      if (deleteNotMatchedBySource) joined.filter(srcPresent) // delete clause
-      else joined
-
-    kept.select(resolved: _*)
+    // ListMap: evolved columns follow the source's column order
+    val all = scala.collection.immutable.ListMap(source.columns.toSeq.map { c =>
+      target.columns.find(_.equalsIgnoreCase(c)).getOrElse(c) ->
+        ((_: ColRef, s: ColRef) => s(c)) }: _*)
+    val matched = Seq(WhenMatchedUpdate(updateCondition, all))
+    mergeClauses(target, source, keys.map(k => k -> k), matched,
+      Seq(WhenNotMatchedInsert(None, all)),
+      Seq(WhenNotMatchedBySourceDelete(None)).filter(_ => deleteNotMatchedBySource),
+      insertDefaults,
+      resolveEvolvedFromSource(target.columns, matched, source, "target"))
   }
 
   /** Change-data-feed variant of [[merge3Clause]] (Delta CDF semantics,
@@ -185,8 +161,6 @@ object MergeOps {
 
     val t = prep(target, source, TPrefix, TgtMark)
     val s = prep(source, target, SPrefix, SrcMark)
-    val tc: ColRef = c => col(TPrefix + c)
-    val sc: ColRef = c => col(SPrefix + c)
     val joined = t.join(s, keys.map(k => tc(k) === sc(k)).reduce(_ && _), "full_outer")
 
     val srcPresent = col(SrcMark).isNotNull
@@ -291,8 +265,6 @@ object MergeOps {
 
     val t = prep(current, bizCols ++ Scd2Cols, TPrefix, TgtMark)
     val s = prep(source, bizCols, SPrefix, SrcMark)
-    val tc: ColRef = c => col(TPrefix + c)
-    val sc: ColRef = c => col(SPrefix + c)
     val joined = t.join(s, keys.map(k => tc(k) === sc(k)).reduce(_ && _), "full_outer")
 
     val srcPresent = col(SrcMark).isNotNull
@@ -361,6 +333,15 @@ object MergeOps {
   final case class WhenNotMatchedBySourceDelete(
       condition: Option[(ColRef, ColRef) => Column]) extends WhenClause
 
+  /** Every column name the clauses assign (update SETs + insert values). */
+  def assignedColumns(clauses: Seq[WhenClause]): Seq[String] =
+    clauses.flatMap {
+      case WhenMatchedUpdate(_, set) => set.keys
+      case WhenNotMatchedInsert(_, values) => values.keys
+      case WhenNotMatchedBySourceUpdate(_, set) => set.keys
+      case _ => Nil
+    }.distinct
+
   /** Columns the clause assignments target that `targetCols` lacks —
     * nonEmpty ⟺ the merge would EVOLVE the schema. The clause paths
     * ([[mergeClauses]], [[graft.table.MedallionTable.mergeVectored]])
@@ -371,15 +352,6 @@ object MergeOps {
     * analysis; with it, it evolves. The graft hatches: ADD COLUMN first,
     * or use the evolving [[merge3Clause]] rewrite.)
     */
-  /** Every column name the clauses assign (update SETs + insert values). */
-  def assignedColumns(clauses: Seq[WhenClause]): Seq[String] =
-    clauses.flatMap {
-      case WhenMatchedUpdate(_, set) => set.keys
-      case WhenNotMatchedInsert(_, values) => values.keys
-      case WhenNotMatchedBySourceUpdate(_, set) => set.keys
-      case _ => Nil
-    }.distinct
-
   def evolvedAssignments(targetCols: Seq[String],
       clauses: Seq[WhenClause]): Seq[String] = {
     val have = targetCols.map(_.toLowerCase).toSet
@@ -420,18 +392,17 @@ object MergeOps {
         "3-clause rewrite (MedallionTable.merge)")
   }
 
-  /** General SQL-MERGE semantics over the same single full-outer shuffle
-    * join as [[merge3Clause]]: per row class (matched / source-only /
-    * target-only) the FIRST clause whose condition holds applies — UPDATE
-    * rewrites columns, DELETE drops the row, INSERT materializes it — and
-    * a row matching no clause takes the default (matched & target-only
-    * keep the target row, source-only vanishes). This is the executable
-    * form of `MERGE INTO t USING s ON … WHEN …` and subsumes
-    * [[merge3Clause]] (which stays as the reference-shaped fast path).
+  /** General SQL-MERGE semantics over a single full-outer shuffle join:
+    * per row class (matched / source-only / target-only) the FIRST clause
+    * whose condition holds applies — UPDATE rewrites columns, DELETE drops
+    * the row, INSERT materializes it — and a row matching no clause takes
+    * the default (matched & target-only keep the target row, source-only
+    * vanishes). This is the executable form of `MERGE INTO t USING s ON …
+    * WHEN …`; [[merge3Clause]] is the reference's three clauses over it.
     *
-    * The output schema is exactly the target schema — SQL MERGE without
-    * schema evolution never widens the table — and every assigned value is
-    * cast to the target column's type (the analyzer has already aligned
+    * The output schema is the target schema plus `evolved` — SQL MERGE
+    * without schema evolution never widens the table — and every assigned
+    * value is cast to its column's type (the analyzer has already aligned
     * SQL-originated assignments; the cast also protects library callers).
     *
     * Cost profile at 100 TB: one shuffle of each side on the merge keys,
@@ -442,6 +413,8 @@ object MergeOps {
     *        ON condition. Non-equi ON conditions are out of scope (they
     *        would force a theta-join; Delta itself plans them as
     *        cartesian-ish joins that do not survive scale).
+    * @param evolved columns the merge adds to the target schema, typed
+    *        from the source ([[resolveEvolvedFromSource]]).
     */
   def mergeClauses(
       target: DataFrame,
@@ -450,7 +423,67 @@ object MergeOps {
       matched: Seq[WhenClause],
       notMatched: Seq[WhenNotMatchedInsert],
       notMatchedBySource: Seq[WhenClause],
-      insertDefaults: Map[String, Column] = Map.empty): DataFrame = {
+      insertDefaults: Map[String, Column] = Map.empty,
+      evolved: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil): DataFrame = {
+    requireClauseKinds(keys, matched, notMatchedBySource)
+
+    // evolved columns join the target side as typed NULLs: old rows read
+    // them as NULL, assignments fill them
+    val schema = org.apache.spark.sql.types.StructType(target.schema.fields ++
+      evolved.map { case (n, dt) => org.apache.spark.sql.types.StructField(n, dt) })
+    val targetCols = schema.fieldNames.toSeq
+    val t = target.select(target.columns.toSeq.map(c => col(c).as(TPrefix + c)) ++
+      evolved.map { case (n, dt) => lit(null).cast(dt).as(TPrefix + n) } :+
+      lit(true).as(TgtMark): _*)
+    val s = source.select(
+      source.columns.toSeq.map(c => col(c).as(SPrefix + c)) :+ lit(true).as(SrcMark): _*)
+
+    val joined = t.join(s,
+      keys.map { case (tk, sk) => tc(tk) === sc(sk) }.reduce(_ && _), "full_outer")
+
+    val srcPresent = col(SrcMark).isNotNull
+    val tgtPresent = col(TgtMark).isNotNull
+
+    // A row class the clauses drop whole is also filtered where Catalyst
+    // can see it, so the full outer join narrows: under the reference's
+    // by-source DELETE it becomes a right outer join, which may broadcast
+    // the (pruned) target instead of shuffling both sides.
+    val dropped = Seq(tgtPresent).filter(_ => notMatched.isEmpty) ++
+      Seq(srcPresent).filter(_ => notMatchedBySource.headOption
+        .contains(WhenNotMatchedBySourceDelete(None)))
+    // Each row's first applying clause, evaluated once and only inside its
+    // own row class: the per-column projection below references the index
+    // instead of repeating every clause condition once per column.
+    val idx = Seq("m", "i", "n").map(k => s"__graft_clause_$k")
+    val indexed = dropped.foldLeft(joined)(_ filter _).select(col("*") +:
+      Seq(when(tgtPresent && srcPresent, chosen(matched)),
+        when(srcPresent && !tgtPresent, chosen(notMatched)),
+        when(tgtPresent && !srcPresent, chosen(notMatchedBySource)))
+        .zip(idx).map { case (e, n) => e.as(n) }: _*)
+    val Seq(mIdx, iIdx, nIdx) = idx.map(col)
+
+    val keep =
+      when(tgtPresent && srcPresent, !deleteChosen(matched, mIdx))
+        .when(srcPresent, iIdx =!= -1)
+        .otherwise(!deleteChosen(notMatchedBySource, nIdx))
+
+    val resolved = targetCols.map { c =>
+      when(tgtPresent && srcPresent, chainClauseValues(schema, matched, mIdx, c, tc(c)))
+        .when(srcPresent, chainClauseValues(schema, notMatched, iIdx, c,
+          lit(null).cast(schema(c).dataType), insertDefaults))
+        .otherwise(chainClauseValues(schema, notMatchedBySource, nIdx, c, tc(c)))
+        .as(c)
+    }
+
+    indexed.filter(keep).select(resolved: _*)
+  }
+
+  // ---------------------------------------------------------------------
+  // Shared clause-resolution pieces (mergeClauses + the vectored plan)
+  // ---------------------------------------------------------------------
+
+  private def requireClauseKinds(keys: Seq[(String, String)],
+      matched: Seq[WhenClause], notMatchedBySource: Seq[WhenClause]): Unit = {
     require(keys.nonEmpty, "merge requires at least one equi-key pair")
     matched.foreach {
       case _: WhenMatchedUpdate | _: WhenMatchedDelete => ()
@@ -462,54 +495,12 @@ object MergeOps {
       case other => throw new IllegalArgumentException(
         s"unsupported WHEN NOT MATCHED BY SOURCE clause: $other")
     }
-
-    val targetCols = target.columns.toSeq
-    val t = target.select(
-      targetCols.map(c => col(c).as(TPrefix + c)) :+ lit(true).as(TgtMark): _*)
-    val s = source.select(
-      source.columns.toSeq.map(c => col(c).as(SPrefix + c)) :+ lit(true).as(SrcMark): _*)
-    val tc: ColRef = c => col(TPrefix + c)
-    val sc: ColRef = c => col(SPrefix + c)
-
-    val joined = t.join(s,
-      keys.map { case (tk, sk) => tc(tk) === sc(sk) }.reduce(_ && _), "full_outer")
-
-    val srcPresent = col(SrcMark).isNotNull
-    val tgtPresent = col(TgtMark).isNotNull
-
-    val mIdx = chosen(matched, tc, sc)
-    val iIdx = chosen(notMatched, tc, sc)
-    val nIdx = chosen(notMatchedBySource, tc, sc)
-
-    def chainValues(clauses: Seq[WhenClause], idx: Column, c: String,
-        default: Column): Column =
-      chainClauseValues(target.schema, clauses, idx, c, default, tc, sc,
-        insertDefaults)
-
-    val keep =
-      when(tgtPresent && srcPresent, !deleteChosen(matched, mIdx))
-        .when(srcPresent, iIdx =!= -1)
-        .otherwise(!deleteChosen(notMatchedBySource, nIdx))
-
-    val resolved = targetCols.map { c =>
-      when(tgtPresent && srcPresent, chainValues(matched, mIdx, c, tc(c)))
-        .when(srcPresent, chainValues(notMatched, iIdx, c,
-          lit(null).cast(target.schema(c).dataType)))
-        .otherwise(chainValues(notMatchedBySource, nIdx, c, tc(c)))
-        .as(c)
-    }
-
-    joined.filter(keep).select(resolved: _*)
   }
-
-  // ---------------------------------------------------------------------
-  // Shared clause-resolution pieces (mergeClauses + the vectored plan)
-  // ---------------------------------------------------------------------
 
   /** First clause whose condition holds (NULL = does not hold, SQL
     * three-valued semantics via when()); -1 = no clause applies.
     */
-  private def chosen(clauses: Seq[WhenClause], tc: ColRef, sc: ColRef): Column =
+  private def chosen(clauses: Seq[WhenClause]): Column =
     clauses.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), els) =>
       when(cl.condition.map(f => f(tc, sc)).getOrElse(lit(true)), lit(i))
         .otherwise(els)
@@ -521,7 +512,6 @@ object MergeOps {
     */
   private def chainClauseValues(targetSchema: org.apache.spark.sql.types.StructType,
       clauses: Seq[WhenClause], idx: Column, c: String, default: Column,
-      tc: ColRef, sc: ColRef,
       insertDefaults: Map[String, Column] = Map.empty): Column = {
     val dt = targetSchema(c).dataType
     // a column the INSERT clause leaves unassigned takes its registered
@@ -609,19 +599,8 @@ object MergeOps {
       posCols: Seq[String],
       insertDefaults: Map[String, Column] = Map.empty,
       notMatchedBySource: Seq[WhenClause] = Nil): VectoredMergePlan = {
-    require(keys.nonEmpty, "merge requires at least one equi-key pair")
     require(posCols.length == 2, "posCols must be (fileKey, pos)")
-    matched.foreach {
-      case _: WhenMatchedUpdate | _: WhenMatchedDelete => ()
-      case other => throw new IllegalArgumentException(
-        s"unsupported WHEN MATCHED clause: $other")
-    }
-    notMatchedBySource.foreach {
-      case _: WhenNotMatchedBySourceUpdate | _: WhenNotMatchedBySourceDelete => ()
-      case other => throw new IllegalArgumentException(
-        s"unsupported WHEN NOT MATCHED BY SOURCE clause: $other")
-    }
-    val hasBySource = notMatchedBySource.nonEmpty
+    requireClauseKinds(keys, matched, notMatchedBySource)
 
     val t = targetWithPos.select(
       (targetCols ++ posCols).map(c => col(c).as(TPrefix + c)): _*)
@@ -631,11 +610,9 @@ object MergeOps {
     val s = source.select(
       source.columns.toSeq.map(c => col(c).as(SPrefix + c)) :+
         lit(true).as(SrcMark): _*)
-    val tc: ColRef = c => col(TPrefix + c)
-    val sc: ColRef = c => col(SPrefix + c)
 
-    val mIdx = chosen(matched, tc, sc)
-    val nIdx = chosen(notMatchedBySource, tc, sc)
+    val mIdx = chosen(matched)
+    val nIdx = chosen(notMatchedBySource)
     val srcPresent = col(SrcMark).isNotNull
 
     // ONE table pass: stream the positioned scan, broadcast the source.
@@ -645,36 +622,26 @@ object MergeOps {
     // broadcast-hash shape), and target-only rows a by-source clause
     // declines are filtered HERE, before the caller's persist, so the
     // cached frame stays output-proportional.
-    val joined0 = t.join(broadcast(s),
+    // The row-class formulas below serve both shapes: under the inner
+    // join the source mark is never NULL and no by-source clause exists,
+    // so the optimizer folds their target-only halves away.
+    val joined = t.join(broadcast(s),
       keys.map { case (tk, sk) => tc(tk) === sc(sk) }.reduce(_ && _),
-      if (hasBySource) "left_outer" else "inner")
-    val joined =
-      if (hasBySource) joined0.filter(srcPresent || nIdx =!= -1)
-      else joined0
+      if (notMatchedBySource.nonEmpty) "left_outer" else "inner")
+      .filter(srcPresent || nIdx =!= -1)
 
-    val consumes =
-      if (hasBySource)
-        (srcPresent && mIdx =!= -1) || (!srcPresent && nIdx =!= -1)
-      else mIdx =!= -1
+    val consumes = (srcPresent && mIdx =!= -1) || (!srcPresent && nIdx =!= -1)
     val marks = (j: DataFrame) => j.filter(consumes)
       .select(tc(posCols.head).as("file"), tc(posCols(1)).as("pos"))
 
     val keepsNewVersion =
-      if (hasBySource)
-        (srcPresent && mIdx =!= -1 && !deleteChosen(matched, mIdx)) ||
-          (!srcPresent && nIdx =!= -1 &&
-            !deleteChosen(notMatchedBySource, nIdx))
-      else mIdx =!= -1 && !deleteChosen(matched, mIdx)
+      (srcPresent && mIdx =!= -1 && !deleteChosen(matched, mIdx)) ||
+        (!srcPresent && nIdx =!= -1 && !deleteChosen(notMatchedBySource, nIdx))
     val newVersions = (j: DataFrame) =>
-      j.filter(keepsNewVersion)
-        .select(targetCols.map { c =>
-          val m = chainClauseValues(targetSchema, matched, mIdx, c, tc(c),
-            tc, sc)
-          (if (hasBySource)
-            when(srcPresent, m).otherwise(chainClauseValues(targetSchema,
-              notMatchedBySource, nIdx, c, tc(c), tc, sc))
-          else m).as(c)
-        }: _*)
+      j.filter(keepsNewVersion).select(targetCols.map(c =>
+        when(srcPresent, chainClauseValues(targetSchema, matched, mIdx, c,
+          tc(c))).otherwise(chainClauseValues(targetSchema,
+          notMatchedBySource, nIdx, c, tc(c))).as(c)): _*)
 
     val inserts = (j: DataFrame) => {
       // Source rows with no match: anti-join the SMALL frames (source ×
@@ -684,7 +651,7 @@ object MergeOps {
       // guaranteed source-only). Under by-source the cached frame also
       // holds target-only rows — their null source keys never equi-match
       // the anti-join, but filter them anyway for a tight build side.
-      val matchedKeys = (if (hasBySource) j.filter(srcPresent) else j)
+      val matchedKeys = j.filter(srcPresent)
         .select(keys.map { case (_, sk) =>
           sc(sk).as(s"__graft_mk_$sk") }: _*).distinct()
       val unmatched = s.join(broadcast(matchedKeys),
@@ -694,12 +661,11 @@ object MergeOps {
       val withNullTarget = unmatched.select(
         unmatched.columns.map(col) ++ targetCols.map(c =>
           lit(null).cast(targetSchema(c).dataType).as(TPrefix + c)): _*)
-      val iIdx = chosen(notMatched, tc, sc)
+      val iIdx = chosen(notMatched)
       withNullTarget.filter(iIdx =!= -1)
         .select(targetCols.map(c =>
           chainClauseValues(targetSchema, notMatched, iIdx, c,
-            lit(null).cast(targetSchema(c).dataType), tc, sc,
-            insertDefaults).as(c)): _*)
+            lit(null).cast(targetSchema(c).dataType), insertDefaults).as(c)): _*)
     }
 
     VectoredMergePlan(joined, marks, newVersions, inserts)

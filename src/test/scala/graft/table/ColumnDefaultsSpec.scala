@@ -126,6 +126,34 @@ class ColumnDefaultsSpec extends SparkSpec {
       == "dflt")
   }
 
+  test("merge, mergePruned and createOrMerge inserts fill DEFAULTs; a " +
+      "NOT NULL column with a DEFAULT merges like it appends") {
+    def s(t: MedallionTable, id: Long): String =
+      t.read.filter($"id" === id).select("s").head.getString(0)
+    // rewrite merge: the source omits s
+    val t = MedallionTable(spark, tmpDir("cd9"))
+    t.overwrite(Seq((1L, "v", "keep")).toDF("id", "s", "other"))
+    t.setColumnDefault("s", "'dflt'")
+    t.merge(Seq((1L, "upd"), (9L, "ins")).toDF("id", "other"), Seq("id"),
+      deleteNotMatchedBySource = false)
+    assert(s(t, 1L) == "v" && s(t, 9L) == "dflt")
+    t.setNotNull("s")
+    t.merge(Seq((10L, "ins")).toDF("id", "other"), Seq("id"),
+      deleteNotMatchedBySource = false)
+    assert(s(t, 10L) == "dflt" && t.read.count() == 3)
+    // partitioned on a key: createOrMerge takes mergePruned
+    val tp = MedallionTable(spark, tmpDir("cd9p"), Seq("grp"))
+    tp.overwrite(Seq((1L, 0L, "v", "keep")).toDF("id", "grp", "s", "other"))
+    tp.setColumnDefault("s", "'dflt'")
+    tp.setNotNull("s")
+    tp.createOrMerge(Seq((1L, 0L, "upd"), (9L, 0L, "ins"), (11L, 1L, "ins"))
+      .toDF("id", "grp", "other"), Seq("id", "grp"))
+    assert(s(tp, 1L) == "v" && s(tp, 9L) == "dflt" && s(tp, 11L) == "dflt")
+    tp.mergePruned(Seq((12L, 2L, "ins")).toDF("id", "grp", "other"),
+      Seq("id", "grp"))
+    assert(s(tp, 12L) == "dflt" && tp.read.count() == 4)
+  }
+
   test("SQL DDL: SET DEFAULT / DROP DEFAULT round-trip") {
     val p = tmpDir("cd6")
     val t = MedallionTable(spark, p)

@@ -94,6 +94,32 @@ class MergeOpsSpec extends SparkSpec {
     // id=1 is matched-but-unchanged: no change row (checked via exact set)
   }
 
+  test("one keyed-write pipeline: one staged-batch commit rename, no join " +
+      "in merge3Clause, the pushdown witnesses never read back") {
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory,
+      s"src/main not found under ${new java.io.File(".").getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) files(f) else Seq(f)
+      }
+    val sources = files(root).filter(_.getName.endsWith(".scala"))
+      .map(f => f.getName ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    def count(needle: String) =
+      sources.map(_._2.split(java.util.regex.Pattern.quote(needle), -1).length - 1).sum
+    assert(count("fs.rename(marksStaging") == 1)
+    val ops = sources.find(_._1 == "MergeOps.scala").get._2
+    val from = ops.indexOf("def merge3Clause(")
+    val body = ops.substring(from, ops.indexOf("\n  /**", from))
+    assert(!body.contains(".join("), body)
+    // every use outside the declarations assigns the witness
+    val reads = """lastMergeDv\w++(?!\s*(=[^=]|:))""".r
+    val hits = sources.flatMap { case (n, text) =>
+      reads.findAllIn(text).map(n + ": " + _) }
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
   test("composite keys and self-lineage source (ambiguity regression)") {
     import spark.implicits._
     val base = Seq((1L, "p", 1.0), (1L, "q", 2.0), (2L, "p", 3.0))

@@ -239,6 +239,30 @@ class UpdateVectoredSpec extends SparkSpec {
     assert(cnt == 99L, s"clone manifest row_count must not double-fold: $cnt")
   }
 
+  test("update and updateVectored keep a column's type and store what " +
+      "a MERGE assignment stores") {
+    import MergeOps._
+    def rows(t: MedallionTable) =
+      t.read.orderBy("id").collect().map(_.toSeq).toSeq
+    val start = Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
+    val m = MedallionTable(spark, tmpDir("udv_type_m"))
+    m.overwrite(start)
+    m.mergeClauses(Seq(1L).toDF("k"), Seq("id" -> "k"),
+      Seq(WhenMatchedUpdate(None, Map("v" -> ((_, _) => lit(1.5))))), Nil, Nil)
+    assert(m.read.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    Seq[(String, MedallionTable => Unit)](
+      "update" -> (_.update($"id" === 1L, Map("v" -> lit(1.5)))),
+      "updateVectored" -> (_.updateVectored($"id" === 1L, Map("V" -> lit(1.5))))
+    ).foreach { case (name, run) =>
+      val t = MedallionTable(spark, tmpDir("udv_type"))
+      t.overwrite(start)
+      run(t)
+      assert(t.read.schema("v").dataType == org.apache.spark.sql.types.LongType,
+        s"$name changed the column type: ${t.read.schema}")
+      assert(rows(t) == rows(m), name)
+    }
+  }
+
   test("zero-match update leaves no committed batch behind") {
     // Regression: an empty frame's write can still leave a zero-row part
     // file; file-presence detection then committed a permanent dead
