@@ -431,54 +431,39 @@ object ChangeFeed {
 
   // ---- file resolution ----------------------------------------------------
 
-  /** Index every resolvable data file by its relative-tail key: live
-    * table files (root = table path), committed update-batch files
-    * (root = the batch dir), and archived snapshot files (root = the
-    * snapshot dir, record = the archived one — its column map and reader
-    * schema). First hit wins (live before archived; archive MOVES files,
-    * so keys are unique in practice).
+  /** Index every resolvable data file by its relative-tail key. Live
+    * entries come from the table's [[TableSnapshot]] with no walk of
+    * their own: base files (root = table path), committed update-batch
+    * files (root = the batch dir) and a shallow clone's pointed-at source
+    * files (root = their parent — clones are unpartitioned by contract).
+    * Archived snapshot files are walked (root = the snapshot dir, record
+    * = the archived one — its column map and reader schema). First hit
+    * wins (live before archived; archive MOVES files, so keys are unique
+    * in practice).
     */
   private def dataFileIndex(spark: SparkSession, t: MedallionTable)
       : Map[String, (String, String, TableMeta)] = {
     val fs = fsOf(spark, t.path)
-    val liveMeta = t.meta
+    val snap = TableSnapshot.of(t)
     val out = scala.collection.mutable.Map
       .empty[String, (String, String, TableMeta)]
-    def put(key: String, file: String, root: String, m: TableMeta): Unit =
+    def put(file: String, root: String, m: TableMeta): Unit = {
+      val key = DeletionVectors.fileKeyOf(file)
       if (!out.contains(key)) out(key) = (file, root, m)
-    // FsWalk's pruned listStatus census, not fs.listFiles(recursive) —
-    // this runs on the FEED-READ path over the table root, so the
-    // located-status iterator's ~4.3 ms/file would cost a 100k-file
-    // table ~430 s of driver listing before any data work
-    def listDataFiles(root: Path): Seq[String] =
-      FsWalk.dataParquet(fs, root)
-        .map(s => fs.makeQualified(s._1.getPath).toString)
-    if (ShallowClone.isClone(spark, t.path))
-      // a clone's live files are POINTERS into the source's directory
-      // (plus local appends and its own committed batches — scanFiles
-      // folds all three). Clones are unpartitioned by contract, so each
-      // file's parent works as its basePath.
-      ShallowClone.scanFiles(spark, t.path).foreach(f =>
-        put(DeletionVectors.fileKeyOf(f), f,
-          new Path(f).getParent.toString, liveMeta))
-    else {
-      // live base files
-      listDataFiles(new Path(t.path)).foreach(f =>
-        put(DeletionVectors.fileKeyOf(f), f, t.path, liveMeta))
-      // live committed update batches (their own basePath roots)
-      DvUpdates.committedBatches(spark, t.path).foreach { b =>
-        val bd = DvUpdates.batchDataDir(t.path, b)
-        ShallowClone.listParquet(spark, bd).foreach(f =>
-          put(DeletionVectors.fileKeyOf(f), f, bd, liveMeta))
-      }
     }
+    snap.cloneSources.foreach(f =>
+      put(f, new Path(f).getParent.toString, snap.meta))
+    snap.baseFiles.foreach(f => put(f.path, t.path, snap.meta))
+    snap.batches.foreach(b => b.files.foreach(put(_, b.dir, snap.meta)))
     // archived snapshots (batch files were relocated into the snapshot's
-    // own layout, so one recursive listing covers them)
+    // own layout, so one recursive listing covers them) — FsWalk's pruned
+    // listStatus census, not fs.listFiles(recursive), whose located-status
+    // iterator costs ~4.3 ms/file
     t.listVersions().sorted.reverse.foreach { v =>
       val vdir = new Path(t.path, s"_graft_meta/versions/v$v")
       val vmeta = t.versionMeta(vdir)
-      listDataFiles(vdir).foreach(f =>
-        put(DeletionVectors.fileKeyOf(f), f, vdir.toString, vmeta))
+      FsWalk.dataParquet(fs, vdir).foreach(s =>
+        put(fs.makeQualified(s._1.getPath).toString, vdir.toString, vmeta))
     }
     out.toMap
   }
@@ -651,8 +636,8 @@ object ChangeFeed {
     // lazily built: only commits that reconstruct by position need it
     lazy val dataIndex = dataFileIndex(spark, t)
     // live update-batch roots (as dataFileIndex names them) -> schema
-    lazy val liveBatchSchemas = TableSnapshot.of(t).batches.map(b =>
-      DvUpdates.batchDataDir(t.path, b.name) -> b.schema).toMap
+    lazy val liveBatchSchemas =
+      TableSnapshot.of(t).batches.map(b => b.dir -> b.schema).toMap
 
     def tsOf(c: Long, m: Option[Manifest]): Long =
       hist.get(c).map(_._2).orElse(m.map(_.ts)).getOrElse(0L)

@@ -12,9 +12,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * costs microseconds per entry and block locations are irrelevant to a
   * name/size census. Round 17 fixed one site
   * ([[ShallowClone.listParquet]]); this object is the single primitive
-  * the remaining table-wide walks (CDF feed reads, COPY INTO landing
-  * scans, OPTIMIZE/DESCRIBE DETAIL metrics, delta-log export) route
-  * through so the anti-pattern cannot silently return.
+  * the remaining table-wide walks (table snapshots, the file census,
+  * insert staging, CDF archived versions, COPY INTO landing scans,
+  * OPTIMIZE/DESCRIBE DETAIL metrics, delta-log export) route through so
+  * the anti-pattern cannot silently return.
   *
   * `skipDir` prunes subtrees up front (job-committer staging like
   * `_temporary` / `.spark-staging-*` both vanishes mid-walk and is never
@@ -32,14 +33,14 @@ private[graft] object FsWalk {
     n.startsWith("_") || n.startsWith(".")
 
   /** Every FILE under `root` with its root-relative path, `skipDir`'d
-    * subtrees pruned. Relative paths use the same qualified-URI
+    * subtrees pruned; an absent root lists as empty (no separate
+    * existence probe). Relative paths use the same qualified-URI
     * relativization as `_metadata.file_path`, so callers' segment
     * filters and glob matchers see identical strings to the old
     * iterator's rendering.
     */
   def files(fs: FileSystem, root: Path,
       skipDir: String => Boolean = _ => false): Seq[(FileStatus, String)] = {
-    if (!fs.exists(root)) return Nil
     val rootUri = fs.makeQualified(root).toUri
     val b = Seq.newBuilder[(FileStatus, String)]
     def rec(d: Path): Unit =
@@ -61,8 +62,9 @@ private[graft] object FsWalk {
     * CDF file indexing and delta-log export all share.
     */
   def dataParquet(fs: FileSystem, root: Path): Seq[(FileStatus, String)] =
-    files(fs, root, hiddenName).filter { case (st, _) =>
-      st.getPath.getName.endsWith(".parquet") &&
-        !hiddenName(st.getPath.getName)
-    }
+    files(fs, root, hiddenName).filter { case (st, _) => isData(st) }
+
+  /** A non-hidden `.parquet` file: a data file of the walked tree. */
+  def isData(st: FileStatus): Boolean =
+    st.getPath.getName.endsWith(".parquet") && !hiddenName(st.getPath.getName)
 }

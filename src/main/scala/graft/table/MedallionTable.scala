@@ -14,12 +14,11 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
   * reference's `.option('mergeSchema','true')`, K1) round-trips.
   *
   * Scale notes:
-  *   - append/overwrite are plain distributed parquet writes — no driver
-  *     bottleneck, any partition count. Claim-first data jobs on ONE
-  *     table serialize behind the writer lock (Spark's
-  *     FileOutputCommitter shares `_temporary/0` per output path, so
-  *     truly simultaneous appends would corrupt each other's staging);
-  *     jobs on different tables are unaffected.
+  *   - inserts (append, COPY INTO, create, deep clone) are distributed
+  *     parquet writes into a private staging dir, published by renames
+  *     under a claim ([[insert]]) — no driver bottleneck, any partition
+  *     count, and N writers to one table stage in parallel, serializing
+  *     only on overlapping partition footprints.
   *   - merge is one full-outer shuffle join (see [[MergeOps]]) followed by a
   *     distributed rewrite. When `partitionColumns ⊆ keys`,
   *     [[mergePruned]] restricts both the read and the rewrite to the
@@ -65,52 +64,12 @@ final class MedallionTable(
     * does NOT count as an existing table — only actual data files do.
     */
   def exists: Boolean = {
-    val p = new Path(path)
     // A deliberately-emptied table (all rows DELETEd, schema recorded)
     // still EXISTS: createOrError must refuse it, createOrMerge must merge
     // into it, and vacuum must not mistake it for a mid-swap crash and
     // resurrect a stale backup over it.
-    fs.exists(p) && (hasDataFiles(p) || meta.schema.isDefined)
-  }
-
-  /** Recursive file walk that PRUNES skipped subtrees up front instead
-    * of statting every entry and filtering afterwards — `fs.listFiles
-    * (recursive)` walks job-committer staging (`_temporary`,
-    * `.spark-staging-*`) whose entries vanish at commit, turning a
-    * concurrent writer into FileNotFound crashes inside the listing
-    * (and wasting stats on trees the caller ignores anyway). A subtree
-    * vanishing mid-walk reads as empty — the committer removed it, so
-    * its files were never data. Callers judge hiddenness on segments
-    * BELOW the root only (an underscore-prefixed ANCESTOR dir must not
-    * hide the whole table — see [[hasDataFiles]]'s data-loss note).
-    */
-  private def walkFiles(root: Path, skipDir: String => Boolean)(
-      f: org.apache.hadoop.fs.FileStatus => Boolean): Unit = {
-    def rec(d: Path): Boolean = {
-      val entries =
-        try fs.listStatus(d)
-        catch { case _: java.io.FileNotFoundException =>
-          Array.empty[org.apache.hadoop.fs.FileStatus] }
-      entries.forall { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) skipDir(n) || rec(st.getPath)
-        else f(st)
-      }
-    }
-    rec(root)
-    ()
-  }
-
-  private def hiddenName(n: String): Boolean =
-    n.startsWith("_") || n.startsWith(".")
-
-  private[table] def hasDataFiles(p: Path): Boolean = {
-    var found = false
-    walkFiles(p, hiddenName) { st =>
-      if (!hiddenName(st.getPath.getName) && st.getLen > 0) found = true
-      !found // short-circuit the walk once a data file is seen
-    }
-    found
+    val snap = TableSnapshot.of(this)
+    snap.rootExists && (snap.hasData || snap.meta.schema.isDefined)
   }
 
   def read: DataFrame = {
@@ -225,28 +184,13 @@ final class MedallionTable(
     * census. One driver listing; the read it guards lists the same tree
     * anyway. Shared as the invalidation key by [[SmallSnapshot]].
     */
-  private[table] def metaCensusHash(): Long = {
-    val p = new Path(path)
-    if (!fs.exists(p)) 0L
-    else {
-      val rootUri = fs.makeQualified(p).toUri
-      var h = 0L
-      // job-committer staging pruned up front (walkFiles scaladoc);
-      // `_graft_meta` and DV sidecars stay IN the census by design
-      walkFiles(p, n => n.startsWith("_temporary") ||
-          n.startsWith(".spark-staging")) { f =>
-        val rel = rootUri.relativize(fs.makeQualified(f.getPath).toUri).getPath
-        h += rel.hashCode.toLong * 1000003L + f.getLen
-        true
-      }
-      h
+  private[table] def metaCensusHash(): Long =
+    // job-committer staging pruned up front (FsWalk scaladoc);
+    // `_graft_meta` and DV sidecars stay IN the census by design
+    FsWalk.files(fs, new Path(path), n => n.startsWith("_temporary") ||
+        n.startsWith(".spark-staging")).foldLeft(0L) { case (h, (f, rel)) =>
+      h + rel.hashCode.toLong * 1000003L + f.getLen
     }
-  }
-
-  private def writer(df: DataFrame, mode: SaveMode) = {
-    val w = clusterSmallWrite(df).write.mode(mode)
-    if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w
-  }
 
   /** Scale-adaptive write clustering (optimization guide §6 small files,
     * §2 scale-adaptive partitioning): a DRIVER-BUILT batch — every leaf a
@@ -695,12 +639,13 @@ final class MedallionTable(
     * claim until their data has landed (or failure cleanup released the
     * marker). It serves two purposes at once:
     *
-    *  1. MUTEX between claim-first data jobs — Spark's
-    *     FileOutputCommitter stages every job writing a given path under
-    *     the SAME `<path>/_temporary/0`, so two simultaneous appends
-    *     corrupt each other's staging (observed: FileNotFoundException
-    *     at job commit in the thread-stress spec). The lock turns that
-    *     corruption into an orderly bounded wait.
+    *  1. MUTEX between claim-first writers whose footprints overlap —
+    *     two publishes into one partition, or a job writing into the
+    *     live path (only the dynamic partition overwrites still do; Spark's
+    *     FileOutputCommitter stages a plain job writing a given path under
+    *     the SAME `<path>/_temporary/0`, which is why inserts stage in a
+    *     private dir). The lock turns those races into an orderly bounded
+    *     wait.
     *  2. In-flight fence for rewrites: `lock absent ∧ marker visible ⇒
     *     that claim's data is visible` — the invariant [[rewriteVia]]'s
     *     snapshot fence relies on (rewrites never take the lock; their
@@ -1622,11 +1567,11 @@ final class MedallionTable(
     }
   }
 
-  /** K1 — append with schema merge + partitioning. Claims a commit marker
-    * FIRST (appends write straight into the live directory, so there is no
-    * staged state to CAS at the end): a concurrent rewrite that merged
-    * against the pre-append snapshot then fails its own CAS instead of
-    * silently swapping the appended rows away.
+  /** K1 — append with schema merge + partitioning, through the one
+    * insert executor ([[insert]]). A batch column outside the record
+    * joins its schema in the same commit ([[TableMeta.evolvedBy]]); a
+    * table an append created records no schema and keeps the evolving
+    * `mergeSchema` contract.
     */
   def append(df: DataFrame): Unit = appendOp(df, "append")
 
@@ -1634,225 +1579,175 @@ final class MedallionTable(
     * the hook [[CopyInto]] uses to make the data commit and its loaded-file
     * log entry mutually recoverable (the batch id rides in the op, so
     * recovery can ask history "did this batch's data land?").
-    *
-    * Concurrency (Delta blind-append parity): an eligible append STAGES
-    * its data into a private dir with no lock held, then publishes under
-    * a partition-scoped claim — N ingest jobs appending to one table run
-    * their data writes (the dominant cost) in parallel and serialize
-    * only on the O(metadata) publish; an append and a DISJOINT scoped
-    * rewrite commit concurrently. Ineligible batches (schema evolution,
-    * append-created tables) and
-    * metadata drift detected under the claim fall back to the serial
-    * global-lock path, which is always correct.
     */
   private[table] def appendOp(df: DataFrame, op: String): Unit =
-    if (serialAppendsConf || !appendStaged(df, op))
-      withClaimedCommit(op) { appendBody(df, op) }
+    insert(op)(appendRows(df))()
 
-  /** `spark.graft.serialAppends=true` forces every append onto the
-    * legacy global-lock in-place path — the escape hatch for storage
-    * where the staged publish's per-file rename is not metadata-cheap,
-    * and the A/B control for the concurrency probes.
+  /** An append batch staged against record `tm`: the rows its files
+    * carry and the record its commit leaves. Appended files carry the
+    * PHYSICAL names the existing files do (mergeSchema would otherwise
+    * read a renamed column as two) and, under a live type widening, the
+    * WIDE types (new files never reintroduce a narrow spelling).
     */
-  private def serialAppendsConf: Boolean =
-    spark.conf.getOption("spark.graft.serialAppends").exists(_.toBoolean)
+  private def appendRows(df: DataFrame)(tm: TableMeta): (DataFrame, TableMeta) = {
+    val rows = upcastBatch(tm.physical(insertBatch(df, tm)), tm)
+    (rows, tm.evolvedBy(Some(df.schema), rows.schema))
+  }
 
-  /** Staged-append eligibility — the serial path owns everything else:
-    *   - table must exist with a recorded schema (append-created tables
-    *     keep the legacy evolving contract);
-    *   - no schema evolution: a batch column outside the recorded schema
-    *     needs a record change only a global writer may make.
-    *
-    * Identity/row-tracking batches ARE eligible (round 18): allocation
-    * was never global-writer-lock work — [[allocateIdentity]] reserves a
-    * consecutive id BLOCK under its own milliseconds-held identity lock
-    * and persists the high-water BEFORE any row exists, so N stagers
-    * draw disjoint blocks and run their data jobs concurrently. A
-    * staged attempt that stands down after allocating (drift → serial
-    * retry, which allocates a fresh block) leaks a gap — the registry's
-    * documented contract ("crash ⇒ gap, never a collision"). Without
-    * this, enabling row tracking silently re-serialized the whole
-    * ingest.
+  /** The record, the change-feed flag or a clone source moved between an
+    * insert's staging write and its claim: the attempt restages.
     */
-  private def appendStageEligible(df: DataFrame, tm: TableMeta): Boolean =
-    tm.schema.exists { s =>
-      val have = s.fieldNames.map(_.toLowerCase).toSet
-      df.columns.forall(c => have.contains(c.toLowerCase))
-    }
+  private case class InsertDrift() extends RuntimeException
 
-  private case class AppendMetaDrift() extends RuntimeException
-
-  /** Stage-then-publish append. Returns false when the batch is
-    * ineligible ([[appendStageEligible]]) or turns out so mid-flight
-    * (fresh physical column under a widening, empty staged set, a
-    * changed record under the claim) — the caller retries on the serial
-    * path.
+  /** The ONE insert executor: append, COPY INTO, [[appendIdempotent]],
+    * create and [[deepCloneFrom]] all land their rows through it, the
+    * way Delta commits a blind append — data files first, then one log
+    * entry.
     *
-    * Protocol:
-    *  1. NO LOCK: transform the batch (same chain as [[appendBody]],
-    *     identity blocks drawn under their own short lock) and write
-    *     it, hive layout and
-    *     all, into a private `append_staging_*` dir in the commits
-    *     sibling (invisible to every reader/census/rewrite snapshot;
-    *     excluded from [[commitStamp]] like the refresh stagings).
-    *  2. Scoped claim on exactly the partition dirs the staged files
-    *     land in (`p:<relative dir>` — the spelling every other scoped
-    *     writer declares, so overlap detection matches exactly; root
-    *     files collide on the bare `p:`).
-    *  3. Under the claim: re-check that the table record and the
-    *     change-feed flag are the ones the batch was staged against (the
-    *     record changes only under a claim, so equal records prove the
-    *     transform's inputs still describe the table), park the
-    *     stats manifest (same reader-visibility contract as
-    *     [[appendBody]] — manifest ABSENT while files appear), then
-    *     PUBLISH by renaming staged files in: O(files) driver fs ops,
-    *     zero data movement. The claim-first rationale is preserved —
-    *     unpublished files are invisible to a racing rewrite's snapshot,
-    *     and once we claim, its CAS/re-check fails as before.
-    *  4. Incremental stats complete under the stats mutex with a
-    *     commit-stamp re-check: any FOREIGN claim since ours may have
-    *     mutated files the parked manifest describes (disjoint scoped
-    *     rewrite) or raced the park protocol (second append) — abort to
-    *     manifest-absent, never stale. Sequential ingest (the standing-
-    *     index steady state) keeps its incremental manifest.
+    *  1. STAGE, no lock held: `batch` transforms the rows against the
+    *     record read once and names the record the commit leaves
+    *     (identity blocks are drawn under the identity lock's short hold
+    *     with the high-water persisted first, so concurrent stagers never
+    *     collide). The rows are written, in `layout`'s hive layout, into a
+    *     private `append_staging_*` dir in the commits sibling — invisible
+    *     to every reader, census and rewrite snapshot, and excluded from
+    *     [[commitStamp]]. CHECK/NOT NULL gates fire here, before any claim
+    *     exists to release. N writers to one table run these data jobs,
+    *     the dominant cost, in parallel.
+    *  2. CLAIM, scoped to exactly the partition dirs the staged files land
+    *     in (`p:<relative dir>`, the spelling every scoped writer
+    *     declares; root files collide on the bare `p:`) while the record is
+    *     unchanged; global when the batch changes the record or `global`
+    *     asks for it. An empty batch still claims its commit.
+    *  3. PUBLISH under the claim: the record and the change-feed flag must
+    *     be the ones the batch was staged against (the record changes only
+    *     under a claim, so an equal record proves the transform's inputs
+    *     still describe the table); otherwise the attempt releases its
+    *     claim and restages, at most [[MedallionTable.InsertAttempts]]
+    *     times (a restage draws fresh identity blocks, leaving a gap —
+    *     the identity contract's "gap, never a collision"). `around` wraps the publish for callers with claim-time
+    *     work (a create clears leftovers, an idempotent append checks its
+    *     txn witnesses). The publish writes a changed record BEFORE the
+    *     first rename (a crash between reads as a metadata-only ADD
+    *     COLUMN), parks the stats manifest and renames the staged files
+    *     in: O(files) driver fs ops, zero data movement. Unpublished files
+    *     are invisible to a racing rewrite's snapshot, and once we claim,
+    *     its CAS or re-check fails.
+    *  4. The published list, at the claimed ordinal, feeds the snapshot
+    *     publish, the incremental stats manifest and the change-feed
+    *     capture — no table walk looks for the commit's own files.
     *
-    * Crash windows: pre-claim — staging litter only, table untouched
-    * ([[vacuum]] clears). Mid-publish — marker + lock stand, some files
-    * visible: the same torn window the Hadoop job committer's one-by-one
-    * task renames already have on the serial path, now strictly shorter
-    * (renames only).
+    * Crash windows: before the claim, staging litter only and the table
+    * untouched ([[vacuum]] clears it); mid-publish, marker and lock stand
+    * with some files visible — the torn window a job committer's
+    * one-by-one task renames have too, here renames only.
     */
-  private def appendStaged(df: DataFrame, op: String): Boolean = {
-    import scala.util.control.NonFatal
-    val tm = meta
-    if (!appendStageEligible(df, tm)) return false
-    val cdf0 = ChangeFeed.isEnabled(spark, path)
-    // same transform chain as [[appendBody]] — identity included: the
-    // block is drawn (and the high-water persisted) here, BEFORE the
-    // lock-free staging write, so concurrent stagers never collide
-    val physBatch = upcastBatch(tm.physical(insertBatch(df, tm)), tm)
-    // post-transform physical-name check: a staged column missing from
-    // the recorded reader schema means the record would have to change
-    // (a global-lock read-modify-write) — serial path's job
-    if (tm.evolvedBy(None, physBatch.schema) != tm) return false
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val staging = new Path(commitsDir, s"append_staging_$token")
-    fs.mkdirs(commitsDir)
-    try {
-      // the expensive distributed write runs OUTSIDE any lock — N
-      // appenders stage in parallel; CHECK/NOT NULL gates fire here,
-      // before any claim exists to release
-      writer(physBatch, SaveMode.Overwrite).parquet(staging.toString)
-      MedallionTable.testFailpoint("post-stage-write")
-      val stagingUri = fs.makeQualified(staging).toUri
-      val rels = scala.collection.mutable.ArrayBuffer[String]()
-      walkFiles(staging, n => n.startsWith("_") || n.startsWith(".")) { st =>
-        if (st.getPath.getName.endsWith(".parquet"))
-          rels += stagingUri.relativize(
-            fs.makeQualified(st.getPath).toUri).getPath
-        true
+  private def insert(op: String, global: Boolean = false,
+      layout: Seq[String] = partitionColumns)(
+      batch: TableMeta => (DataFrame, TableMeta))(
+      around: (() => Unit) => Unit = publish => publish()): Unit = {
+    var attempt = 0
+    var done = false
+    while (!done) {
+      attempt += 1
+      val tm = meta
+      val feed = ChangeFeed.isEnabled(spark, path)
+      val (rows, next) = batch(tm)
+      val staging = new Path(commitsDir,
+        s"append_staging_${java.util.UUID.randomUUID().toString.take(12)}")
+      fs.mkdirs(commitsDir)
+      try {
+        val w = clusterSmallWrite(rows).write.mode(SaveMode.Overwrite)
+        (if (layout.nonEmpty) w.partitionBy(layout: _*) else w)
+          .parquet(staging.toString)
+        MedallionTable.testFailpoint("post-stage-write")
+        val listed = FsWalk.files(fs, staging, FsWalk.hiddenName)
+        // a committed job leaves `_SUCCESS` at least: nothing listed and
+        // no dir means an operator vacuum reaped the staging under us
+        if (listed.isEmpty && !fs.exists(staging)) throw InsertDrift()
+        val rels = listed.collect { case (st, r) if FsWalk.isData(st) => r }
+        val footprint =
+          if (global || next != tm) None
+          else Some(rels.map(r =>
+            "p:" + r.substring(0, math.max(r.lastIndexOf('/'), 0))).toSet)
+        withClaimedCommitScoped(op, footprint) { claimed =>
+          if (meta != tm || ChangeFeed.isEnabled(spark, path) != feed)
+            throw InsertDrift()
+          around(() => publish(op, claimed, staging, rels, tm, next, feed,
+            org.apache.spark.sql.types.StructType(
+              rows.schema.filterNot(f => layout.contains(f.name)))))
+        }
+        done = true
+      } catch {
+        case _: InsertDrift if attempt < MedallionTable.InsertAttempts => ()
+        case _: InsertDrift =>
+          throw new java.util.ConcurrentModificationException(
+            s"$op on $path: the table record, change-feed flag or source " +
+              s"changed under each of $attempt staged attempts — retry " +
+              "when concurrent writes settle")
+      } finally {
+        try fs.delete(staging, true)
+        catch { case _: java.io.IOException => () }
       }
-      if (rels.isEmpty) return false // empty batch: legacy commit semantics
-      val footprint: Set[String] = rels.map { r =>
-        val i = r.lastIndexOf('/')
-        "p:" + (if (i < 0) "" else r.substring(0, i))
-      }.toSet
-      withClaimedCommitScoped(op, Some(footprint)) { claimed =>
-        val cdfOn = ChangeFeed.isEnabled(spark, path)
-        if (cdfOn != cdf0 || meta != tm) throw AppendMetaDrift()
-        // stamp AFTER our own claim: any LATER foreign claim aborts the
-        // incremental manifest commit below (absent, never stale)
-        val stamp1 = commitStamp()
-        val incremental = TableStats.beginIncrementalUpdate(spark, path)
-        val published = rels.zipWithIndex.map { case (r, i) =>
-          val dst = new Path(path, r)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(new Path(staging, r), dst))
-            throw new java.io.IOException(
-              s"staged append publish failed: $staging/$r -> $dst")
-          // the TORN window: some files renamed in, the rest still
-          // staged — CrashRecoveryProbe kills a child JVM right here
-          if (i == 0 && rels.size > 1)
-            MedallionTable.testFailpoint("mid-append-publish")
-          fs.makeQualified(dst).toString
-        }.toSeq
-        MedallionTable.testFailpoint("post-append-publish")
-        TableSnapshot.wroteBaseFiles(this, published, org.apache.spark.sql.types
-          .StructType(physBatch.schema.filterNot(f => partitionColumns.contains(f.name))))
-        if (incremental) {
-          // atomic with a concurrent writer's invalidate (both take the
-          // stats mutex): its claim precedes its invalidate, so either
-          // our stamp check sees the claim (abort) or our completed
-          // manifest lands BEFORE its invalidate deletes it — no
-          // interleaving resurrects a manifest missing that writer's
-          // mutations
-          val ok = withStatsLock {
-            commitStamp() == stamp1 && {
-              try {
-                TableStats.completeIncrementalUpdate(spark, path, published,
-                  tm)
-                true
-              } catch { case NonFatal(_) => false }
-            }
-          }
-          if (!ok) withStatsLock {
-            fs.delete(new Path(path, "_graft_meta/stats"), true)
-            fs.delete(new Path(path, "_graft_meta/stats_pending"), true)
-          }
-        } else invalidateStats()
-        if (cdfOn)
-          try ChangeFeed.captureFiles(spark, path, claimed, op, published)
-          catch { case NonFatal(_) => () } // read fail-stops
-      }
-      true
-    } catch {
-      case _: AppendMetaDrift => false // caller retries on the serial path
-    } finally {
-      try fs.delete(staging, true) catch { case _: java.io.IOException => () }
     }
   }
 
-  /** The append write itself — runs INSIDE a claimed commit. */
-  private def appendBody(df: DataFrame, op: String): Unit = {
-    // Incremental manifest maintenance (TableStats.beginIncrementalUpdate
-    // scaladoc): when a manifest exists, park it as pending, write the
-    // data, then stats JUST the new files and commit the manifest back by
-    // rename — append keeps file skipping armed at O(batch) stats cost.
-    // Any failure leaves the manifest absent (conservative), never stale.
-    val cdfOn = ChangeFeed.isEnabled(spark, path)
-    val incremental = TableStats.beginIncrementalUpdate(spark, path)
-    val before =
-      if (incremental || cdfOn) dataFileSet() else Set.empty[String]
-    // appended files must carry the PHYSICAL names the existing files do
-    // (mergeSchema would otherwise read a renamed column as two) — and,
-    // under a live type widening, the WIDE types (canonicalize: new files
-    // never reintroduce a narrow spelling). A schema-evolving append
-    // extends the record's schema (the authority for the emptied-table
-    // read and for upcastBatch's declared types) and reader schema BEFORE
-    // the data lands ([[TableMeta.evolvedBy]]: a crash between the two
-    // reads as a metadata-only ADD COLUMN).
-    val tm = meta
-    val physBatch = upcastBatch(tm.physical(insertBatch(df, tm)), tm)
-    val next = tm.evolvedBy(Some(df.schema), physBatch.schema)
+  /** [[insert]]'s publish step, run under its claim at ordinal `claimed`:
+    * the record, the staged files renamed in, then stats and feed from
+    * the published list.
+    */
+  private def publish(op: String, claimed: Long, staging: Path,
+      rels: Seq[String], tm: TableMeta, next: TableMeta, feed: Boolean,
+      dataSchema: org.apache.spark.sql.types.StructType): Unit = {
+    import scala.util.control.NonFatal
     if (next != tm) persistMeta(next)
-    writer(physBatch, SaveMode.Append).parquet(path)
-    val added =
-      if (incremental || cdfOn) (dataFileSet() -- before).toSeq else Nil
-    if (incremental)
-      try TableStats.completeIncrementalUpdate(spark, path, added, next)
-      catch {
-        // pending = junk; the explicit invalidate guards the corner
-        // where a concurrent refresh landed a manifest that predates
-        // this append's files (absent is conservative, stale is not)
-        case scala.util.control.NonFatal(_) => invalidateStats()
+    // stamp AFTER our own claim: any LATER foreign claim aborts the
+    // incremental manifest commit below (absent, never stale)
+    val stamp1 = commitStamp()
+    // park the manifest (TableStats.beginIncrementalUpdate): readers see
+    // it ABSENT while files appear, then stats of JUST the new files
+    // commit it back — file skipping stays armed at O(batch) stats cost
+    val incremental = TableStats.beginIncrementalUpdate(spark, path)
+    val published = rels.zipWithIndex.map { case (r, i) =>
+      val dst = new Path(path, r)
+      fs.mkdirs(dst.getParent)
+      if (!fs.rename(new Path(staging, r), dst))
+        throw new java.io.IOException(
+          s"staged insert publish failed: $staging/$r -> $dst")
+      // the TORN window: some files renamed in, the rest still staged —
+      // CrashRecoveryProbe kills a child JVM right here
+      if (i == 0 && rels.size > 1)
+        MedallionTable.testFailpoint("mid-append-publish")
+      fs.makeQualified(dst).toString
+    }
+    MedallionTable.testFailpoint("post-append-publish")
+    TableSnapshot.wroteBaseFiles(this, published, dataSchema)
+    if (incremental) {
+      // atomic with a concurrent writer's invalidate (both take the
+      // stats mutex): its claim precedes its invalidate, so either our
+      // stamp check sees the claim (abort) or our completed manifest
+      // lands BEFORE its invalidate deletes it — no interleaving
+      // resurrects a manifest missing that writer's mutations
+      val ok = withStatsLock {
+        commitStamp() == stamp1 && {
+          try {
+            TableStats.completeIncrementalUpdate(spark, path, published, next)
+            true
+          } catch { case NonFatal(_) => false }
+        }
       }
-    else invalidateStats()
+      if (!ok) withStatsLock {
+        fs.delete(new Path(path, "_graft_meta/stats"), true)
+        fs.delete(new Path(path, "_graft_meta/stats_pending"), true)
+      }
+    } else invalidateStats()
     // change-feed capture is metadata-only: the added FILES are the
-    // insert rows (ChangeFeed scaladoc) — commitVersion is stable inside
-    // the claimed block (writer lock held; a racing rewrite's CAS fails)
-    if (cdfOn)
-      try ChangeFeed.captureFiles(spark, path, commitVersion, op, added)
-      catch { case scala.util.control.NonFatal(_) => () } // read fail-stops
+    // insert rows (ChangeFeed scaladoc). A capture IO failure must not
+    // unwind the claim (which would delete the marker of a landed
+    // commit) — the feed read fail-stops instead.
+    if (feed)
+      try ChangeFeed.captureFiles(spark, path, claimed, op, published)
+      catch { case NonFatal(_) => () }
   }
 
   /** Write-time type enforcement for appends (Delta's store-assignment
@@ -1896,25 +1791,11 @@ final class MedallionTable(
     }
   }
 
-  /** Live data files (qualified path strings), `_graft_meta` excluded by
-    * path segments below the table root (substring-matching the absolute
-    * path would misjudge tables under an underscore-prefixed ancestor —
-    * see [[hasDataFiles]]).
+  /** Live data files (qualified path strings): [[FsWalk.dataParquet]]
+    * below the table root.
     */
-  private def dataFileSet(): Set[String] = {
-    val p = new Path(path)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val b = Set.newBuilder[String]
-      walkFiles(p, hiddenName) { st =>
-        val f = st.getPath
-        if (f.getName.endsWith(".parquet") && !hiddenName(f.getName))
-          b += f.toString
-        true
-      }
-      b.result()
-    }
-  }
+  private def dataFileSet(): Set[String] =
+    FsWalk.dataParquet(fs, new Path(path)).map(_._1.getPath.toString).toSet
 
   /** K2 — full replace (static dims, `bronze_table_creation.py:36,61`).
     * An EXISTING table replaces through the backup swap: a plain
@@ -1939,28 +1820,32 @@ final class MedallionTable(
     create(df, "create")
   }
 
+  /** A create is an [[insert]] under a global claim whose record keeps the
+    * declarations made before the table existed and records the batch's
+    * schema; a rejected or failed first batch leaves the record as it was.
+    */
   private def create(df: DataFrame, op: String): Unit =
-    withClaimedCommit(op) {
-      // SaveMode.Overwrite deletes the dir (declarations included) BEFORE
-      // the job runs — restore the pre-create record even when the write
-      // fails, or a rejected/failed first batch silently disarms the gate
-      // (and forgets the generated columns). Identity assignment runs
-      // during argument evaluation, before the delete.
-      val m = meta
-      var next = m
-      try {
-        writer(insertBatch(df, m), SaveMode.Overwrite).parquet(path)
-        next = m.rewritten(df.schema)
-      } finally persistMeta(next)
-      // same NonFatal guard as appendBody: a capture IO failure must not
-      // unwind withClaimedCommit (which would delete the claimed marker
-      // AFTER the data and declarations landed, leaving a populated table
-      // at commit 0) — the feed read fail-stops instead
-      if (ChangeFeed.isEnabled(spark, path))
-        try ChangeFeed.captureFiles(spark, path, commitVersion, op,
-          dataFileSet().toSeq)
-        catch { case scala.util.control.NonFatal(_) => () }
+    insert(op, global = true)(tm => (insertBatch(df, tm), tm.rewritten(df.schema))) {
+      publish => clearLeftovers(); publish()
     }
+
+  /** A create's claim-time cleanup: every leftover under the root goes —
+    * a crashed job's files, and the data and derived sidecars (stats
+    * manifest, blooms, deletion vectors, archived versions) of a table
+    * that no longer exists, which would describe files the create does not
+    * publish — except the record, so declarations made before the table
+    * existed stay armed at every kill point.
+    */
+  private def clearLeftovers(): Unit = {
+    val record = TableMeta.file(path)
+    def clear(dir: Path, keep: String): Unit =
+      (try fs.listStatus(dir).toSeq
+       catch { case _: java.io.FileNotFoundException => Nil })
+        .filter(_.getPath.getName != keep)
+        .foreach(st => fs.delete(st.getPath, true))
+    clear(new Path(path), record.getParent.getName)
+    clear(record.getParent, record.getName)
+  }
 
   /** K4 — 3-clause merge (see [[MergeOps.merge3Clause]]): materializes the
     * merged result next to the table, then swaps directories with the
@@ -2518,7 +2403,8 @@ final class MedallionTable(
 
   /** DEEP CLONE (Delta `CREATE TABLE t CLONE s` without SHALLOW): a
     * MATERIALIZED copy of the source's current logical state — one
-    * distributed write of `source.read`, so deletion vectors, update
+    * distributed write of `source.read`, staged and published by
+    * [[insert]] under a global claim, so deletion vectors, update
     * batches, column maps, schema overlays and type widenings are all
     * applied-and-materialized in the copy rather than referenced
     * (decoupled from source rewrites BY CONSTRUCTION: zero pointer
@@ -2536,26 +2422,23 @@ final class MedallionTable(
       s"deep clone target declares partitioning ${partitionColumns
         .mkString(", ")} but the source's is ${source.partitionColumns
         .mkString(", ")} — a clone keeps the source layout")
-    val parts = source.partitionColumns
-    withClaimedCommit("deep-clone") {
-      // Source-side fence (rewriteVia's shape pointed at the SOURCE): a
-      // concurrent claim-first append on the source could otherwise be
-      // captured PARTIALLY — job-committer renames are not atomic as a
-      // set — or crash the copy mid-listing, and a partial capture
-      // persists a torn clone silently. Fence = no source writer lock
-      // standing before the read (every claim-first writer holds its
-      // lock past its data job), then verify the source file census is
-      // UNCHANGED after the copy; a census drift means a writer landed
-      // mid-copy — redo against the settled source. Declarations re-read
-      // inside the loop so they describe the same snapshot as the data.
-      var attempts = 0
-      var done = false
-      while (!done) {
-        attempts += 1
+    // Source-side fence (rewriteVia's shape pointed at the SOURCE): a
+    // concurrent claim-first write on the source could otherwise be
+    // captured PARTIALLY — its publish renames are not atomic as a set —
+    // or crash the copy mid-listing, and a partial capture persists a
+    // torn clone silently. Fence = no source writer lock standing before
+    // the read (every claim-first writer holds its lock past its data
+    // landing), then the source file census must be UNCHANGED under the
+    // target's claim; a drift means a writer landed mid-copy, and the
+    // insert restages against the settled source. The record and the
+    // identity high-water are read beside the data, so they describe the
+    // same snapshot.
+    var census0 = 0L
+    var hw = Map.empty[String, Long]
+    MedallionTable.retryOnVanishedFiles() {
+      insert("deep-clone", global = true, layout = source.partitionColumns) { _ =>
         // waits on the same WriterWaitMs deadline every other writer
-        // wait uses: an in-flight append is a multi-second Spark job, so
-        // a short fixed budget would make deepCloneFrom throw almost
-        // immediately instead of queueing like the rest of the protocol
+        // wait uses: an in-flight append is a multi-second Spark job
         val fenceDeadline =
           System.currentTimeMillis() + MedallionTable.WriterWaitMs
         while (source.writeLockHeld()) {
@@ -2567,27 +2450,17 @@ final class MedallionTable(
                 s"(${MedallionTable.crashedHolderHint})")
           Thread.sleep(25)
         }
-        val census0 = source.metaCensusHash()
+        census0 = source.metaCensusHash()
+        hw = source.readIdentityHw()
         val m = source.meta
-        val hw = source.readIdentityHw()
-        val schema = MedallionTable.retryOnVanishedFiles() {
-          val df = source.read
-          val w = df.write.mode(SaveMode.Overwrite)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
-          df.schema
-        }
-        if (source.writeLockHeld() || source.metaCensusHash() != census0) {
-          if (attempts >= 4)
-            throw new java.util.ConcurrentModificationException(
-              s"deep clone: source ${source.path} kept changing under the " +
-                s"copy ($attempts attempts) — retry when source writes " +
-                "settle")
-          // the next Overwrite replaces the torn copy wholesale
-        } else {
-          persistMeta(m.rewritten(schema))
-          writeIdentityHw(hw)
-          done = true
-        }
+        val df = source.read
+        (df, m.rewritten(df.schema))
+      } { publish =>
+        if (source.writeLockHeld() || source.metaCensusHash() != census0)
+          throw InsertDrift()
+        clearLeftovers()
+        publish()
+        writeIdentityHw(hw)
       }
     }
   }
@@ -2929,8 +2802,9 @@ final class MedallionTable(
     * Witness protocol: the (appId, version) pair rides in the commit
     * marker op (atomic with the claim); a per-app version file beside
     * the markers caches the high-water mark so the skip outlives marker
-    * retention. Both checks re-run under the writer lock, so concurrent
-    * replays serialize and exactly one applies.
+    * retention. The batch stages through [[insert]] with no lock held;
+    * both checks re-run under its GLOBAL claim, before the publish, so
+    * concurrent replays serialize there and exactly one applies.
     */
   def appendIdempotent(df: DataFrame, appId: String, version: Long): Boolean = {
     // Lock-free fast path: ONLY the high-water file, which is written
@@ -2942,24 +2816,24 @@ final class MedallionTable(
     if (lastTxnVersion(appId).exists(_ >= version)) return false
     val op = s"append-txn:$appId:$version"
     try {
-      withClaimedCommit(op) {
+      insert(op, global = true)(appendRows(df)) { publish =>
         // Re-check under the writer lock, where the marker IS a safe
         // witness: any same-op marker beyond our own (claim-first minted
         // ours already — hence count ≥ 2) belongs to a predecessor that
         // either completed (its data is in) or died post-claim, which
         // the claim-first crash model counts as applied — the crash
-        // window between the data write and the high-water update.
+        // window between the publish and the high-water update.
         if (lastTxnVersion(appId).exists(_ >= version) ||
             fs.exists(txnWitness(appId, version)) ||
             history().count(_._2 == op) >= 2) throw TxnAlreadyApplied()
-        // Durable claim-first witness, written BEFORE the data: a crash
+        // Durable claim-first witness, written BEFORE the publish: a crash
         // from here on counts as applied — exactly the contract the
         // marker-count check already encodes ("died post-claim" above) —
         // but unlike the marker this file survives retention pruning. An
-        // IN-PROCESS append failure rolls it back below so the retry
+        // IN-PROCESS publish failure rolls it back below so the retry
         // (whose marker was also released) correctly re-applies.
         writeMetaText(txnWitness(appId, version), "")
-        try appendBody(df, op)
+        try publish()
         catch {
           case t: Throwable =>
             try fs.delete(txnWitness(appId, version), false)
@@ -2968,8 +2842,8 @@ final class MedallionTable(
         }
         MedallionTable.testFailpoint("post-txn-append")
         // best-effort: the data is applied, so a failed high-water write
-        // must NOT bubble out of the claimed block — withClaimedCommit's
-        // failure path would release the commit marker, destroying the
+        // must NOT bubble out of the claimed block — the claim's failure
+        // path would release the commit marker, destroying the
         // marker witness and turning the next retry into a duplicate
         // append. The durable witness above stands either way; on
         // success the now-redundant witness is retired to keep the
@@ -3987,18 +3861,6 @@ final class MedallionTable(
     */
   def autoCompact(maxFiles: Int = 8): Int = {
     require(maxFiles >= 1, "autoCompact needs maxFiles >= 1")
-    def nParquetUnder(d: Path): Int = {
-      // live files only: a crashed job's _temporary staging (or any
-      // hidden segment) must not count toward the threshold — same
-      // discipline as dataFileSet/hasDataFiles
-      var n = 0
-      walkFiles(d, hiddenName) { st =>
-        if (st.getPath.getName.endsWith(".parquet") &&
-            !hiddenName(st.getPath.getName)) n += 1
-        true
-      }
-      n
-    }
     if (!exists) 0
     else {
       // delete-heavy tables creep in the SIDECAR too: many small flat
@@ -4024,7 +3886,9 @@ final class MedallionTable(
         // every partition dir, via the always-true predicate
         import org.apache.spark.sql.functions.lit
         val victims = matchingPartitionDirs(lit(true), schema)
-          .filter(d => nParquetUnder(new Path(d)) > maxFiles)
+          // live files only: a crashed job's _temporary staging (or any
+          // hidden segment) must not count toward the threshold
+          .filter(d => FsWalk.dataParquet(fs, new Path(d)).size > maxFiles)
         if (victims.isEmpty) 0
         else {
           compactWhere(dirsPredicate(victims, schema))
@@ -4244,7 +4108,7 @@ final class MedallionTable(
     // crashed scoped writers' footprint locks (see acquireWriteLock)
     scopedLockFiles().foreach(reapFile)
     // a crashed refresh's stats lock and staging litter (commitManifestSwap),
-    // plus a crashed staged append's private staging (appendStaged)
+    // plus a crashed insert's private staging ([[insert]])
     reapFile(statsLockFile)
     if (fs.exists(commitsDir))
       fs.listStatus(commitsDir).map(_.getPath)
@@ -4407,9 +4271,9 @@ final class MedallionTable(
     // Dynamic partition overwrite replaces exactly the partitions present in
     // `merged`; all other partition directories are untouched on disk.
     // CHECK constraints gate this path too — it is createOrMerge's (and so
-    // the pipeline's) canonical upsert route. Claim-first concurrency like
-    // append (no staged state to CAS; per-partition commit is the
-    // documented weaker atomicity of this path).
+    // the pipeline's) canonical upsert route. Claim-first and scoped to
+    // the touched partitions (no staged state to CAS; per-partition commit
+    // is the documented weaker atomicity of this path).
     withPartitionClaim("merge-pruned", Some(scope)) { (_, _) =>
       // scan + merge constructed UNDER the lock: the file listing must
       // reflect the locked state — a pre-lock listing is stale whenever
@@ -4525,6 +4389,12 @@ object MedallionTable {
     * force compaction with few commits.
     */
   private[graft] var JournalCompactThreshold = 64
+
+  /** Staged attempts an insert makes before a table record, change-feed
+    * flag or clone source that keeps moving under it fails the insert
+    * (each drift releases the claim and restages).
+    */
+  private[table] val InsertAttempts = 4
 
   /** The row-tracking column ([[MedallionTable.enableRowTracking]]). */
   val RowIdCol = "_row_id"

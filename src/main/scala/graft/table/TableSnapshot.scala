@@ -282,8 +282,7 @@ private[table] object TableSnapshot {
     val hasData = walked.exists { case (st, _) =>
       !FsWalk.hiddenName(st.getPath.getName) && st.getLen > 0 }
     val baseFiles = walked.collect {
-      case (st, _) if st.getPath.getName.endsWith(".parquet") &&
-          !FsWalk.hiddenName(st.getPath.getName) =>
+      case (st, _) if FsWalk.isData(st) =>
         DataFile(fs.makeQualified(st.getPath).toString, st.getLen,
           st.getModificationTime)
     }

@@ -112,8 +112,8 @@ object TableStats {
     // project renamed physical columns back before any stats run; a
     // shallow clone's manifest covers pointer files too
     val isClone = ShallowClone.isClone(spark, tablePath)
-    val mt = new MedallionTable(spark, tablePath)
-    val tm = mt.meta
+    val snap = TableSnapshot.of(new MedallionTable(spark, tablePath))
+    val tm = snap.meta
     val rawBase =
       if (isClone)
         // a shallow clone's scanFiles covers the source's pointed-at
@@ -131,7 +131,7 @@ object TableStats {
         // footers to infer from — seed from the recorded schema in
         // physical names, exactly like the table read's empty branch
         case (None, Some(s))
-            if !mt.hasDataFiles(new org.apache.hadoop.fs.Path(tablePath)) =>
+            if !snap.hasData =>
           spark.read.schema(s).parquet(tablePath)
         case _ => spark.read.parquet(tablePath)
       }

@@ -23,8 +23,13 @@ import graft.table.MedallionTable
   * duplicate), the next append always succeeds, and no litter survives
   * operator recovery.
   *
+  * A last window halts a child's `createOrError` at `post-stage-write`
+  * on a table whose CHECK was declared before it existed: the table must
+  * still not exist, the CHECK must still be declared, operator vacuum
+  * must leave no litter, and the next create must land, gated by it.
+  *
   * Usage: runMain graft.tools.CrashRecoveryProbe
-  *        (child mode, internal: --child <tablePath>)
+  *        (child mode, internal: --child <tablePath> [create])
   */
 object CrashRecoveryProbe {
 
@@ -43,8 +48,10 @@ object CrashRecoveryProbe {
       import spark.implicits._
       // batch spans TWO partitions → two publish renames → the torn
       // window between them exists
-      MedallionTable(spark, args(1), Seq("blk"))
-        .append((0 until 1000).map(i => (i.toLong, i % 2)).toDF("id", "blk"))
+      val rows = (0 until 1000).map(i => (i.toLong, i % 2)).toDF("id", "blk")
+      val t = MedallionTable(spark, args(1), Seq("blk"))
+      if (args.lift(2).contains("create")) t.createOrError(rows)
+      else t.append(rows)
       spark.stop()
       sys.exit(0) // only reached when no halt env is set
     }
@@ -58,17 +65,12 @@ object CrashRecoveryProbe {
         case Seq("--add-opens", v) => Seq("--add-opens", v)
       }.flatten.toSeq
 
-    for (window <- Seq("post-stage-write", "mid-claim-first",
-        "mid-append-publish")) {
-      val path = java.nio.file.Files.createTempDirectory(
-        s"crashprobe_${window.replace('-', '_')}").toString + "/t"
-      val t = MedallionTable(spark, path, Seq("blk"))
-      t.overwrite(Seq((-1L, 0), (-2L, 1)).toDF("id", "blk"))
-
+    /** Run a child writer on `path` that halts at `window`. */
+    def haltChild(path: String, window: String, mode: Seq[String]): Unit = {
       val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx3g",
         "-Dspark.ui.enabled=false", "-cp",
         System.getProperty("java.class.path"),
-        "graft.tools.CrashRecoveryProbe", "--child", path)
+        "graft.tools.CrashRecoveryProbe", "--child", path) ++ mode
       val pb = new ProcessBuilder(cmd: _*).inheritIO()
       pb.environment().put("GRAFT_FAILPOINT_HALT", window)
       val child = pb.start()
@@ -76,11 +78,30 @@ object CrashRecoveryProbe {
         s"$window: child did not exit")
       val rc = child.exitValue()
       require(rc == 137, s"$window: child exited $rc, expected halt(137)")
+    }
+    def commitNames(path: String): Seq[String] =
+      new java.io.File(s"${path}__graft_commits").listFiles()
+        .map(_.getName).toSeq
+    def operatorVacuum(t: MedallionTable): Unit = {
+      spark.conf.set("spark.graft.vacuumAssumeNoWriters", "true")
+      try t.vacuum()
+      finally spark.conf.unset("spark.graft.vacuumAssumeNoWriters")
+    }
+    def litter(path: String): Seq[String] =
+      commitNames(path).filter(n => n.startsWith("append_staging_") ||
+        n == "write.lock" || (n.startsWith("write_") && n.endsWith(".lock")))
+
+    for (window <- Seq("post-stage-write", "mid-claim-first",
+        "mid-append-publish")) {
+      val path = java.nio.file.Files.createTempDirectory(
+        s"crashprobe_${window.replace('-', '_')}").toString + "/t"
+      val t = MedallionTable(spark, path, Seq("blk"))
+      t.overwrite(Seq((-1L, 0), (-2L, 1)).toDF("id", "blk"))
+      haltChild(path, window, Nil)
 
       def childRows() = t.read.filter($"id" >= 0).count()
       val visible = childRows()
-      val commits = new java.io.File(s"${path}__graft_commits")
-      def names() = commits.listFiles().map(_.getName).toSeq
+      def names() = commitNames(path)
       val stagingLeft = names().exists(_.startsWith("append_staging_"))
       window match {
         case "post-stage-write" | "mid-claim-first" =>
@@ -99,12 +120,8 @@ object CrashRecoveryProbe {
       require(names().exists(_.startsWith("append_staging_")) == stagingLeft,
         s"$window: default vacuum reaped young staging")
       // …the operator who watched the kill reaps it now
-      spark.conf.set("spark.graft.vacuumAssumeNoWriters", "true")
-      try t.vacuum()
-      finally spark.conf.unset("spark.graft.vacuumAssumeNoWriters")
-      require(!names().exists(n => n.startsWith("append_staging_") ||
-          n == "write.lock" ||
-          (n.startsWith("write_") && n.endsWith(".lock"))),
+      operatorVacuum(t)
+      require(litter(path).isEmpty,
         s"$window: litter survives operator vacuum: ${names().mkString(",")}")
 
       // the next writer proceeds; serial model = seed + torn prefix +
@@ -121,6 +138,30 @@ object CrashRecoveryProbe {
       println(s"crash window $window OK: torn=${visible} child rows, " +
         "recovery append landed, no duplicates, no litter")
     }
+
+    // a first create halted between its staging write and its claim
+    val path = java.nio.file.Files.createTempDirectory("crashprobe_create")
+      .toString + "/t"
+    val t = MedallionTable(spark, path, Seq("blk"))
+    t.addCheckConstraint("nonneg", "id >= 0")
+    haltChild(path, "post-stage-write", Seq("create"))
+    require(!t.exists, "create window: a halted create left a table")
+    require(t.checkConstraints.get("nonneg").contains("id >= 0"),
+      "create window: the CHECK declared before the create was lost")
+    require(commitNames(path).exists(_.startsWith("append_staging_")),
+      "create window: expected staging litter")
+    operatorVacuum(t)
+    require(litter(path).isEmpty, "create window: litter survives " +
+      s"operator vacuum: ${commitNames(path).mkString(",")}")
+    require(scala.util.Try(
+        t.createOrError(Seq((5L, 0), (-5L, 1)).toDF("id", "blk"))).isFailure &&
+        !t.exists,
+      "create window: the CHECK did not gate the next create")
+    t.createOrError((0 until 500).map(i => (i.toLong, i % 2)).toDF("id", "blk"))
+    require(t.read.count() == 500 && t.checkConstraints.contains("nonneg"),
+      "create window: the next create did not land under its CHECK")
+    println("crash window create post-stage-write OK: no table, CHECK " +
+      "kept, no litter, next create landed gated by the CHECK")
     spark.stop()
   }
 }

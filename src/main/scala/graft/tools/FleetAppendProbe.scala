@@ -9,13 +9,14 @@ import graft.table.MedallionTable
   * hides any cross-process listing-consistency surprise.
   * Here each writer is a separate JVM with its own local[8] session (the
   * deployment shape: N ingest processes, one table), appending disjoint
-  * partitions. Modes: staged (scoped claims) vs `serialAppends` (global
-  * lock), each with and without row tracking — enabling Delta-parity row
-  * ids must keep the concurrency (id BLOCKS under the short identity
-  * lock), and ids must come out globally unique across processes.
+  * partitions through the one staged insert path (scoped claims), with
+  * and without row tracking — enabling Delta-parity row ids must keep the
+  * concurrency (id BLOCKS under the short identity lock), and ids must
+  * come out globally unique across processes. A default-config vacuum
+  * runs every second throughout and must never abort a writer.
   *
   * Usage: runMain graft.tools.FleetAppendProbe [writers] [batches]
-  *        (child, internal: --child <path> <who> <batches> <serial> <rt>)
+  *        (child, internal: --child <path> <who> <batches>)
   */
 object FleetAppendProbe {
 
@@ -32,11 +33,9 @@ object FleetAppendProbe {
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--child")) {
-      val Array(_, path, whoS, batchesS, serialS, _) = args
+      val Array(_, path, whoS, batchesS) = args
       val spark = session(8)
       import spark.implicits._
-      if (serialS.toBoolean)
-        spark.conf.set("spark.graft.serialAppends", "true")
       val who = whoS.toInt
       val t = MedallionTable(spark, path, Seq("blk"))
       (0 until batchesS.toInt).foreach { b =>
@@ -59,10 +58,9 @@ object FleetAppendProbe {
         case Seq("--add-opens", v) => Seq("--add-opens", v)
       }.flatten.toSeq
 
-    for (rt <- Seq(false, true); serial <- Seq(false, true)) {
+    for (rt <- Seq(false, true)) {
       val path = java.nio.file.Files.createTempDirectory(
-        s"fleet_${if (rt) "rt" else "plain"}_${if (serial) "ser" else "stg"}")
-        .toString + "/t"
+        s"fleet_${if (rt) "rt" else "plain"}").toString + "/t"
       val t = MedallionTable(spark, path, Seq("blk"))
       t.overwrite((0 until writers).map(b => (-1L - b, b)).toDF("id", "blk"))
       if (rt) t.enableRowTracking()
@@ -73,7 +71,7 @@ object FleetAppendProbe {
           "-Dspark.ui.enabled=false", "-cp",
           System.getProperty("java.class.path"),
           "graft.tools.FleetAppendProbe", "--child", path, who.toString,
-          batches.toString, serial.toString, rt.toString)): _*)
+          batches.toString)): _*)
           .inheritIO().start()
       }
       // the cron-janitor deployment shape, live during staged ingest: a
@@ -89,7 +87,7 @@ object FleetAppendProbe {
           Thread.sleep(1000)
         }
       }, "fleet-janitor")
-      if (!serial) { janitor.setDaemon(true); janitor.start() }
+      janitor.setDaemon(true); janitor.start()
       val rcs = children.map { c =>
         if (!c.waitFor(600, java.util.concurrent.TimeUnit.SECONDS)) {
           c.destroyForcibly(); -1
@@ -98,7 +96,7 @@ object FleetAppendProbe {
       janitorStop.set(true)
       val wall = (System.nanoTime() - t0) / 1e3 / 1e6
       require(rcs.forall(_ == 0), s"child rcs: ${rcs.mkString(",")}")
-      if (!serial) require(janitorRuns.get() > 0, "janitor never ran")
+      require(janitorRuns.get() > 0, "janitor never ran")
 
       val n = t.read.count()
       val expected = writers.toLong * batches * RowsPerBatch + writers
@@ -108,7 +106,7 @@ object FleetAppendProbe {
         require(d == n, s"cross-process row-id collision: $d of $n")
       }
       println(f"fleet: writers=$writers batches=$batches " +
-        f"rowTracking=$rt%-5s mode=${if (serial) "serial" else "staged"}%-6s " +
+        f"rowTracking=$rt%-5s " +
         f"wall=$wall%6.1f s  rows=$n${if (rt) "  (ids all unique)" else ""}")
     }
     spark.stop()

@@ -17,11 +17,13 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 class ConcurrentRewriteSpec extends SparkSpec {
   import spark.implicits._
 
-  private def seeded(prefix: String, filesPerPart: Int = 4)
-      : (String, MedallionTable) = {
+  private def seeded(prefix: String, filesPerPart: Int = 4,
+      byAppend: Boolean = false): (String, MedallionTable) = {
     val p = tmpDir(prefix)
     val t = MedallionTable(spark, p, Seq("blk"))
-    t.overwrite(Seq((0L, 0)).toDF("id", "blk"))
+    // an append-created table records no schema (the evolving contract)
+    if (byAppend) t.append(Seq((0L, 0)).toDF("id", "blk"))
+    else t.overwrite(Seq((0L, 0)).toDF("id", "blk"))
     // small appends build up multiple files per partition
     (1 until filesPerPart).foreach { i =>
       t.append((0 until 4).map(b => (i * 10L + b, b)).toDF("id", "blk"))
@@ -231,9 +233,10 @@ class ConcurrentRewriteSpec extends SparkSpec {
     assert(t.read.filter($"id" === 5001L).count() == 1)
   }
 
-  test("two DISJOINT appends hold claimed commits at the same instant " +
-      "(Delta blind-append parity); both batches land exactly once") {
-    val (p, t) = seeded("cr8")
+  /** Two appends to disjoint partitions must hold their claimed commits
+    * at the same instant, and both batches must land exactly once.
+    */
+  private def disjointAppendsOverlap(p: String, t: MedallionTable): Unit = {
     val before = t.read.count()
     val v0 = t.commitVersion
     val aClaimed = new CountDownLatch(1)
@@ -269,6 +272,20 @@ class ConcurrentRewriteSpec extends SparkSpec {
     assert(t.read.filter($"id" >= 6000L && $"id" < 6100L).count() == 50)
     assert(t.read.filter($"id" >= 6100L).count() == 50)
     assert(t.history().count(_._2 == "append") >= 2)
+  }
+
+  test("two DISJOINT appends hold claimed commits at the same instant " +
+      "(Delta blind-append parity); both batches land exactly once") {
+    val (p, t) = seeded("cr8")
+    disjointAppendsOverlap(p, t)
+  }
+
+  test("two DISJOINT appends on an APPEND-created table (no recorded " +
+      "schema) hold claimed commits at the same instant; both land once") {
+    val (p, t) = seeded("cr8a", byAppend = true)
+    assert(t.meta.schema.isEmpty, "an append-created table records no schema")
+    disjointAppendsOverlap(p, t)
+    assert(t.meta.schema.isEmpty, "appends keep the table schemaless")
   }
 
   test("SAME-partition appends serialize on their shared footprint and " +
@@ -529,11 +546,52 @@ class ConcurrentRewriteSpec extends SparkSpec {
     try t.append(Seq((2L, "b")).toDF("id", "s"))
     finally MedallionTable.testFailpoint = _ => ()
     assert(vacuumed)
-    // the staged attempt found its staging gone BEFORE claiming (empty
-    // file census → stand down), so the serial path ran — exactly once
+    // the staged attempt found its staging gone BEFORE claiming, released
+    // nothing it had not claimed, and restaged — the rows land exactly once
     assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       Set((1L, "a"), (2L, "b")),
       "rows must land exactly once through the serial fallback")
+  }
+
+  test("a CHECK committed while an append is staged gates that append: " +
+      "a violating batch is refused, a passing one lands once") {
+    val p = tmpDir("cr_check_staged")
+    val t = MedallionTable(spark, p)
+    t.overwrite(Seq((1L, "a")).toDF("id", "s"))
+    val declarer = new MedallionTable(spark, p)
+    val staged = new java.util.concurrent.atomic.AtomicInteger(0)
+    var declare: Option[(String, String)] = None
+    MedallionTable.testFailpoint = {
+      case "post-stage-write" =>
+        staged.incrementAndGet()
+        // the declaration lands between the staging write and the claim
+        declare.foreach { case (n, e) => declarer.addCheckConstraint(n, e) }
+        declare = None
+      case _ => ()
+    }
+    try {
+      declare = Some("pos" -> "id > 0")
+      // the first staging ran before the CHECK existed: only a restage
+      // under the record the claim found can refuse the batch
+      val e = intercept[Throwable](t.append(Seq((-1L, "x")).toDF("id", "s")))
+      def chain(x: Throwable): Seq[String] =
+        if (x == null) Nil else String.valueOf(x.getMessage) +: chain(x.getCause)
+      assert(chain(e).exists(_.contains("CHECK violated")), chain(e))
+      assert(staged.get() == 1, "the restage's write must refuse the batch")
+      assert(t.checkConstraints.get("pos").contains("id > 0"))
+      assert(t.read.filter($"id" === -1L).count() == 0,
+        "the violating batch published past the CHECK")
+
+      staged.set(0)
+      declare = Some("small" -> "id < 100")
+      t.append(Seq((2L, "b")).toDF("id", "s"))
+      assert(staged.get() == 2, "the append must restage under the record " +
+        s"its claim found (staged ${staged.get()} times)")
+      assert(t.checkConstraints.keySet == Set("pos", "small"))
+    } finally MedallionTable.testFailpoint = _ => ()
+    assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      .sorted == Seq((1L, "a"), (2L, "b")),
+      "the passing batch must land exactly once")
   }
 
   test("janitor vacuum fired inside a LIVE rewrite's swap window stands " +

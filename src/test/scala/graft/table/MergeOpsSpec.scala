@@ -118,6 +118,19 @@ class MergeOpsSpec extends SparkSpec {
     val hits = sources.flatMap { case (n, text) =>
       reads.findAllIn(text).map(n + ": " + _) }
     assert(hits.isEmpty, hits.mkString(", "))
+    // one insert path: no serial-append switch, one directory walker, and
+    // the live table root written only by the two dynamic partition
+    // overwrites (every insert stages and renames its files in)
+    assert(count("serialAppends") == 0)
+    assert(count("def walkFiles") == 0)
+    val lines = sources.find(_._1 == "MedallionTable.scala").get._2.split('\n')
+    val rootWrites = lines.indices.filter(i =>
+      lines(i).contains(".parquet(path)") && !lines(i).contains("read"))
+    assert(rootWrites.size == 2, rootWrites.map(i => lines(i).trim))
+    rootWrites.foreach { i =>
+      val stmt = lines.slice(i - 4, i + 1).mkString("\n")
+      assert(stmt.contains("\"partitionOverwriteMode\", \"dynamic\""), stmt)
+    }
   }
 
   test("composite keys and self-lineage source (ambiguity regression)") {

@@ -162,8 +162,8 @@ class RowTrackingSpec extends SparkSpec {
     // Round 18: identity/row-tracking batches are staged-eligible (block
     // allocation under the short identity lock, data job lock-free).
     // Proven, not inferred: the post-stage-write failpoint must fire for
-    // every writer (the serial path never stages), and all ids must be
-    // unique across the interleaved publishes.
+    // every writer, and all ids must be unique across the interleaved
+    // publishes.
     val p = tmpDir("rt_concurrent")
     val t = MedallionTable(spark, p, Seq("blk"))
     t.overwrite((0 until 4).map(b => (-1L - b, b)).toDF("k", "blk"))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *    building `read` — and the SQL source's `inferSchema` — after a
   *    same-JVM commit runs ZERO Spark jobs (no footer-resolution, batch
   *    schema inference or mark collect) and still equals a cold read
-  *    from disk — while a schema-EVOLVING append (serial path) drops the
+  *    from disk — while a schema-EVOLVING append (global claim) drops the
   *    base schema and re-resolves.
   */
 class WriteShapeSpec extends SparkSpec {
@@ -160,7 +160,7 @@ class WriteShapeSpec extends SparkSpec {
     val t = MedallionTable(spark, p)
     t.overwrite(Seq((1L, "a")).toDF("id", "s"))
     t.read.schema
-    t.append(Seq((2L, "b", 9.5)).toDF("id", "s", "score")) // serial path
+    t.append(Seq((2L, "b", 9.5)).toDF("id", "s", "score")) // record-changing
     assert(t.read.schema.fieldNames.contains("score"),
       "evolution must re-resolve, never serve a carried stale schema")
     assert(t.read.filter($"score".isNotNull).count() == 1L)
