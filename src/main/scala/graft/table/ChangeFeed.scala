@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
   *  - append / idempotent append / COPY INTO / create: the manifest
   *    records the ADDED FILE keys ([[DeletionVectors.fileKeyOf]] tails).
   *    The rows themselves stay where the append put them.
-  *  - `delete-dv`: the manifest records the MARK FILES this delete
-  *    appended to the DV sidecar. The deleted row images are
-  *    reconstructed at read time by position.
+  *  - `delete-dv`: the manifest records the marks-only `update_<id>`
+  *    directory this delete committed into the DV sidecar, as `delete`
+  *    marks. The deleted row images are reconstructed at read time by
+  *    position.
   *  - `update-dv` / `merge-dv`: the manifest records the batch id, the
   *    batch's data-file keys, and the marks directory. Postimages are
   *    the batch files; preimages reconstruct by position. For merges it
@@ -220,7 +221,7 @@ object ChangeFeed {
       batch: Option[String],
       keys: Seq[String],
       files: Seq[String], // data-file keys (fileKeyOf tails)
-      marks: Seq[String]) // dv-root-relative mark files / dirs
+      marks: Seq[String]) // dv-root-relative `update_<id>` marks dirs
 
   private def render(m: Manifest): String = {
     val b = new StringBuilder
@@ -280,11 +281,11 @@ object ChangeFeed {
     captureManifest(spark, tablePath, ordinal, Manifest(op, now(), "files",
       None, Nil, addedFiles.map(DeletionVectors.fileKeyOf).sorted, Nil))
 
-  /** `delete-dv` capture: the mark files this commit appended. */
+  /** `delete-dv` capture: the marks-only directory this commit landed. */
   private[table] def captureMarks(spark: SparkSession, tablePath: String,
-      ordinal: Long, op: String, markFiles: Seq[String]): Unit =
+      ordinal: Long, op: String, marksDir: String): Unit =
     captureManifest(spark, tablePath, ordinal, Manifest(op, now(), "marks",
-      None, Nil, Nil, markFiles.sorted))
+      None, Nil, Nil, Seq(marksDir)))
 
   /** `update-dv` / `merge-dv` capture. `keys` nonEmpty ⟺ merge (enables
     * insert/update classification); empty ⟺ plain update (all
@@ -373,16 +374,16 @@ object ChangeFeed {
         else survivors += st.getPath
       }
     }
-    // prune the marks archive: keep only flat mark files some surviving
-    // manifest still references (expired delete ranges refuse anyway)
+    // prune the marks archive: keep only the marks directories some
+    // surviving manifest still references (expired delete ranges refuse
+    // anyway)
     val arch = marksArchiveDir(t.path)
     if (fs.exists(arch)) {
-      val referenced = survivors.result().flatMap { p =>
-        parse(readText(fs, p)).marks.filterNot(_.contains("/"))
-      }.toSet
+      val referenced = survivors.result()
+        .flatMap(p => parse(readText(fs, p)).marks).toSet
       fs.listStatus(arch).foreach { st =>
         if (!referenced.contains(st.getPath.getName))
-          fs.delete(st.getPath, false)
+          fs.delete(st.getPath, true)
       }
     }
     e
@@ -468,49 +469,47 @@ object ChangeFeed {
     out.toMap
   }
 
-  /** DV compaction coalesces the flat delete-mark files; the originals
-    * are per-commit feed evidence, so [[archiveMarkFiles]] parks them
-    * here (tiny position lists, commits-sidecar lifetime — exactly the
+  /** DV compaction folds the marks-only directories; the originals are
+    * per-commit feed evidence, so [[archiveMarks]] moves them here whole
+    * (tiny position lists, commits-sidecar lifetime — exactly the
     * manifests') instead of deleting, and delete feed ranges survive
-    * `compactDv`. Batch (`update_*`) marks get no such treatment:
-    * `compactDvBatches` deletes the batch DATA files too, so those
-    * ranges refuse either way.
+    * `compactDv`. Batch marks get no such treatment: `compactDvBatches`
+    * deletes the batch DATA files too, so those ranges refuse either way.
     */
   private def marksArchiveDir(tablePath: String): Path =
     new Path(cdfRoot(tablePath), "marks_archive")
 
-  /** Move superseded flat mark files into the archive ([[compactDv]]'s
-    * feed hook). A failed rename falls back to delete — the feed range
-    * then refuses exactly as it would have without the archive.
+  /** Move folded marks-only directories into the archive, whole
+    * ([[MedallionTable.compactDv]]'s feed hook). A failed rename falls
+    * back to delete — the feed range then refuses exactly as it would
+    * have without the archive.
     */
-  private[table] def archiveMarkFiles(spark: SparkSession, tablePath: String,
-      files: Seq[Path]): Unit = {
+  private[table] def archiveMarks(spark: SparkSession, tablePath: String,
+      dirs: Seq[Path]): Unit = {
     val fs = fsOf(spark, tablePath)
-    val dir = marksArchiveDir(tablePath)
-    fs.mkdirs(dir)
-    files.foreach { f =>
+    val archive = marksArchiveDir(tablePath)
+    fs.mkdirs(archive)
+    dirs.foreach { d =>
       val ok =
-        try fs.rename(f, new Path(dir, f.getName))
+        try fs.rename(d, new Path(archive, d.getName))
         catch { case _: java.io.IOException => false }
       if (!ok)
-        try fs.delete(f, false)
+        try fs.delete(d, true)
         catch { case _: java.io.IOException => () }
     }
   }
 
-  /** Resolve a dv-root-relative mark path (file or `update_<batch>` dir)
-    * against the live sidecar, the compaction archive (flat files), and
-    * archived snapshots' sidecars.
+  /** Resolve a dv-root-relative `update_<id>` marks directory against
+    * the live sidecar, the compaction archive, and archived snapshots'
+    * sidecars.
     */
   private def resolveMark(spark: SparkSession, t: MedallionTable,
       rel: String): Option[String] = {
     val fs = fsOf(spark, t.path)
     val live = new Path(DeletionVectors.dir(t.path), rel)
     if (fs.exists(live)) return Some(live.toString)
-    if (!rel.contains("/")) {
-      val archived = new Path(marksArchiveDir(t.path), rel)
-      if (fs.exists(archived)) return Some(archived.toString)
-    }
+    val archived = new Path(marksArchiveDir(t.path), rel)
+    if (fs.exists(archived)) return Some(archived.toString)
     t.listVersions().sorted.reverse.foreach { v =>
       val p = new Path(DeletionVectors.archivedDir(
         new Path(t.path, s"_graft_meta/versions/v$v")), rel)

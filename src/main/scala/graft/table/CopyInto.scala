@@ -107,31 +107,8 @@ object CopyInto {
     }.sorted
   }
 
-  private def withCopyLock[T](t: MedallionTable)(body: => T): T = {
-    val fs = t.commitsDir.getFileSystem(
-      t.spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(t.commitsDir)
-    val lock = lockFile(t)
-    val deadline = System.currentTimeMillis() + MedallionTable.WriterWaitMs
-    // the table's CAS primitive, not a plain create(overwrite=false):
-    // local-fs Hadoop create is check-then-create, and a racy double
-    // acquire here is a double LOAD
-    def tryCreate(): Boolean = t.atomicCreateExclusive(lock,
-      s"${System.currentTimeMillis()}\tcopy-into")
-    while (!tryCreate()) {
-      if (System.currentTimeMillis() > deadline)
-        throw new java.util.ConcurrentModificationException(
-          s"another COPY INTO holds the copy lock on table after " +
-            s"${MedallionTable.WriterWaitMs} ms; " +
-            MedallionTable.crashedHolderHint)
-      Thread.sleep(50)
-    }
-    try body
-    finally {
-      try fs.delete(lock, false)
-      catch { case _: java.io.IOException => () }
-    }
-  }
+  private def withCopyLock[T](t: MedallionTable)(body: => T): T =
+    t.withFileLock(lockFile(t), "COPY INTO copy lock")(body)
 
   /** Step 1 of the protocol — also callable on its own (a maintenance
     * janitor). MUST run under the copy lock when called from a load.

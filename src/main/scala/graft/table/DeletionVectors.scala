@@ -22,14 +22,16 @@ import org.apache.spark.sql.functions._
   * annotate. Delta stores roaring bitmaps in the log; a parquet
   * position list is the same contract in this layout's idiom.
   *
-  * UPDATE rides the same sidecar through [[DvUpdates]]: an update is a
-  * position mark over the old row versions plus a staged batch of new
-  * row versions, committed by ONE atomic directory rename (the marks
-  * landing inside this sidecar is simultaneously the visibility witness
-  * for the staged batch) — the multi-action atomicity Delta gets from
-  * its log transaction, rebuilt on the filesystem primitive this layout
-  * already trusts. See the [[DvUpdates]] scaladoc for the crash-window
-  * argument.
+  * Every mark lands the same way, Delta's one atomic log commit per
+  * deletion vector rebuilt on the filesystem primitive this layout
+  * already trusts: the writer stages its marks privately and ONE
+  * directory rename lands them as `_graft_meta/dv/update_<id>/`
+  * ([[MedallionTable]] `commitBatch`). UPDATE and MERGE stage a batch of
+  * new row versions beside the marks, and the marks landing is
+  * simultaneously the visibility witness for that batch
+  * ([[DvUpdates]]); a DELETE commits a marks-only directory. A crash
+  * before the rename leaves nothing visible, after it a whole commit —
+  * see the [[DvUpdates]] scaladoc for the crash-window argument.
   *
   * Files are keyed by their RELATIVE TAIL — the basename plus any
   * trailing `part=value` partition segments — not the full path:
@@ -78,10 +80,11 @@ object DeletionVectors {
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType)))
 
-  /** The sidecar read: recursive, because committed UPDATE marks live in
-    * `update_<batch>/` SUBDIRECTORIES of the sidecar ([[DvUpdates]] —
-    * the atomic commit rename lands a directory, not a file), while
-    * DELETE marks are flat appended files. Both carry (file, pos).
+  /** The sidecar read: recursive, because every commit's marks live in
+    * its own `update_<id>/` SUBDIRECTORY of the sidecar (the atomic
+    * commit rename lands a directory, not a file), whether it witnesses
+    * a staged batch ([[DvUpdates]]) or is marks-only (a DELETE or a
+    * compaction). All carry (file, pos).
     */
   private[table] def sidecar(spark: SparkSession, dvPath: String): DataFrame =
     spark.read.schema(MarkSchema)
@@ -100,7 +103,7 @@ object DeletionVectors {
     * `_metadata` struct resolves); returns it minus the positions listed
     * at `dvPath`, or unchanged when no vector exists. Duplicate
     * positions in the sidecar are harmless (anti-join semantics), which
-    * is what lets writers append marks without read-merge cycles.
+    * is what lets writers commit marks without read-merge cycles.
     *
     * `rootPath` is the directory the annotated data files live under
     * (the table root, or the snapshot directory for archived vectors):
@@ -211,29 +214,4 @@ object DeletionVectors {
     * distributed path without writing gigabytes.
     */
   private[table] var MaxCollectedSidecarBytes: Long = 64L << 20
-
-  /** The FLAT mark files directly under the sidecar dir — the
-    * [[graft.table.MedallionTable.deleteVectored]] appends. Committed
-    * UPDATE/MERGE marks live in `update_<batch>/` SUBDIRECTORIES and are
-    * excluded: their directory existence is the batch-visibility witness
-    * ([[DvUpdates]]), so they must never be rewritten or removed outside
-    * a materializing rewrite.
-    */
-  private[table] def flatMarkFiles(spark: SparkSession,
-      tablePath: String): Seq[Path] = {
-    val d = new Path(dir(tablePath))
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq.collect {
-      case st if st.isFile && st.getPath.getName.endsWith(".parquet") =>
-        st.getPath
-    }
-  }
-
-  /** Staging area for [[graft.table.MedallionTable.compactDv]] — inside
-    * `_graft_meta`, invisible to reads; crash litter here is vacuumed.
-    */
-  private[table] def compactStagingDir(tablePath: String): Path =
-    new Path(s"$tablePath/_graft_meta/dv_compact_staging")
-
 }

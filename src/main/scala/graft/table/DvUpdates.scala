@@ -26,9 +26,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     without new rows).
   *
   * A crash before the rename leaves invisible litter (staged batch dir,
-  * staged marks) that [[MedallionTable.vacuum]] clears; a crash after the
-  * rename is a completed update. `UpdateVectoredSpec` drives both sides
-  * of the window with the commit failpoint.
+  * staged marks) that [[MedallionTable.vacuum]] clears once no writer
+  * lock stands; a crash after the rename is a completed update.
+  * `UpdateVectoredSpec` drives both sides of the window with the commit
+  * failpoint.
+  *
+  * The same commit with no batch is the sidecar's only other shape: a
+  * DELETE (and a DV compaction) stages its marks alone and renames them
+  * to a marks-only `update_<id>/` — no `dv_updates/<id>` data dir, so
+  * [[committedBatches]] never lists it and [[marksOnly]] does.
   *
   * Lifecycle matches the deletion vector's: any full REWRITE reads
   * through the update-applied view, so OPTIMIZE/merge/overwrite
@@ -85,8 +91,24 @@ object DvUpdates {
     }.sorted
   }
 
+  /** Committed marks directories that witness no batch — the marks-only
+    * commits of DV deletes and compactions: `update_<id>` under the
+    * sidecar with no `dv_updates/<id>` data dir. Ids, sorted.
+    */
+  private[table] def marksOnly(spark: SparkSession,
+      tablePath: String): Seq[String] = {
+    val d = new Path(DeletionVectors.dir(tablePath))
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (try fs.listStatus(d).toSeq
+     catch { case _: java.io.FileNotFoundException => Nil }).collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith("update_") =>
+        st.getPath.getName.stripPrefix("update_")
+    }.filterNot(id => fs.exists(new Path(batchDataDir(tablePath, id)))).sorted
+  }
+
   /** Staged-but-never-committed batch dirs and orphaned marks stagings —
-    * crash litter, invisible to reads; vacuum's cleanup list.
+    * a failed or crashed writer's litter, invisible to reads; vacuum's
+    * cleanup list (reaped only while no writer lock stands).
     */
   private[table] def orphans(spark: SparkSession,
       tablePath: String): Seq[Path] = {
@@ -127,8 +149,9 @@ object DvUpdates {
     */
   private[table] def anyRows(spark: SparkSession, dir: String): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    ShallowClone.listParquet(spark, dir)
-      .exists(TableSnapshot.footerRows(conf, _) > 0)
+    val p = new Path(dir)
+    FsWalk.dataParquet(p.getFileSystem(conf), p)
+      .exists(f => TableSnapshot.footerRows(conf, f._1) > 0)
   }
 
   /** Per-batch scans for the committed batches that hold files, paired

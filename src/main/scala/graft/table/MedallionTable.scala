@@ -253,24 +253,30 @@ final class MedallionTable(
 
   private def statsLockFile = new Path(commitsDir, "stats.lock")
 
-  /** Microsecond-scale mutex around manifest delete/swap operations
-    * ([[withIdentityLock]]'s contract: bounded wait, [[vacuum]] clears a
-    * crashed holder's leftover).
+  /** Microsecond-scale mutex around manifest delete/swap operations. */
+  private def withStatsLock[T](f: => T): T =
+    withFileLock(statsLockFile, "stats manifest lock")(f)
+
+  /** The one bounded-wait file lock (stats manifest, identity allocation,
+    * COPY INTO): create-exclusive `lock` through the table's CAS
+    * primitive (a local-fs Hadoop create is check-then-create), retried
+    * until [[MedallionTable.WriterWaitMs]] and then failed fast with the
+    * crashed-holder hatch named; [[vacuum]] clears a crashed holder's
+    * leftover by the same file name.
     */
-  private def withStatsLock[T](f: => T): T = {
-    fs.mkdirs(commitsDir)
+  private[table] def withFileLock[T](lock: Path, what: String)(f: => T): T = {
+    fs.mkdirs(lock.getParent)
     val deadline = System.currentTimeMillis() + MedallionTable.WriterWaitMs
-    while (!atomicCreateExclusive(statsLockFile,
-        System.currentTimeMillis().toString)) {
+    while (!atomicCreateExclusive(lock,
+        s"${System.currentTimeMillis()}\t$what")) {
       if (System.currentTimeMillis() > deadline)
         throw new java.util.ConcurrentModificationException(
-          s"stats manifest lock on $path held after " +
-            s"${MedallionTable.WriterWaitMs} ms; " +
+          s"$what on $path held after ${MedallionTable.WriterWaitMs} ms; " +
             MedallionTable.crashedHolderHint)
-      Thread.sleep(10)
+      Thread.sleep(20)
     }
     try f finally {
-      try fs.delete(statsLockFile, false)
+      try fs.delete(lock, false)
       catch { case _: java.io.IOException => () }
     }
   }
@@ -663,11 +669,11 @@ final class MedallionTable(
   /** Footprint-SCOPED writer locks (`write_<token>.lock` beside the
     * global `write.lock`): a scoped claim-first writer declares the
     * RESOURCES it will touch (partition directories as `p:<relative
-    * dir>`, plus shared structures like the DV sidecar's append staging
-    * as `dv-stage`) in its lock body, and writers whose declared
-    * footprints are DISJOINT run concurrently — two `OPTIMIZE … WHERE`
-    * on different partitions, or a partition-scoped DV delete beside a
-    * disjoint compaction, no longer serialize (Delta's optimistic
+    * dir>`, plus shared structures like the table record) in its lock
+    * body, and writers whose declared footprints are DISJOINT run
+    * concurrently — two `OPTIMIZE … WHERE` on different partitions, or
+    * partition-scoped DV deletes beside each other and a disjoint
+    * compaction, no longer serialize (Delta's optimistic
     * partition-level conflict check, restricted to the existing lease
     * protocol). Overlapping footprints — and anything vs the global
     * lock — keep today's serial behavior.
@@ -1321,27 +1327,10 @@ final class MedallionTable(
       hw.toSeq.sorted.map { case (k, v) => s"$k\t$v" }.mkString("\n"))
 
   /** Serialize identity allocation: appends hold the writer lock but
-    * rewrites do not, so allocation gets its own create-exclusive lock
-    * (milliseconds hold; [[vacuum]] clears a crashed holder's leftover,
-    * same contract as the writer lock).
+    * rewrites do not, so allocation gets its own short-held file lock.
     */
-  private def withIdentityLock[T](f: => T): T = {
-    fs.mkdirs(commitsDir)
-    val deadline = System.currentTimeMillis() + MedallionTable.WriterWaitMs
-    while (!atomicCreateExclusive(identityLockFile,
-        System.currentTimeMillis().toString)) {
-      if (System.currentTimeMillis() > deadline)
-        throw new java.util.ConcurrentModificationException(
-          s"identity allocation lock on $path held after " +
-            s"${MedallionTable.WriterWaitMs} ms; " +
-            MedallionTable.crashedHolderHint)
-      Thread.sleep(20)
-    }
-    try f finally {
-      try fs.delete(identityLockFile, false)
-      catch { case _: java.io.IOException => () }
-    }
-  }
+  private def withIdentityLock[T](f: => T): T =
+    withFileLock(identityLockFile, "identity allocation lock")(f)
 
   /** Last id the table's data could carry — bootstrap for a table whose
     * high-water file is absent (clone, declare-on-existing before sync,
@@ -1815,18 +1804,26 @@ final class MedallionTable(
 
   /** K3 — first-run create, error if the table already exists. */
   def createOrError(df: DataFrame): Unit = {
-    if (exists)
-      throw new IllegalStateException(s"table already exists at $path")
+    refuseExisting()
     create(df, "create")
   }
+
+  private def refuseExisting(): Unit =
+    if (exists)
+      throw new IllegalStateException(s"table already exists at $path")
 
   /** A create is an [[insert]] under a global claim whose record keeps the
     * declarations made before the table existed and records the batch's
     * schema; a rejected or failed first batch leaves the record as it was.
+    * A `create` re-checks existence under its claim: a concurrent create
+    * that won between the caller's check and this claim refuses the loser
+    * before [[clearLeftovers]] could delete the winner's files.
     */
   private def create(df: DataFrame, op: String): Unit =
     insert(op, global = true)(tm => (insertBatch(df, tm), tm.rewritten(df.schema))) {
-      publish => clearLeftovers(); publish()
+      publish =>
+        if (op == "create") refuseExisting()
+        clearLeftovers(); publish()
     }
 
   /** A create's claim-time cleanup: every leftover under the root goes —
@@ -2020,7 +2017,7 @@ final class MedallionTable(
         // update_preimage, else delete) — exact for key-stable merges; a
         // key-changing update renders as delete+insert (same net change
         // set, Delta's rendering for re-keyed rows)
-        commitBatch(batch, plan.marks(j), claimed, "merge-dv",
+        commitBatch(Some(batch), plan.marks(j), claimed, "merge-dv",
           "pre-merge-dv-commit", Some(keys.map(_._1)), inserts = true)
       } finally j.unpersist()
     }
@@ -2083,31 +2080,41 @@ final class MedallionTable(
       staged.schema.filterNot(f => partitionColumns.contains(f.name))))
   }
 
-  /** The staged-batch commit every DV batch writer shares: stages `marks`
-    * (`file`/`pos` of the rows the batch hides) beside the batch the
-    * caller staged; ONE atomic rename of the marks directory is the
-    * commit point — the marks hide the old rows AND witness the batch
-    * into reads ([[DvUpdates]] contract), so an insert-only merge commits
-    * zero marks and a delete-only merge an empty batch. Emptiness comes
-    * from the just-written footers (no Spark job): a batch with nothing
-    * on either side is cleared, never committed — it would be a
-    * permanent dead read-union branch.
+  /** The ONE deletion-vector commit every DV writer shares: stages
+    * `marks` (`file`/`pos` of the rows to hide) in
+    * `dv_updates_staging` beside the `batch` the caller staged (None: a
+    * marks-only commit under a fresh id — the DV deletes, the partition
+    * fast-DELETE's unlaid batch rows, [[compactDv]]); ONE atomic rename of
+    * the marks directory into the sidecar is the commit point — the marks
+    * hide the old rows AND witness the batch into reads ([[DvUpdates]]
+    * contract), so an insert-only merge commits zero marks and a
+    * delete-only merge an empty batch. Emptiness comes from the
+    * just-written footers (no Spark job): a commit with nothing on either
+    * side is cleared, never committed — it would be a permanent dead read
+    * branch. A staged batch that vanished before the rename aborts the
+    * commit: its marks would hide rows whose new versions are gone.
     *
     * @param inserts the batch may hold rows with no marks (merge
     *        inserts); otherwise rows without marks abort before the commit
     *        could duplicate them
-    * @param feedKeys Some(target key columns) captures the batch into the
-    *        change feed at the `claimed` ordinal (Nil: every postimage is
-    *        an update); None leaves the feed to the commit's op record
-    * @return whether a batch committed
+    * @param feedKeys Some(target key columns) captures the commit into
+    *        the change feed at the `claimed` ordinal — a batch (Nil: every
+    *        postimage is an update), or a marks-only directory as
+    *        `delete` marks; None leaves the feed to the commit's op record
+    * @return whether the commit landed
     */
-  private def commitBatch(batch: String, marks: DataFrame, claimed: Long,
-      op: String, failpoint: String, feedKeys: Option[Seq[String]],
-      inserts: Boolean = false): Boolean = {
-    val batchDir = DvUpdates.batchDataDir(path, batch)
-    val marksStaging = DvUpdates.marksStagingDir(path, batch)
+  private def commitBatch(batch: Option[String], marks: DataFrame,
+      claimed: Long, op: String, failpoint: String,
+      feedKeys: Option[Seq[String]], inserts: Boolean = false): Boolean = {
+    val id = batch.getOrElse(java.util.UUID.randomUUID().toString.take(12))
+    val batchDir = DvUpdates.batchDataDir(path, id)
+    val marksStaging = DvUpdates.marksStagingDir(path, id)
+    val marksDir = DvUpdates.marksDir(path, id)
+    def requireStaged(present: Boolean): Unit = require(present,
+      s"$op: staged batch $batchDir vanished before its commit — " +
+        "aborting before its marks could land")
     marks.write.mode(SaveMode.Overwrite).parquet(marksStaging.toString)
-    val hasRows = DvUpdates.anyRows(spark, batchDir)
+    val hasRows = batch.isDefined && DvUpdates.anyRows(spark, batchDir)
     // rows that may be inserts need no marks check
     val hasMarks = !(hasRows && inserts) &&
       DvUpdates.anyRows(spark, marksStaging.toString)
@@ -2115,7 +2122,8 @@ final class MedallionTable(
     // happened (a failure fail-stops the feed read instead)
     val feed = feedKeys.filter(_ => ChangeFeed.isEnabled(spark, path))
     if (!hasRows && !hasMarks) {
-      fs.delete(new Path(batchDir), true)
+      // a missing batch may have held rows (merge inserts) — never a no-op
+      if (batch.isDefined) requireStaged(fs.delete(new Path(batchDir), true))
       fs.delete(marksStaging, true)
       feed.foreach { _ =>
         try ChangeFeed.captureEmpty(spark, path, claimed, op)
@@ -2129,12 +2137,16 @@ final class MedallionTable(
       invalidateStats()
       fs.mkdirs(new Path(DeletionVectors.dir(path)))
       MedallionTable.testFailpoint(failpoint)
-      if (!fs.rename(marksStaging, DvUpdates.marksDir(path, batch)))
-        throw new java.io.IOException(s"$op commit rename failed: " +
-          s"$marksStaging -> ${DvUpdates.marksDir(path, batch)}")
+      requireStaged(batch.isEmpty || fs.exists(new Path(batchDir)))
+      if (!fs.rename(marksStaging, marksDir))
+        throw new java.io.IOException(
+          s"$op commit rename failed: $marksStaging -> $marksDir")
       feed.foreach { k =>
-        try ChangeFeed.captureBatch(spark, path, claimed, op, batch,
-          ShallowClone.listParquet(spark, batchDir), k)
+        try
+          if (batch.isEmpty)
+            ChangeFeed.captureMarks(spark, path, claimed, op, marksDir.getName)
+          else ChangeFeed.captureBatch(spark, path, claimed, op, id,
+            ShallowClone.listParquet(spark, batchDir), k)
         catch { case scala.util.control.NonFatal(_) => () }
       }
       true
@@ -2343,7 +2355,7 @@ final class MedallionTable(
   def delete(cond: Column): Unit = {
     val schema = read.schema
     if (retainVersions == 0 && partitionOnly(cond, schema)) {
-      withClaimedCommit("delete-partitions") {
+      withClaimedCommitScoped("delete-partitions", None) { claimed =>
       matchingPartitionDirs(cond, schema)
         .foreach(d => fs.delete(new Path(d), true))
       // committed update batches hold the matched partitions' amended
@@ -2355,7 +2367,7 @@ final class MedallionTable(
             new Path(DvUpdates.batchDataDir(path, b)))
           .foreach(d => fs.delete(new Path(d), true))
       }
-      hideUnlaidBatchRows(cond)
+      hideUnlaidBatchRows(claimed, cond)
       invalidateStats()
       // Fast path bypasses rewriteVia (which records the schema with its
       // swap): a delete that drops every partition must leave the table
@@ -2379,10 +2391,11 @@ final class MedallionTable(
     * a handle that does not declare the partition columns (the SQL
     * catalog's, unless created with PARTITIONED BY) stages its batch flat,
     * so no directory drop reaches the matched partitions' rows in it —
-    * they would outlive the DELETE. Their positions are marked in the
-    * sidecar instead, one scan over just those files.
+    * they would outlive the DELETE. Their positions are marked instead,
+    * one scan over just those files, committed as one marks-only
+    * directory ([[commitBatch]]).
     */
-  private def hideUnlaidBatchRows(cond: Column): Unit = {
+  private def hideUnlaidBatchRows(claimed: Long, cond: Column): Unit = {
     import org.apache.spark.sql.functions.col
     def laidOut(dir: String, file: String): Boolean = {
       val segs = file.stripPrefix(dir + "/").split('/').dropRight(1)
@@ -2397,8 +2410,8 @@ final class MedallionTable(
         .parquet(flat: _*).filter(cond)
         .select(DeletionVectors.fileKey(col("_metadata.file_path")).as("file"),
           col("_metadata.row_index").as("pos")))
-    }.reduceOption(_ unionByName _)
-      .foreach(_.write.mode(SaveMode.Append).parquet(DeletionVectors.dir(path)))
+    }.reduceOption(_ unionByName _).foreach(commitBatch(None, _, claimed,
+      "delete-partitions", "pre-delete-partitions-commit", None))
   }
 
   /** DEEP CLONE (Delta `CREATE TABLE t CLONE s` without SHALLOW): a
@@ -2458,6 +2471,9 @@ final class MedallionTable(
       } { publish =>
         if (source.writeLockHeld() || source.metaCensusHash() != census0)
           throw InsertDrift()
+        // a concurrent clone or create may have landed since the check
+        // above: refuse rather than clear its files
+        refuseExisting()
         clearLeftovers()
         publish()
         writeIdentityHw(hw)
@@ -2964,9 +2980,9 @@ final class MedallionTable(
     * result-identical to [[delete]] (TRUE deletes; FALSE and NULL
     * survive). The positions are computed on the DV-APPLIED view, so
     * re-marking already-deleted rows is impossible by construction (and
-    * duplicates would be inert anyway). Invalidate-then-mark ordering
-    * matches the other in-place mutations: a manifest must never
-    * describe rows a reader won't see.
+    * duplicates would be inert anyway). The marks land as one marks-only
+    * directory by [[commitBatch]]'s single rename: a crash leaves the
+    * delete all-or-nothing.
     */
   def deleteVectored(cond: Column): Unit =
     // vanished-files retry: the scan/listing can catch a concurrent
@@ -2975,13 +2991,11 @@ final class MedallionTable(
 
   private def deleteVectoredOnce(cond: Column): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    // Partition-only predicate → footprint-scoped lock: the matched
-    // partitions plus `dv-stage` (the sidecar's shared Append staging —
-    // two concurrent DV deletes would corrupt each other's
-    // FileOutputCommitter `_temporary`, so DV deletes always serialize
-    // with EACH OTHER), letting a disjoint OPTIMIZE … WHERE run
-    // concurrently. Row-level predicates keep the global lock: their
-    // scan and marks can touch any partition.
+    // Partition-only predicate → footprint-scoped lock over the matched
+    // partitions: every DV delete stages its marks privately, so DV
+    // deletes on disjoint partitions — and a DV delete beside a disjoint
+    // OPTIMIZE … WHERE — commit concurrently. Row-level predicates keep
+    // the global lock: their scan and marks can touch any partition.
     // cheap pre-lock analysis (recorded schema + local relation — no
     // footer job): the full `read` here taxed every DV delete ~13-15% on
     // commit-heavy workloads (within-epoch A/B, SCALING.md round 16).
@@ -2991,7 +3005,7 @@ final class MedallionTable(
     // tables) keeps the global lock. A corrupt record throws.
     val scope = (if (partitionColumns.isEmpty) None else meta.schema)
       .filter(partitionOnly(cond, _))
-      .map(PartitionScope(cond, _, Set("dv-stage")))
+      .map(PartitionScope(cond, _, Set.empty))
     // overlay applied so the predicate resolves against the SAME logical
     // schema delete() sees (unmaterialized ADDs evaluate as typed NULLs,
     // tombstoned columns are invisible) — the result-identical contract
@@ -3000,47 +3014,18 @@ final class MedallionTable(
     }
   }
 
-  /** The flat-mark DELETE body both DV deletes share: appends the
-    * positions of the rows `victims` keeps from the live positioned view
-    * to the sidecar, and captures the appended mark FILES as the feed's
-    * change unit at the `claimed` ordinal (a concurrent disjoint writer
-    * can advance the counter while this body runs); the deleted row
-    * images reconstruct by position at read (ChangeFeed scaladoc). Stats
-    * are invalidated before the marks land and again after: a refresh
-    * that started mid-flight could otherwise commit a manifest built
-    * before them (see commitManifestSwap).
+  /** The DELETE body both DV deletes share: the positions of the rows
+    * `victims` keeps from the live positioned view, committed as one
+    * marks-only directory that the change feed records as this commit's
+    * `delete` marks (row images reconstruct by position at read).
     */
   private def deleteMarks(claimed: Long,
       victims: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
     requireNoDeltaLogForDv()
-    val dvPath = DeletionVectors.dir(path)
-    val cdfOn = ChangeFeed.isEnabled(spark, path)
-    val marksBefore = if (cdfOn) dvMarkFiles(dvPath) else Set.empty[String]
-    val live = dvLive()
-    invalidateStats()
-    victims(live)
-      .select(col("__graft_dv_file").as("file"), col("__graft_dv_pos").as("pos"))
-      .write.mode(SaveMode.Append).parquet(dvPath)
-    invalidateStats()
-    // non-fatal: the delete's data effect has landed — a capture failure
-    // must not release the marker (the feed read fail-stops instead)
-    if (cdfOn)
-      try ChangeFeed.captureMarks(spark, path, claimed,
-        "delete-dv", (dvMarkFiles(dvPath) -- marksBefore).toSeq)
-      catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** Top-level mark files of the DV sidecar (update_* batch-marks dirs
-    * excluded) — the delete-dv change-feed capture unit.
-    */
-  private def dvMarkFiles(dvPath: String): Set[String] = {
-    val d = new Path(dvPath)
-    if (!fs.exists(d)) Set.empty
-    else fs.listStatus(d).collect {
-      case st if st.isFile && st.getPath.getName.endsWith(".parquet") =>
-        st.getPath.getName
-    }.toSet
+    commitBatch(None, victims(dvLive()).select(
+        col("__graft_dv_file").as("file"), col("__graft_dv_pos").as("pos")),
+      claimed, "delete-dv", "pre-delete-dv-commit", Some(Nil))
   }
 
   /** [[deleteVectored]] keyed by a FRAME of victim keys instead of a
@@ -3060,54 +3045,28 @@ final class MedallionTable(
     * the sidecar or committed UPDATE/MERGE batches. The `REORG … APPLY
     * (PURGE)` no-op guard: a clean table must not pay a rewrite.
     */
-  def hasDvState: Boolean =
-    DvUpdates.committedBatches(spark, path).nonEmpty ||
-      (DeletionVectors.exists(spark, DeletionVectors.dir(path)) &&
-        ShallowClone.listParquet(spark, DeletionVectors.dir(path)).nonEmpty)
+  def hasDvState: Boolean = {
+    val snap = TableSnapshot.of(this)
+    snap.batches.nonEmpty || snap.hasMarks
+  }
 
-  /** Compact the DV sidecar's FLAT delete-mark files: N small appends
-    * (one per [[deleteVectored]] call) become ONE deduplicated file. Every
-    * read lists and scans the whole sidecar, and the collect fast path
-    * caps on its byte size — so between materializing rewrites, a
-    * delete-heavy table accumulates exactly the small-file creep this
-    * clears. Returns the number of mark files removed (0 = nothing to do).
-    *
-    * Crash-safe WITHOUT a commit window, by the sidecar's own semantics:
-    * marks are idempotent hides and duplicates are harmless (anti-join),
-    * so the combined file lands FIRST (rename from staging) and the old
-    * files are deleted after — any crash between leaves a harmless
-    * superset that the next compaction clears. Committed UPDATE/MERGE
-    * marks (`update_<batch>/` subdirectories) are untouched: their
-    * existence witnesses batch visibility ([[DvUpdates]]) and they are
-    * dropped only by the materializing rewrite.
+  /** Compact the marks-only directories ([[DvUpdates.marksOnly]]), one
+    * per DV delete and each listed and scanned by every read, into ONE
+    * deduplicated directory through [[foldCommit]]; the old ones are then
+    * archived whole for the change feed (per-commit `delete` evidence) or
+    * deleted. A crash between leaves inert duplicate marks the next
+    * compaction folds. Batch witnesses are [[compactDvBatches]]'s.
+    * Returns the number of directories folded (0 = nothing to do).
     */
-  def compactDv(): Int = withClaimedCommit("dv-compact") {
-    import org.apache.spark.sql.functions.col
-    val old = DeletionVectors.flatMarkFiles(spark, path)
+  def compactDv(): Int = withClaimedCommitScoped("dv-compact", None) { claimed =>
+    val old = DvUpdates.marksOnly(spark, path)
     if (old.size < 2) 0
-    else {
-      val staging = DeletionVectors.compactStagingDir(path)
-      fs.delete(staging, true)
-      spark.read.schema(DeletionVectors.MarkSchema)
-        .parquet(old.map(_.toString): _*)
-        .select(col("file"), col("pos")).distinct()
-        .repartition(1)
-        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val part = ShallowClone.listParquet(spark, staging.toString)
-      require(part.nonEmpty, s"dv-compact: staging produced no file ($staging)")
-      val combined = new Path(DeletionVectors.dir(path),
-        s"compacted_${java.util.UUID.randomUUID().toString.take(12)}.parquet")
-      if (!fs.rename(new Path(part.head), combined))
-        throw new java.io.IOException(
-          s"dv-compact: rename failed: ${part.head} -> $combined")
-      MedallionTable.testFailpoint("mid-dv-compact")
-      // the originals are per-commit change-feed evidence: archive them
-      // (tiny position lists) so delete feed ranges survive compaction
+    else foldCommit(claimed, "dv-compact", old, None, None,
+        "mid-dv-compact") { ids =>
+      val dirs = ids.map(DvUpdates.marksDir(path, _))
       if (ChangeFeed.isEnabled(spark, path))
-        ChangeFeed.archiveMarkFiles(spark, path, old)
-      else old.foreach(f => fs.delete(f, false))
-      fs.delete(staging, true)
-      old.size
+        ChangeFeed.archiveMarks(spark, path, dirs)
+      else dirs.foreach(fs.delete(_, true))
     }
   }
 
@@ -3115,21 +3074,18 @@ final class MedallionTable(
     * each one read-union branch plus one marks directory on every read —
     * become ONE batch holding the current visible amended rows. Bounds
     * the read-plan width an update-heavy table accumulates between full
-    * OPTIMIZE runs, the same way [[compactDv]] bounds the flat-mark file
+    * OPTIMIZE runs, the way [[compactDv]] bounds the marks-only directory
     * count. Returns the number of batches folded (0 = nothing to do).
     *
-    * Crash-safe via the SAME single-rename primitive as the writes it
-    * compacts: the combined batch's marks directory carries (a) every old
-    * batch's marks — they must survive the old directories' deletion —
-    * plus (b) hide-all marks for every row of every old batch file. The
-    * commit rename therefore flips the table from "old batches visible"
-    * to "combined batch visible, old batch rows all hidden" in one
-    * atomic step; the old directories are then pure dead weight, deleted
-    * best-effort afterwards (a crash between leaves fully-hidden
-    * directories that waste scan IO until the next compaction or rewrite
-    * folds them away — never a correctness window). A crash BEFORE the
-    * rename leaves an unwitnessed staged batch, which [[vacuum]] already
-    * clears as a DvUpdates orphan.
+    * Folded by [[foldCommit]]: the combined batch's marks carry every old
+    * batch's marks plus hide-all marks for every row of every old batch
+    * file, so the commit rename flips the table from "old batches
+    * visible" to "combined batch visible, old batch rows all hidden" in
+    * one atomic step; the old directories are then dead weight (a crash
+    * before their delete wastes scan IO until the next compaction or
+    * rewrite folds them away — never a correctness window). A crash
+    * BEFORE the rename leaves an unwitnessed staged batch, which
+    * [[vacuum]] clears as a DvUpdates orphan.
     *
     * Refused on a column-mapped table (the batch files speak the physical
     * dialect; OPTIMIZE materializes the map and the batches together).
@@ -3160,41 +3116,56 @@ final class MedallionTable(
             newBatch, meta)
           case None => fs.mkdirs(new Path(DvUpdates.batchDataDir(path, newBatch)))
         }
-        // marks: old batches' marks (replicated — their dirs are deleted
-        // after commit) + hide-all for every old batch file's rows. Either
-        // side can be empty (insert-only merges commit no marks; delete-only
-        // merges commit no files).
-        val oldMarkFiles = old.flatMap(b => ShallowClone.listParquet(
-          spark, DvUpdates.marksDir(path, b).toString))
-        val oldMarks =
-          if (oldMarkFiles.isEmpty) None
-          else Some(spark.read.schema(DeletionVectors.MarkSchema)
-            .parquet(oldMarkFiles: _*)
-            .select(col("file"), col("pos")))
+        // hide-all for every old batch file's rows (insert-only merges
+        // commit no marks, delete-only merges no files: either side of
+        // the fold can be empty)
         val hideAll = DvUpdates.committedScans(spark, TableSnapshot.of(this))
           .map { case (_, scan) =>
             scan.select(
               DeletionVectors.fileKey(col("_metadata.file_path")).as("file"),
               col("_metadata.row_index").as("pos"))
           }.reduceOption(_ unionByName _)
-        val marks = (oldMarks.toSeq ++ hideAll.toSeq).reduceOption(_ unionByName _)
-          .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            DeletionVectors.MarkSchema))
-        // one marks file: marks are collect-cap-bounded, and every read
-        // lists and scans the sidecar — 32 distinct() shards is pure creep
-        if (!commitBatch(newBatch, marks.distinct().coalesce(1), claimed,
-            "dv-batch-compact", "pre-dv-batch-compact-commit", None)) 0
-        else {
-          MedallionTable.testFailpoint("post-dv-batch-compact-commit")
+        foldCommit(claimed, "dv-batch-compact", old, Some(newBatch), hideAll,
+            "post-dv-batch-compact-commit") {
           // dead weight: marks are replicated, rows are hidden — any order
-          old.foreach { b =>
+          _.foreach { b =>
             fs.delete(DvUpdates.marksDir(path, b), true)
             fs.delete(new Path(DvUpdates.batchDataDir(path, b)), true)
           }
-          old.size
         }
       }
     }
+
+  /** The fold-and-commit body both DV compactions share: ONE
+    * [[commitBatch]] of `batch` (None: a marks-only directory) whose marks
+    * replicate every `old` marks directory's — they must survive the
+    * directories' removal — plus `extra`, deduplicated into one file
+    * (marks are collect-cap-bounded, and every read lists and scans the
+    * sidecar). Once the rename landed, `retire` drops the old
+    * directories after the `postCommit` failpoint. Returns the number of
+    * directories folded, 0 when nothing committed.
+    */
+  private def foldCommit(claimed: Long, op: String, old: Seq[String],
+      batch: Option[String], extra: Option[DataFrame], postCommit: String)(
+      retire: Seq[String] => Unit): Int = {
+    import org.apache.spark.sql.functions.col
+    val files = old.flatMap(b => ShallowClone.listParquet(
+      spark, DvUpdates.marksDir(path, b).toString))
+    val oldMarks =
+      if (files.isEmpty) None
+      else Some(spark.read.schema(DeletionVectors.MarkSchema)
+        .parquet(files: _*).select(col("file"), col("pos")))
+    val marks = (oldMarks.toSeq ++ extra.toSeq).reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        DeletionVectors.MarkSchema))
+    if (!commitBatch(batch, marks.distinct().coalesce(1), claimed, op,
+        s"pre-$op-commit", None)) 0
+    else {
+      MedallionTable.testFailpoint(postCommit)
+      retire(old)
+      old.size
+    }
+  }
 
   /** `UPDATE SET … WHERE` via the deletion-vector extension
     * ([[DvUpdates]]): O(matched) instead of [[update]]'s O(table)
@@ -3224,7 +3195,7 @@ final class MedallionTable(
       // the marks hide the matched rows' OLD positions; feed postimages
       // are the batch files, preimages reconstruct from the marks — no
       // keys ⟺ every postimage is an update_postimage
-      commitBatch(batch, matched.select(col("__graft_dv_file").as("file"),
+      commitBatch(Some(batch), matched.select(col("__graft_dv_file").as("file"),
           col("__graft_dv_pos").as("pos")), claimed, "update-dv",
         "pre-update-dv-commit", Some(Nil))
     }
@@ -3640,7 +3611,7 @@ final class MedallionTable(
             clusterBy, nFiles), batch, snap.meta)
           // the marks hide every absorbed live row's base original; the
           // base files are dropped below only once the batch committed
-          val committed = commitBatch(batch, j.select(
+          val committed = commitBatch(Some(batch), j.select(
               col("__graft_dv_file").as("file"), col("__graft_dv_pos").as("pos")),
             claimed, "cluster-incremental", "pre-cluster-commit", None)
           require(committed, s"cluster-incremental: staged batch $batch is empty")
@@ -3863,14 +3834,14 @@ final class MedallionTable(
     require(maxFiles >= 1, "autoCompact needs maxFiles >= 1")
     if (!exists) 0
     else {
-      // delete-heavy tables creep in the SIDECAR too: many small flat
-      // mark files, each listed and scanned by every read — same
-      // janitor, same threshold (update_<batch> witnesses excluded).
+      // delete-heavy tables creep in the SIDECAR too: many small
+      // marks-only directories, each listed and scanned by every read —
+      // same janitor, same threshold (batch witnesses excluded).
       // Update/merge-heavy tables creep in BATCH COUNT (one read-union
       // branch each): fold those too, except on column-mapped tables
       // (compactDvBatches' documented refusal — OPTIMIZE owns that case).
       val dvCompacted =
-        (if (DeletionVectors.flatMarkFiles(spark, path).size > maxFiles) {
+        (if (DvUpdates.marksOnly(spark, path).size > maxFiles) {
           compactDv(); 1
         } else 0) +
         (if (DvUpdates.committedBatches(spark, path).size > maxFiles &&
@@ -3940,16 +3911,6 @@ final class MedallionTable(
     p.getName.startsWith(s"${name}__graft_old_")
   }
 
-  /** Crash litter of an interrupted [[compactDv]] — the staging dir only:
-    * a compacted file that landed is REAL marks (kept), and not-yet-
-    * deleted old flat files are a harmless superset (the next compaction
-    * clears them).
-    */
-  private def dvCompactLitter(): Seq[Path] = {
-    val st = DeletionVectors.compactStagingDir(path)
-    if (fs.exists(st)) Seq(st) else Nil
-  }
-
   /** `VACUUM ... DRY RUN`: what [[vacuum]] WOULD do, touching nothing —
     * neither litter, nor the crashed-writer lock/intent files, nor the
     * mid-swap restore. Rows are (path, action): `delete` for rewrite
@@ -3960,36 +3921,34 @@ final class MedallionTable(
     * only copy of the data.
     */
   def vacuumDryRun(): Seq[(String, String)] = {
-    val litter = rewriteLitter() ++ DvUpdates.orphans(spark, path) ++
-      dvCompactLitter()
-    if (litter.isEmpty) return Nil
+    val reap = vacuumReaper()
+    val live = liveRewritePossible(reap)
+    // DV orphans: reaped only while no live writer may own them (vacuum)
+    val dv = DvUpdates.orphans(spark, path)
+      .map(p => (p.toString, if (live) "defer" else "delete"))
+    val litter = rewriteLitter()
     val backups = litter.filter(isBackup)
-    if (exists) {
+    val rewrite =
+      if (litter.isEmpty) Nil
       // mirror vacuum's live-table age guard: young __graft_tmp_ dirs
       // (possibly a LIVE rewrite's in-progress product) are skipped, so
       // the dry run must not promise their deletion
-      val reap = vacuumReaper()
-      litter.filter(p => !isRewriteTmp(p) || reap(p))
-        .map(p => (p.toString, "delete")).sortBy(_._1)
-    }
-    else if (liveRewritePossible(vacuumReaper())) {
+      else if (exists) litter.filter(p => !isRewriteTmp(p) || reap(p))
+        .map(p => (p.toString, "delete"))
       // absent dir + young intent/lock: possibly a LIVE rewrite's swap
-      // window — a real vacuum stands down from restore and rewrite
-      // litter alike; witness-checked DV orphans it still deletes
-      val (rw, dv) = litter.partition(p => isBackup(p) || isRewriteTmp(p))
-      (rw.map(p => (p.toString, "defer")) ++
-        dv.map(p => (p.toString, "delete"))).sortBy(_._1)
-    }
-    else if (backups.nonEmpty) {
-      // a real vacuum would restore the newest backup, delete the rest
-      val restore = newestBackup(backups)
-      (litter.filterNot(_ == restore).map(p => (p.toString, "delete")) :+
-        ((restore.toString, "restore"))).sortBy(_._1)
-    } else
-      // tmp litter but no live data and no backup: vacuum REFUSES here
-      // (the litter might be the only copy) — the dry run must say so,
-      // not promise a delete that would throw
-      litter.map(p => (p.toString, "refuse")).sortBy(_._1)
+      // window — a real vacuum stands down from restore and litter alike
+      else if (live) litter.map(p => (p.toString, "defer"))
+      else if (backups.nonEmpty) {
+        // a real vacuum would restore the newest backup, delete the rest
+        val restore = newestBackup(backups)
+        litter.filterNot(_ == restore).map(p => (p.toString, "delete")) :+
+          ((restore.toString, "restore"))
+      } else
+        // tmp litter but no live data and no backup: vacuum REFUSES here
+        // (the litter might be the only copy) — the dry run must say so,
+        // not promise a delete that would throw
+        litter.map(p => (p.toString, "refuse"))
+    (rewrite ++ dv).sortBy(_._1)
   }
 
   private def isRewriteTmp(p: Path): Boolean = {
@@ -4057,6 +4016,7 @@ final class MedallionTable(
     // rewriter may own the absent-dir window — see liveRewritePossible
     val standDown = !exists && liveRewritePossible(reapable)
     val recovered = !exists && !standDown
+    val dvOrphans = DvUpdates.orphans(spark, path)
     if (recovered) {
       // mid-swap crash: restore the backup (pre-rewrite committed state);
       // the interrupted rewrite re-runs idempotently later
@@ -4080,14 +4040,18 @@ final class MedallionTable(
     // After a RESTORE (the !exists branch above ran) the tmp is provably
     // the crashed swap's: reap it regardless of age, as before.
     // Backups (__graft_old_) with a live table are a completed-swap's
-    // pending delete; DV orphans/compact staging are witness-checked
-    // (provably uncommitted) — all unconditional.
+    // pending delete — unconditional.
     val toDelete = (if (standDown) Nil
       else litter()
         .filter(p => recovered || !isRewriteTmp(p) || reapable(p))) ++
-      // a crashed updateVectored's invisible staging: batch dirs without
-      // a committed marks witness, and marks stagings that never renamed
-      DvUpdates.orphans(spark, path) ++ dvCompactLitter()
+      // a crashed DV writer's invisible staging: batch dirs without a
+      // committed marks witness, and marks stagings that never renamed.
+      // Every live DV writer stages exactly that shape under its claim,
+      // so they are listed FIRST and reaped only when no live writer
+      // stands: a writer staging after the listing is not in it, and one
+      // that committed (and released) since drops out of the re-listing
+      (if (dvOrphans.isEmpty || liveRewritePossible(reapable)) Nil
+       else dvOrphans.intersect(DvUpdates.orphans(spark, path)))
     toDelete.foreach(p => fs.delete(p, true))
     // Writer-coordination artifacts in the commits dir: locks, intents,
     // and private append/stats stagings. These are NOT provably crash

@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
@@ -37,8 +37,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *
   * Rebuilds run on the driver and launch no Spark job for what the
   * previous snapshot already knew: every piece is carried by file
-  * identity (path, length, mtime — data files are immutable), new mark
-  * files and new batch footers are read directly, and the base schema
+  * identity (path, length, mtime — data files are immutable; a committed
+  * marks directory, landed by one rename and removed whole, by path and
+  * mtime without a listing), new mark files and new batch footers are
+  * read directly, and the base schema
   * survives when the base file set is unchanged or only gained files
   * whose footer schema it already covers. Only a base-file REMOVAL (a
   * partition delete, a rewrite) or a new column sends the base schema
@@ -60,6 +62,7 @@ private[table] final class TableSnapshot private (
     val meta: TableMeta,
     val batches: Seq[TableSnapshot.Batch],
     val markFiles: Seq[TableSnapshot.MarkFile],
+    val markDirs: Map[String, Long],
     val cloneSources: Seq[String],
     base: Option[StructType],
     private val frames: TableSnapshot.Frames) {
@@ -112,12 +115,12 @@ private[table] final class TableSnapshot private (
   private[table] def sameContent(o: TableSnapshot): Boolean =
     rootExists == o.rootExists && hasData == o.hasData &&
       baseFiles == o.baseFiles && meta == o.meta && batches == o.batches &&
-      markFiles.map(_.id) == o.markFiles.map(_.id) &&
+      markFiles.map(_.id) == o.markFiles.map(_.id) && markDirs == o.markDirs &&
       cloneSources == o.cloneSources
 
   private def withStamp(s: Stamp): TableSnapshot =
     new TableSnapshot(path, s, rootExists, hasData, baseFiles, meta, batches,
-      markFiles, cloneSources, baseSchema, frames)
+      markFiles, markDirs, cloneSources, baseSchema, frames)
 }
 
 private[table] object TableSnapshot {
@@ -304,10 +307,25 @@ private[table] object TableSnapshot {
       }
     }
 
+    // every commit's marks land as one `update_<id>` directory by one
+    // rename and are only ever removed whole, so a directory unchanged in
+    // name and mtime is carried from `prev` without listing it again
     val dvDir = new Path(DeletionVectors.dir(key))
-    val listed = FsWalk.files(fs, dvDir, FsWalk.hiddenName).collect {
-      case (st, _) if st.getPath.getName.endsWith(".parquet") =>
-        (st.getPath.toString, st.getLen, st.getModificationTime)
+    val top = try fs.listStatus(dvDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val markDirs = top.collect { case st if st.isDirectory &&
+      !FsWalk.hiddenName(st.getPath.getName) =>
+        st.getPath.toString -> st.getModificationTime }.toMap
+    def parquet(st: FileStatus): Option[(String, Long, Long)] =
+      if (!st.getPath.getName.endsWith(".parquet")) None
+      else Some((st.getPath.toString, st.getLen, st.getModificationTime))
+    val listed = top.flatMap { st =>
+      val dir = st.getPath.toString
+      if (!st.isDirectory) parquet(st).toSeq
+      else if (!markDirs.contains(dir)) Nil
+      else if (prev.exists(_.markDirs.get(dir).contains(markDirs(dir))))
+        prev.get.markFiles.filter(_.path.startsWith(dir + "/")).map(_.id)
+      else FsWalk.files(fs, st.getPath, FsWalk.hiddenName).flatMap(f => parquet(f._1))
     }.sortBy(_._1)
     val collect = listed.map(_._2).sum <= DeletionVectors.MaxCollectedSidecarBytes
     val prevMarks = prev.toSeq.flatMap(_.markFiles).map(m => m.id -> m).toMap
@@ -319,13 +337,13 @@ private[table] object TableSnapshot {
     }
 
     val fresh = new TableSnapshot(key, stamp, rootExists, hasData, baseFiles,
-      meta, batches, markFiles, cloneSources, None, new Frames)
+      meta, batches, markFiles, markDirs, cloneSources, None, new Frames)
     prev match {
       case Some(p) if p.sameContent(fresh) => p.withStamp(stamp)
       case _ =>
         val carried = prev.flatMap(p => carryBase(conf, p, fresh, wrote.files))
         new TableSnapshot(key, stamp, rootExists, hasData, baseFiles, meta,
-          batches, markFiles, cloneSources, carried, new Frames)
+          batches, markFiles, markDirs, cloneSources, carried, new Frames)
     }
   }
 
@@ -369,12 +387,15 @@ private[table] object TableSnapshot {
       case _ => false
     })
 
-  private def footer(conf: Configuration, file: String) = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(file), conf))
+  private def footer(in: org.apache.parquet.io.InputFile) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getFooter finally r.close()
   }
+
+  private def footer(conf: Configuration, file: String): org.apache.parquet
+      .hadoop.metadata.ParquetMetadata =
+    footer(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new Path(file), conf))
 
   /** The Spark schema a writer stamped into `file`'s footer (what
     * parquet schema inference returns for it), None when the footer
@@ -390,10 +411,13 @@ private[table] object TableSnapshot {
   private def nullable(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
-  /** Total row count of `file` from its footer; throws when unreadable. */
-  private[table] def footerRows(conf: Configuration, file: String): Long = {
+  /** Total row count of a listed file from its footer (the listing's
+    * status spares a second one); throws when unreadable.
+    */
+  private[table] def footerRows(conf: Configuration, file: FileStatus): Long = {
     var n = 0L
-    footer(conf, file).getBlocks.forEach(b => n += b.getRowCount)
+    footer(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+      .getBlocks.forEach(b => n += b.getRowCount)
     n
   }
 

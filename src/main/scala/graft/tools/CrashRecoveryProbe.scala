@@ -23,13 +23,17 @@ import graft.table.MedallionTable
   * duplicate), the next append always succeeds, and no litter survives
   * operator recovery.
   *
-  * A last window halts a child's `createOrError` at `post-stage-write`
+  * A further window halts a child's `createOrError` at `post-stage-write`
   * on a table whose CHECK was declared before it existed: the table must
   * still not exist, the CHECK must still be declared, operator vacuum
   * must leave no litter, and the next create must land, gated by it.
   *
+  * A last window halts a child's DV delete at `pre-delete-dv-commit`,
+  * marks staged and claim held: every row must still read, operator
+  * vacuum must leave no DV staging, and the next DV delete must land.
+  *
   * Usage: runMain graft.tools.CrashRecoveryProbe
-  *        (child mode, internal: --child <tablePath> [create])
+  *        (child mode, internal: --child <tablePath> [create|delete])
   */
 object CrashRecoveryProbe {
 
@@ -50,8 +54,11 @@ object CrashRecoveryProbe {
       // window between them exists
       val rows = (0 until 1000).map(i => (i.toLong, i % 2)).toDF("id", "blk")
       val t = MedallionTable(spark, args(1), Seq("blk"))
-      if (args.lift(2).contains("create")) t.createOrError(rows)
-      else t.append(rows)
+      args.lift(2) match {
+        case Some("create") => t.createOrError(rows)
+        case Some("delete") => t.deleteVectored($"blk" === 0)
+        case _ => t.append(rows)
+      }
       spark.stop()
       sys.exit(0) // only reached when no halt env is set
     }
@@ -162,6 +169,24 @@ object CrashRecoveryProbe {
       "create window: the next create did not land under its CHECK")
     println("crash window create post-stage-write OK: no table, CHECK " +
       "kept, no litter, next create landed gated by the CHECK")
+
+    // a DV delete halted between staging its marks and its commit rename
+    val dvPath = java.nio.file.Files.createTempDirectory("crashprobe_dv")
+      .toString + "/t"
+    val dv = MedallionTable(spark, dvPath, Seq("blk"))
+    dv.overwrite((0 until 1000).map(i => (i.toLong, i % 2)).toDF("id", "blk"))
+    haltChild(dvPath, "pre-delete-dv-commit", Seq("delete"))
+    def dvStaged() = Option(new java.io.File(
+      s"$dvPath/_graft_meta/dv_updates_staging").listFiles()).exists(_.nonEmpty)
+    require(dv.read.count() == 1000 && dvStaged(),
+      "dv window: expected every row readable and the marks staged")
+    operatorVacuum(dv)
+    require(!dvStaged() && litter(dvPath).isEmpty, "dv window: litter " +
+      s"survives operator vacuum: ${commitNames(dvPath).mkString(",")}")
+    dv.deleteVectored($"blk" === 0)
+    require(dv.read.count() == 500, "dv window: the next DV delete did not land")
+    println("crash window dv pre-delete-dv-commit OK: every row reads, " +
+      "no staging after operator vacuum, next DV delete landed")
     spark.stop()
   }
 }

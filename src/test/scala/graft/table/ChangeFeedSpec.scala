@@ -487,6 +487,21 @@ class ChangeFeedSpec extends SparkSpec {
       feed(t2, en2 + 1).nonEmpty)
   }
 
+  test("feed expiry prunes archived marks directories recursively") {
+    val t = mk()
+    t.enableChangeDataFeed()
+    val en = t.commitVersion
+    t.deleteVectored($"id" === 1L) // en+1
+    t.deleteVectored($"id" === 2L) // en+2
+    t.compactDv() // en+3 — both marks directories move to the archive
+    val arch = new java.io.File(s"${t.path}__graft_commits/cdf/marks_archive")
+    assert(arch.listFiles().count(_.isDirectory) == 2)
+    assert(feed(t, en + 1, en + 2).map(_._1) == Set(1L, 2L))
+    t.append(rows(1).withColumn("id", $"id" + 100L)) // en+4
+    assert(t.expireChangeFeed(keepCommits = 1) == en + 3)
+    assert(arch.listFiles().isEmpty, "unreferenced archived directories pruned")
+  }
+
   test("replicateTo fail-stops on INVERSE drift: the mirror has columns " +
       "the source no longer provides") {
     val t = mk()

@@ -8,11 +8,10 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 /** Footprint-scoped writer locks ([[MedallionTable.acquireWriteLock]]):
   * claim-first rewrites that declare DISJOINT partition footprints
   * (OPTIMIZE … WHERE, partition-scoped DV deletes) commit concurrently;
-  * overlapping footprints, DV-vs-DV (shared append staging), and
-  * anything against a global-footprint writer (append) serialize exactly
-  * as before. Concurrency is PROVEN with latch-paired failpoints — both
-  * writers must hold their claimed commits at the same instant — not
-  * inferred from two successes.
+  * overlapping footprints and anything against a global-footprint writer
+  * serialize exactly as before. Concurrency is PROVEN with latch-paired
+  * failpoints — both writers must hold their claimed commits at the same
+  * instant — not inferred from two successes.
   */
 class ConcurrentRewriteSpec extends SparkSpec {
   import spark.implicits._
@@ -117,8 +116,8 @@ class ConcurrentRewriteSpec extends SparkSpec {
     assert(t.read.select(sum($"id")).head.getLong(0) == before)
   }
 
-  test("partition-scoped DV delete runs concurrently with a disjoint " +
-      "compaction; DV deletes serialize with EACH OTHER via dv-stage") {
+  test("partition-scoped DV deletes run concurrently with a disjoint " +
+      "compaction and with each other") {
     val (p, t) = seeded("cr3")
     val keep = t.read.filter($"blk" =!= 2)
       .select(sum($"id")).head.getLong(0)
@@ -151,30 +150,36 @@ class ConcurrentRewriteSpec extends SparkSpec {
     assert(t.read.filter($"blk" === 2).count() == 0, "DV delete lost")
     assert(t.read.select(sum($"id")).head.getLong(0) == keep)
 
-    // DV-vs-DV: disjoint partitions, but the shared sidecar staging
-    // forces serialization — the second must not claim during the hold
-    val v1 = t.commitVersion
+    // DV-vs-DV: disjoint partitions stage their marks privately, so both
+    // hold claimed commits at once — each waits for the other at its claim
+    val only0 = t.read.filter($"blk" === 0).select(sum($"id")).head.getLong(0)
     val cClaimed = new CountDownLatch(1)
+    val dClaimed = new CountDownLatch(1)
+    val dvOverlapped = new java.util.concurrent.atomic.AtomicBoolean(true)
     MedallionTable.testFailpoint = {
-      case "mid-claim-first" if Thread.currentThread().getName == "dvC" =>
-        cClaimed.countDown(); Thread.sleep(1500)
+      case "mid-claim-first" => Thread.currentThread().getName match {
+        case "dvC" =>
+          cClaimed.countDown()
+          if (!dClaimed.await(20, TimeUnit.SECONDS)) dvOverlapped.set(false)
+        case "dvD" =>
+          dClaimed.countDown()
+          if (!cClaimed.await(20, TimeUnit.SECONDS)) dvOverlapped.set(false)
+        case _ => ()
+      }
       case _ => ()
     }
     try {
       val c = guarded("dvC", failures)(
         MedallionTable(spark, p, Seq("blk")).deleteVectored($"blk" === 3))
-      c.start()
-      assert(cClaimed.await(30, TimeUnit.SECONDS))
       val d = guarded("dvD", failures)(
         MedallionTable(spark, p, Seq("blk")).deleteVectored($"blk" === 1))
-      d.start()
-      Thread.sleep(600)
-      assert(t.commitVersion == v1 + 1,
-        "second DV delete claimed while the first held dv-stage")
+      c.start(); d.start()
       c.join(120000); d.join(120000)
     } finally MedallionTable.testFailpoint = _ => ()
     assert(failures.isEmpty, s"writer died: ${failures.peek()}")
+    assert(dvOverlapped.get(), "disjoint DV deletes serialized")
     assert(t.read.filter($"blk".isin(1, 3)).count() == 0)
+    assert(t.read.select(sum($"id")).head.getLong(0) == only0)
   }
 
   test("an append scopes to its partitions: a DISJOINT compaction claims " +

@@ -114,4 +114,35 @@ class DeletionVectorSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(98L, 99L))
     assert(ch.filter($"_change_type" =!= "delete").isEmpty)
   }
+
+  test("a DV delete failing before its commit rename deletes no row " +
+      "and releases its marker") {
+    val (t, p) = mk()
+    val before = t.read.orderBy("id").collect().toSeq
+    val v0 = t.commitVersion
+    MedallionTable.testFailpoint = {
+      case "pre-delete-dv-commit" =>
+        MedallionTable.testFailpoint = _ => ()
+        throw new RuntimeException("crash before the commit rename")
+      case _ => ()
+    }
+    try intercept[RuntimeException] { t.deleteVectored($"id" < 50) }
+    finally MedallionTable.testFailpoint = _ => ()
+    // all-or-nothing: the staged marks are invisible, no marks dir landed
+    assert(t.read.orderBy("id").collect().toSeq == before)
+    assert(DvUpdates.marksOnly(spark, p).isEmpty)
+    // the claimed marker and the writer lock are both released
+    assert(t.commitVersion == v0)
+    val commits = new java.io.File(s"${p}__graft_commits").listFiles()
+      .map(_.getName).toSeq
+    assert(!commits.exists(n => n.startsWith("write") && n.endsWith(".lock")),
+      commits.mkString(", "))
+    // the staging is litter the default vacuum clears; the retry lands
+    assert(DvUpdates.orphans(spark, p).nonEmpty)
+    t.vacuum()
+    assert(DvUpdates.orphans(spark, p).isEmpty)
+    t.deleteVectored($"id" < 50)
+    assert(t.read.count() == 50L)
+    assert(DvUpdates.marksOnly(spark, p).size == 1)
+  }
 }

@@ -3,11 +3,11 @@ package graft.table
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** DV sidecar compaction ([[MedallionTable.compactDv]]): N flat
-  * delete-mark files become one deduplicated file with read results
-  * identical, committed UPDATE/MERGE witnesses untouched, the crash
-  * window harmless by mark idempotence, and the autoCompact janitor
-  * triggering on sidecar creep.
+/** DV sidecar compaction ([[MedallionTable.compactDv]]): N marks-only
+  * directories (one per DV delete) become one deduplicated directory with
+  * read results identical, committed UPDATE/MERGE witnesses untouched,
+  * the crash windows harmless by mark idempotence, and the autoCompact
+  * janitor triggering on sidecar creep.
   */
 class DvCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -20,23 +20,24 @@ class DvCompactionSpec extends SparkSpec {
     (t, p)
   }
 
-  test("compactDv: N flat files -> 1, deduped, reads identical") {
+  test("compactDv: N marks-only dirs -> 1, deduped, reads identical") {
     val (t, p) = seed()
-    // 5 appends, two of them overlapping (ids 0..9 marked twice)
+    // 5 deletes, two of them overlapping (ids 0..9 matched twice)
     Seq($"id" < 10, $"id" >= 10 && $"id" < 20, $"id" % 37 === 0,
         $"id" < 10, $"id" === 150L)
       .foreach(t.deleteVectored)
     val before = t.read.orderBy("id").collect().toSeq
-    // each append lands >= 1 part file (one per non-empty task)
-    val n0 = DeletionVectors.flatMarkFiles(spark, p).size
-    assert(n0 >= 5)
+    // one directory per delete that marked a row: the repeated `id < 10`
+    // matches nothing on the DV-applied view and commits none
+    val n0 = DvUpdates.marksOnly(spark, p).size
+    assert(n0 == 4)
     val removed = t.compactDv()
     assert(removed == n0)
-    val flats = DeletionVectors.flatMarkFiles(spark, p)
-    assert(flats.size == 1)
+    val dirs = DvUpdates.marksOnly(spark, p)
+    assert(dirs.size == 1)
     assert(t.read.orderBy("id").collect().toSeq == before)
-    // deduped: the combined file holds each (file, pos) once
-    val combined = spark.read.parquet(flats.head.toString)
+    // deduped: the combined directory holds each (file, pos) once
+    val combined = spark.read.parquet(DvUpdates.marksDir(p, dirs.head).toString)
     assert(combined.count() == combined.distinct().count())
     // idempotent: a second pass is a no-op
     assert(t.compactDv() == 0)
@@ -61,8 +62,24 @@ class DvCompactionSpec extends SparkSpec {
     val (t, p) = seed()
     t.deleteVectored($"id" < 5)
     t.deleteVectored($"id" >= 195L)
-    val n0 = DeletionVectors.flatMarkFiles(spark, p).size
+    val n0 = DvUpdates.marksOnly(spark, p).size
+    assert(n0 == 2)
     val before = t.read.orderBy("id").collect().toSeq
+    // crash BEFORE the rename: nothing lands; the staged marks are
+    // litter vacuum enumerates and clears
+    MedallionTable.testFailpoint = {
+      case "pre-dv-compact-commit" =>
+        MedallionTable.testFailpoint = _ => ()
+        throw new RuntimeException("crash before the commit rename")
+      case _ => ()
+    }
+    try intercept[RuntimeException] { t.compactDv() }
+    finally MedallionTable.testFailpoint = _ => ()
+    assert(DvUpdates.marksOnly(spark, p).size == n0)
+    assert(t.read.orderBy("id").collect().toSeq == before)
+    assert(t.vacuumDryRun().exists(_._1.contains("dv_updates_staging")))
+    t.vacuum()
+    assert(DvUpdates.orphans(spark, p).isEmpty)
     MedallionTable.testFailpoint = {
       case "mid-dv-compact" =>
         MedallionTable.testFailpoint = _ => ()
@@ -71,15 +88,14 @@ class DvCompactionSpec extends SparkSpec {
     }
     try intercept[RuntimeException] { t.compactDv() }
     finally MedallionTable.testFailpoint = _ => ()
-    // combined file + the old files all live: duplicates, semantics unchanged
-    assert(DeletionVectors.flatMarkFiles(spark, p).size == n0 + 1)
+    // combined dir + the old dirs all live: duplicates, semantics
+    // unchanged, and the committed rename left no staging behind
+    assert(DvUpdates.marksOnly(spark, p).size == n0 + 1)
     assert(t.read.orderBy("id").collect().toSeq == before)
-    // the staging dir is litter; vacuum enumerates and clears it
-    assert(t.vacuumDryRun().exists(_._1.contains("dv_compact_staging")))
-    t.vacuum()
-    // a re-run compacts the superset back to one file
+    assert(t.vacuumDryRun().isEmpty)
+    // a re-run compacts the superset back to one directory
     assert(t.compactDv() == n0 + 1)
-    assert(DeletionVectors.flatMarkFiles(spark, p).size == 1)
+    assert(DvUpdates.marksOnly(spark, p).size == 1)
     assert(t.read.orderBy("id").collect().toSeq == before)
   }
 
@@ -150,9 +166,9 @@ class DvCompactionSpec extends SparkSpec {
   test("autoCompact janitors the sidecar past the threshold") {
     val (t, p) = seed()
     (0 until 10).foreach(i => t.deleteVectored($"id" === i.toLong))
-    assert(DeletionVectors.flatMarkFiles(spark, p).size > 8)
+    assert(DvUpdates.marksOnly(spark, p).size == 10)
     assert(t.autoCompact(maxFiles = 8) >= 1)
-    assert(DeletionVectors.flatMarkFiles(spark, p).size == 1)
+    assert(DvUpdates.marksOnly(spark, p).size == 1)
     assert(t.read.count() == 190L)
     // everything now under both thresholds: the janitor is a no-op
     assert(t.autoCompact(maxFiles = 8) == 0)

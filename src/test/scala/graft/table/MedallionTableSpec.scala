@@ -22,6 +22,33 @@ class MedallionTableSpec extends SparkSpec {
     intercept[IllegalStateException] { t.createOrError(df) }
   }
 
+  test("two concurrent createOrError: exactly one wins, its rows survive") {
+    import spark.implicits._
+    val p = tmpDir("mt_create_race")
+    val staged = new java.util.concurrent.CountDownLatch(2)
+    // both creates pass the pre-claim existence check and stage before
+    // either claims
+    MedallionTable.testFailpoint = {
+      case "post-stage-write" =>
+        staged.countDown()
+        staged.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      case _ => ()
+    }
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq(1L, 2L).map { id =>
+      new Thread(() =>
+        try MedallionTable(spark, p).createOrError(
+          (0 until 10).map(i => (id, i)).toDF("id", "n"))
+        catch { case e: Throwable => failures.add(e) })
+    }
+    try { threads.foreach(_.start()); threads.foreach(_.join(120000)) }
+    finally MedallionTable.testFailpoint = _ => ()
+    assert(failures.size == 1, failures)
+    assert(failures.peek().isInstanceOf[IllegalStateException], failures.peek())
+    val rows = MedallionTable(spark, p).read.select("id").as[Long].collect()
+    assert(rows.length == 10 && rows.distinct.length == 1, rows.toSeq)
+  }
+
   test("exists is false for empty/marker-only directories") {
     val p = tmpDir("mt_exists")
     val t = MedallionTable(spark, p)

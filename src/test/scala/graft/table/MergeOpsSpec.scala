@@ -109,6 +109,12 @@ class MergeOpsSpec extends SparkSpec {
     def count(needle: String) =
       sources.map(_._2.split(java.util.regex.Pattern.quote(needle), -1).length - 1).sum
     assert(count("fs.rename(marksStaging") == 1)
+    // one deletion-vector commit: no committer appends into the live
+    // sidecar, no shared DV staging resource, no second staging format
+    val table = sources.find(_._1 == "MedallionTable.scala").get._2
+    assert(!table.contains("SaveMode.Append"))
+    assert(count("dv-stage") == 0)
+    assert(count("flatMarkFiles") == 0 && count("compactStagingDir") == 0)
     val ops = sources.find(_._1 == "MergeOps.scala").get._2
     val from = ops.indexOf("def merge3Clause(")
     val body = ops.substring(from, ops.indexOf("\n  /**", from))

@@ -109,6 +109,26 @@ class UpdateVectoredSpec extends SparkSpec {
     assert(t.read.filter($"s" === "won").count() == 50L)
   }
 
+  test("a janitor vacuum inside the commit window leaves a live " +
+      "update's staging alone") {
+    val (t, p) = mk()
+    // a DEFAULT-config vacuum fired while the update holds its claim,
+    // between staging its batch and renaming its marks: the staged batch
+    // and marks are orphan-shaped, but the writer is live
+    MedallionTable.testFailpoint = {
+      case "pre-update-dv-commit" =>
+        MedallionTable.testFailpoint = _ => ()
+        MedallionTable(spark, p).vacuum()
+      case _ => ()
+    }
+    try t.updateVectored($"id" < 10, Map("s" -> lit("janitored")))
+    finally MedallionTable.testFailpoint = _ => ()
+    assert(t.read.count() == 100L)
+    assert(t.read.filter($"s" === "janitored").select("id").as[Long]
+      .collect().sorted.toSeq == (0L until 10L))
+    assert(DvUpdates.committedBatches(spark, p).size == 1)
+  }
+
   test("OPTIMIZE materializes amendments and drops the extension") {
     val (t, p) = mk()
     t.updateVectored($"id" >= 90, Map("s" -> lit("hot")))
