@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Pure (no I/O) implementation of the reference's 3-clause Delta MERGE as a
   * DataFrame→DataFrame transform, so the semantics are unit-testable and can
@@ -21,9 +22,17 @@ import org.apache.spark.sql.functions._
   * keys — the same cost profile as Delta's join-based merge — and it stays
   * entirely inside whole-stage codegen (no UDFs).
   *
-  * Both sides are prefix-renamed before the join, so target and source may
+  * Each side enters the join under its own qualifier (`__graft_t`,
+  * `__graft_s`) with its columns unrenamed, so target and source may
   * share lineage (the common "merge a filtered view of the table into
   * itself" case) without tripping Spark's ambiguous-self-join analysis.
+  * No side renames a column with a projection: Catalyst's constraint
+  * propagation adds, for every alias of a bare attribute, a rewritten
+  * copy of each child constraint that mentions it, so renaming all n
+  * columns of a source cleaned by `na.drop()` (one `atleastnnonnulls`
+  * over every column) built 2^n constraints, rebuilt on each optimizer
+  * pass (SPARK-33152). Padded and evolved columns are typed-NULL
+  * literals, which add one constraint each.
   *
   * Delta-parity semantics honored here:
   *   - UPDATE SET covers only columns present in the source: target-only
@@ -38,17 +47,33 @@ import org.apache.spark.sql.functions._
   */
 object MergeOps {
 
-  /** Resolves a logical column name to the (renamed) target- or source-side
-    * Column inside the merge join; see [[merge3Clause]]'s updateCondition.
+  /** Resolves a logical column name to the target- or source-side Column
+    * inside the merge join — the column under its side's qualifier, quoted
+    * so names holding `.` or a backtick resolve; see [[merge3Clause]]'s
+    * updateCondition.
     */
   type ColRef = String => Column
 
-  private val TPrefix = "__graft_t_"
-  private val SPrefix = "__graft_s_"
-  private val SrcMark = s"${SPrefix}present__"
-  private val TgtMark = s"${TPrefix}present__"
-  private val tc: ColRef = c => col(TPrefix + c)
-  private val sc: ColRef = c => col(SPrefix + c)
+  private val TargetSide = "__graft_t"
+  private val SourceSide = "__graft_s"
+  private val MatchedSide = "__graft_mk"
+  private val TgtMark = "__graft_t_present__"
+  private val SrcMark = "__graft_s_present__"
+  private def quoted(c: String): String = "`" + c.replace("`", "``") + "`"
+  /** Column `c` of a frame, whatever characters its name holds. */
+  private def bare(c: String): Column = col(quoted(c))
+  private def typedNull(dt: DataType): Column = lit(null).cast(dt)
+  private val tc: ColRef = c => col(s"$TargetSide.${quoted(c)}")
+  private val sc: ColRef = c => col(s"$SourceSide.${quoted(c)}")
+
+  /** `df` as one side of a merge join: every column unrenamed, `padded`
+    * typed-NULL columns and the side's presence `mark` added, under the
+    * side's `qualifier`.
+    */
+  private def side(df: DataFrame, qualifier: String, mark: String,
+      padded: Seq[(String, DataType)] = Nil): DataFrame =
+    df.select(col("*") +: padded.map { case (c, dt) => typedNull(dt).as(c) } :+
+      lit(true).as(mark): _*).as(qualifier)
 
   /** Replicates the reference's dynamic change-condition synthesis
     * (`silver_table_creation.py:50-54` et al., SURVEY.md §2.2 K5): OR over
@@ -151,16 +176,12 @@ object MergeOps {
     val allCols: Seq[String] =
       targetCols ++ source.columns.toSeq.filterNot(targetCols.contains)
 
-    def prep(df: DataFrame, other: DataFrame, prefix: String, mark: String): DataFrame = {
-      val padded = allCols.map { c =>
-        (if (df.columns.contains(c)) col(c)
-         else lit(null).cast(other.schema(c).dataType)).as(prefix + c)
-      }
-      df.select(padded :+ lit(true).as(mark): _*)
-    }
+    def prep(df: DataFrame, other: DataFrame, qualifier: String, mark: String) =
+      side(df, qualifier, mark, allCols.filterNot(df.columns.contains)
+        .map(c => c -> other.schema(c).dataType))
 
-    val t = prep(target, source, TPrefix, TgtMark)
-    val s = prep(source, target, SPrefix, SrcMark)
+    val t = prep(target, source, TargetSide, TgtMark)
+    val s = prep(source, target, SourceSide, SrcMark)
     val joined = t.join(s, keys.map(k => tc(k) === sc(k)).reduce(_ && _), "full_outer")
 
     val srcPresent = col(SrcMark).isNotNull
@@ -168,10 +189,10 @@ object MergeOps {
     val updCond = updateCondition.map(f => f(tc, sc)).getOrElse(lit(true))
 
     def proj(side: ColRef, change: String) =
-      allCols.map(c => side(c).as(c)) :+ lit(change).as("_change_type")
+      allCols.map(side) :+ lit(change).as("_change_type")
     // post-image honors UPDATE SET spanning only real source columns
     val postCols = allCols.map { c =>
-      (if (sourceCols.contains(c)) sc(c) else tc(c)).as(c)
+      if (sourceCols.contains(c)) sc(c) else tc(c)
     } :+ lit("update_postimage").as("_change_type")
 
     val inserts = joined.filter(srcPresent && !tgtPresent).select(proj(sc, "insert"): _*)
@@ -198,7 +219,7 @@ object MergeOps {
     val effType = snapshot.select(effective.as("__e")).schema.head.dataType
     snapshot
       .withColumn("valid_from", effective)
-      .withColumn("valid_to", lit(null).cast(effType))
+      .withColumn("valid_to", typedNull(effType))
       .withColumn("is_current", lit(true))
   }
 
@@ -260,37 +281,34 @@ object MergeOps {
     val history = target.filter(!col("is_current"))
     val current = target.filter(col("is_current"))
 
-    def prep(df: DataFrame, cols: Seq[String], prefix: String, mark: String) =
-      df.select(cols.map(c => col(c).as(prefix + c)) :+ lit(true).as(mark): _*)
-
-    val t = prep(current, bizCols ++ Scd2Cols, TPrefix, TgtMark)
-    val s = prep(source, bizCols, SPrefix, SrcMark)
+    val t = side(current, TargetSide, TgtMark)
+    val s = side(source, SourceSide, SrcMark)
     val joined = t.join(s, keys.map(k => tc(k) === sc(k)).reduce(_ && _), "full_outer")
 
     val srcPresent = col(SrcMark).isNotNull
     val tgtPresent = col(TgtMark).isNotNull
     val differs = changeCondition
       .map(f => f(tc, sc))
-      .getOrElse(anyColumnDiffersNullSafe(current.select(bizCols.map(col): _*),
+      .getOrElse(anyColumnDiffersNullSafe(current.select(bizCols.map(bare): _*),
         source, keys)(tc, sc))
     val changing = srcPresent && tgtPresent && differs
 
     // Surviving target-side rows: closed when the source changes them,
     // untouched otherwise (incl. target-only keys).
     val fromTarget = joined.filter(tgtPresent).select(
-      bizCols.map(c => tc(c).as(c)) ++ Seq(
-        tc("valid_from").as("valid_from"),
+      bizCols.map(tc) ++ Seq(
+        tc("valid_from"),
         when(changing, effective).otherwise(tc("valid_to")).as("valid_to"),
         when(changing, lit(false)).otherwise(tc("is_current")).as("is_current")): _*)
 
     // Newly-opened versions: brand-new keys plus the changed ones.
     val opened = joined.filter(srcPresent && (!tgtPresent || differs)).select(
-      bizCols.map(c => sc(c).as(c)) ++ Seq(
+      bizCols.map(sc) ++ Seq(
         effective.as("valid_from"),
-        lit(null).cast(target.schema("valid_to").dataType).as("valid_to"),
+        typedNull(target.schema("valid_to").dataType).as("valid_to"),
         lit(true).as("is_current")): _*)
 
-    val outCols = (bizCols ++ Scd2Cols).map(col)
+    val outCols = (bizCols ++ Scd2Cols).map(bare)
     history.select(outCols: _*)
       .union(fromTarget.select(outCols: _*))
       .union(opened.select(outCols: _*))
@@ -304,7 +322,7 @@ object MergeOps {
     * values are functions of the (target, source) column resolvers — the
     * same [[ColRef]] convention as [[merge3Clause]]'s update condition —
     * so callers (including the SQL DML bridge, [[graft.plans.GraftDmlRule]])
-    * never see the internal prefix names.
+    * never see the internal side qualifiers.
     */
   sealed trait WhenClause { def condition: Option[(ColRef, ColRef) => Column] }
   /** WHEN MATCHED [AND cond] THEN UPDATE SET … — unassigned target columns
@@ -369,7 +387,7 @@ object MergeOps {
     */
   private[table] def resolveEvolvedFromSource(targetCols: Seq[String],
       clauses: Seq[WhenClause], source: DataFrame, path: String)
-      : Seq[(String, org.apache.spark.sql.types.DataType)] =
+      : Seq[(String, DataType)] =
     evolvedAssignments(targetCols, clauses).map { c =>
       source.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
         case Some(f) => c -> f.dataType
@@ -424,19 +442,16 @@ object MergeOps {
       notMatched: Seq[WhenNotMatchedInsert],
       notMatchedBySource: Seq[WhenClause],
       insertDefaults: Map[String, Column] = Map.empty,
-      evolved: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil): DataFrame = {
+      evolved: Seq[(String, DataType)] = Nil): DataFrame = {
     requireClauseKinds(keys, matched, notMatchedBySource)
 
     // evolved columns join the target side as typed NULLs: old rows read
     // them as NULL, assignments fill them
-    val schema = org.apache.spark.sql.types.StructType(target.schema.fields ++
-      evolved.map { case (n, dt) => org.apache.spark.sql.types.StructField(n, dt) })
+    val schema = StructType(target.schema.fields ++
+      evolved.map { case (n, dt) => StructField(n, dt) })
     val targetCols = schema.fieldNames.toSeq
-    val t = target.select(target.columns.toSeq.map(c => col(c).as(TPrefix + c)) ++
-      evolved.map { case (n, dt) => lit(null).cast(dt).as(TPrefix + n) } :+
-      lit(true).as(TgtMark): _*)
-    val s = source.select(
-      source.columns.toSeq.map(c => col(c).as(SPrefix + c)) :+ lit(true).as(SrcMark): _*)
+    val t = side(target, TargetSide, TgtMark, evolved)
+    val s = side(source, SourceSide, SrcMark)
 
     val joined = t.join(s,
       keys.map { case (tk, sk) => tc(tk) === sc(sk) }.reduce(_ && _), "full_outer")
@@ -470,7 +485,7 @@ object MergeOps {
     val resolved = targetCols.map { c =>
       when(tgtPresent && srcPresent, chainClauseValues(schema, matched, mIdx, c, tc(c)))
         .when(srcPresent, chainClauseValues(schema, notMatched, iIdx, c,
-          lit(null).cast(schema(c).dataType), insertDefaults))
+          typedNull(schema(c).dataType), insertDefaults))
         .otherwise(chainClauseValues(schema, notMatchedBySource, nIdx, c, tc(c)))
         .as(c)
     }
@@ -498,35 +513,37 @@ object MergeOps {
   }
 
   /** First clause whose condition holds (NULL = does not hold, SQL
-    * three-valued semantics via when()); -1 = no clause applies.
+    * three-valued semantics via when()); -1 = no clause applies. `t`
+    * resolves the target side.
     */
-  private def chosen(clauses: Seq[WhenClause]): Column =
+  private def chosen(clauses: Seq[WhenClause], t: ColRef = tc): Column =
     clauses.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), els) =>
-      when(cl.condition.map(f => f(tc, sc)).getOrElse(lit(true)), lit(i))
+      when(cl.condition.map(f => f(t, sc)).getOrElse(lit(true)), lit(i))
         .otherwise(els)
     }
 
   /** The value column `c` takes under the clause `idx` selected, `default`
     * when no clause applies (or an applying UPDATE leaves `c` unassigned);
-    * every assignment cast to the target column's type.
+    * every assignment cast to the target column's type. `t` resolves the
+    * target side.
     */
-  private def chainClauseValues(targetSchema: org.apache.spark.sql.types.StructType,
+  private def chainClauseValues(targetSchema: StructType,
       clauses: Seq[WhenClause], idx: Column, c: String, default: Column,
-      insertDefaults: Map[String, Column] = Map.empty): Column = {
+      insertDefaults: Map[String, Column] = Map.empty, t: ColRef = tc): Column = {
     val dt = targetSchema(c).dataType
     // a column the INSERT clause leaves unassigned takes its registered
     // column DEFAULT when one exists (Delta allowColumnDefaults in MERGE),
     // typed-NULL otherwise — update clauses never default (existing rows)
     def insertFill: Column =
-      insertDefaults.get(c).map(_.cast(dt)).getOrElse(lit(null).cast(dt))
+      insertDefaults.get(c).map(_.cast(dt)).getOrElse(typedNull(dt))
     clauses.zipWithIndex.foldRight(default) { case ((cl, i), els) =>
       val v: Column = cl match {
         case WhenMatchedUpdate(_, set) =>
-          set.get(c).map(f => f(tc, sc).cast(dt)).getOrElse(default)
+          set.get(c).map(f => f(t, sc).cast(dt)).getOrElse(default)
         case WhenNotMatchedBySourceUpdate(_, set) =>
-          set.get(c).map(f => f(tc, sc).cast(dt)).getOrElse(default)
+          set.get(c).map(f => f(t, sc).cast(dt)).getOrElse(default)
         case WhenNotMatchedInsert(_, values) =>
-          values.get(c).map(f => f(tc, sc).cast(dt)).getOrElse(insertFill)
+          values.get(c).map(f => f(t, sc).cast(dt)).getOrElse(insertFill)
         case _ => default // DELETE rows are filtered out; value unused
       }
       when(idx === i, v).otherwise(els)
@@ -595,21 +612,18 @@ object MergeOps {
       matched: Seq[WhenClause],
       notMatched: Seq[WhenNotMatchedInsert],
       targetCols: Seq[String],
-      targetSchema: org.apache.spark.sql.types.StructType,
+      targetSchema: StructType,
       posCols: Seq[String],
       insertDefaults: Map[String, Column] = Map.empty,
       notMatchedBySource: Seq[WhenClause] = Nil): VectoredMergePlan = {
     require(posCols.length == 2, "posCols must be (fileKey, pos)")
     requireClauseKinds(keys, matched, notMatchedBySource)
 
-    val t = targetWithPos.select(
-      (targetCols ++ posCols).map(c => col(c).as(TPrefix + c)): _*)
+    val t = targetWithPos.as(TargetSide)
     // the presence MARK (not a source column's null-ness) distinguishes
     // matched from target-only rows under the left join — source columns
     // may legitimately hold NULLs
-    val s = source.select(
-      source.columns.toSeq.map(c => col(c).as(SPrefix + c)) :+
-        lit(true).as(SrcMark): _*)
+    val s = side(source, SourceSide, SrcMark)
 
     val mIdx = chosen(matched)
     val nIdx = chosen(notMatchedBySource)
@@ -645,27 +659,26 @@ object MergeOps {
 
     val inserts = (j: DataFrame) => {
       // Source rows with no match: anti-join the SMALL frames (source ×
-      // the cached matched source-keys); typed-null target columns let
-      // library-caller insert expressions that touch tc(...) resolve to
-      // NULL instead of erroring (SQL-originated inserts are analyzer-
-      // guaranteed source-only). Under by-source the cached frame also
-      // holds target-only rows — their null source keys never equi-match
-      // the anti-join, but filter them anyway for a tight build side.
+      // the cached matched source-keys, under their own qualifier). Target
+      // references resolve to typed NULLs, so library-caller insert
+      // expressions that touch tc(...) read NULL instead of erroring
+      // (SQL-originated inserts are analyzer-guaranteed source-only).
+      // Under by-source the cached frame also holds target-only rows —
+      // their null source keys never equi-match the anti-join, but filter
+      // them anyway for a tight build side.
       val matchedKeys = j.filter(srcPresent)
-        .select(keys.map { case (_, sk) =>
-          sc(sk).as(s"__graft_mk_$sk") }: _*).distinct()
+        .select(keys.map { case (_, sk) => sc(sk) }: _*).distinct()
+        .as(MatchedSide)
       val unmatched = s.join(broadcast(matchedKeys),
-          keys.map { case (_, sk) => sc(sk) === col(s"__graft_mk_$sk") }
+          keys.map { case (_, sk) => sc(sk) === col(s"$MatchedSide.${quoted(sk)}") }
             .reduce(_ && _),
           "left_anti")
-      val withNullTarget = unmatched.select(
-        unmatched.columns.map(col) ++ targetCols.map(c =>
-          lit(null).cast(targetSchema(c).dataType).as(TPrefix + c)): _*)
-      val iIdx = chosen(notMatched)
-      withNullTarget.filter(iIdx =!= -1)
+      val nullTarget: ColRef = c => typedNull(targetSchema(c).dataType)
+      val iIdx = chosen(notMatched, nullTarget)
+      unmatched.filter(iIdx =!= -1)
         .select(targetCols.map(c =>
-          chainClauseValues(targetSchema, notMatched, iIdx, c,
-            lit(null).cast(targetSchema(c).dataType), insertDefaults).as(c)): _*)
+          chainClauseValues(targetSchema, notMatched, iIdx, c, nullTarget(c),
+            insertDefaults, nullTarget).as(c)): _*)
     }
 
     VectoredMergePlan(joined, marks, newVersions, inserts)

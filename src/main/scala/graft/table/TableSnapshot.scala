@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *  - the base data files (relocation-stable keys, length, mtime) and
   *    whether the root holds any data at all;
   *  - the table record ([[TableMeta]]: declarations, schema and the
-  *    column map / overlay / widening layout), read once per snapshot;
+  *    column map / overlay / widening layout), read again only when its
+  *    file's length or mtime changed;
   *  - the resolved base schema (the footer-merged `mergeSchema` result,
   *    or the record's reader schema while a widening is live);
   *  - the committed DV-update batches ([[DvUpdates]]), each with its
@@ -60,6 +61,7 @@ private[table] final class TableSnapshot private (
     val hasData: Boolean,
     val baseFiles: Seq[TableSnapshot.DataFile],
     val meta: TableMeta,
+    val metaId: Option[(Long, Long)],
     val batches: Seq[TableSnapshot.Batch],
     val markFiles: Seq[TableSnapshot.MarkFile],
     val markDirs: Map[String, Long],
@@ -114,13 +116,14 @@ private[table] final class TableSnapshot private (
 
   private[table] def sameContent(o: TableSnapshot): Boolean =
     rootExists == o.rootExists && hasData == o.hasData &&
-      baseFiles == o.baseFiles && meta == o.meta && batches == o.batches &&
+      baseFiles == o.baseFiles && meta == o.meta && metaId == o.metaId &&
+      batches == o.batches &&
       markFiles.map(_.id) == o.markFiles.map(_.id) && markDirs == o.markDirs &&
       cloneSources == o.cloneSources
 
   private def withStamp(s: Stamp): TableSnapshot =
-    new TableSnapshot(path, s, rootExists, hasData, baseFiles, meta, batches,
-      markFiles, markDirs, cloneSources, baseSchema, frames)
+    new TableSnapshot(path, s, rootExists, hasData, baseFiles, meta, metaId,
+      batches, markFiles, markDirs, cloneSources, baseSchema, frames)
 }
 
 private[table] object TableSnapshot {
@@ -289,7 +292,14 @@ private[table] object TableSnapshot {
         DataFile(fs.makeQualified(st.getPath).toString, st.getLen,
           st.getModificationTime)
     }
-    val meta = t.meta
+    // the record is written whole and renamed in, never changed in place:
+    // while its file keeps its length and mtime, one status call carries
+    // `prev`'s record instead of reading it again
+    val metaId = try {
+      val st = fs.getFileStatus(TableMeta.file(key))
+      Some((st.getLen, st.getModificationTime))
+    } catch { case _: java.io.FileNotFoundException => None }
+    val meta = prev.filter(_.metaId == metaId).fold(t.meta)(_.meta)
     val cloneSources = ShallowClone.sources(spark, ShallowClone.file(key)) ++
       ShallowClone.sources(spark, ShallowClone.archivedFile(root))
 
@@ -337,13 +347,13 @@ private[table] object TableSnapshot {
     }
 
     val fresh = new TableSnapshot(key, stamp, rootExists, hasData, baseFiles,
-      meta, batches, markFiles, markDirs, cloneSources, None, new Frames)
+      meta, metaId, batches, markFiles, markDirs, cloneSources, None, new Frames)
     prev match {
       case Some(p) if p.sameContent(fresh) => p.withStamp(stamp)
       case _ =>
         val carried = prev.flatMap(p => carryBase(conf, p, fresh, wrote.files))
         new TableSnapshot(key, stamp, rootExists, hasData, baseFiles, meta,
-          batches, markFiles, markDirs, cloneSources, carried, new Frames)
+          metaId, batches, markFiles, markDirs, cloneSources, carried, new Frames)
     }
   }
 

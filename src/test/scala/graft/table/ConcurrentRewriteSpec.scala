@@ -534,7 +534,7 @@ class ConcurrentRewriteSpec extends SparkSpec {
   }
 
   test("operator-mode vacuum (assumeNoWriters) mid-staging: the staged " +
-      "path yields and the serial fallback still lands the rows once") {
+      "path yields and restaging still lands the rows once") {
     val p = tmpDir("cr_vacuum_force")
     val t = MedallionTable(spark, p)
     t.overwrite(Seq((1L, "a")).toDF("id", "s"))
@@ -555,7 +555,7 @@ class ConcurrentRewriteSpec extends SparkSpec {
     // nothing it had not claimed, and restaged — the rows land exactly once
     assert(t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       Set((1L, "a"), (2L, "b")),
-      "rows must land exactly once through the serial fallback")
+      "rows must land exactly once through the restaged append")
   }
 
   test("a CHECK committed while an append is staged gates that append: " +
