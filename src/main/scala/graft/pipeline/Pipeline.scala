@@ -93,14 +93,7 @@ object Pipeline {
           } else (st.getLen, st.getModificationTime)
         s"$t=$len:$mtime"
       }.mkString(",")
-      val current =
-        if (!fs.exists(done)) None
-        else {
-          val in = fs.open(done)
-          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-          finally in.close()
-        }
-      if (!current.contains(fingerprint)) {
+      if (!graft.table.SideFiles.readLatest(fs, done).contains(fingerprint)) {
         fs.delete(new org.apache.hadoop.fs.Path(raw), true)
         // repartition before the CSV write: the parquet source is a single
         // file, so without it Spark plans 1-2 tasks for the write AND the
@@ -113,8 +106,7 @@ object Pipeline {
             .mode("overwrite").option("header", true).csv(s"$raw/lineitem"),
           () => Tables.nation(spark, sfDir).write.mode("overwrite")
             .json(s"$raw/nation"))
-        val out = fs.create(done, true)
-        try out.write(fingerprint.getBytes("UTF-8")) finally out.close()
+        graft.table.SideFiles.replace(fs, done, fingerprint)
       }
       raw
     }
@@ -127,19 +119,14 @@ object Pipeline {
     private def csvInferredCached(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
       val schemaFile = new org.apache.hadoop.fs.Path(s"$dir/_graft_schema.ddl")
       val fs = schemaFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val schema =
-        if (fs.exists(schemaFile)) {
-          val in = fs.open(schemaFile)
-          val ddl = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        } else {
+      val schema = graft.table.SideFiles.read(fs, schemaFile) match {
+        case Some(ddl) => org.apache.spark.sql.types.StructType.fromDDL(ddl)
+        case None =>
           val inferred = spark.read.option("header", true)
             .option("inferSchema", true).csv(dir).schema
-          val out = fs.create(schemaFile, true)
-          try out.write(inferred.toDDL.getBytes("UTF-8")) finally out.close()
+          graft.table.SideFiles.write(fs, schemaFile, inferred.toDDL)
           inferred
-        }
+      }
       spark.read.option("header", true).schema(schema).csv(dir)
     }
 

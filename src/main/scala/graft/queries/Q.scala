@@ -32,6 +32,14 @@ object Q {
     fs.delete(p, true)
   }
 
+  /** Drop a scratch table: its directory and its commits sibling, where
+    * markers, feed state, txn and copy logs live.
+    */
+  def deleteTable(spark: SparkSession, path: String): Unit = {
+    deleteDir(spark, path)
+    deleteDir(spark, graft.table.SideFiles.commitsDir(path).toString)
+  }
+
   /** Whitespace tokenization, shared by the text queries. Spark-SQL side of
     * the oracle's `regexp_extract_all(text, '\S+')` — derived from the
     * single-source pattern in [[graft.text.TextOps.tokensExpr]].

@@ -27,8 +27,7 @@ object SinkQueries {
     "k14_cdf_feed" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k14_cdf")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits") // feed state + markers live here
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       // 25% key slice: the protocol under test is commit-count-shaped,
       // not data-shaped - the slice keeps the bench row honest while
@@ -70,8 +69,7 @@ object SinkQueries {
       import s.implicits._
       val p = Q.scratch(dir, "k14_mv_fact")
       val g = Q.scratch(dir, "k14_mv_gold")
-      Seq(p, p + "__graft_commits", g, g + "__graft_commits")
-        .foreach(Q.deleteDir(s, _))
+      Seq(p, g).foreach(Q.deleteTable(s, _))
       val t = MedallionTable(s, p)
       val gold = MedallionTable(s, g)
       val o = Tables.orders(s, dir).filter($"o_orderkey" % 4 === 1)
@@ -104,8 +102,7 @@ object SinkQueries {
       import s.implicits._
       val p = Q.scratch(dir, "k14_mir_src")
       val mp = Q.scratch(dir, "k14_mir_dst")
-      Seq(p, p + "__graft_commits", mp, mp + "__graft_commits")
-        .foreach(Q.deleteDir(s, _))
+      Seq(p, mp).foreach(Q.deleteTable(s, _))
       val t = MedallionTable(s, p)
       val m = MedallionTable(s, mp)
       val o = Tables.orders(s, dir).filter($"o_orderkey" % 4 === 1)
@@ -137,8 +134,7 @@ object SinkQueries {
     "k15_generated_col" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k15_gen")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p, partitionColumns = Seq("o_year"))
       t.setGeneratedColumn("o_year", "year(o_orderdate)")
       val o = Tables.orders(s, dir)
@@ -162,8 +158,7 @@ object SinkQueries {
       import s.implicits._
       import graft.table.MergeOps._
       val p = Q.scratch(dir, "k15_idcol")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       t.setIdentityColumn("row_seq")
       val o = Tables.orders(s, dir).select($"o_orderkey", $"o_totalprice")
@@ -200,8 +195,7 @@ object SinkQueries {
       import s.implicits._
       import graft.table.MergeOps._
       val p = Q.scratch(dir, "k16_rowtrack")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       val o = Tables.orders(s, dir).select($"o_orderkey", $"o_totalprice")
       t.overwrite(o.filter($"o_orderkey" % 7 === 0)) // tracking not yet on
@@ -255,8 +249,7 @@ object SinkQueries {
     "k18_type_widening" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k18_widen")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       val o = Tables.orders(s, dir)
       t.overwrite(o.filter($"o_orderkey" % 5 === 0)
@@ -279,8 +272,7 @@ object SinkQueries {
     "k19_column_defaults" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k19_defaults")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       val o = Tables.orders(s, dir)
       t.overwrite(o.filter($"o_orderkey" % 7 === 0)
@@ -316,8 +308,7 @@ object SinkQueries {
       val src = Q.scratch(dir, "k11_ci_src")
       val p = Q.scratch(dir, "k11_ci_tbl")
       Q.deleteDir(s, src)
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits") // the copy log lives here
+      Q.deleteTable(s, p)
       val o = Tables.orders(s, dir)
       o.filter($"o_orderkey" % 3 === 0).coalesce(1).write.parquet(s"$src/land1")
       val t = MedallionTable(s, p)
@@ -338,8 +329,7 @@ object SinkQueries {
     "k11_optimize_where_roundtrip" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k11_opt_where")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p, partitionColumns = Seq("blk"))
       val o = Tables.orders(s, dir)
         .withColumn("blk", ($"o_orderkey" % 4).cast("int"))
@@ -355,8 +345,7 @@ object SinkQueries {
     "k11_convert_in_place" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k11_convert")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val o = Tables.orders(s, dir)
       o.filter($"o_orderkey" % 2 === 0).write.parquet(p) // no table layer
       s.sql(s"CONVERT TO GRAFT '$p'")
@@ -374,8 +363,7 @@ object SinkQueries {
     "k12_schema_evolution_ddl" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k12_ddl")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       val o = Tables.orders(s, dir)
       t.overwrite(o.filter($"o_orderkey" % 2 === 0)
@@ -396,8 +384,7 @@ object SinkQueries {
     "k13_idempotent_append" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k13_txn")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits") // txn high-water files live here
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       val o = Tables.orders(s, dir)
       t.overwrite(o.filter($"o_orderkey" % 4 === 0))
@@ -1261,8 +1248,7 @@ object SinkQueries {
     "k_history" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k_history")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       t.overwrite(Seq((1L, "a")).toDF("id", "v"))
       t.append(Seq((2L, "b")).toDF("id", "v"))
@@ -1278,8 +1264,7 @@ object SinkQueries {
     "k8_sql_optimize_roundtrip" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k8_sql_opt")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       val o = Tables.orders(s, dir).filter($"o_orderkey" % 2 === 0)
       // four NON-EMPTY small appends (o is even-keyed, so split mod 8)
@@ -1297,8 +1282,7 @@ object SinkQueries {
     "k_cluster_incremental_roundtrip" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k_cluster_inc")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       val o = Tables.orders(s, dir)
       (0 until 2).foreach { i =>
@@ -1323,8 +1307,7 @@ object SinkQueries {
     "k8_sql_history_tvf" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k8_sql_hist")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p)
       t.overwrite(Seq((1L, "a")).toDF("id", "v"))
       t.append(Seq((2L, "b")).toDF("id", "v"))
@@ -1340,8 +1323,7 @@ object SinkQueries {
     "k8_sql_version_as_of" -> ((s, dir) => {
       import s.implicits._
       val p = Q.scratch(dir, "k8_sql_tt")
-      Q.deleteDir(s, p)
-      Q.deleteDir(s, p + "__graft_commits")
+      Q.deleteTable(s, p)
       val t = MedallionTable(s, p, retainVersions = 2)
       val o = Tables.orders(s, dir)
       t.overwrite(o.filter($"o_orderkey" % 3 =!= 0))

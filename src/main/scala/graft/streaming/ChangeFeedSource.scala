@@ -74,17 +74,15 @@ final class ChangeFeedSource(sqlContext: SQLContext, tablePath: String,
     * moves forward. Lifetime = the checkpoint's (a fresh checkpoint is a
     * fresh metadataPath, so a re-baselined stream starts clean).
     */
-  /** Two ALTERNATING slot files, reads take the max: Hadoop rename
-    * refuses an existing destination, so a single-file replace must
-    * delete-then-rename — leaving a crash window where the floor is
-    * ABSENT. A restart inside that window (with a fully-committed WAL)
-    * would clamp from the enablement commit, report an offset BELOW the
-    * checkpointed one, and re-deliver committed commits (round-14
-    * advice). With two slots the delete-then-rename only ever touches
-    * the slot holding the OLDER value, so one intact floor always
-    * survives a crash — and the surviving (previous) value is ≥ every
-    * offset the WAL can hold, because getOffset persists BEFORE
-    * returning: a value lost mid-persist was never reported to Spark.
+  /** Two ALTERNATING slot files, reads take the max. A lost floor
+    * would make a restart (with a fully-committed WAL) clamp from the
+    * enablement commit, report an offset BELOW the checkpointed one, and
+    * re-deliver committed commits. Each slot is a replaced sidecar
+    * ([[graft.table.SideFiles.replace]]), and a persist only ever
+    * replaces the slot holding the OLDER value, so the other slot keeps
+    * a floor ≥ every offset the WAL can hold even if the slot being
+    * written were lost: getOffset persists BEFORE returning, so a value
+    * lost mid-persist was never reported to Spark.
     */
   private val floorSlots = Array(
     new org.apache.hadoop.fs.Path(metadataPath, "graft-cdf-reported"),
@@ -93,34 +91,18 @@ final class ChangeFeedSource(sqlContext: SQLContext, tablePath: String,
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def readSlot(p: org.apache.hadoop.fs.Path): Long =
-    if (!floorFs.exists(p)) Long.MinValue
-    else {
-      val in = floorFs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .trim.toLongOption.getOrElse(Long.MinValue)
-      finally in.close()
-    }
+    graft.table.SideFiles.readLatest(floorFs, p)
+      .flatMap(_.trim.toLongOption).getOrElse(Long.MinValue)
 
   private var floor: Long = floorSlots.map(readSlot).max
 
   private def persistFloor(v: Long): Unit = {
-    floorFs.mkdirs(floorSlots(0).getParent)
     // overwrite the slot with the SMALLER value (or the empty one): the
     // other slot keeps the previous floor intact through the replace
     val target =
       if (readSlot(floorSlots(0)) <= readSlot(floorSlots(1))) floorSlots(0)
       else floorSlots(1)
-    val tmp = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}.tmp")
-    val out = floorFs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    // delete-then-rename (not rename-over): Hadoop refuses the latter,
-    // and a raw-layer retry desynchronizes ChecksumFileSystem's crc
-    // sidecar from the data file
-    if (floorFs.exists(target)) floorFs.delete(target, false)
-    if (!floorFs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"graft-cdf: cannot persist rate-limit floor $target")
+    graft.table.SideFiles.replace(floorFs, target, v.toString)
   }
 
   /** Delta's `startingVersion`: deliver changes from this commit ordinal

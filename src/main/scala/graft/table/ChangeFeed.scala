@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   *
   * == Capture (write side, O(Δ) metadata only) ==
   *
-  * When the feed is enabled, every commit leaves a tiny MANIFEST under
-  * `<path>__graft_commits/cdf/c<ordinal>` — the commits sidecar survives
-  * rewrite swaps (the table dir's `_graft_meta` does not) and clones
-  * don't copy it (a clone starts its own history, so it starts its own
-  * feed). No change ROW is ever written twice:
+  * When the feed is enabled, every commit leaves a tiny MANIFEST at
+  * `cdf/c<ordinal>` in the commits sibling ([[SideFiles.commitsDir]]),
+  * which survives rewrite swaps (the table dir's `_graft_meta` does not)
+  * and clones don't copy (a clone starts its own history, so it starts
+  * its own feed). No change ROW is ever written twice:
   *
   *  - append / idempotent append / COPY INTO / create: the manifest
   *    records the ADDED FILE keys ([[DeletionVectors.fileKeyOf]] tails).
@@ -125,7 +125,7 @@ object ChangeFeed {
   // ---- storage ----------------------------------------------------------
 
   private def cdfRoot(tablePath: String): Path =
-    new Path(s"${tablePath}__graft_commits/cdf")
+    new Path(SideFiles.commitsDir(tablePath), "cdf")
 
   private def flagFile(tablePath: String): Path =
     new Path(cdfRoot(tablePath), "enabled")
@@ -137,80 +137,26 @@ object ChangeFeed {
     new Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
-  }
+  /** A manifest known to exist (listed, or the captured head). */
+  private def manifestAt(fs: FileSystem, p: Path): Manifest =
+    parse(SideFiles.read(fs, p).getOrElse(
+      throw new java.io.FileNotFoundException(s"feed manifest $p vanished")))
 
-  /** Temp + rename: a reader never observes a partial file. Hadoop's
-    * `FileSystem.rename` REFUSES an existing destination (unlike POSIX
-    * rename), so a re-write replaces via delete + rename — before this
-    * fix the second write of a WATERMARK (mirror `cdf_mirror_reflects`,
-    * retention `expired_through`) silently kept the old value, which made
-    * every `replicateTo` after the first re-read the feed from its
-    * bootstrap ordinal instead of O(Δ since last). A crash between the
-    * delete and the rename leaves the file ABSENT: manifests/flags
-    * fail-stop on absence and watermarks degrade conservatively (mirror
-    * re-applies an idempotent window; an expired-manifest read refuses),
-    * never a partial or stale-but-trusted value. A failed SECOND rename
-    * is a true concurrent writer: keep theirs (retried ops write
-    * identical bytes; watermark writers are maintenance-serialized).
+  /** The flag is write-once (its one writer runs under the `set-cdf`
+    * claim only while it is absent), so one status answers.
     */
-  private def writeTextAtomic(fs: FileSystem, p: Path, text: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val staged = new Path(p.getParent, s"${p.getName}.new")
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    // TWO-PHASE replace (round-15): the new value lands COMPLETE at a
-    // durable staging name (its own rename, so it is never partial)
-    // before the destination is touched. A crash between the delete and
-    // the final rename used to leave the file ABSENT — for a watermark
-    // that meant losing the retention/mirror floor; now readers fall
-    // back to `<name>.new` ([[readTextStaged]]) and see the value the
-    // crashed writer had fully staged.
-    if (fs.exists(staged)) fs.delete(staged, false)
-    if (!fs.rename(tmp, staged)) { fs.delete(tmp, false); return }
-    if (fs.exists(p)) fs.delete(p, false)
-    MedallionTable.testFailpoint("cdf-watermark-post-delete")
-    // a failed final rename is a true concurrent writer (they landed the
-    // destination between our delete and rename): keep THEIRS and clear
-    // our staging so no stale fallback survives (retried ops write
-    // identical bytes; watermark writers are maintenance-serialized)
-    if (!fs.rename(staged, p)) fs.delete(staged, false)
-  }
-
-  /** Watermark read with the two-phase fallback: the destination when
-    * present, else the fully-staged `<name>.new` a writer crashed before
-    * renaming (see [[writeTextAtomic]]). None = neither exists.
-    */
-  private def readTextStaged(fs: FileSystem, p: Path): Option[String] = {
-    if (fs.exists(p)) return Some(readText(fs, p))
-    val staged = new Path(p.getParent, s"${p.getName}.new")
-    if (fs.exists(staged)) Some(readText(fs, staged)) else None
-  }
-
   def isEnabled(spark: SparkSession, tablePath: String): Boolean =
     fsOf(spark, tablePath).exists(flagFile(tablePath))
 
   /** Commit ordinal of the enabling commit, when enabled. */
-  def enabledAt(spark: SparkSession, tablePath: String): Option[Long] = {
-    val fs = fsOf(spark, tablePath)
-    if (!fs.exists(flagFile(tablePath))) None
-    else readText(fs, flagFile(tablePath)).trim.toLongOption
-  }
+  def enabledAt(spark: SparkSession, tablePath: String): Option[Long] =
+    SideFiles.read(fsOf(spark, tablePath), flagFile(tablePath))
+      .flatMap(_.trim.toLongOption)
 
   private[table] def writeEnabled(spark: SparkSession, tablePath: String,
-      ordinal: Long): Unit = {
-    val fs = fsOf(spark, tablePath)
-    fs.mkdirs(cdfRoot(tablePath))
-    writeTextAtomic(fs, flagFile(tablePath), ordinal.toString)
-  }
+      ordinal: Long): Unit =
+    SideFiles.write(fsOf(spark, tablePath), flagFile(tablePath),
+      ordinal.toString)
 
   // ---- manifests ---------------------------------------------------------
 
@@ -260,17 +206,14 @@ object ChangeFeed {
   }
 
   private[table] def loadManifest(spark: SparkSession, tablePath: String,
-      ordinal: Long): Option[Manifest] = {
-    val fs = fsOf(spark, tablePath)
-    val p = manifestFile(tablePath, ordinal)
-    if (!fs.exists(p)) None else Some(parse(readText(fs, p)))
-  }
+      ordinal: Long): Option[Manifest] =
+    SideFiles.read(fsOf(spark, tablePath), manifestFile(tablePath, ordinal))
+      .map(parse)
 
   private def captureManifest(spark: SparkSession, tablePath: String,
       ordinal: Long, m: Manifest): Unit = {
-    val fs = fsOf(spark, tablePath)
-    fs.mkdirs(cdfRoot(tablePath))
-    writeTextAtomic(fs, manifestFile(tablePath, ordinal), render(m))
+    SideFiles.write(fsOf(spark, tablePath), manifestFile(tablePath, ordinal),
+      render(m))
   }
 
   private def now(): Long = System.currentTimeMillis()
@@ -329,8 +272,7 @@ object ChangeFeed {
     * when nothing has expired.
     */
   def expiredThrough(spark: SparkSession, tablePath: String): Long = {
-    val fs = fsOf(spark, tablePath)
-    readTextStaged(fs, expiredFile(tablePath))
+    SideFiles.readLatest(fsOf(spark, tablePath), expiredFile(tablePath))
       .flatMap(_.trim.toLongOption).getOrElse(Long.MinValue)
   }
 
@@ -362,7 +304,7 @@ object ChangeFeed {
     val head = capturedThrough(t)
     val e = math.min(ordinal, head - 1)
     if (e <= already) return already
-    writeTextAtomic(fs, expiredFile(t.path), e.toString)
+    SideFiles.replace(fs, expiredFile(t.path), e.toString)
     // delete expired manifests (by listing — ordinals below enablement
     // or from a prior epoch don't exist as files)
     val root = cdfRoot(t.path)
@@ -380,7 +322,7 @@ object ChangeFeed {
     val arch = marksArchiveDir(t.path)
     if (fs.exists(arch)) {
       val referenced = survivors.result()
-        .flatMap(p => parse(readText(fs, p)).marks).toSet
+        .flatMap(p => manifestAt(fs, p).marks).toSet
       fs.listStatus(arch).foreach { st =>
         if (!referenced.contains(st.getPath.getName))
           fs.delete(st.getPath, true)
@@ -419,12 +361,12 @@ object ChangeFeed {
     // (this rides every vacuum/autoCompact — it must be cheap when the
     // answer is no); only then walk forward for the newest stale ordinal,
     // stopping at the first fresh one
-    if (parse(readText(fs, manifestFile(t.path, ordinals.head))).ts >= cutoff)
+    if (manifestAt(fs, manifestFile(t.path, ordinals.head)).ts >= cutoff)
       return already
     var newest = ordinals.head
     var i = 1
     while (i < ordinals.length &&
-        parse(readText(fs, manifestFile(t.path, ordinals(i)))).ts < cutoff) {
+        manifestAt(fs, manifestFile(t.path, ordinals(i))).ts < cutoff) {
       newest = ordinals(i); i += 1
     }
     expireBefore(t, newest)
@@ -575,7 +517,7 @@ object ChangeFeed {
       }.sorted
     if (ords.isEmpty) return None
     def tsAt(i: Int): Long =
-      parse(readText(fs, manifestFile(t.path, ords(i)))).ts
+      manifestAt(fs, manifestFile(t.path, ords(i))).ts
     if (tsAt(ords.length - 1) < ms) return None // everything predates ms
     if (tsAt(0) >= ms) {
       // instant at or before the oldest surviving capture: exact only if
@@ -911,7 +853,7 @@ object ChangeFeed {
   // ---- CDC replication -----------------------------------------------------
 
   private def mirrorWatermarkFile(mirrorPath: String): Path =
-    new Path(s"${mirrorPath}__graft_commits/cdf_mirror_reflects")
+    new Path(SideFiles.commitsDir(mirrorPath), "cdf_mirror_reflects")
 
   /** CDC replication — the canonical feed consumer (Delta's documented
     * CDF → MERGE mirroring pattern): bring `mirror` up to `source`'s
@@ -947,7 +889,7 @@ object ChangeFeed {
     val wmFile = mirrorWatermarkFile(mirror.path)
     val wm: Option[Long] =
       if (!mirror.exists) None
-      else readTextStaged(fs, wmFile).flatMap(_.trim.toLongOption)
+      else SideFiles.readLatest(fs, wmFile).flatMap(_.trim.toLongOption)
     // completion-witnessed head, not the raw marker head: a replication
     // racing an in-flight writer must not refuse on (or stamp past) a
     // commit whose capture hasn't landed yet
@@ -1022,6 +964,6 @@ object ChangeFeed {
       case None =>
         mirror.overwrite(source.read)
     }
-    writeTextAtomic(fs, wmFile, cur.toString)
+    SideFiles.replace(fs, wmFile, cur.toString)
   }
 }

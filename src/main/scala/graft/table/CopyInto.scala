@@ -60,9 +60,9 @@ object CopyInto {
   // compaction exactly like the commit markers do, and they survive by
   // living beside the table, where the swap never reaches.
   private def logDir(tablePath: String) =
-    new Path(s"${tablePath}__graft_commits/copy_log")
+    new Path(SideFiles.commitsDir(tablePath), "copy_log")
   private def pendingDir(tablePath: String) =
-    new Path(s"${tablePath}__graft_commits/copy_log_pending")
+    new Path(SideFiles.commitsDir(tablePath), "copy_log_pending")
   private def lockFile(t: MedallionTable) = new Path(t.commitsDir, "copy.lock")
 
   /** Test hook, [[MedallionTable.testFailpoint]] style: called between the
@@ -179,9 +179,7 @@ object CopyInto {
         // see the commit even after marker retention prunes its op
         val fs = pendingDir(table.path)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.mkdirs(new Path(table.commitsDir, "copy_batches"))
-        val w = fs.create(witnessFile(table, batch), true)
-        try w.write(batch.getBytes("UTF-8")) finally w.close()
+        SideFiles.write(fs, witnessFile(table, batch), batch)
         testFailpoint("post-copy-commit")
         // FINALIZE
         fs.mkdirs(logDir(table.path))

@@ -48,13 +48,8 @@ object DeltaLogExport {
     var lastSchema: Option[String] = None
     if (!fs.exists(logDir)) return (-1L, live, lastSchema)
     var fromVersion = 0L
-    val lastCk = new Path(logDir, "_last_checkpoint")
-    if (fs.exists(lastCk)) {
-      val in = fs.open(lastCk)
-      val node = try mapper.readTree(
-        scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      val ckV = node.get("version").asLong
+    SideFiles.readLatest(fs, new Path(logDir, "_last_checkpoint")).foreach { text =>
+      val ckV = mapper.readTree(text).get("version").asLong
       val ck = spark.read.parquet(
         new Path(logDir, f"$ckV%020d.checkpoint.parquet").toString)
       ck.select("add.path").collect()
@@ -67,9 +62,8 @@ object DeltaLogExport {
       .filter(_.getName.matches("\\d{20}\\.json")).sortBy(_.getName)
     versions.filter(_.getName.stripSuffix(".json").toLong >= fromVersion)
       .foreach { vf =>
-        val in = fs.open(vf)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
+        val text = SideFiles.read(fs, vf).getOrElse(
+          throw new java.io.FileNotFoundException(s"delta log $vf vanished"))
         text.split('\n').filter(_.nonEmpty).foreach { line =>
           val node = mapper.readTree(line)
           if (node.has("add")) live += node.get("add").get("path").asText()
@@ -245,45 +239,10 @@ object DeltaLogExport {
     // two concurrent syncs race for version N, the loser re-reads the log
     // (its diff may now be empty — the winner exported the same files)
     // and retries against the new head instead of clobbering the winner.
-    if (createExclusive(fs, new Path(logDir, f"$version%020d.json"),
-        sb.toString.getBytes("UTF-8"))) version
+    if (SideFiles.createExclusive(fs, new Path(logDir, f"$version%020d.json"),
+        sb.toString)) version
     else sync(spark, tablePath)
   }
-
-  /** Truly-exclusive commit-json create. Hadoop's local filesystem
-    * implements `create(overwrite = false)` as check-then-create — NOT
-    * atomic — so two concurrent syncs could both "win" version N and one
-    * would silently clobber the other's commit
-    * ([[MedallionTable.atomicCreateExclusive]] documents and solves the
-    * same hazard for commit markers). On `file://` route through
-    * `File.createNewFile` (atomic O_EXCL); on real stores trust the
-    * store's create-exclusive. Returns false ⟺ the version was lost to a
-    * racer (caller re-syncs against the new head); genuine write errors
-    * still throw.
-    */
-  private def createExclusive(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-      body: Array[Byte]): Boolean =
-    if ("file" == fs.getUri.getScheme) {
-      val local = new java.io.File(fs.makeQualified(p).toUri.getPath)
-      local.getParentFile.mkdirs()
-      local.createNewFile() && {
-        try {
-          val out = new java.io.FileOutputStream(local)
-          try { out.write(body); true } finally out.close()
-        } catch {
-          // won the slot but the body write failed: a half-written commit
-          // json must not stand — clear the slot and surface the error
-          case e: java.io.IOException => local.delete(); throw e
-        }
-      }
-    } else
-      try {
-        val out = fs.create(p, false)
-        try out.write(body) finally out.close()
-        true
-      } catch {
-        case e: java.io.IOException => if (fs.exists(p)) false else throw e
-      }
 
   /** The files an external reader would scan: replay of the exported log
     * (adds minus removes, version order) — the Scala half of the interop
@@ -390,9 +349,8 @@ object DeltaLogExport {
     fs.delete(stage, true)
     val ptr = mapper.createObjectNode()
     ptr.put("version", version).put("size", 2L + addRows.size)
-    val out = fs.create(new Path(logDir, "_last_checkpoint"), true)
-    try out.write(mapper.writeValueAsString(ptr).getBytes("UTF-8"))
-    finally out.close()
+    SideFiles.replace(fs, new Path(logDir, "_last_checkpoint"),
+      mapper.writeValueAsString(ptr))
     version
   }
 }

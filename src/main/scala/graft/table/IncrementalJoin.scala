@@ -157,12 +157,7 @@ object IncrementalJoin {
     val p = new org.apache.hadoop.fs.Path(s"${mv.path}__graft_mv_reflects")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val reflected: Option[Long] =
-      if (!fs.exists(p) || !mv.exists) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-        finally in.close()
-      }
+      SideFiles.readLatest(fs, p).filter(_ => mv.exists).map(_.trim.toLong)
     // stamp target resolved per change source (IncrementalAgg
     // .changesAndHead: the feed path's head is the completion-witnessed
     // capturedThrough, never the raw marker head)
@@ -176,12 +171,7 @@ object IncrementalJoin {
       case None =>
         mv.overwrite(fullCompute(fact.read, dim, on))
     }
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(cur.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"mv ordinal stamp failed: $p")
+    SideFiles.replace(fs, p, cur.toString)
   }
 
   /** Shared merge: `src` carries the view's columns plus `__del`

@@ -36,11 +36,10 @@ object ShallowClone {
 
   private[graft] def sources(spark: SparkSession, p: Path): Seq[String] = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+    // almost every table is no clone: one status, not an open, says so
+    if (!fs.exists(p)) Nil
+    else SideFiles.read(fs, p).toSeq.flatMap(_.split('\n'))
+      .map(_.trim).filter(_.nonEmpty)
   }
 
   /** Is `root` (a live table dir or an archived snapshot dir) a shallow
@@ -87,12 +86,7 @@ object ShallowClone {
   private[table] def write(spark: SparkSession, tablePath: String,
       files: Seq[String]): Unit = {
     val p = file(tablePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(files.mkString("\n").getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"clone manifest write failed: $p")
+    SideFiles.write(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, files.mkString("\n"))
   }
 }

@@ -215,6 +215,12 @@ private[table] object TableSnapshot {
     }
   }
 
+  /** The registered snapshot of `t` as of its last build, unchecked
+    * against the disk: for a pre-claim read that its claim re-checks.
+    */
+  def latest(t: MedallionTable): Option[TableSnapshot] =
+    registry.get(keyOf(t.spark, t.path))
+
   /** Snapshot for a sidecar given only paths (DV reads routed through
     * [[DeletionVectors]]).
     */
@@ -293,15 +299,18 @@ private[table] object TableSnapshot {
           st.getModificationTime)
     }
     // the record is written whole and renamed in, never changed in place:
-    // while its file keeps its length and mtime, one status call carries
-    // `prev`'s record instead of reading it again
-    val metaId = try {
-      val st = fs.getFileStatus(TableMeta.file(key))
-      Some((st.getLen, st.getModificationTime))
-    } catch { case _: java.io.FileNotFoundException => None }
-    val meta = prev.filter(_.metaId == metaId).fold(t.meta)(_.meta)
+    // while the file holding it keeps its length and mtime, its status
+    // carries `prev`'s record instead of reading it again, and no file
+    // is the empty record
+    val metaId = SideFiles.status(fs, TableMeta.file(key))
+      .map(st => (st.getLen, st.getModificationTime))
+    val meta = if (metaId.isEmpty) TableMeta.Empty
+      else prev.filter(_.metaId == metaId).fold(t.meta)(_.meta)
+    // an archived snapshot's manifest sits at its root: the walk lists it
+    val archivedClone = ShallowClone.archivedFile(root).getName
     val cloneSources = ShallowClone.sources(spark, ShallowClone.file(key)) ++
-      ShallowClone.sources(spark, ShallowClone.archivedFile(root))
+      walked.collect { case (st, rel) if rel == archivedClone => st.getPath }
+        .flatMap(ShallowClone.sources(spark, _))
 
     val prevBatches = prev.toSeq.flatMap(_.batches).map(b => b.name -> b).toMap
     val batches = DvUpdates.committedBatches(spark, key).map { b =>

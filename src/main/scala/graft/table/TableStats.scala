@@ -177,8 +177,8 @@ object TableStats {
     // staging lives in the COMMITS SIBLING, not under the table root: a
     // dir appearing/renaming inside _graft_meta races every recursive
     // lister (census hashes, data-file sets) into FileNotFound crashes
-    val staging = s"${tablePath}__graft_commits/stats_staging_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val staging = new org.apache.hadoop.fs.Path(SideFiles.commitsDir(tablePath),
+      "stats_staging_" + java.util.UUID.randomUUID().toString.take(8)).toString
     perFileStats(df, cols, fileKey)
       .coalesce(1) // manifest is tiny: one row per data file
       .write.mode("overwrite").parquet(staging)
@@ -197,23 +197,15 @@ object TableStats {
   private def writeCovered(spark: SparkSession, dir: String,
       cols: Seq[String]): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir, "_covered.txt")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(cols.mkString("\n").getBytes("UTF-8")) finally out.close()
+    SideFiles.write(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, cols.mkString("\n"))
   }
 
   private def readCovered(spark: SparkSession,
       dir: String): Option[Seq[String]] = {
     val p = new org.apache.hadoop.fs.Path(dir, "_covered.txt")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(text.split('\n').toSeq.filter(_.nonEmpty))
-    }
+    SideFiles.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .map(_.split('\n').toSeq.filter(_.nonEmpty))
   }
 
   /** Driver-side per-file stats rows from parquet FOOTER metadata — the

@@ -44,22 +44,15 @@ object TagArchive {
   def watermark(spark: SparkSession, basePath: String,
       scope: String = "index"): Long = {
     val p = watermarkFile(basePath, scope)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Long.MinValue
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
+    SideFiles.readLatest(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .fold(Long.MinValue)(_.trim.toLong)
   }
 
   def setWatermark(spark: SparkSession, basePath: String, w: Long,
       scope: String = "index"): Unit = {
     val p = watermarkFile(basePath, scope)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(w.toString.getBytes("UTF-8")) finally out.close()
+    SideFiles.replace(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, w.toString)
   }
 
   /** Fold every `batch_tag ∈ [minTag, w]` partition of `table` into the

@@ -87,7 +87,8 @@ object CrashRecoveryProbe {
       require(rc == 137, s"$window: child exited $rc, expected halt(137)")
     }
     def commitNames(path: String): Seq[String] =
-      new java.io.File(s"${path}__graft_commits").listFiles()
+      new java.io.File(graft.table.SideFiles.commitsDir(path).toUri.getPath)
+        .listFiles()
         .map(_.getName).toSeq
     def operatorVacuum(t: MedallionTable): Unit = {
       spark.conf.set("spark.graft.vacuumAssumeNoWriters", "true")

@@ -113,7 +113,8 @@ object TwoJvmLockProbe {
       require(files == 1, s"blk=$b not compacted across processes: $files")
     }
     // no lock/intent/staging litter once both processes exited
-    val commits = new java.io.File(s"${path}__graft_commits")
+    val commits =
+      new java.io.File(graft.table.SideFiles.commitsDir(path).toUri.getPath)
     val litter = commits.listFiles().map(_.getName).filter(n =>
       n == "write.lock" || n == "rewrite.intent" ||
         (n.startsWith("write_") && n.endsWith(".lock")) ||

@@ -591,7 +591,7 @@ class ChangeFeedSpec extends SparkSpec {
     val e1 = t.expireChangeFeed(keepCommits = 6) // first write: no delete
     // SECOND write: delete-then-rename — crash in the window
     MedallionTable.testFailpoint = {
-      case "cdf-watermark-post-delete" =>
+      case "sidecar-replace:expired_through" =>
         MedallionTable.testFailpoint = _ => ()
         throw new RuntimeException("boom: watermark crash window")
       case _ => ()
@@ -617,7 +617,7 @@ class ChangeFeedSpec extends SparkSpec {
     ChangeFeed.replicateTo(t, m, Seq("id")) // bootstrap + first stamp
     t.append(Seq((100L, "n")).toDF("id", "s"))
     MedallionTable.testFailpoint = {
-      case "cdf-watermark-post-delete" =>
+      case "sidecar-replace:cdf_mirror_reflects" =>
         MedallionTable.testFailpoint = _ => ()
         throw new RuntimeException("boom: mirror watermark crash")
       case _ => ()

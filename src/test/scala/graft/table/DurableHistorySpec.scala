@@ -90,8 +90,7 @@ class DurableHistorySpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS dh4_tt")
   }
 
-  test("compaction tsv swap is crash-safe: a crash between the park and " +
-      "the swap rename reads complete history off the .bak") {
+  test("crashed journal.tsv replace: history complete, then healed") {
     val prev = MedallionTable.JournalCompactThreshold
     MedallionTable.JournalCompactThreshold = 4
     try {
@@ -99,26 +98,35 @@ class DurableHistorySpec extends SparkSpec {
       val t = MedallionTable(spark, p)
       t.overwrite(Seq(0).toDF("x"))
       (1 until 30).foreach(i => t.append(Seq(i).toDF("x")))
-      val full0 = t.fullHistory().map(_._1)
-      assert(full0 == (30L to 1L by -1L))
       val fs = new org.apache.hadoop.fs.Path(p)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tsv = new org.apache.hadoop.fs.Path(p + "__graft_commits",
+      val tsv = new org.apache.hadoop.fs.Path(SideFiles.commitsDir(p),
         "journal.tsv")
-      val bak = new org.apache.hadoop.fs.Path(p + "__graft_commits",
-        "journal.tsv.bak")
       assert(fs.exists(tsv), "precondition: compaction produced the tsv")
-      // simulate the crash point INSIDE compactJournal: old tsv parked as
-      // .bak, new tsv not yet renamed in — the window writeMetaText's
-      // delete-then-rename left unreadable before this fix
-      assert(fs.rename(tsv, bak))
-      assert(t.fullHistory().map(_._1) == full0,
-        "history rows compacted into the parked tsv were lost mid-swap")
+      // crash the next compaction at the store's failpoint: the old tsv
+      // is dropped and the merged rows sit at journal.tsv.new only
+      var crashed = false
+      MedallionTable.testFailpoint = {
+        case "sidecar-replace:journal.tsv" if !crashed =>
+          crashed = true
+          throw new RuntimeException("boom: journal compaction crash")
+        case _ => ()
+      }
+      try {
+        var i = 30
+        while (!crashed && i < 40) { t.append(Seq(i).toDF("x")); i += 1 }
+      } finally MedallionTable.testFailpoint = _ => ()
+      assert(crashed && !fs.exists(tsv),
+        "precondition: a compaction crashed between its drop and rename")
+      val head = t.commitVersion
+      assert(t.fullHistory().map(_._1) == (head to 1L by -1L),
+        "history rows compacted into the tsv were lost mid-replace")
       // the next compaction (triggered by more commits) heals the state:
-      // merged rows land in a fresh tsv and the .bak is retired
-      (30 until 40).foreach(i => t.append(Seq(i).toDF("x")))
-      assert(t.fullHistory().map(_._1) == (40L to 1L by -1L))
+      // merged rows land in the tsv and the staged copy is gone
+      (0 until 10).foreach(i => t.append(Seq(100 + i).toDF("x")))
+      assert(t.fullHistory().map(_._1) == (head + 10 to 1L by -1L))
       assert(fs.exists(tsv), "compaction did not rebuild the tsv")
+      assert(!fs.exists(SideFiles.staged(tsv)))
     } finally MedallionTable.JournalCompactThreshold = prev
   }
 }

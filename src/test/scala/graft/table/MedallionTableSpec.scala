@@ -720,6 +720,36 @@ class MedallionTableSpec extends SparkSpec {
     assert(t.read.filter("id = 1").collect().head.getDouble(1) == 11.0)
   }
 
+  test("a record write crashed at the store's failpoint keeps the CHECK " +
+      "and the column map") {
+    import spark.implicits._
+    val p = tmpDir("mt_recordcrash")
+    val t = MedallionTable(spark, p)
+    t.overwrite(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))
+    t.renameColumn("v", "amount")
+    // kill the record write between dropping table.tsv and landing the
+    // new record on its name
+    MedallionTable.testFailpoint = {
+      case "sidecar-replace:table.tsv" =>
+        MedallionTable.testFailpoint = _ => ()
+        throw new RuntimeException("injected crash")
+      case _ => ()
+    }
+    try intercept[RuntimeException] {
+      t.addCheckConstraint("amount_pos", "amount > 0")
+    } finally MedallionTable.testFailpoint = _ => ()
+    assert(!fs(p).exists(TableMeta.file(p)),
+      "test setup: the crash must land after the record was dropped")
+    // the staged record is the table's record: the rename and the new
+    // constraint both stand
+    assert(t.read.columns.toSeq == Seq("id", "amount"))
+    assert(t.checkConstraints == Map("amount_pos" -> "amount > 0"))
+    intercept[Throwable] { t.append(Seq((3L, -1.0)).toDF("id", "amount")) }
+    t.append(Seq((3L, 30.0)).toDF("id", "amount"))
+    assert(t.read.select("amount").as[Double].collect().sorted.toSeq ==
+      Seq(10.0, 20.0, 30.0))
+  }
+
   test("thread stress: concurrent appends and merges never lose a committed row") {
     import spark.implicits._
     // Real threads, real interleavings — no failpoints. Whatever the
