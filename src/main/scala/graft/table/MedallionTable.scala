@@ -467,6 +467,18 @@ final class MedallionTable(
   }
 
   private def compactJournalLocked(files: Seq[Path]): Unit = {
+    // The older park-then-swap compaction parked the tsv at `.bak` after
+    // writing the merged rows whole to `journal.tsv.new`: crashed between
+    // its park and its swap, it left a superset of the parked rows where
+    // [[SideFiles.readLatest]] finds them, and the park is dropped. A
+    // park standing with no tsv value at all takes the tsv's name.
+    val parked = new Path(commitsDir, "journal.tsv.bak")
+    if (fs.exists(parked)) {
+      if (SideFiles.status(fs, journalTsv).isDefined) fs.delete(parked, false)
+      else if (!fs.rename(parked, journalTsv))
+        throw new java.io.IOException(
+          s"journal promote failed: $parked -> $journalTsv")
+    }
     val merged = (journalTsvRows() ++ journalFileRows())
       .groupBy(_._1).map(_._2.head).toSeq.sortBy(_._1)
     // the previously-compacted rows live only in the tsv (their
@@ -534,8 +546,14 @@ final class MedallionTable(
     */
   private def intentFile = new Path(commitsDir, "rewrite.intent")
 
-  private def publishIntent(op: String): Unit =
+  /** A crashed rewrite's intent stands until [[vacuum]], aged: it is
+    * dropped first, so the published intent always carries a fresh mtime
+    * and a janitor vacuum's horizon never reaps a live rewrite's intent.
+    */
+  private def publishIntent(op: String): Unit = {
+    fs.delete(intentFile, false)
     SideFiles.write(fs, intentFile, s"${System.currentTimeMillis()}\t$op")
+  }
 
   private def clearIntent(): Unit =
     try fs.delete(intentFile, false)
@@ -806,11 +824,13 @@ final class MedallionTable(
         catch {
           case t: Throwable =>
             // the feed manifest is write-once: one the failed body captured
-            // must not stand for the next commit to claim this ordinal
-            try {
-              fs.delete(ChangeFeed.manifestFile(path, claimed), false)
-              fs.delete(new Path(commitsDir, s"v$claimed.commit"), false)
-            } catch { case _: java.io.IOException => () }
+            // must not stand for the next commit to claim this ordinal, so
+            // it goes before the marker, whose release is tried whatever
+            // that delete did
+            try fs.delete(ChangeFeed.manifestFile(path, claimed), false)
+            catch { case _: java.io.IOException => () }
+            try fs.delete(new Path(commitsDir, s"v$claimed.commit"), false)
+            catch { case _: java.io.IOException => () }
             throw t
         }
       succeeded = true
@@ -3996,6 +4016,14 @@ final class MedallionTable(
     reapFile(new Path(commitsDir, "journal.lock"))
     // a crashed writer's identity-allocation lock (see withIdentityLock)
     reapFile(identityLockFile)
+    // temp files of sidecar writes killed mid-write: beside the record,
+    // and in the commits sibling and its journal, feed and txn dirs
+    val sidecarDirs = TableMeta.file(path).getParent +:
+      (if (!fs.exists(commitsDir)) Nil
+       else commitsDir +: fs.listStatus(commitsDir).toSeq
+         .filter(st => st.isDirectory && !st.getPath.getName.contains("_staging_"))
+         .map(_.getPath))
+    sidecarDirs.flatMap(SideFiles.temps(fs, _)).foreach(reapFile)
     expireFeedByConf()
     toDelete.length
   }

@@ -175,7 +175,19 @@ object SideFiles {
     }
   }
 
-  /** `text` written whole to a fresh temp file beside `p`. */
+  /** The temp files that writes killed mid-write left directly in `dir`.
+    * A live write's temp file lives for milliseconds, so a caller reaping
+    * these beside live writers age-guards them first.
+    */
+  def temps(fs: FileSystem, dir: Path): Seq[Path] =
+    try fs.listStatus(dir).toSeq.map(_.getPath).filter { f =>
+      val n = f.getName
+      n.startsWith(".") && n.endsWith(".tmp")
+    } catch { case _: FileNotFoundException => Nil }
+
+  /** `text` written whole to a fresh temp file beside `p`; a killed write
+    * leaves it for [[temps]] to find.
+    */
   private def stage(fs: FileSystem, p: Path, text: String): Path = {
     val tmp = new Path(p.getParent,
       s".${p.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")

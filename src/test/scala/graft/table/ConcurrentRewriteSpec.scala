@@ -626,6 +626,39 @@ class ConcurrentRewriteSpec extends SparkSpec {
       "the live rewrite must land despite the janitor vacuum")
   }
 
+  test("a rewrite over a crashed rewrite's aged intent publishes a fresh " +
+      "one: a janitor vacuum inside its window keeps it") {
+    val p = tmpDir("cr_stale_intent")
+    val t = MedallionTable(spark, p)
+    t.overwrite(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))
+    val f = new org.apache.hadoop.fs.Path(p)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // a crashed rewrite's intent, aged past the vacuum horizon
+    val intent = new org.apache.hadoop.fs.Path(SideFiles.commitsDir(p),
+      "rewrite.intent")
+    val out = f.create(intent, true)
+    out.write("0\tcrashed".getBytes("UTF-8"))
+    out.close()
+    f.setTimes(intent, System.currentTimeMillis() - 3L * 3600 * 1000, -1)
+    val janitor = new MedallionTable(spark, p)
+    var standing: Option[Boolean] = None
+    MedallionTable.testFailpoint = {
+      case "post-recheck" =>
+        // the live rewrite's intent is published and re-checked: a vacuum
+        // that reaped it here would let a claim land rows the swap drops
+        janitor.vacuum()
+        standing = Some(f.exists(intent))
+      case _ => ()
+    }
+    try t.merge(Seq((1L, 11.0)).toDF("id", "v"), Seq("id"))
+    finally MedallionTable.testFailpoint = _ => ()
+    assert(standing.contains(true),
+      "vacuum reaped the live rewrite's intent inside its window")
+    assert(!f.exists(intent), "the rewrite clears its intent with the swap")
+    assert(t.read.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet ==
+      Set((1L, 11.0)))
+  }
+
   test("mid-swap crash with a YOUNG intent standing: vacuum defers the " +
       "restore until the intent ages past the horizon") {
     val p = tmpDir("cr_swap_defer")

@@ -129,4 +129,38 @@ class DurableHistorySpec extends SparkSpec {
       assert(!fs.exists(SideFiles.staged(tsv)))
     } finally MedallionTable.JournalCompactThreshold = prev
   }
+
+  test("the older park-then-swap compaction's crash states heal") {
+    val prev = MedallionTable.JournalCompactThreshold
+    MedallionTable.JournalCompactThreshold = 4
+    try {
+      // that compaction wrote the merged rows whole to journal.tsv.new,
+      // parked the tsv at journal.tsv.bak, then renamed .new onto the tsv
+      Seq(true, false).foreach { staged =>
+        val p = tmpDir("dh6")
+        val t = MedallionTable(spark, p)
+        t.overwrite(Seq(0).toDF("x"))
+        (1 until 30).foreach(i => t.append(Seq(i).toDF("x")))
+        val full0 = t.fullHistory().map(_._1)
+        val fs = new org.apache.hadoop.fs.Path(p)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val commits = SideFiles.commitsDir(p)
+        val tsv = new org.apache.hadoop.fs.Path(commits, "journal.tsv")
+        val bak = new org.apache.hadoop.fs.Path(commits, "journal.tsv.bak")
+        if (staged) {
+          // crashed between its park and its swap
+          assert(org.apache.hadoop.fs.FileUtil.copy(fs, tsv, fs,
+            SideFiles.staged(tsv), false, fs.getConf))
+          assert(fs.rename(tsv, bak))
+          assert(t.fullHistory().map(_._1) == full0,
+            "history lost the rows staged at journal.tsv.new")
+        } else assert(fs.rename(tsv, bak)) // the park alone
+        (30 until 40).foreach(i => t.append(Seq(i).toDF("x")))
+        assert(t.fullHistory().map(_._1) == (40L to 1L by -1L),
+          s"history incomplete after the heal (staged = $staged)")
+        assert(fs.exists(tsv) && !fs.exists(bak) &&
+          !fs.exists(SideFiles.staged(tsv)))
+      }
+    } finally MedallionTable.JournalCompactThreshold = prev
+  }
 }

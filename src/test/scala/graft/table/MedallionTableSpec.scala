@@ -727,8 +727,9 @@ class MedallionTableSpec extends SparkSpec {
     val t = MedallionTable(spark, p)
     t.overwrite(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))
     t.renameColumn("v", "amount")
-    // kill the record write between dropping table.tsv and landing the
-    // new record on its name
+    t.addCheckConstraint("amount_pos", "amount > 0")
+    // kill the next record write between dropping the record and landing
+    // its replacement on the name
     MedallionTable.testFailpoint = {
       case "sidecar-replace:table.tsv" =>
         MedallionTable.testFailpoint = _ => ()
@@ -736,18 +737,47 @@ class MedallionTableSpec extends SparkSpec {
       case _ => ()
     }
     try intercept[RuntimeException] {
-      t.addCheckConstraint("amount_pos", "amount > 0")
+      t.addCheckConstraint("amount_small", "amount < 1000")
     } finally MedallionTable.testFailpoint = _ => ()
     assert(!fs(p).exists(TableMeta.file(p)),
       "test setup: the crash must land after the record was dropped")
-    // the staged record is the table's record: the rename and the new
-    // constraint both stand
+    // the record that stood before the crashed write still governs: the
+    // column map and the committed CHECK
     assert(t.read.columns.toSeq == Seq("id", "amount"))
-    assert(t.checkConstraints == Map("amount_pos" -> "amount > 0"))
-    intercept[Throwable] { t.append(Seq((3L, -1.0)).toDF("id", "amount")) }
+    val refused = intercept[Throwable] {
+      t.append(Seq((3L, -1.0)).toDF("id", "amount"))
+    }
+    assert(refused.getMessage.contains("amount_pos"), refused.getMessage)
     t.append(Seq((3L, 30.0)).toDF("id", "amount"))
     assert(t.read.select("amount").as[Double].collect().sorted.toSeq ==
       Seq(10.0, 20.0, 30.0))
+  }
+
+  test("vacuum reaps killed sidecar writes' temp files past the horizon") {
+    import spark.implicits._
+    val p = tmpDir("mt_sidecar_temps")
+    val t = MedallionTable(spark, p)
+    t.overwrite(Seq((1L, "a")).toDF("id", "s"))
+    val f = fs(p)
+    val commits = SideFiles.commitsDir(p)
+    def plant(dir: Path, name: String): Path = {
+      val tmp = new Path(dir, name)
+      val out = f.create(tmp, true)
+      try out.write("partial".getBytes("UTF-8")) finally out.close()
+      tmp
+    }
+    val record = TableMeta.file(p)
+    val aged = Seq(
+      plant(record.getParent, s".${record.getName}.dead0001.tmp"),
+      plant(commits, ".journal.tsv.dead0002.tmp"),
+      plant(new Path(commits, "txns"), ".etl.dead0003.tmp"))
+    aged.foreach(f.setTimes(_, System.currentTimeMillis() - 3L * 3600 * 1000, -1))
+    // a young one may be a live write's
+    val young = plant(commits, ".rewrite.intent.live0004.tmp")
+    t.vacuum()
+    aged.foreach(a => assert(!f.exists(a), s"vacuum left $a"))
+    assert(f.exists(young), "vacuum reaped a young temp file")
+    assert(t.read.count() == 1)
   }
 
   test("thread stress: concurrent appends and merges never lose a committed row") {
